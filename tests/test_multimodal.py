@@ -16,7 +16,6 @@ from vunnel_spark.operators.multimodal import (
     pack_frames,
     resize_images,
     sample_video_frames,
-    synthesize_media_table,
     synthesize_ppm_media_table,
     synthesize_video_table,
 )
@@ -56,7 +55,7 @@ def test_unknown_video_container_is_explicitly_stubbed():
 
 def test_unknown_image_format_is_explicitly_stubbed():
     with pytest.raises(NotImplementedError):
-        decode_image(b"not-a-ppm", 4, 4, fake=False)
+        decode_image(b"not-a-ppm")
 
 
 # --------------------------------------------------------- spark plumbing
@@ -67,34 +66,20 @@ def docs(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def media(docs):
-    return synthesize_media_table(docs).cache()
-
-
-@pytest.fixture(scope="module")
 def ppm_media(docs):
     return synthesize_ppm_media_table(docs).cache()
 
 
-def test_media_table_schema(media):
-    assert dict(media.dtypes)["payload"] == "binary"
-    meta = media.select("meta.*").columns
+def test_media_table_schema(ppm_media):
+    assert dict(ppm_media.dtypes)["payload"] == "binary"
+    meta = ppm_media.select("meta.*").columns
     assert meta == ["format", "width", "height", "n_bytes"]
-
-
-def test_image_features_deterministic(media):
-    rows1 = {r.media_id: r for r in image_features(media, fake=True).collect()}
-    rows2 = {r.media_id: r for r in image_features(media, fake=True).collect()}
-    assert rows1.keys() == rows2.keys() and len(rows1) == 50
-    k = next(iter(rows1))
-    assert rows1[k].mean_r == rows2[k].mean_r  # hash-seeded fake is stable
-    assert all(0 <= r.mean_r <= 255 for r in rows1.values())
 
 
 def test_real_ppm_features_closed_form(ppm_media):
     """Channel means through the REAL decode match the synthesis law:
     G = 7*id mod 256, B = 13*id mod 256, R = mean of the gradient row."""
-    rows = {r.media_id: r for r in image_features(ppm_media, fake=False).collect()}
+    rows = {r.media_id: r for r in image_features(ppm_media).collect()}
     assert len(rows) == 50
     for mid, r in rows.items():
         w = mid % 16 + 8
@@ -104,13 +89,13 @@ def test_real_ppm_features_closed_form(ppm_media):
 
 
 def test_resize_composes(ppm_media):
-    resized = resize_images(ppm_media, out_w=4, out_h=4, fake=False)
+    resized = resize_images(ppm_media, out_w=4, out_h=4)
     rows = resized.collect()
     assert all(r.meta.width == 4 and r.meta.height == 4 for r in rows)
     # PPM header "P6\n4 4\n255\n" (11 bytes) + 4*4*3 raster
     assert all(r.meta.n_bytes == 11 + 4 * 4 * 3 for r in rows)
     # output is itself decodable: features compose on it
-    feats = image_features(resized, fake=False).collect()
+    feats = image_features(resized).collect()
     assert len(feats) == len(rows)
     assert all(f.width == 4 and f.height == 4 for f in feats)
 
@@ -335,12 +320,12 @@ def test_decode_image_strips_alpha():
 
     rgba = np.zeros((3, 4, 4), dtype=np.uint8)
     rgba[..., 0], rgba[..., 1], rgba[..., 2], rgba[..., 3] = 10, 20, 30, 200
-    out = decode_image(encode_png(rgba), 4, 3)
+    out = decode_image(encode_png(rgba))
     assert out.shape == (3, 4, 3)
     assert (out[..., 0] == 10).all() and (out[..., 2] == 30).all()
     ga = np.zeros((3, 4, 2), dtype=np.uint8)
     ga[..., 0], ga[..., 1] = 77, 128
-    out = decode_image(encode_png(ga), 4, 3)
+    out = decode_image(encode_png(ga))
     assert out.shape == (3, 4, 3) and (out == 77).all()
 
 
@@ -406,6 +391,17 @@ def test_png_missing_plte_rejected():
         decode_png(stripped)
 
 
+def test_png_sub_filter_rejects_stride_not_pixel_multiple():
+    """A Sub-filtered row whose stride is not a whole number of pixels
+    has no left neighbour to predict from: raise, never hand the raw
+    filtered bytes back as pixels."""
+    from vunnel_spark.operators.multimodal import _defilter
+
+    raw = bytes([1]) + bytes(range(10, 15))  # Sub, 5-byte row, 3 bytes/px
+    with pytest.raises(ValueError, match="not a multiple"):
+        _defilter(raw, 0, 1, 5, 3)
+
+
 def test_png_crc_corruption_detected():
     import numpy as np
     import pytest
@@ -425,7 +421,7 @@ def test_decode_image_dispatches_png_and_gray_replication():
     from vunnel_spark.operators.multimodal import decode_image, encode_png
 
     gray = np.arange(12, dtype=np.uint8).reshape(3, 4)
-    out = decode_image(encode_png(gray), 4, 3)
+    out = decode_image(encode_png(gray))
     assert out.shape == (3, 4, 3)
     assert np.array_equal(out[:, :, 0], gray)
     assert np.array_equal(out[:, :, 1], gray)
@@ -484,7 +480,7 @@ def test_decode_image_dispatches_jpeg():
     from vunnel_spark.operators.multimodal import decode_image, encode_jpeg_gray
 
     img = np.full((8, 16), 42, dtype=np.uint8)
-    out = decode_image(encode_jpeg_gray(img), 16, 8)
+    out = decode_image(encode_jpeg_gray(img))
     assert out.shape == (8, 16, 3) and np.all(out == 42)
 
 
@@ -1013,6 +1009,33 @@ def test_flac_integrity_checks_fire():
         decode_flac(b"RIFFnotflac")
 
 
+def test_flac_fixed_residuals_out_of_range_rejected():
+    """An order-4 FIXED subframe whose escape-coded 31-bit residuals no
+    16-bit signal can produce: integrating them four times overflows
+    int64, so the reconstruction must reject them, not wrap silently."""
+    from vunnel_spark.operators.multimodal import (
+        _PlainBitReader,
+        _PlainBitWriter,
+        _read_flac_subframe,
+    )
+
+    blocksize = 4096
+    bw = _PlainBitWriter()
+    bw.write(0b0001100, 7)  # pad bit + FIXED order 4
+    bw.write(0, 1)  # no wasted bits
+    for _ in range(4):
+        bw.write(0, 16)  # warmup samples
+    bw.write(0, 2)  # 4-bit rice parameters
+    bw.write(0, 4)  # partition order 0
+    bw.write(0b1111, 4)  # escape: residuals stored raw...
+    bw.write(31, 5)  # ...at 31 bits each
+    for _ in range(blocksize - 4):
+        bw.write((1 << 30) - 1, 31)
+    bw.align()
+    with pytest.raises(ValueError, match="out of range"):
+        _read_flac_subframe(_PlainBitReader(bw.bytes()), blocksize, 16)
+
+
 def test_flac_audio_features_match_wav_law(spark, sf_dir):
     """The same decoded-feature pipeline runs over FLAC payloads via the
     magic-sniffing dispatch; peak/RMS obey the synth's closed form."""
@@ -1424,8 +1447,8 @@ def test_decode_image_dispatches_gif_and_bmp():
 
     img = np.zeros((5, 6, 3), np.uint8)
     img[:, :, 0] = np.arange(6)[None, :] * 10
-    assert np.array_equal(decode_image(encode_bmp(img), 6, 5), img)
-    assert np.array_equal(decode_image(encode_gif([img]), 6, 5), img)
+    assert np.array_equal(decode_image(encode_bmp(img)), img)
+    assert np.array_equal(decode_image(encode_gif([img])), img)
 
 
 def test_packbits_roundtrip_property():
@@ -1516,7 +1539,7 @@ def test_decode_image_dispatches_tiff():
     img = np.full((5, 6, 3), 77, np.uint8)
     for be in (False, True):
         assert np.array_equal(
-            decode_image(encode_tiff(img, big_endian=be), 6, 5), img
+            decode_image(encode_tiff(img, big_endian=be)), img
         )
 
 
@@ -1736,7 +1759,7 @@ def test_ico_roundtrip_both_entry_styles():
             assert np.array_equal(a, b)
     # decode_image dispatch: first entry
     pay = encode_ico(imgs)
-    assert np.array_equal(decode_image(pay, 13, 9), imgs[0])
+    assert np.array_equal(decode_image(pay), imgs[0])
 
 
 def test_ico_rejects_malformed():
@@ -1848,7 +1871,7 @@ def test_webm_probe_rejects_malformed():
 
     good = encode_webm_vp8([encode_vp8_frame(True, 8, 8, 12)], 8, 8)
     with pytest.raises(NotImplementedError):
-        decode_image(good, 8, 8)
+        decode_image(good)
     _ = _ebml_el, _ebml_uint  # imported to keep names covered
 
 

@@ -23,9 +23,9 @@ end-to-end, and the m1-m20 queries carry exact SQL oracles over
 deterministically synthesized images.  WebM gets a full Matroska/EBML
 demux + VP8 frame-header probe (see the WebM section at the bottom);
 VP8 entropy-coded PIXELS and arithmetic-coded JPEG raise
-NotImplementedError behind the explicit ``fake=True`` escape hatch
-(their spec probability tables are not reproducible from memory, and a
-guessed table would be a fake decoder; the retrieved public material —
+NotImplementedError (their spec probability tables are not
+reproducible from memory, and a guessed table would be a fake
+decoder; the retrieved public material —
 PAPERS.md / SNIPPETS.md — was checked in r10 and carries no RFC 6386
 bool-coder default tables either, so the stub stands per the r9 verdict
 #6 adjudication); swapping in PIL/ffmpeg changes only ``decode_image``'s
@@ -36,29 +36,10 @@ real, explode-shaped, and testable.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("format", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, width int, height int, mean_r double, mean_g double, "
@@ -314,12 +295,14 @@ def _defilter(raw, p: int, rows: int, stride: int, ch: int):
             # per-pixel Python loop was the decode hot spot on the tiny
             # synthesized corpus images, ~stride iterations per row)
             n = stride // ch
-            if n * ch == stride:
-                rec = (
-                    line.reshape(n, ch).cumsum(axis=0, dtype=np.int64) % 256
-                ).reshape(stride).astype(np.int32)
-            else:  # stride not a channel multiple cannot occur for valid
-                rec = line.copy()  # images; fall back to no-predictor
+            if n * ch != stride:
+                raise ValueError(
+                    f"PNG scanline stride {stride} is not a multiple of "
+                    f"{ch} bytes per pixel"
+                )
+            rec = (
+                line.reshape(n, ch).cumsum(axis=0, dtype=np.int64) % 256
+            ).reshape(stride).astype(np.int32)
         elif f in (3, 4):
             # True left-neighbor recurrence — stays a scalar loop, but
             # over PYTHON ints (numpy per-element indexing pays ~10x in
@@ -515,7 +498,14 @@ def _jpeg_huff_codes(bits, vals):
     return out
 
 
+_JPEG_DC_CODES = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_AC_CODES = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+
+
+@functools.cache
 def _dct_matrix():
+    """The 8x8 DCT-II basis, built once per process (callers only read
+    it)."""
     import numpy as np
 
     x = np.arange(8)
@@ -529,6 +519,7 @@ class _BitWriter:
         self.out = bytearray()
         self.acc = 0
         self.nbits = 0
+        self.rst = 0  # next RSTn marker number
 
     def write(self, code: int, length: int) -> None:
         self.acc = (self.acc << length) | (code & ((1 << length) - 1))
@@ -547,13 +538,15 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # 1-pad to byte boundary
         return bytes(self.out)
 
-    def restart(self, n: int) -> None:
+    def restart(self) -> None:
         """Byte-align (1-padding, stuffed like entropy data) and append
-        a raw RSTn marker — restart markers are NOT byte-stuffed."""
+        the next raw RSTn marker (n cycles 0-7) — restart markers are
+        NOT byte-stuffed."""
         if self.nbits:
             pad = 8 - self.nbits
             self.write((1 << pad) - 1, pad)
-        self.out += bytes([0xFF, 0xD0 + (n & 7)])
+        self.out += bytes([0xFF, 0xD0 + self.rst])
+        self.rst = (self.rst + 1) & 7
 
 
 def _jpeg_category(v: int) -> tuple[int, int]:
@@ -567,25 +560,21 @@ def _jpeg_category(v: int) -> tuple[int, int]:
     return cat, bits
 
 
-def _encode_jpeg_block(bw, block_u8, q, m, dc_codes, ac_codes, prev_dc: int) -> int:
-    """Encode one level-shifted 8x8 block; returns the new DC predictor."""
-    import numpy as np
-
-    block = block_u8.astype(np.float64) - 128.0
-    coeff = m @ block @ m.T
-    qc = np.round(coeff / q).astype(np.int64)
-    zz = qc.flatten()[_JPEG_ZIGZAG]
-    diff = int(zz[0]) - prev_dc
-    prev_dc = int(zz[0])
-    cat, bits = _jpeg_category(diff)
-    code, ln = dc_codes[cat]
+def _encode_jpeg_block(bw, zz, prev_dc: int) -> int:
+    """Huffman-code one quantized zigzag block with the Annex-K tables
+    (DC difference, then AC run/size symbols with ZRL and EOB); returns
+    the new DC predictor."""
+    cat, bits = _jpeg_category(zz[0] - prev_dc)
+    code, ln = _JPEG_DC_CODES[cat]
     bw.write(code, ln)
     if cat:
         bw.write(bits, cat)
+    ac_codes = _JPEG_AC_CODES
+    last_nz = 63
+    while last_nz and not zz[last_nz]:
+        last_nz -= 1
     run = 0
-    last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-    for i in range(1, last_nz + 1):
-        v = int(zz[i])
+    for v in zz[1 : last_nz + 1]:
         if v == 0:
             run += 1
             continue
@@ -601,77 +590,24 @@ def _encode_jpeg_block(bw, block_u8, q, m, dc_codes, ac_codes, prev_dc: int) -> 
     if last_nz != 63:
         code, ln = ac_codes[0x00]  # EOB
         bw.write(code, ln)
-    return prev_dc
+    return zz[0]
 
 
-def _jpeg_headers(h: int, w: int, ncomp: int) -> tuple[bytes, bytes, bytes, bytes]:
-    """(DQT, SOF0, DHT, SOS) segments for 1 (gray) or 3 (YCbCr 4:4:4)
-    components; one shared quant + Huffman table pair, no subsampling."""
-    import struct
-
-    import numpy as np
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    zz_q = _JPEG_ZZ_QTABLE
-    dqt = seg(0xFFDB, b"\x00" + zz_q)
-    comps = b"".join(bytes([cid, 0x11, 0]) for cid in range(1, ncomp + 1))
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, ncomp) + comps)
-    dht = seg(
-        0xFFC4,
-        b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\x10" + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos_comps = b"".join(bytes([cid, 0x00]) for cid in range(1, ncomp + 1))
-    sos = seg(0xFFDA, bytes([ncomp]) + sos_comps + bytes([0, 63, 0]))
-    return dqt, sof, dht, sos
-
-
-def encode_jpeg_gray(arr, restart_interval: int | None = None) -> bytes:
-    """HxW uint8 grayscale -> baseline JFIF bytes.  H and W must be
-    multiples of 8 (the synthesizer guarantees it; general images would
-    need edge-block padding).  ``restart_interval`` emits a DRI segment
-    and an RSTn marker every N MCUs (predictor reset + byte
-    realignment) — the camera-JPEG resync feature, T.81 E.2.4."""
-    import struct
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape
-    if h % 8 or w % 8:
-        raise ValueError("encode_jpeg_gray needs multiple-of-8 dims")
-    if restart_interval is not None and not 1 <= restart_interval <= 0xFFFF:
-        raise ValueError("restart_interval must be in [1, 65535] (DRI is u16)")
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    m = _dct_matrix()
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+def _enc_baseline_scan(mcus, n_comps: int,
+                       restart_interval: int | None = None) -> bytes:
+    """The single interleaved baseline scan: every block of every MCU
+    (``(comp_index, zigzag_block)`` items) with one DC predictor per
+    component.  Each restart boundary byte-aligns, emits RSTn and
+    resets every predictor (T.81 E.2.4)."""
     bw = _BitWriter()
-    prev_dc = 0
-    n_mcus = (h // 8) * (w // 8)
-    done = 0
-    for by in range(0, h, 8):
-        for bx in range(0, w, 8):
-            prev_dc = _encode_jpeg_block(
-                bw, arr[by : by + 8, bx : bx + 8], q, m, dc_codes, ac_codes, prev_dc
-            )
-            done += 1
-            if (
-                restart_interval
-                and done % restart_interval == 0
-                and done < n_mcus
-            ):
-                bw.restart((done // restart_interval - 1) & 7)
-                prev_dc = 0
-    dqt, sof, dht, sos = _jpeg_headers(h, w, 1)
-    dri = (
-        struct.pack(">HHH", 0xFFDD, 4, restart_interval)
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + bw.flush() + b"\xff\xd9"
+    prev = [0] * n_comps
+    for u, mcu in enumerate(mcus):
+        if restart_interval and u and u % restart_interval == 0:
+            bw.restart()
+            prev = [0] * n_comps
+        for ci, zz in mcu:
+            prev[ci] = _encode_jpeg_block(bw, zz, prev[ci])
+    return bw.flush()
 
 
 # ------------------------------------------------- progressive JPEG (SOF2)
@@ -702,20 +638,22 @@ _JPEG_PROG_AC_VALS = (
     + [0xF0]
     + [(run << 4) | s for run in range(16) for s in range(1, 11)]
 )
+_JPEG_PROG_AC_CODES = _jpeg_huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
 
 
-def _jpeg_coeff_blocks(arr, q, m):
-    """Quantized zigzag coefficient blocks in raster order (int64[64])."""
+def _jpeg_coeff_blocks(plane, q, m):
+    """Quantized zigzag coefficient blocks of one plane in raster order
+    (lists of 64 ints).  All blocks transform in one stacked matmul —
+    the same per-block products, so the same bits, as a block loop."""
     import numpy as np
 
-    h, w = arr.shape
-    out = []
-    for by in range(0, h, 8):
-        for bx in range(0, w, 8):
-            block = arr[by : by + 8, bx : bx + 8].astype(np.float64) - 128.0
-            qc = np.round((m @ block @ m.T) / q).astype(np.int64)
-            out.append(qc.flatten()[_JPEG_ZIGZAG])
-    return out
+    h, w = plane.shape
+    blocks = (
+        plane.reshape(h // 8, 8, w // 8, 8).swapaxes(1, 2).reshape(-1, 8, 8)
+        .astype(np.float64) - 128.0
+    )
+    qc = np.round((m @ blocks @ m.T) / q).astype(np.int64)
+    return qc.reshape(-1, 64)[:, _JPEG_ZIGZAG].tolist()
 
 
 def _ac_point_transform(v: int, al: int) -> int:
@@ -725,50 +663,46 @@ def _ac_point_transform(v: int, al: int) -> int:
     return -((-v) >> al) if v < 0 else v >> al
 
 
-def _enc_dc_scan_first(walk, dc_codes, al: int, n_comps: int = 1,
+def _enc_dc_scan_first(mcus, al: int, n_comps: int,
                        restart_interval: int | None = None) -> bytes:
     """DC first scan (Ss=Se=0, Ah=0): baseline DC diff coding over the
-    point-transformed values with ONE predictor per component (the walk
-    yields ``(comp_index, zigzag_block)`` — MCU-interleaved for color,
-    plain raster for grayscale); DC's point transform IS the arithmetic
-    shift (G.1.2.1), which Python's >> implements for negatives.
-
-    ``restart_interval`` counts WALK ITEMS, so it is only valid when one
-    item is one MCU (grayscale / single-component scans); each boundary
-    byte-aligns, emits RSTn and resets every predictor (E.2.4)."""
+    point-transformed values with ONE predictor per component, walking
+    the MCUs' ``(comp_index, zigzag_block)`` items; DC's point transform
+    IS the arithmetic shift (G.1.2.1), which Python's >> implements for
+    negatives.  Each restart boundary byte-aligns, emits RSTn and resets
+    every predictor (E.2.4)."""
     bw = _BitWriter()
+    dc_codes = _JPEG_DC_CODES
     prev = [0] * n_comps
-    seq = 0
-    for u, (ci, zz) in enumerate(walk):
+    for u, mcu in enumerate(mcus):
         if restart_interval and u and u % restart_interval == 0:
-            bw.restart(seq)
-            seq = (seq + 1) & 7
+            bw.restart()
             prev = [0] * n_comps
-        v = int(zz[0]) >> al
-        cat, bits = _jpeg_category(v - prev[ci])
-        prev[ci] = v
-        code, ln = dc_codes[cat]
-        bw.write(code, ln)
-        if cat:
-            bw.write(bits, cat)
+        for ci, zz in mcu:
+            v = zz[0] >> al
+            cat, bits = _jpeg_category(v - prev[ci])
+            prev[ci] = v
+            code, ln = dc_codes[cat]
+            bw.write(code, ln)
+            if cat:
+                bw.write(bits, cat)
     return bw.flush()
 
 
-def _enc_dc_scan_refine(walk, al: int,
+def _enc_dc_scan_refine(mcus, al: int,
                         restart_interval: int | None = None) -> bytes:
     """DC refinement scan (Ah=Al+1): ONE raw bit per block, no Huffman.
     Restart boundaries only byte-align + mark (no predictor state)."""
     bw = _BitWriter()
-    seq = 0
-    for u, (_ci, zz) in enumerate(walk):
+    for u, mcu in enumerate(mcus):
         if restart_interval and u and u % restart_interval == 0:
-            bw.restart(seq)
-            seq = (seq + 1) & 7
-        bw.write((int(zz[0]) >> al) & 1, 1)
+            bw.restart()
+        for _ci, zz in mcu:
+            bw.write((zz[0] >> al) & 1, 1)
     return bw.flush()
 
 
-def _enc_ac_scan_first(blocks, ac_codes, ss: int, se: int, al: int,
+def _enc_ac_scan_first(blocks, ss: int, se: int, al: int,
                        restart_interval: int | None = None) -> bytes:
     """AC first scan for band [ss, se] at approximation Al: baseline
     run/size coding within the band, but an all-remaining-zero tail joins
@@ -779,8 +713,8 @@ def _enc_ac_scan_first(blocks, ac_codes, ss: int, se: int, al: int,
     single-component, so the MCU is one data unit); an EOB run may not
     cross a boundary (E.2.4), so each boundary flushes it first."""
     bw = _BitWriter()
+    ac_codes = _JPEG_PROG_AC_CODES
     eobrun = 0
-    seq = 0
 
     def flush_eob():
         nonlocal eobrun
@@ -795,9 +729,8 @@ def _enc_ac_scan_first(blocks, ac_codes, ss: int, se: int, al: int,
     for bi, zz in enumerate(blocks):
         if restart_interval and bi and bi % restart_interval == 0:
             flush_eob()
-            bw.restart(seq)
-            seq = (seq + 1) & 7
-        band = [_ac_point_transform(int(zz[i]), al) for i in range(ss, se + 1)]
+            bw.restart()
+        band = [_ac_point_transform(v, al) for v in zz[ss : se + 1]]
         last_nz = max((i for i, v in enumerate(band) if v), default=-1)
         if last_nz < 0:
             eobrun += 1
@@ -827,7 +760,7 @@ def _enc_ac_scan_first(blocks, ac_codes, ss: int, se: int, al: int,
     return bw.flush()
 
 
-def _enc_ac_scan_refine(blocks, ac_codes, ss: int, se: int, al: int,
+def _enc_ac_scan_refine(blocks, ss: int, se: int, al: int,
                         restart_interval: int | None = None) -> bytes:
     """AC refinement scan (Ah=Al+1): newly-significant coefficients
     (|coeff| point-transforms to exactly 1) arrive as run/1 symbols with
@@ -845,8 +778,8 @@ def _enc_ac_scan_refine(blocks, ac_codes, ss: int, se: int, al: int,
     run (with its buffered correction bits), byte-aligns and marks.
     """
     bw = _BitWriter()
+    ac_codes = _JPEG_PROG_AC_CODES
     eobrun = 0
-    seq = 0
     pending: list[int] = []
 
     def flush_eob():
@@ -865,9 +798,8 @@ def _enc_ac_scan_refine(blocks, ac_codes, ss: int, se: int, al: int,
     for bi, zz in enumerate(blocks):
         if restart_interval and bi and bi % restart_interval == 0:
             flush_eob()
-            bw.restart(seq)
-            seq = (seq + 1) & 7
-        band = [int(zz[i]) for i in range(ss, se + 1)]
+            bw.restart()
+        band = zz[ss : se + 1]
         shifted = [_ac_point_transform(v, al) for v in band]
 
         def corr_bit(i):
@@ -909,6 +841,147 @@ def _enc_ac_scan_refine(blocks, ac_codes, ss: int, se: int, al: int,
     return bw.flush()
 
 
+def _jpeg_stream(planes, samplings, progressive: bool,
+                 restart_interval: int | None = None) -> bytes:
+    """The JFIF stream writer behind all six public encoders.
+
+    ``planes`` are uint8 component planes already at their own
+    resolutions, ``samplings`` their (H, V) factors; every component
+    shares the one quant table and DC/AC Huffman pair.  The coefficient
+    blocks and the MCU walk (each MCU's ``(comp_index, zigzag_block)``
+    items in T.81 A.2.3 order) are computed once.  Baseline (SOF0) codes
+    them in one interleaved scan; progressive (SOF2) runs the full
+    successive-approximation scan script:
+
+      1. DC, Al=1, all components interleaved
+      2. per component: AC band 1-5, then 6-63, Al=1 (EOBn run coding)
+      3. DC refinement, Ah=1 (one raw bit per block)
+      4. per component: AC band 1-5, then 6-63 refinement, Ah=1
+
+    (progressive AC scans are single-component by spec G.1.3).
+    ``restart_interval`` emits a DRI segment and an RSTn marker every
+    that many MCUs in EVERY scan, with per-scan state resets — DC
+    predictors and EOB runs never cross a boundary (E.2.4).
+    """
+    import struct
+
+    import numpy as np
+
+    if restart_interval is not None and not 1 <= restart_interval <= 0xFFFF:
+        raise ValueError("restart_interval must be in [1, 65535] (DRI is u16)")
+    h, w = planes[0].shape
+    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
+    m = _dct_matrix()
+    comp_blocks = [_jpeg_coeff_blocks(p, q, m) for p in planes]
+    block_cols = [p.shape[1] // 8 for p in planes]
+    hmax = max(hs for hs, _ in samplings)
+    vmax = max(vs for _, vs in samplings)
+    mcus = [
+        [
+            (ci, comp_blocks[ci][(my * vs + dy) * block_cols[ci] + mx * hs + dx])
+            for ci, (hs, vs) in enumerate(samplings)
+            for dy in range(vs)
+            for dx in range(hs)
+        ]
+        for my in range(h // (8 * vmax))
+        for mx in range(w // (8 * hmax))
+    ]
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+    def sos(cids, ss: int, se: int, ah: int, al: int) -> bytes:
+        return seg(
+            0xFFDA,
+            bytes([len(cids)]) + b"".join(bytes([c, 0]) for c in cids)
+            + bytes([ss, se, (ah << 4) | al]),
+        )
+
+    n = len(planes)
+    ac_bits, ac_vals = (
+        (_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS) if progressive
+        else (_JPEG_AC_BITS, _JPEG_AC_VALS)
+    )
+    ri = restart_interval
+    out = (
+        b"\xff\xd8"
+        + seg(0xFFDB, b"\x00" + _JPEG_ZZ_QTABLE)
+        + seg(
+            0xFFC2 if progressive else 0xFFC0,
+            struct.pack(">BHHB", 8, h, w, n)
+            + b"".join(
+                bytes([ci + 1, (hs << 4) | vs, 0])
+                for ci, (hs, vs) in enumerate(samplings)
+            ),
+        )
+        + seg(
+            0xFFC4,
+            b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
+            + b"\x10" + bytes(ac_bits) + bytes(ac_vals),
+        )
+        + (seg(0xFFDD, struct.pack(">H", ri)) if ri else b"")
+    )
+    every = range(1, n + 1)
+    if not progressive:
+        return (
+            out + sos(every, 0, 63, 0, 0) + _enc_baseline_scan(mcus, n, ri)
+            + b"\xff\xd9"
+        )
+    out += sos(every, 0, 0, 0, 1) + _enc_dc_scan_first(mcus, 1, n, ri)
+    for ci in range(n):
+        for ss, se in ((1, 5), (6, 63)):
+            out += sos((ci + 1,), ss, se, 0, 1) + _enc_ac_scan_first(
+                comp_blocks[ci], ss, se, 1, ri
+            )
+    out += sos(every, 0, 0, 1, 0) + _enc_dc_scan_refine(mcus, 0, ri)
+    for ci in range(n):
+        for ss, se in ((1, 5), (6, 63)):
+            out += sos((ci + 1,), ss, se, 1, 0) + _enc_ac_scan_refine(
+                comp_blocks[ci], ss, se, 0, ri
+            )
+    return out + b"\xff\xd9"
+
+
+def _jpeg_input(arr, name: str, mult: int):
+    """``arr`` as uint8, with both dims checked against the MCU size
+    (general images would need edge-block padding)."""
+    import numpy as np
+
+    arr = np.asarray(arr, dtype=np.uint8)
+    if arr.shape[0] % mult or arr.shape[1] % mult:
+        raise ValueError(f"{name} needs multiple-of-{mult} dims")
+    return arr
+
+
+def _ycbcr_planes(arr, subsample: bool):
+    """HxWx3 uint8 RGB -> ([Y, Cb, Cr] uint8 planes, samplings): 4:4:4,
+    or 4:2:0 with ``subsample`` (Cb/Cr 2x2 box-averaged, Y sampled 2x2)."""
+    import numpy as np
+
+    # clip BEFORE the uint8 cast: saturated chroma (e.g. pure blue gives
+    # Cb=255.5) would otherwise round to 256 and WRAP to 0
+    planes = [
+        np.clip(np.round(p), 0, 255).astype(np.uint8) for p in rgb_to_ycbcr(arr)
+    ]
+    if not subsample:
+        return planes, [(1, 1)] * 3
+    h, w = planes[0].shape
+    for i in (1, 2):
+        p4 = planes[i].reshape(h // 2, 2, w // 2, 2).astype(np.float64)
+        planes[i] = np.clip(np.round(p4.mean(axis=(1, 3))), 0, 255).astype(np.uint8)
+    return planes, [(2, 2), (1, 1), (1, 1)]
+
+
+def encode_jpeg_gray(arr, restart_interval: int | None = None) -> bytes:
+    """HxW uint8 grayscale -> baseline JFIF bytes.  H and W must be
+    multiples of 8 (the synthesizer guarantees it; general images would
+    need edge-block padding).  ``restart_interval`` emits a DRI segment
+    and an RSTn marker every N MCUs (predictor reset + byte
+    realignment) — the camera-JPEG resync feature, T.81 E.2.4."""
+    arr = _jpeg_input(arr, "encode_jpeg_gray", 8)
+    return _jpeg_stream([arr], [(1, 1)], False, restart_interval)
+
+
 def encode_jpeg_gray_progressive(arr, restart_interval: int | None = None) -> bytes:
     """HxW uint8 grayscale -> PROGRESSIVE JFIF bytes (SOF2).
 
@@ -933,146 +1006,16 @@ def encode_jpeg_gray_progressive(arr, restart_interval: int | None = None) -> by
     state resets — DC predictors and EOB runs never cross a boundary
     (E.2.4 applied to the progressive scan set).
     """
-    import struct
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape
-    if h % 8 or w % 8:
-        raise ValueError("encode_jpeg_gray_progressive needs multiple-of-8 dims")
-    if restart_interval is not None and not 1 <= restart_interval <= 0xFFFF:
-        raise ValueError("restart_interval must be in [1, 65535] (DRI is u16)")
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    blocks = _jpeg_coeff_blocks(arr, q, _dct_matrix())
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
-
-    def seg(marker: int, payload_: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload_) + 2) + payload_
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return seg(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-
-    zz_q = _JPEG_ZZ_QTABLE
-    dqt = seg(0xFFDB, b"\x00" + zz_q)
-    sof = seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht = seg(
-        0xFFC4,
-        b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\x10" + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
-    )
-    ri = restart_interval
-    dri = seg(0xFFDD, struct.pack(">H", ri)) if ri else b""
-    return (
-        b"\xff\xd8" + dqt + sof + dht + dri
-        + sos(0, 0, 0, 1)
-        + _enc_dc_scan_first(((0, zz) for zz in blocks), dc_codes, 1,
-                             restart_interval=ri)
-        + sos(1, 5, 0, 1) + _enc_ac_scan_first(blocks, ac_codes, 1, 5, 1,
-                                               restart_interval=ri)
-        + sos(6, 63, 0, 1) + _enc_ac_scan_first(blocks, ac_codes, 6, 63, 1,
-                                                restart_interval=ri)
-        + sos(0, 0, 1, 0) + _enc_dc_scan_refine(((0, zz) for zz in blocks), 0,
-                                                restart_interval=ri)
-        + sos(1, 5, 1, 0) + _enc_ac_scan_refine(blocks, ac_codes, 1, 5, 0,
-                                                restart_interval=ri)
-        + sos(6, 63, 1, 0) + _enc_ac_scan_refine(blocks, ac_codes, 6, 63, 0,
-                                                 restart_interval=ri)
-        + b"\xff\xd9"
-    )
-
-
-def _progressive_color_stream(planes, samplings, h: int, w: int) -> bytes:
-    """Assemble a 3-component SOF2 stream from component planes already
-    at their own resolutions: interleaved DC scans in MCU order (per-
-    component predictors), then per-component AC band scans — first
-    passes at Al=1 and refinement passes at Ah=1 (progressive AC scans
-    are single-component by spec G.1.3).  One shared quant table and
-    DC/AC Huffman table pair, like the baseline color encoders."""
-    import struct
-
-    import numpy as np
-
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    m = _dct_matrix()
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
-    comp_blocks = [_jpeg_coeff_blocks(p, q, m) for p in planes]
-    block_cols = [p.shape[1] // 8 for p in planes]
-    hmax = max(hs for hs, _ in samplings)
-    vmax = max(vs for _, vs in samplings)
-    mcu_cols, mcu_rows = w // (8 * hmax), h // (8 * vmax)
-
-    def dc_walk():
-        for my in range(mcu_rows):
-            for mx in range(mcu_cols):
-                for ci, (hs, vs) in enumerate(samplings):
-                    for dy in range(vs):
-                        for dx in range(hs):
-                            yield ci, comp_blocks[ci][
-                                (my * vs + dy) * block_cols[ci] + mx * hs + dx
-                            ]
-
-    def seg(marker: int, payload_: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload_) + 2) + payload_
-
-    def sos_all(ss, se, ah, al):
-        return seg(
-            0xFFDA,
-            bytes([3]) + bytes([1, 0, 2, 0, 3, 0]) + bytes([ss, se, (ah << 4) | al]),
-        )
-
-    def sos_one(ci, ss, se, ah, al):
-        return seg(
-            0xFFDA, bytes([1, ci + 1, 0, ss, se, (ah << 4) | al])
-        )
-
-    zz_q = _JPEG_ZZ_QTABLE
-    dqt = seg(0xFFDB, b"\x00" + zz_q)
-    sof = seg(
-        0xFFC2,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + b"".join(
-            bytes([ci + 1, (hs << 4) | vs, 0])
-            for ci, (hs, vs) in enumerate(samplings)
-        ),
-    )
-    dht = seg(
-        0xFFC4,
-        b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\x10" + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
-    )
-    out = b"\xff\xd8" + dqt + sof + dht
-    out += sos_all(0, 0, 0, 1) + _enc_dc_scan_first(dc_walk(), dc_codes, 1, 3)
-    for ci in range(3):
-        for ss, se in ((1, 5), (6, 63)):
-            out += sos_one(ci, ss, se, 0, 1) + _enc_ac_scan_first(
-                comp_blocks[ci], ac_codes, ss, se, 1
-            )
-    out += sos_all(0, 0, 1, 0) + _enc_dc_scan_refine(dc_walk(), 0)
-    for ci in range(3):
-        for ss, se in ((1, 5), (6, 63)):
-            out += sos_one(ci, ss, se, 1, 0) + _enc_ac_scan_refine(
-                comp_blocks[ci], ac_codes, ss, se, 0
-            )
-    return out + b"\xff\xd9"
+    arr = _jpeg_input(arr, "encode_jpeg_gray_progressive", 8)
+    return _jpeg_stream([arr], [(1, 1)], True, restart_interval)
 
 
 def encode_jpeg_rgb_progressive(arr) -> bytes:
     """HxWx3 uint8 RGB -> PROGRESSIVE JFIF bytes (SOF2), YCbCr 4:4:4.
     Dims must be multiples of 8.  Decodes bit-identically to
     encode_jpeg_rgb (entropy layer lossless over quantized coeffs)."""
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[0], arr.shape[1]
-    if h % 8 or w % 8:
-        raise ValueError("encode_jpeg_rgb_progressive needs multiple-of-8 dims")
-    planes = [
-        np.clip(np.round(p), 0, 255).astype(np.uint8) for p in rgb_to_ycbcr(arr)
-    ]
-    return _progressive_color_stream(planes, [(1, 1)] * 3, h, w)
+    arr = _jpeg_input(arr, "encode_jpeg_rgb_progressive", 8)
+    return _jpeg_stream(*_ycbcr_planes(arr, False), True)
 
 
 def encode_jpeg_rgb420_progressive(arr) -> bytes:
@@ -1081,21 +1024,8 @@ def encode_jpeg_rgb420_progressive(arr) -> bytes:
     4:2:0).  Dims must be multiples of 16.  Decodes bit-identically to
     encode_jpeg_rgb420 of the same input (same box-average downsample,
     same quantizer; the entropy layers differ but are both lossless)."""
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[0], arr.shape[1]
-    if h % 16 or w % 16:
-        raise ValueError("encode_jpeg_rgb420_progressive needs multiple-of-16 dims")
-    y, cb, cr = rgb_to_ycbcr(arr)
-    planes = [np.clip(np.round(p), 0, 255).astype(np.uint8) for p in (y, cb, cr)]
-    sub = []
-    for p in planes[1:]:
-        p4 = p.reshape(h // 2, 2, w // 2, 2).astype(np.float64)
-        sub.append(np.clip(np.round(p4.mean(axis=(1, 3))), 0, 255).astype(np.uint8))
-    return _progressive_color_stream(
-        [planes[0], sub[0], sub[1]], [(2, 2), (1, 1), (1, 1)], h, w
-    )
+    arr = _jpeg_input(arr, "encode_jpeg_rgb420_progressive", 16)
+    return _jpeg_stream(*_ycbcr_planes(arr, True), True)
 
 
 def rgb_to_ycbcr(arr):
@@ -1127,32 +1057,21 @@ def encode_jpeg_rgb(arr) -> bytes:
     subsampling), interleaved Y/Cb/Cr MCUs with per-component DC
     prediction.  Grayscale-valued input (R=G=B) converts to Y=R,
     Cb=Cr=128 exactly, which is what keeps the m12 oracle closed-form."""
-    import numpy as np
+    arr = _jpeg_input(arr, "encode_jpeg_rgb", 8)
+    return _jpeg_stream(*_ycbcr_planes(arr, False), False)
 
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[0], arr.shape[1]
-    if h % 8 or w % 8:
-        raise ValueError("encode_jpeg_rgb needs multiple-of-8 dims")
-    # clip BEFORE the uint8 cast: saturated chroma (e.g. pure blue gives
-    # Cb=255.5) would otherwise round to 256 and WRAP to 0
-    planes = [
-        np.clip(np.round(p), 0, 255).astype(np.uint8) for p in rgb_to_ycbcr(arr)
-    ]
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    m = _dct_matrix()
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range(0, h, 8):
-        for bx in range(0, w, 8):
-            for ci, plane in enumerate(planes):
-                prev[ci] = _encode_jpeg_block(
-                    bw, plane[by : by + 8, bx : bx + 8], q, m,
-                    dc_codes, ac_codes, prev[ci],
-                )
-    dqt, sof, dht, sos = _jpeg_headers(h, w, 3)
-    return b"\xff\xd8" + dqt + sof + dht + sos + bw.flush() + b"\xff\xd9"
+
+def encode_jpeg_rgb420(arr) -> bytes:
+    """HxWx3 uint8 RGB -> baseline JFIF bytes with 4:2:0 chroma
+    subsampling (the dominant real-world JPEG layout): Y at full
+    resolution (sampling factor 2x2), Cb/Cr box-averaged 2x and coded at
+    half resolution; MCU = four Y blocks + one Cb + one Cr over a 16x16
+    pixel tile.  Dims must be multiples of 16 (general images would pad
+    edge MCUs).  Constant-chroma inputs survive the downsample exactly —
+    grayscale-valued even 16x16-constant tiles round-trip bit-exactly,
+    the m13 oracle's lever."""
+    arr = _jpeg_input(arr, "encode_jpeg_rgb420", 16)
+    return _jpeg_stream(*_ycbcr_planes(arr, True), False)
 
 
 class _BitReader:
@@ -1253,72 +1172,6 @@ def _parse_dht_body(body: bytes, huff: dict) -> None:
         codes = _jpeg_huff_codes(bits, vals)
         huff[(tc, th)] = {(ln_, code): sym for sym, (code, ln_) in codes.items()}
         b = b[17 + nvals :]
-
-
-def encode_jpeg_rgb420(arr) -> bytes:
-    """HxWx3 uint8 RGB -> baseline JFIF bytes with 4:2:0 chroma
-    subsampling (the dominant real-world JPEG layout): Y at full
-    resolution (sampling factor 2x2), Cb/Cr box-averaged 2x and coded at
-    half resolution; MCU = four Y blocks + one Cb + one Cr over a 16x16
-    pixel tile.  Dims must be multiples of 16 (general images would pad
-    edge MCUs).  Constant-chroma inputs survive the downsample exactly —
-    grayscale-valued even 16x16-constant tiles round-trip bit-exactly,
-    the m13 oracle's lever."""
-    import struct
-
-    import numpy as np
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w = arr.shape[0], arr.shape[1]
-    if h % 16 or w % 16:
-        raise ValueError("encode_jpeg_rgb420 needs multiple-of-16 dims")
-    y, cb, cr = rgb_to_ycbcr(arr)
-    planes = [np.clip(np.round(p), 0, 255).astype(np.uint8) for p in (y, cb, cr)]
-    # 2x2 box-average chroma downsample
-    sub = []
-    for p in planes[1:]:
-        p4 = p.reshape(h // 2, 2, w // 2, 2).astype(np.float64)
-        sub.append(np.clip(np.round(p4.mean(axis=(1, 3))), 0, 255).astype(np.uint8))
-    yp, cbp, crp = planes[0], sub[0], sub[1]
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    m = _dct_matrix()
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(0, h, 16):
-        for mx in range(0, w, 16):
-            for dy in (0, 8):  # four Y blocks, left-to-right top-to-bottom
-                for dx in (0, 8):
-                    prev[0] = _encode_jpeg_block(
-                        bw, yp[my + dy : my + dy + 8, mx + dx : mx + dx + 8],
-                        q, m, dc_codes, ac_codes, prev[0],
-                    )
-            cy, cx = my // 2, mx // 2
-            prev[1] = _encode_jpeg_block(
-                bw, cbp[cy : cy + 8, cx : cx + 8], q, m, dc_codes, ac_codes, prev[1]
-            )
-            prev[2] = _encode_jpeg_block(
-                bw, crp[cy : cy + 8, cx : cx + 8], q, m, dc_codes, ac_codes, prev[2]
-            )
-    # headers: like _jpeg_headers(ncomp=3) but Y carries sampling 0x22
-    def seg(marker: int, payload_: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload_) + 2) + payload_
-
-    zz_q = _JPEG_ZZ_QTABLE
-    dqt = seg(0xFFDB, b"\x00" + zz_q)
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0]),
-    )
-    dht = seg(
-        0xFFC4,
-        b"\x00" + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\x10" + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xFFDA, bytes([3]) + bytes([1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + bw.flush() + b"\xff\xd9"
 
 
 def decode_jpeg(payload: bytes):
@@ -1803,20 +1656,7 @@ def decode_jpeg_gray(payload: bytes):
     return out
 
 
-def _fake_decode(payload: bytes, width: int, height: int):
-    """Deterministic stand-in for compressed-format codecs: bytes ->
-    HxWx3 uint8, seeded from the payload digest so results are stable
-    across runs and executors."""
-    import hashlib
-
-    import numpy as np
-
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big") % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
-
-
-def decode_image(payload: bytes, width: int, height: int, fake: bool = False):
+def decode_image(payload: bytes):
     """Decode one image payload.
 
     PPM (P6), PNG (8/16-bit gray/truecolor, palette, Adam7), baseline
@@ -1824,9 +1664,8 @@ def decode_image(payload: bytes, width: int, height: int, fake: bool = False):
     JPEG (gray, 4:4:4 and 4:2:0 color), GIF (LZW, interlace, local
     tables — first frame here; gif_frame_features for all frames), and
     BMP (8-bit palette + 24-bit, both row orders) decode for real;
-    remaining variants (arithmetic-coded JPEG, HEIC, ...)
-    need codec libraries this container doesn't ship — callers opt into
-    the deterministic fake explicitly, or get NotImplementedError.
+    remaining variants (arithmetic-coded JPEG, HEIC, ...) need codec
+    libraries this container doesn't ship and raise NotImplementedError.
     """
     import numpy as np
 
@@ -1855,28 +1694,20 @@ def decode_image(payload: bytes, width: int, height: int, fake: bool = False):
         return decode_tiff(payload)
     if payload[:4] == b"\x00\x00\x01\x00":
         return decode_ico(payload)[0]  # still-image use: first entry
-    if fake:
-        return _fake_decode(payload, width, height)
     raise NotImplementedError(
         "no codec for this payload format in this environment; PPM (P6), "
         "PNG (8/16-bit gray/truecolor, palette, Adam7), baseline JPEG "
         "(gray, 4:4:4 color, 4:2:0 subsampled) and progressive JPEG "
-        "(gray + color) decode natively, "
-        "or pass fake=True for the deterministic stand-in"
+        "(gray + color) decode natively"
     )
 
 
 # ------------------------------------------------------------- image stages
 
-def image_features(
-    df: DataFrame,
-    fake: bool = True,
-    batch_hint: int = 64,
-    passthrough: tuple = (),
-) -> DataFrame:
+def image_features(df: DataFrame, passthrough: tuple = ()) -> DataFrame:
     """Per-image channel statistics via mapInPandas.
 
-    One Arrow batch of (media_id, payload, meta) rows in, one batch of
+    One Arrow batch of (media_id, payload) rows in, one batch of
     feature rows out; the binary column never leaves the executor.  The
     per-image decode is inherent (codecs are per-payload), but the stats
     vectorize per decoded array — no per-pixel Python.  ``passthrough``
@@ -1895,12 +1726,10 @@ def image_features(
         for pdf in batches:
             out = []
             for tup in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"],
-                *[pdf[c] for c in passthrough],
+                pdf["media_id"], pdf["payload"], *[pdf[c] for c in passthrough]
             ):
-                mid, payload, meta, extras = tup[0], tup[1], tup[2], tup[3:]
-                w, h = int(meta["width"]), int(meta["height"])
-                img = decode_image(payload, w, h, fake=fake)
+                mid, payload, extras = tup[0], tup[1], tup[2:]
+                img = decode_image(payload)
                 arr = img.astype(np.float64)
                 out.append(
                     (
@@ -1918,12 +1747,12 @@ def image_features(
                          "mean_b", "std_all", *passthrough],
             )
 
-    return df.select("media_id", *passthrough, "payload", "meta").mapInPandas(
+    return df.select("media_id", *passthrough, "payload").mapInPandas(
         compute, schema
     )
 
 
-def resize_images(df: DataFrame, out_w: int, out_h: int, fake: bool = True) -> DataFrame:
+def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Decode -> nearest-neighbor resize -> re-encode as PPM.
 
     Output schema mirrors the input media schema so resize stages compose;
@@ -1941,11 +1770,8 @@ def resize_images(df: DataFrame, out_w: int, out_h: int, fake: bool = True) -> D
         yi = None
         for pdf in batches:
             out = []
-            for mid, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                w, h = int(meta["width"]), int(meta["height"])
-                img = decode_image(payload, w, h, fake=fake)
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                img = decode_image(payload)
                 h0, w0 = img.shape[0], img.shape[1]
                 yi = (np.arange(out_h) * h0 // out_h).astype(int)
                 xi = (np.arange(out_w) * w0 // out_w).astype(int)
@@ -1958,7 +1784,7 @@ def resize_images(df: DataFrame, out_w: int, out_h: int, fake: bool = True) -> D
                 )
             yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
 
-    return df.select("media_id", "payload", "meta").mapInPandas(compute, schema)
+    return df.select("media_id", "payload").mapInPandas(compute, schema)
 
 
 # ------------------------------------------------------------ video stages
@@ -2395,7 +2221,7 @@ def sample_video_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
                 for idx, frame in enumerate(iter_frames(payload)):
                     if idx % every_n:
                         continue
-                    img = decode_image(frame, 0, 0)
+                    img = decode_image(frame)
                     if frame[:2] == b"\xff\xd8":
                         fmt = "jpeg"
                     elif frame[:8] == _PNG_SIG:
@@ -2840,6 +2666,67 @@ def decode_bmp(payload: bytes):
 
 # -------------------------------------------------------------- synthesis
 
+def _synth_table(docs: DataFrame, id_col: str, meta_fields: str, row_fn,
+                 pixel_col: str | None = None) -> DataFrame:
+    """The shell every media synthesizer runs through: one
+    ``mapInPandas`` pass over ``docs`` yielding ``(media_id, payload,
+    meta)`` rows, where ``row_fn(id) -> (payload, meta dict)`` builds
+    one row's bytes and ``meta_fields`` (Spark DDL ``name:type`` pairs)
+    declares its meta struct; ``n_bytes`` (the payload length) is
+    appended to every meta.  ``pixel_col`` (default: the id itself) is
+    the column fed to ``row_fn``, so the media_id can differ from the
+    id that drives the content."""
+    schema = (
+        "media_id long, payload binary, "
+        f"meta struct<{meta_fields}, n_bytes:bigint>"
+    )
+    px = pixel_col or id_col
+
+    def synth(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for mid, did in zip(pdf[id_col], pdf[px]):
+                payload, meta = row_fn(int(did))
+                meta["n_bytes"] = len(payload)
+                out.append((int(mid), payload, meta))
+            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
+
+    cols = [id_col] if px == id_col else [id_col, px]
+    return docs.select(*cols).mapInPandas(synth, schema)
+
+
+_IMAGE_META = "format:string, width:int, height:int"
+
+
+def _gradient_image(did: int):
+    """The closed-form m1/m7 pixel model: an HxWx3 uint8 image with
+    ``w = id%16+8``, ``h = id%8+8``, R varying along x as
+    ``(id + x) mod 256`` and G/B constant ``(7*id) mod 256`` /
+    ``(13*id) mod 256``."""
+    import numpy as np
+
+    w, h = did % 16 + 8, did % 8 + 8
+    img = np.empty((h, w, 3), dtype=np.uint8)
+    img[:, :, 0] = ((did + np.arange(w)) % 256)[None, :]
+    img[:, :, 1] = (7 * did) % 256
+    img[:, :, 2] = (13 * did) % 256
+    return img
+
+
+def _gradient_table(docs, id_col, fmt: str, encode, pixel_col=None):
+    """Synthesizer over ``_gradient_image``: ``encode(img, id) -> bytes``."""
+
+    def row(did):
+        img = _gradient_image(did)
+        return encode(img, did), {
+            "format": fmt, "width": img.shape[1], "height": img.shape[0],
+        }
+
+    return _synth_table(docs, id_col, _IMAGE_META, row, pixel_col)
+
+
 def synthesize_ppm_media_table(
     docs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -2852,34 +2739,7 @@ def synthesize_ppm_media_table(
     downstream statistic is therefore exactly computable in SQL, which is
     what gives m1/m2 true value oracles instead of rows-only checks.
     """
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
-    )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                row = (did + np.arange(w)) % 256
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :, 0] = row[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                payload = encode_ppm(img)
-                out.append(
-                    (did, payload,
-                     {"format": "ppm", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _gradient_table(docs, id_col, "ppm", lambda img, did: encode_ppm(img))
 
 
 def synthesize_png_media_table(
@@ -2898,36 +2758,11 @@ def synthesize_png_media_table(
     the id that drives the pixel model, so a corpus with synthetic
     duplicate rows (llm2) can give two media_ids byte-identical images.
     """
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
+    return _gradient_table(
+        docs, id_col, "png",
+        lambda img, did: encode_png(img, row_filter=lambda y: y % 5),
+        pixel_col,
     )
-    px = pixel_col or id_col
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid_, did in zip(pdf[id_col], pdf[px]):
-                mid_, did = int(mid_), int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                row = (did + np.arange(w)) % 256
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :, 0] = row[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                payload = encode_png(img, row_filter=lambda y: y % 5)
-                out.append(
-                    (mid_, payload,
-                     {"format": "png", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    cols = [id_col] if px == id_col else [id_col, px]
-    return docs.select(*cols).mapInPandas(synth, schema)
 
 
 def synthesize_palette_png_media_table(
@@ -2942,36 +2777,12 @@ def synthesize_palette_png_media_table(
     and every de-filter path, against the SAME closed-form oracle as
     m7: a value mismatch therefore isolates the palette/Adam7 code.
     """
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
+    return _gradient_table(
+        docs, id_col, "png",
+        lambda img, did: encode_png(
+            img, row_filter=lambda y: y % 5, palette=True, interlace=True
+        ),
     )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                row = (did + np.arange(w)) % 256
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :, 0] = row[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                payload = encode_png(
-                    img, row_filter=lambda y: y % 5, palette=True, interlace=True
-                )
-                out.append(
-                    (did, payload,
-                     {"format": "png", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
 
 
 def synthesize_png16_media_table(
@@ -2985,34 +2796,13 @@ def synthesize_png16_media_table(
     per-pass filter cycle, so one decoded corpus exercises the 2-byte-
     per-sample filter offsets (bpp=6) across all 7 Adam7 passes.
     """
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
+    return _gradient_table(
+        docs, id_col, "png",
+        lambda img, did: encode_png(
+            img.astype("uint16") * 257, row_filter=lambda y: y % 5,
+            interlace=True,
+        ),
     )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                row = ((did + np.arange(w)) % 256) * 257
-                img = np.empty((h, w, 3), dtype=np.uint16)
-                img[:, :, 0] = row[None, :]
-                img[:, :, 1] = ((7 * did) % 256) * 257
-                img[:, :, 2] = ((13 * did) % 256) * 257
-                payload = encode_png(img, row_filter=lambda y: y % 5, interlace=True)
-                out.append(
-                    (did, payload,
-                     {"format": "png", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
 
 
 def synthesize_rgba_png_media_table(
@@ -3026,35 +2816,39 @@ def synthesize_rgba_png_media_table(
     contract, so the m7 closed-form oracle still applies — a mismatch
     isolates the alpha-channel plumbing (filter offsets, channel strip).
     """
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
+    def encode(img, did):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                row = (did + np.arange(w)) % 256
-                img = np.empty((h, w, 4), dtype=np.uint8)
-                img[:, :, 0] = row[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                img[:, :, 3] = ((31 * did + np.arange(w)) % 256)[None, :]
-                payload = encode_png(img, row_filter=lambda y: y % 5, interlace=True)
-                out.append(
-                    (did, payload,
-                     {"format": "png", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
+        h, w = img.shape[:2]
+        alpha = np.broadcast_to(((31 * did + np.arange(w)) % 256)[None, :], (h, w))
+        return encode_png(
+            np.dstack([img, alpha.astype(np.uint8)]), row_filter=lambda y: y % 5,
+            interlace=True,
+        )
 
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _gradient_table(docs, id_col, "png", encode)
+
+
+def _mjpeg_table(docs, id_col, fmt: str, container, mul: int, step: int):
+    """Video synthesizer core: each doc becomes ``container(frames, 8,
+    8)`` over ``id%6+2`` genuine baseline-JPEG frames, frame f an 8x8
+    constant at the EVEN value ``2*((id*mul + step*f) % 128)`` (the
+    exact-roundtrip JPEG values)."""
+
+    def row(did):
+        import numpy as np
+
+        nf = did % 6 + 2
+        frames = [
+            encode_jpeg_gray(
+                np.full((8, 8), 2 * ((did * mul + step * f) % 128), dtype=np.uint8)
+            )
+            for f in range(nf)
+        ]
+        return container(frames, 8, 8), {"format": fmt, "n_frames": nf}
+
+    return _synth_table(docs, id_col, "format:string, n_frames:int", row)
 
 
 def synthesize_avi_mjpeg_table(
@@ -3067,34 +2861,7 @@ def synthesize_avi_mjpeg_table(
     the video path, so container demux + per-frame entropy decode verify
     by exact value.
     """
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "n_frames:int, n_bytes:bigint>"
-    )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                nf = did % 6 + 2
-                frames = []
-                for f in range(nf):
-                    v = 2 * ((did * 3 + 17 * f) % 128)
-                    frames.append(
-                        encode_jpeg_gray(np.full((8, 8), v, dtype=np.uint8))
-                    )
-                payload = encode_avi_mjpeg(frames, 8, 8)
-                out.append(
-                    (did, payload,
-                     {"format": "avi", "n_frames": nf, "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _mjpeg_table(docs, id_col, "avi", encode_avi_mjpeg, 3, 17)
 
 
 def synthesize_jpeg420_media_table(
@@ -3135,34 +2902,7 @@ def synthesize_fmp4_mjpeg_table(
     """Deterministic REAL fragmented-mp4 table: like
     ``synthesize_mp4_mjpeg_table`` but fMP4 (moof/traf/trun) packaging —
     ``id%6+2`` exact-roundtrip JPEG frames at ``2*((id*9 + 11*f) % 128)``."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "n_frames:int, n_bytes:bigint>"
-    )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                nf = did % 6 + 2
-                frames = [
-                    encode_jpeg_gray(
-                        np.full((8, 8), 2 * ((did * 9 + 11 * f) % 128), dtype=np.uint8)
-                    )
-                    for f in range(nf)
-                ]
-                payload = encode_mp4f_mjpeg(frames, 8, 8)
-                out.append(
-                    (did, payload,
-                     {"format": "fmp4", "n_frames": nf, "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _mjpeg_table(docs, id_col, "fmp4", encode_mp4f_mjpeg, 9, 11)
 
 
 def synthesize_mp4_mjpeg_table(
@@ -3171,34 +2911,7 @@ def synthesize_mp4_mjpeg_table(
     """Deterministic REAL-mp4 table: like ``synthesize_avi_mjpeg_table``
     but packed in ISO-BMFF — ``id%6+2`` exact-roundtrip JPEG frames at
     the EVEN value ``2*((id*5 + 13*f) % 128)`` per frame f."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "n_frames:int, n_bytes:bigint>"
-    )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                nf = did % 6 + 2
-                frames = [
-                    encode_jpeg_gray(
-                        np.full((8, 8), 2 * ((did * 5 + 13 * f) % 128), dtype=np.uint8)
-                    )
-                    for f in range(nf)
-                ]
-                payload = encode_mp4_mjpeg(frames, 8, 8)
-                out.append(
-                    (did, payload,
-                     {"format": "mp4", "n_frames": nf, "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _mjpeg_table(docs, id_col, "mp4", encode_mp4_mjpeg, 5, 13)
 
 
 def synthesize_color_jpeg_media_table(
@@ -3236,35 +2949,22 @@ def _synthesize_block_jpeg_table(
     additionally box-averages to itself for the 4:2:0 encoders) —
     grayscale, or replicated to R=G=B when ``rgb`` (Y=value, Cb=Cr=128
     exactly), then encoded by ``encoder``."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
+    def row(did):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                hb, wb = dims_fn(did)
-                r = np.arange(hb)[:, None]
-                c = np.arange(wb)[None, :]
-                tiles = value_fn(did, r, c).astype(np.uint8)
-                img = np.kron(tiles, np.ones((block_px, block_px), dtype=np.uint8))
-                if rgb:
-                    img = np.repeat(img[:, :, None], 3, axis=2)
-                payload = encoder(img)
-                out.append(
-                    (did, payload,
-                     {"format": fmt, "width": wb * block_px,
-                      "height": hb * block_px, "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
+        hb, wb = dims_fn(did)
+        r = np.arange(hb)[:, None]
+        c = np.arange(wb)[None, :]
+        tiles = value_fn(did, r, c).astype(np.uint8)
+        img = np.kron(tiles, np.ones((block_px, block_px), dtype=np.uint8))
+        if rgb:
+            img = np.repeat(img[:, :, None], 3, axis=2)
+        return encoder(img), {
+            "format": fmt, "width": wb * block_px, "height": hb * block_px,
+        }
 
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _synth_table(docs, id_col, _IMAGE_META, row)
 
 
 def synthesize_jpeg_media_table(
@@ -3308,41 +3008,21 @@ def synthesize_video_table(
     ``(id + 17*i) mod 256`` on every channel) — every sampled frame's
     statistics are closed-form in (id, i), giving the m3 query an exact
     SQL oracle through demux + decode."""
-    schema = "media_id long, payload binary, n_frames int"
 
-    def synth(batches: Iterator) -> Iterator:
+    def row(did):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = did % 6 + 2
-                frames = []
-                for i in range(n):
-                    val = (did + 17 * i) % 256
-                    img = np.full((frame_h, frame_w, 3), val, dtype=np.uint8)
-                    frames.append(encode_ppm(img))
-                out.append((did, pack_frames(frames), n))
-            yield pd.DataFrame(out, columns=["media_id", "payload", "n_frames"])
+        n = did % 6 + 2
+        frames = [
+            encode_ppm(
+                np.full((frame_h, frame_w, 3), (did + 17 * i) % 256, dtype=np.uint8)
+            )
+            for i in range(n)
+        ]
+        return pack_frames(frames), {"n_frames": n}
 
-    return docs.select(id_col).mapInPandas(synth, schema)
-
-
-def synthesize_media_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Fake-codec media table (utf-8 text bytes as payload) — kept for the
-    fake-path plumbing tests; real-image synthesis is
-    ``synthesize_ppm_media_table``."""
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.struct(
-            F.lit("fake").alias("format"),
-            (F.length(text_col) % 16 + 8).cast("int").alias("width"),
-            (F.length(text_col) % 8 + 8).cast("int").alias("height"),
-            F.length(F.encode(F.col(text_col), "utf-8")).cast("long").alias("n_bytes"),
-        ).alias("meta"),
+    return _synth_table(docs, id_col, "n_frames:int", row).select(
+        "media_id", "payload", "meta.n_frames"
     )
 
 
@@ -3502,15 +3182,6 @@ def _crc16(data: bytes) -> int:
     for b in data:
         crc = ((crc << 8) & 0xFF00) ^ t[(crc >> 8) ^ b]
     return crc
-
-
-_FLAC_FIXED_COEFFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
 
 
 def _write_flac_subframe(bw, samples, bits: int = 16, method: str = "fixed",
@@ -3752,15 +3423,21 @@ def _read_flac_subframe(br, blocksize: int, bits: int = 16) -> list:
         # difference sequence (r15): res[m] is diff^order(x)[m], so each
         # level j recovers diff^j(x) as last-warmup-diff + cumsum of the
         # level above — one cumsum per order instead of a per-sample
-        # Python convolution.  int64 exact: |sample| < 2^17, order <= 4
-        # diffs < 2^21, cumsum over <= 65536 samples < 2^38.
+        # Python convolution.  A valid stream has |sample| < 2^(bits-1),
+        # so every difference level stays below 2^(bits+order); a level
+        # past that bound is corrupt or adversarial.  Checking it before
+        # each cumsum keeps int64 exact (bound * 65536 samples < 2^38)
+        # instead of letting crafted residuals wrap silently.
         import numpy as np
 
         seq = np.asarray(res, dtype=np.int64)
         levels = [np.asarray(warm, dtype=np.int64)]
         for _ in range(1, order):
             levels.append(np.diff(levels[-1]))
+        bound = 1 << (bits + order)
         for j in range(order - 1, -1, -1):
+            if len(seq) and int(np.abs(seq).max()) >= bound:
+                raise ValueError("FLAC FIXED residuals out of range")
             seq = levels[j][-1] + np.cumsum(seq)
         return warm + seq.tolist()
     if stype >= 32:  # LPC, order = low 5 bits + 1
@@ -3951,6 +3628,18 @@ def decode_flac(payload: bytes):
     return samples, int(sr)
 
 
+def _sine(n: int, f: int, a: int, sr: int = 8000):
+    """``n`` int16 samples of ``trunc(a * sin(2*pi*f*t / sr))`` — the
+    closed-form tone every audio synthesizer (and its SQL oracle) uses."""
+    import numpy as np
+
+    t = np.arange(n, dtype=np.float64)
+    return np.trunc(a * np.sin(2.0 * np.pi * f * t / sr)).astype(np.int16)
+
+
+_AUDIO_META = "format:string, sample_rate:int, n_samples:int"
+
+
 def synthesize_wav_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic REAL-audio media table: each doc becomes an honest
     RIFF/WAVE file (stdlib ``wave`` writer — real header, real 16-bit PCM
@@ -3969,45 +3658,24 @@ def synthesize_wav_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     probe have since become real too — only VP8/HEIC pixel decode and
     arithmetic-JPEG keep NotImplementedError escape hatches.)
     """
-    schema = (
-        "media_id long, payload binary, "
-        "meta struct<format:string, sample_rate:int, n_samples:int, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
+    def row(did):
         import io
         import wave
 
-        import numpy as np
-        import pandas as pd
+        n = 160 + (did % 50) * 8
+        samples = _sine(n, 100 + (did % 400), 1000 + (did % 9000))
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(samples.tobytes())
+        return buf.getvalue(), {
+            "format": "wav", "sample_rate": 8000, "n_samples": n,
+        }
 
-        sr = 8000
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = 160 + (did % 50) * 8
-                f = 100 + (did % 400)
-                a = 1000 + (did % 9000)
-                t = np.arange(n, dtype=np.float64)
-                samples = np.trunc(a * np.sin(2.0 * np.pi * f * t / sr)).astype(
-                    np.int16
-                )
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(sr)
-                    w.writeframes(samples.tobytes())
-                payload = buf.getvalue()
-                out.append(
-                    (did, payload,
-                     {"format": "wav", "sample_rate": sr, "n_samples": n,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _synth_table(docs, id_col, _AUDIO_META, row)
 
 
 def synthesize_flac_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4025,36 +3693,15 @@ def synthesize_flac_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     coefficients — the subframe type real-world encoders emit),
     rice-coded, CRC-protected, MD5-stamped FLAC.
     """
-    schema = (
-        "media_id long, payload binary, "
-        "meta struct<format:string, sample_rate:int, n_samples:int, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(did):
+        n = 168 + (did % 40) * 8
+        samples = _sine(n, 120 + (did % 350), 900 + (did % 8000))
+        return encode_flac(samples, 8000, method="lpc"), {
+            "format": "flac", "sample_rate": 8000, "n_samples": n,
+        }
 
-        sr = 8000
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = 168 + (did % 40) * 8
-                f = 120 + (did % 350)
-                a = 900 + (did % 8000)
-                t = np.arange(n, dtype=np.float64)
-                samples = np.trunc(a * np.sin(2.0 * np.pi * f * t / sr)).astype(
-                    np.int16
-                )
-                payload = encode_flac(samples, sr, method="lpc")
-                out.append(
-                    (did, payload,
-                     {"format": "flac", "sample_rate": sr, "n_samples": n,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _synth_table(docs, id_col, _AUDIO_META, row)
 
 
 def audio_features(df: DataFrame) -> DataFrame:
@@ -4160,45 +3807,20 @@ def synthesize_stereo_flac_table(docs: DataFrame, id_col: str = "doc_id") -> Dat
     both channels analytically and the whole stereo decode path —
     including the mid/side parity reconstruction — is value-verified.
     """
-    schema = (
-        "media_id long, payload binary, "
-        "meta struct<format:string, sample_rate:int, n_samples:int, "
-        "mode:string, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(did):
+        n = 160 + (did % 36) * 8
+        a = 800 + (did % 7000)
+        mode = ("lr", "ls", "rs", "ms")[did % 4]
+        payload = encode_flac_stereo(
+            _sine(n, 110 + (did % 300), a), _sine(n, 130 + (did % 320), a),
+            8000, mode=mode, method="lpc" if did % 2 else "fixed",
+        )
+        return payload, {
+            "format": "flac", "sample_rate": 8000, "n_samples": n, "mode": mode,
+        }
 
-        sr = 8000
-        modes = ("lr", "ls", "rs", "ms")
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = 160 + (did % 36) * 8
-                fl = 110 + (did % 300)
-                fr = 130 + (did % 320)
-                a = 800 + (did % 7000)
-                tt = np.arange(n, dtype=np.float64)
-                left = np.trunc(a * np.sin(2.0 * np.pi * fl * tt / sr)).astype(
-                    np.int16
-                )
-                right = np.trunc(a * np.sin(2.0 * np.pi * fr * tt / sr)).astype(
-                    np.int16
-                )
-                mode = modes[did % 4]
-                method = "lpc" if did % 2 else "fixed"
-                payload = encode_flac_stereo(left, right, sr, mode=mode,
-                                             method=method)
-                out.append(
-                    (did, payload,
-                     {"format": "flac", "sample_rate": sr, "n_samples": n,
-                      "mode": mode, "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _synth_table(docs, id_col, _AUDIO_META + ", mode:string", row)
 
 
 def stereo_audio_features(df: DataFrame) -> DataFrame:
@@ -4257,36 +3879,23 @@ def synthesize_gif_media_table(
     frames are interlaced — so a single decoded corpus proves LZW,
     palette resolution (both table kinds), all four interlace passes,
     and extension skipping against the SQL oracle."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_frames:int, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
+    def row(did):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h, nf = did % 8 + 4, did % 4 + 4, did % 4 + 2
-                frames = []
-                for f in range(nf):
-                    img = np.empty((h, w, 3), dtype=np.uint8)
-                    img[:, :, 0] = ((did + 17 * f + np.arange(w)) % 256)[None, :]
-                    img[:, :, 1] = (7 * did + 5 * f) % 256
-                    img[:, :, 2] = (13 * did) % 256
-                    frames.append(img)
-                payload = encode_gif(frames)
-                out.append(
-                    (did, payload,
-                     {"format": "gif", "width": w, "height": h,
-                      "n_frames": nf, "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
+        w, h, nf = did % 8 + 4, did % 4 + 4, did % 4 + 2
+        frames = []
+        for f in range(nf):
+            img = np.empty((h, w, 3), dtype=np.uint8)
+            img[:, :, 0] = ((did + 17 * f + np.arange(w)) % 256)[None, :]
+            img[:, :, 1] = (7 * did + 5 * f) % 256
+            img[:, :, 2] = (13 * did) % 256
+            frames.append(img)
+        return encode_gif(frames), {
+            "format": "gif", "width": w, "height": h, "n_frames": nf,
+        }
 
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _synth_table(docs, id_col, _IMAGE_META + ", n_frames:int", row)
 
 
 def synthesize_bmp_media_table(
@@ -4298,35 +3907,12 @@ def synthesize_bmp_media_table(
     ids and 24-bit for odd ids, top-down row order when ``id % 3 == 0``
     — one corpus covers all four encoder paths against the SAME
     closed-form oracle as m1."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
+    return _gradient_table(
+        docs, id_col, "bmp",
+        lambda img, did: encode_bmp(
+            img, palette=(did % 2 == 0), top_down=(did % 3 == 0)
+        ),
     )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :, 0] = ((did + np.arange(w)) % 256)[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                payload = encode_bmp(
-                    img, palette=(did % 2 == 0), top_down=(did % 3 == 0)
-                )
-                out.append(
-                    (did, payload,
-                     {"format": "bmp", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
 
 
 # ---------------------------------------------------------------- TIFF codec
@@ -4529,35 +4115,12 @@ def synthesize_tiff_media_table(
     ``id % 3 == 0``, 4-row strips everywhere — one corpus covers both
     byte orders, both baseline compressions, and multi-strip assembly
     against the SAME closed-form oracle as m1."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
+    return _gradient_table(
+        docs, id_col, "tiff",
+        lambda img, did: encode_tiff(
+            img, big_endian=(did % 2 == 1), packbits=(did % 3 == 0)
+        ),
     )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :, 0] = ((did + np.arange(w)) % 256)[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                payload = encode_tiff(
-                    img, big_endian=(did % 2 == 1), packbits=(did % 3 == 0)
-                )
-                out.append(
-                    (did, payload,
-                     {"format": "tiff", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
 
 
 # ----------------------------------------------------------------- ICO codec
@@ -4654,35 +4217,10 @@ def synthesize_ico_media_table(
     model, one image per icon, embedded as PNG for even ids and as a
     doubled-height DIB for odd ids — one corpus covers directory
     parsing and both entry payload styles against the m1 oracle."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
+    return _gradient_table(
+        docs, id_col, "ico",
+        lambda img, did: encode_ico([img], png_entry=lambda i: did % 2 == 0),
     )
-
-    def synth(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 16 + 8, did % 8 + 8
-                img = np.empty((h, w, 3), dtype=np.uint8)
-                img[:, :, 0] = ((did + np.arange(w)) % 256)[None, :]
-                img[:, :, 1] = (7 * did) % 256
-                img[:, :, 2] = (13 * did) % 256
-                payload = encode_ico(
-                    [img], png_entry=lambda i, d=did: d % 2 == 0
-                )
-                out.append(
-                    (did, payload,
-                     {"format": "ico", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
 
 
 # ------------------------------------------------- WebM (Matroska) container
@@ -4949,37 +4487,23 @@ def synthesize_webm_media_table(
     sizes, 4 frames per cluster — covers multi-cluster walks, keyframe
     and interframe tags, and the SimpleBlock timestamp math against a
     pure-SQL oracle."""
-    schema = (
-        "media_id long, payload binary, meta struct<format:string, "
-        "width:int, height:int, n_bytes:bigint>"
-    )
 
-    def synth(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(did):
+        nf = did % 6 + 2
+        w, h = did % 100 + 16, did % 60 + 16
+        frames = [
+            encode_vp8_frame(
+                keyframe=(i % 3 == 0), width=w, height=h,
+                part_size=(did * 7 + i * 11) % 200 + 10,
+                fill=did + i,
+            )
+            for i in range(nf)
+        ]
+        return encode_webm_vp8(frames, w, h), {
+            "format": "webm", "width": w, "height": h,
+        }
 
-        for pdf in batches:
-            out = []
-            for did in pdf[id_col]:
-                did = int(did)
-                nf = did % 6 + 2
-                w, h = did % 100 + 16, did % 60 + 16
-                frames = [
-                    encode_vp8_frame(
-                        keyframe=(i % 3 == 0), width=w, height=h,
-                        part_size=(did * 7 + i * 11) % 200 + 10,
-                        fill=did + i,
-                    )
-                    for i in range(nf)
-                ]
-                payload = encode_webm_vp8(frames, w, h)
-                out.append(
-                    (did, payload,
-                     {"format": "webm", "width": w, "height": h,
-                      "n_bytes": len(payload)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return docs.select(id_col).mapInPandas(synth, schema)
+    return _synth_table(docs, id_col, _IMAGE_META, row)
 
 
 def webm_frame_index(df: DataFrame) -> DataFrame:

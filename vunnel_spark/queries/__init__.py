@@ -43,40 +43,38 @@ from pathlib import Path
 from vunnel_spark.registry import REGISTRY
 
 #: queries added or semantically changed THIS round — always gated first.
-#: Round 15 (optimization round 2): semantics unchanged everywhere; the
-#: entries are the round's changed PLANS (layered/persisted/thinned
-#: reworks from the inherited commits, o2's dropped in-plan repartition)
-#: plus the queries whose PYTHON KERNELS changed byte-identically (the
-#: PNG codec vectorization: llm2 + the png-decode m-family).  All
-#: re-oracled locally before fronting.
+#: Round 16: semantics unchanged everywhere; the entries are every query
+#: built on the folded media synthesizers, JPEG encoders and image
+#: stages of operators/multimodal.py (byte-identical payloads, pinned by
+#: tests/test_multimodal_bytes.py) — the whole m-family plus llm2.
 GATE_PRIORITY: list[str] = [
-    "ghsa1_per_ecosystem_dag",
-    "e17_ghsa_cvss_envelope",
-    "e14_cvss_base_score",
-    "rhel1_parse_cve_dag",
-    "rhel2_cvss_normalize",
-    "sles1_not_affected_dag",
-    "fedora1_bodhi_merge_dag",
-    "osv1_fixdate_patch",
-    "openvex1_libraries_dag",
-    "o2_fixedin_deterministic_order",
-    "llm2_media_corpus_dag",
+    "m1_image_feature_extract",
+    "m2_resize_pipeline",
+    "m3_video_frame_sample",
+    "m4_audio_features",
+    "m5_audio_windowed_energy",
+    "m6_audio_exact_dedup",
     "m7_png_feature_extract",
     "m8_png_resize_pipeline",
+    "m9_jpeg_feature_extract",
+    "m10_avi_mjpeg_frame_sample",
+    "m11_mp4_frame_sample",
+    "m12_color_jpeg_feature_extract",
+    "m13_jpeg420_feature_extract",
+    "m14_fmp4_frame_sample",
+    "m15_progressive_jpeg_extract",
+    "m16_progressive420_extract",
+    "m17_flac_audio_features",
+    "m18_stereo_flac_features",
     "m19_palette_adam7_extract",
     "m20_png16_feature_extract",
     "m21_rgba_png_feature_extract",
-    "m17_flac_audio_features",
-    "m18_stereo_flac_features",
-    "g1_dup_components",
-    "g2_transitive_dedup",
-    "g3_chain_components",
-    "d11_dedup_clusters",
-    "d9_semantic_dedup",
-    "n5_ann_ivf_dup_retrieval",
-    "n7_pq_adc_topk",
-    "n8_pq_rerank_retrieval",
-    "n9_ivfpq_topk",
+    "m22_gif_frame_extract",
+    "m23_bmp_feature_extract",
+    "m24_tiff_feature_extract",
+    "m25_ico_feature_extract",
+    "m26_webm_vp8_probe",
+    "llm2_media_corpus_dag",
 ]
 
 #: the round GATE_PRIORITY was written for.  compute_gate_window warns
@@ -90,7 +88,7 @@ GATE_PRIORITY: list[str] = [
 #: plain suite keeps it a warning because the driver commits each
 #: round's gate report AFTER the round's final code commit, which makes
 #: the stamp lag by exactly one at judge-suite time by construction.
-GATE_PRIORITY_ROUND = 15
+GATE_PRIORITY_ROUND = 16
 
 #: size of the external gate window (the driver hash-checks this many).
 WINDOW_SIZE = 50

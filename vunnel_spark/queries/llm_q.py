@@ -275,7 +275,7 @@ def llm2(spark, sf_dir):
     )
     corpus = docs.withColumn("base", F.col("doc_id")).unionByName(dups)
     media = synthesize_png_media_table(corpus, pixel_col="base")
-    feats = image_features(media, fake=False).select(
+    feats = image_features(media).select(
         "media_id", "width", "height",
         F.round("mean_r", 4).alias("mr"),
         F.round("mean_g", 4).alias("mg"),

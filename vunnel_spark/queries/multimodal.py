@@ -4,8 +4,7 @@ typed metadata through Arrow-batched mapInPandas stages.
 Round 4: the PPM (P6) codec is REAL (operators/multimodal.py), and the
 media tables are synthesized with closed-form pixel values, so m1/m2/m3
 carry exact SQL value oracles — the hash match verifies encode -> decode
--> stats (and demux, for m3) end-to-end.  The fake-codec path keeps its
-own plumbing coverage in tests/test_multimodal.py.
+-> stats (and demux, for m3) end-to-end.
 """
 
 from __future__ import annotations
@@ -14,6 +13,18 @@ from pyspark.sql import functions as F
 
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
+
+
+def _rounded_stats(feats):
+    """The image-feature result shape most m-family queries return: ids,
+    dims and the four channel statistics rounded to 4 places."""
+    return feats.select(
+        "media_id", "width", "height",
+        F.round("mean_r", 4).alias("mean_r"),
+        F.round("mean_g", 4).alias("mean_g"),
+        F.round("mean_b", 4).alias("mean_b"),
+        F.round("std_all", 4).alias("std_all"),
+    )
 
 
 @register(
@@ -52,14 +63,7 @@ def m1(spark, sf_dir):
     )
 
     media = synthesize_ppm_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -98,9 +102,9 @@ def m2(spark, sf_dir):
     )
 
     media = synthesize_ppm_media_table(t(spark, sf_dir, "documents"))
-    small = resize_images(media, out_w=8, out_h=8, fake=False)
+    small = resize_images(media, out_w=8, out_h=8)
     sizes = small.select("media_id", F.col("meta.n_bytes").alias("n_bytes"))
-    feats = image_features(small, fake=False)
+    feats = image_features(small)
     return feats.join(sizes, "media_id").select(
         "media_id", "width", "height", "n_bytes",
         F.round("mean_r", 4).alias("mean_r"),
@@ -136,7 +140,7 @@ def m3(spark, sf_dir):
 
     videos = synthesize_video_table(t(spark, sf_dir, "documents"))
     frames = sample_video_frames(videos, every_n=2)
-    feats = image_features(frames, fake=False, passthrough=("frame_idx",))
+    feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
         F.round("mean_r", 4).alias("mean_r"),
@@ -181,14 +185,7 @@ def m7(spark, sf_dir):
     )
 
     media = synthesize_png_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -230,14 +227,7 @@ def m19(spark, sf_dir):
     )
 
     media = synthesize_palette_png_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -279,14 +269,7 @@ def m20(spark, sf_dir):
     )
 
     media = synthesize_png16_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -328,14 +311,7 @@ def m21(spark, sf_dir):
     )
 
     media = synthesize_rgba_png_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -373,9 +349,9 @@ def m8(spark, sf_dir):
     )
 
     media = synthesize_png_media_table(t(spark, sf_dir, "documents"))
-    small = resize_images(media, out_w=8, out_h=8, fake=False)
+    small = resize_images(media, out_w=8, out_h=8)
     sizes = small.select("media_id", F.col("meta.n_bytes").alias("n_bytes"))
-    feats = image_features(small, fake=False)
+    feats = image_features(small)
     return feats.join(sizes, "media_id").select(
         "media_id", "width", "height", "n_bytes",
         F.round("mean_r", 4).alias("mean_r"),
@@ -419,14 +395,7 @@ def m9(spark, sf_dir):
     )
 
     media = synthesize_jpeg_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -458,7 +427,7 @@ def m10(spark, sf_dir):
 
     videos = synthesize_avi_mjpeg_table(t(spark, sf_dir, "documents"))
     frames = sample_video_frames(videos, every_n=2)
-    feats = image_features(frames, fake=False, passthrough=("frame_idx",))
+    feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
         F.round("mean_r", 4).alias("mean_r"),
@@ -494,7 +463,7 @@ def m11(spark, sf_dir):
 
     videos = synthesize_mp4_mjpeg_table(t(spark, sf_dir, "documents"))
     frames = sample_video_frames(videos, every_n=2)
-    feats = image_features(frames, fake=False, passthrough=("frame_idx",))
+    feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
         F.round("mean_r", 4).alias("mean_r"),
@@ -538,14 +507,7 @@ def m12(spark, sf_dir):
     )
 
     media = synthesize_color_jpeg_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -584,14 +546,7 @@ def m13(spark, sf_dir):
     )
 
     media = synthesize_jpeg420_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -622,7 +577,7 @@ def m14(spark, sf_dir):
 
     videos = synthesize_fmp4_mjpeg_table(t(spark, sf_dir, "documents"))
     frames = sample_video_frames(videos, every_n=2)
-    feats = image_features(frames, fake=False, passthrough=("frame_idx",))
+    feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
         F.round("mean_r", 4).alias("mean_r"),
@@ -669,14 +624,7 @@ def m15(spark, sf_dir):
     )
 
     media = synthesize_progressive_jpeg_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -720,14 +668,7 @@ def m16(spark, sf_dir):
     )
 
     media = synthesize_progressive420_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -817,14 +758,7 @@ def m23(spark, sf_dir):
     )
 
     media = synthesize_bmp_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -866,14 +800,7 @@ def m24(spark, sf_dir):
     )
 
     media = synthesize_tiff_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
@@ -916,14 +843,7 @@ def m25(spark, sf_dir):
     )
 
     media = synthesize_ico_media_table(t(spark, sf_dir, "documents"))
-    feats = image_features(media, fake=False)
-    return feats.select(
-        "media_id", "width", "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_all", 4).alias("std_all"),
-    )
+    return _rounded_stats(image_features(media))
 
 
 @register(
