@@ -48,6 +48,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import HEADLINE  # noqa: E402 - the one headline list
+
 #: shuffle-exchange detector (broadcast exchanges don't redistribute the
 #: probe side) — shared semantics with scripts/audit_partitions.py
 SHUFFLE_RE = re.compile(
@@ -61,24 +63,6 @@ SF_DIRS = {
     "sf1": os.path.join(REPO, ".scaledata", "sf1"),
     "sf10": os.path.join(REPO, ".scaledata", "sf10"),
 }
-
-HEADLINE = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier",
-    "tpch_q6_revenue_forecast",
-    "tpch_q10_returned_items",
-    "tpch_q12_shipmode_classes",
-    "tpch_q14_promo_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_pushdown",
-    "d1_exact_dedup",
-    "d3_minhash_lsh_pairs",
-    "n1_ann_bruteforce_topk",
-    "v1_tumbling_window_counts",
-    "x1_token_count_stats",
-]
 
 # the most expensive non-headline registry queries by the r14 sf0.1
 # sweep under the fanout policy (registry_sweep_r14.json; the r9
@@ -114,9 +98,9 @@ def consume(df) -> None:
     SORTs all fold away (the r11 x27 lesson: a projection-only packing
     query measured as a parquet-footer no-op).  The noop datasource
     iterates all rows and materializes each column, so the timed plan
-    is the plan a real consumer would run.  See
-    scripts/audit_sweep_action.py for the per-query audit of which
-    registry queries the count() action was silently truncating.
+    is the plan a real consumer would run.  sweep_action_audit.json
+    records the per-query audit of which registry queries the count()
+    action was silently truncating.
     """
     df.write.format("noop").mode("overwrite").save()
 
@@ -578,7 +562,7 @@ def run_top10_sf10(out_json: str, top_n: int = 10) -> None:
     with open(ranking) as f:
         data = json.load(f)
         # r10's file wraps times under "queries"; the r12 sweep (noop
-        # consuming action, sweep_times.py) writes the flat name->sec map
+        # consuming action) recorded the flat name->sec map
         sweep = data.get("queries", data)
     done = set(HEADLINE) | {"debian1_legacy_merge_dag"}
     done |= set(_ANN_GEOMETRY_SKIP)

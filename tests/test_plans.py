@@ -128,15 +128,15 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from vunnel_spark.operators.joins import bucketed_join, write_bucketed
+    from vunnel_spark.sinks.bucketed import write_bucketed
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         left = spark.range(0, 5000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("a"))
         right = spark.range(0, 5000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("b"))
-        write_bucketed(left, "t_bleft", "k", n_buckets=8, sort_col="k")
-        write_bucketed(right, "t_bright", "k", n_buckets=8, sort_col="k")
-        joined = bucketed_join(spark, "t_bleft", "t_bright", "k")
+        bl = write_bucketed(left, "t_bleft", str(tmp_path / "bleft"), "k")
+        br = write_bucketed(right, "t_bright", str(tmp_path / "bright"), "k")
+        joined = bl.join(br, "k")
         p = plan_of(joined)
         # co-located buckets: SortMergeJoin with NO Exchange on either side
         assert "SortMergeJoin" in p

@@ -173,12 +173,6 @@ def cvss4_valid(stripped: Column) -> Column:
     )
 
 
-def cvss3_version(stripped: Column) -> Column:
-    """``f"3.{minor_version}"`` (parser.py:610/:635) — the minor comes
-    from the vector's own prefix."""
-    return F.concat(F.lit("3."), F.regexp_extract(stripped, r"^CVSS:3\.([01])/", 1))
-
-
 # ---------------------------------------------------------------------------
 # CVSS 3.x base-score math (FIRST 3.1 spec §7.1 + Appendix A)
 # ---------------------------------------------------------------------------

@@ -2,7 +2,8 @@
 
 Re-expresses the reference's ``PackagesHTMLParser`` state machine
 (``/root/reference/src/vunnel/providers/amazon/parser.py:276-331``; used in
-the scan flow at ``parser.py:199-207``) as a Spark ``mapInPandas`` stage:
+the scan flow at ``parser.py:199-207``) as an Arrow row stage
+(``vunnel_spark.row_stage``):
 
 - the element carrying ``id="new_packages"`` opens package collection;
 - a data token in the arch list (``x86_64:``, ``noarch:``, ``src:``) opens a
@@ -13,8 +14,8 @@ the scan flow at ``parser.py:199-207``) as a Spark ``mapInPandas`` stage:
 
 HTML parsing is inherently imperative (SURVEY §2.11 F7: "UDF inside scan
 stage"), so this is one of the repo's few sanctioned Python-UDF paths —
-Arrow-batched via mapInPandas, one document per input row, never row-at-a-
-time Python in a hot JVM path.  At 100 TB the html column arrives from a
+Arrow-batched, one document per input row, never row-at-a-time Python in
+a hot JVM path.  At 100 TB the html column arrives from a
 landing-zone scan (binaryFile/text) already partitioned by page; this stage
 is embarrassingly parallel and shuffle-free.
 """
@@ -22,7 +23,6 @@ is embarrassingly parallel and shuffle-free.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from vunnel_spark.row_stage import row_stage
 
 _ARCH_LIST = ("x86_64:", "noarch:", "src:")
 
@@ -91,23 +93,14 @@ def extract_alas_packages(
     package found under a relevant arch section.
     """
 
-    def parse(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def parse(pid, html):
+        p = _AlasParser()
+        p.feed(html)
+        overview = "".join(p.overview_parts)
+        for arch, pkg in p.fixes:
+            yield (pid, arch, pkg, overview)
 
-        for pdf in batches:
-            out: dict[str, list] = {"page_id": [], "arch": [], "pkg": [], "overview": []}
-            for pid, html in zip(pdf[id_col], pdf[html_col]):
-                p = _AlasParser()
-                p.feed(html)
-                overview = "".join(p.overview_parts)
-                for arch, pkg in p.fixes:
-                    out["page_id"].append(pid)
-                    out["arch"].append(arch)
-                    out["pkg"].append(pkg)
-                    out["overview"].append(overview)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(parse, EXTRACT_SCHEMA)
+    return row_stage(df, EXTRACT_SCHEMA, (id_col, html_col), parse)
 
 
 def alas_name_version(pkg):

@@ -108,11 +108,3 @@ def severity_rank(col: Column) -> Column:
         *[x for k, v in SEVERITY_RANK.items() for x in (F.lit(k), F.lit(v))]
     )
     return F.coalesce(mapping[col], F.lit(0))
-
-
-def rank_to_severity(col: Column) -> Column:
-    """Integer rank -> canonical severity string (inverse of severity_rank)."""
-    mapping = F.create_map(
-        *[x for k, v in SEVERITY_RANK.items() for x in (F.lit(v), F.lit(k))]
-    )
-    return F.coalesce(mapping[col], F.lit("Unknown"))

@@ -59,17 +59,3 @@ def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
     Measured 3x per-pair on the sf0.1 800k-pair scorer.
     """
     return dot(a, b) / F.sqrt(na * nb)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -408,20 +408,3 @@ def dpkg_sort_key(versions: pd.Series) -> pd.Series:
 @F.pandas_udf(T.StringType())
 def apk_sort_key(versions: pd.Series) -> pd.Series:
     return _memo_key_series(versions, apk_sort_key_str)
-
-
-SORT_KEY_UDFS = {
-    "rpm": rpm_sort_key,
-    "rpm_evr": rpm_evr_sort_key,
-    "dpkg": dpkg_sort_key,
-    "apk": apk_sort_key,
-}
-
-
-def with_version_key(df, version_col: str, fmt: str = "rpm", out_col: str = "_vkey"):
-    """Project an order-preserving sort key for ``version_col``.
-
-    Downstream sorts/windows/max_by then operate on ``out_col`` as a plain
-    string — single Python crossing, everything after stays in codegen.
-    """
-    return df.withColumn(out_col, SORT_KEY_UDFS[fmt](F.col(version_col)))

@@ -1,23 +1,21 @@
-"""Join strategy helpers for scale: skew salting and bucketed co-location.
+"""Join strategy helper for scale: skew salting.
 
-These are the two knobs AQE cannot always turn for you:
+``salted_join`` is explicit salt expansion for a HOT key joining a
+dimension that is too big to broadcast — a knob AQE cannot always turn
+for you.  AQE's skew-join splitting handles sort-merge skew within a
+stage, but a single pathological key (one CVE ID with 10^8 affected
+rows) still lands on one reducer for aggregations downstream; salting
+spreads it across ``n_salts`` tasks.
 
-- ``salted_join``: explicit salt expansion for a HOT key joining a
-  dimension that is too big to broadcast.  AQE's skew-join splitting
-  handles sort-merge skew within a stage, but a single pathological key
-  (one CVE ID with 10^8 affected rows) still lands on one reducer for
-  aggregations downstream; salting spreads it across ``n_salts`` tasks.
-- ``write_bucketed`` / co-located reads: pre-shuffling both fact tables
-  into the same bucket layout removes the shuffle from EVERY subsequent
-  join on that key — the classic amortization when one key joins often
-  (the reference joins on vuln_id in nearly every provider).
+The other such knob, bucketed co-location, is a write-time layout:
+``sinks/bucketed.write_bucketed``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -64,29 +62,3 @@ def salted_join(
         salted_small = salted_small.hint("merge")
     out = salted_big.join(salted_small, [*on_cols, "_salt"], how)
     return out.drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
-
-    Two tables bucketed identically on the join key join WITHOUT a
-    shuffle (SortMergeJoin reads co-located buckets directly) — verified
-    by tests/test_plans.py::test_bucketed_join_has_no_shuffle.
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: Sequence[str] | str
-) -> DataFrame:
-    """Join two identically-bucketed tables (no shuffle on the join key)."""
-    return spark.table(left_table).join(spark.table(right_table), on)

@@ -41,6 +41,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+from vunnel_spark.row_stage import row_stage
+
 FEATURE_SCHEMA = (
     "media_id long, width int, height int, mean_r double, mean_g double, "
     "mean_b double, std_all double"
@@ -1705,50 +1707,36 @@ def decode_image(payload: bytes):
 # ------------------------------------------------------------- image stages
 
 def image_features(df: DataFrame, passthrough: tuple = ()) -> DataFrame:
-    """Per-image channel statistics via mapInPandas.
-
-    One Arrow batch of (media_id, payload) rows in, one batch of
-    feature rows out; the binary column never leaves the executor.  The
+    """Per-image channel statistics, one feature row per (media_id,
+    payload) row; the binary column never leaves the executor.  The
     per-image decode is inherent (codecs are per-payload), but the stats
     vectorize per decoded array — no per-pixel Python.  ``passthrough``
     columns (e.g. frame_idx from the video demux) are carried to the
     output unchanged.
     """
+    import numpy as np
+
     extra_schema = "".join(
         f", {c} {df.schema[c].dataType.simpleString()}" for c in passthrough
     )
-    schema = FEATURE_SCHEMA + extra_schema
 
-    def compute(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def features(mid, payload, *extras):
+        img = decode_image(payload)
+        arr = img.astype(np.float64)
+        yield (
+            mid, img.shape[1], img.shape[0],
+            float(arr[:, :, 0].mean()),
+            float(arr[:, :, 1].mean()),
+            float(arr[:, :, 2].mean()),
+            float(arr.std()),
+            *extras,
+        )
 
-        for pdf in batches:
-            out = []
-            for tup in zip(
-                pdf["media_id"], pdf["payload"], *[pdf[c] for c in passthrough]
-            ):
-                mid, payload, extras = tup[0], tup[1], tup[2:]
-                img = decode_image(payload)
-                arr = img.astype(np.float64)
-                out.append(
-                    (
-                        mid, img.shape[1], img.shape[0],
-                        float(arr[:, :, 0].mean()),
-                        float(arr[:, :, 1].mean()),
-                        float(arr[:, :, 2].mean()),
-                        float(arr.std()),
-                        *extras,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "mean_r", "mean_g",
-                         "mean_b", "std_all", *passthrough],
-            )
-
-    return df.select("media_id", *passthrough, "payload").mapInPandas(
-        compute, schema
+    return row_stage(
+        df.select("media_id", *passthrough, "payload"),
+        FEATURE_SCHEMA + extra_schema,
+        ("media_id", "payload", *passthrough),
+        features,
     )
 
 
@@ -1758,33 +1746,30 @@ def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     Output schema mirrors the input media schema so resize stages compose;
     re-encoding as PPM keeps the output a real decodable image.
     """
+    import numpy as np
+
     schema = (
         "media_id long, payload binary, meta struct<format:string, "
         "width:int, height:int, n_bytes:bigint>"
     )
 
-    def compute(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def resize(mid, payload):
+        img = decode_image(payload)
+        h0, w0 = img.shape[0], img.shape[1]
+        yi = (np.arange(out_h) * h0 // out_h).astype(int)
+        xi = (np.arange(out_w) * w0 // out_w).astype(int)
+        resized = np.ascontiguousarray(img[yi][:, xi])
+        raw = encode_ppm(resized)
+        yield (
+            mid, raw,
+            {"format": "ppm", "width": out_w, "height": out_h,
+             "n_bytes": len(raw)},
+        )
 
-        yi = None
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(payload)
-                h0, w0 = img.shape[0], img.shape[1]
-                yi = (np.arange(out_h) * h0 // out_h).astype(int)
-                xi = (np.arange(out_w) * w0 // out_w).astype(int)
-                resized = np.ascontiguousarray(img[yi][:, xi])
-                raw = encode_ppm(resized)
-                out.append(
-                    (mid, raw,
-                     {"format": "ppm", "width": out_w, "height": out_h,
-                      "n_bytes": len(raw)})
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
-
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        resize,
+    )
 
 
 # ------------------------------------------------------------ video stages
@@ -2203,41 +2188,36 @@ def sample_video_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Explode-shaped frame sampling: one video row -> one row per kept
     frame (indices 0, every_n, 2*every_n, ...).
 
-    mapInPandas so demux happens executor-side per Arrow batch; frame
-    payloads are real images (PPM in VSPK packs, JPEG in AVI/MJPEG), so
-    downstream ``image_features`` composes directly on the output.
+    The demux happens executor-side; frame payloads are real images
+    (PPM in VSPK packs, JPEG in AVI/MJPEG), so downstream
+    ``image_features`` composes directly on the output.
     """
     schema = (
         "media_id long, frame_idx int, payload binary, "
         "meta struct<format:string, width:int, height:int, n_bytes:bigint>"
     )
 
-    def compute(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for idx, frame in enumerate(iter_frames(payload)):
-                    if idx % every_n:
-                        continue
-                    img = decode_image(frame)
-                    if frame[:2] == b"\xff\xd8":
-                        fmt = "jpeg"
-                    elif frame[:8] == _PNG_SIG:
-                        fmt = "png"
-                    else:
-                        fmt = "ppm"
-                    out.append(
-                        (mid, idx, frame,
-                         {"format": fmt, "width": img.shape[1],
-                          "height": img.shape[0], "n_bytes": len(frame)})
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "payload", "meta"]
+    def sample(mid, payload):
+        for idx, frame in enumerate(iter_frames(payload)):
+            if idx % every_n:
+                continue
+            img = decode_image(frame)
+            if frame[:2] == b"\xff\xd8":
+                fmt = "jpeg"
+            elif frame[:8] == _PNG_SIG:
+                fmt = "png"
+            else:
+                fmt = "ppm"
+            yield (
+                mid, idx, frame,
+                {"format": fmt, "width": img.shape[1],
+                 "height": img.shape[0], "n_bytes": len(frame)},
             )
 
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        sample,
+    )
 
 
 # ----------------------------------------------------------------- GIF codec
@@ -2538,41 +2518,33 @@ def decode_gif(payload: bytes):
 
 
 def gif_frame_features(df: DataFrame) -> DataFrame:
-    """Per-frame channel means over a GIF media column: one Arrow batch
-    of (media_id, payload) rows in, one feature row per decoded frame
-    out.  The demux + LZW decode are inherently per-payload; the stats
-    vectorize per frame.  Mirrors sample_video_frames ∘ image_features,
-    fused because GIF frames are palette-composited sub-rectangles of a
-    shared canvas, not independently decodable payloads."""
+    """Per-frame channel means over a GIF media column: one feature row
+    per decoded frame.  The demux + LZW decode are inherently
+    per-payload; the stats vectorize per frame.  Mirrors
+    sample_video_frames ∘ image_features, fused because GIF frames are
+    palette-composited sub-rectangles of a shared canvas, not
+    independently decodable payloads."""
+    import numpy as np
+
     schema = (
         "media_id long, frame_idx int, width int, height int, "
         "mean_r double, mean_g double, mean_b double"
     )
 
-    def compute(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for f, img in enumerate(decode_gif(payload)):
-                    arr = img.astype(np.float64)
-                    out.append(
-                        (
-                            mid, f, img.shape[1], img.shape[0],
-                            float(arr[:, :, 0].mean()),
-                            float(arr[:, :, 1].mean()),
-                            float(arr[:, :, 2].mean()),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
+    def frame_features(mid, payload):
+        for f, img in enumerate(decode_gif(payload)):
+            arr = img.astype(np.float64)
+            yield (
+                mid, f, img.shape[1], img.shape[0],
+                float(arr[:, :, 0].mean()),
+                float(arr[:, :, 1].mean()),
+                float(arr[:, :, 2].mean()),
             )
 
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        frame_features,
+    )
 
 
 # ----------------------------------------------------------------- BMP codec
@@ -2668,33 +2640,27 @@ def decode_bmp(payload: bytes):
 
 def _synth_table(docs: DataFrame, id_col: str, meta_fields: str, row_fn,
                  pixel_col: str | None = None) -> DataFrame:
-    """The shell every media synthesizer runs through: one
-    ``mapInPandas`` pass over ``docs`` yielding ``(media_id, payload,
-    meta)`` rows, where ``row_fn(id) -> (payload, meta dict)`` builds
-    one row's bytes and ``meta_fields`` (Spark DDL ``name:type`` pairs)
-    declares its meta struct; ``n_bytes`` (the payload length) is
-    appended to every meta.  ``pixel_col`` (default: the id itself) is
-    the column fed to ``row_fn``, so the media_id can differ from the
-    id that drives the content."""
+    """The shell every media synthesizer runs through: one row stage
+    over ``docs`` yielding ``(media_id, payload, meta)`` rows, where
+    ``row_fn(id) -> (payload, meta dict)`` builds one row's bytes and
+    ``meta_fields`` (Spark DDL ``name:type`` pairs) declares its meta
+    struct; ``n_bytes`` (the payload length) is appended to every meta.
+    ``pixel_col`` (default: the id itself) is the column fed to
+    ``row_fn``, so the media_id can differ from the id that drives the
+    content."""
     schema = (
         "media_id long, payload binary, "
         f"meta struct<{meta_fields}, n_bytes:bigint>"
     )
     px = pixel_col or id_col
 
-    def synth(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, did in zip(pdf[id_col], pdf[px]):
-                payload, meta = row_fn(int(did))
-                meta["n_bytes"] = len(payload)
-                out.append((int(mid), payload, meta))
-            yield pd.DataFrame(out, columns=["media_id", "payload", "meta"])
+    def synth(mid, did):
+        payload, meta = row_fn(int(did))
+        meta["n_bytes"] = len(payload)
+        yield (int(mid), payload, meta)
 
     cols = [id_col] if px == id_col else [id_col, px]
-    return docs.select(*cols).mapInPandas(synth, schema)
+    return row_stage(docs.select(*cols), schema, (id_col, px), synth)
 
 
 _IMAGE_META = "format:string, width:int, height:int"
@@ -3708,50 +3674,40 @@ def audio_features(df: DataFrame) -> DataFrame:
     """Per-clip audio features off REAL audio decode — RIFF/WAVE via the
     stdlib ``wave`` parser, FLAC via this module's codec (sniffed on the
     payload magic): sample rate and length from the container, peak
-    amplitude and RMS from the samples, integral duration in ms.
-    Arrow-batched mapInPandas — the payload column is pruned upstream
-    unless requested, and each batch decodes in one Python hop (the
-    multimodal plumbing contract; at 100 TB the decode cost is
-    per-payload CPU, embarrassingly parallel)."""
+    amplitude and RMS from the samples, integral duration in ms.  The
+    payload column is pruned upstream unless requested; at 100 TB the
+    decode cost is per-payload CPU, embarrassingly parallel."""
+    import io
+    import math
+    import wave
+
+    import numpy as np
+
     schema = (
         "media_id long, sample_rate int, n_samples int, duration_ms int, "
         "peak_amplitude int, rms double"
     )
 
-    def compute(batches: Iterator) -> Iterator:
-        import io
-        import math
-        import wave
+    def features(mid, payload):
+        payload = bytes(payload)
+        if payload[:4] == b"fLaC":
+            pcm, sr = decode_flac(payload)
+            n = len(pcm)
+            samples = pcm.astype(np.float64)
+        else:
+            with wave.open(io.BytesIO(payload), "rb") as w:
+                sr = w.getframerate()
+                n = w.getnframes()
+                raw = w.readframes(n)
+            samples = np.frombuffer(raw, dtype=np.int16).astype(np.float64)
+        rms = round(math.sqrt(float(np.mean(samples * samples))), 4)
+        yield (int(mid), sr, n, n * 1000 // sr,
+               int(np.max(np.abs(samples))), rms)
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                if payload[:4] == b"fLaC":
-                    pcm, sr = decode_flac(payload)
-                    n = len(pcm)
-                    samples = pcm.astype(np.float64)
-                else:
-                    with wave.open(io.BytesIO(payload), "rb") as w:
-                        sr = w.getframerate()
-                        n = w.getnframes()
-                        raw = w.readframes(n)
-                    samples = np.frombuffer(raw, dtype=np.int16).astype(np.float64)
-                rms = round(math.sqrt(float(np.mean(samples * samples))), 4)
-                out.append(
-                    (int(mid), sr, n, n * 1000 // sr,
-                     int(np.max(np.abs(samples))), rms)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "sample_rate", "n_samples",
-                         "duration_ms", "peak_amplitude", "rms"],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        features,
+    )
 
 
 def audio_windowed_energy(df: DataFrame, window: int = 80) -> DataFrame:
@@ -3763,32 +3719,28 @@ def audio_windowed_energy(df: DataFrame, window: int = 80) -> DataFrame:
     audio dedup/quality filtering; shape-wise it is one Arrow hop that
     explodes each clip into n/window rows — bounded by clip length,
     never corpus-wide."""
+    import io
+    import wave
+
+    import numpy as np
+
     schema = "media_id long, window_idx int, rms double"
 
-    def compute(batches: Iterator) -> Iterator:
-        import io
-        import wave
+    def energy(mid, payload):
+        with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
+            raw = w.readframes(w.getnframes())
+        samples = np.frombuffer(raw, dtype=np.int16).astype(np.float64)
+        n_win = len(samples) // window
+        if not n_win:
+            return []
+        blocks = samples[: n_win * window].reshape(n_win, window)
+        rms = np.sqrt((blocks * blocks).mean(axis=1))
+        return [(int(mid), i, round(float(v), 4)) for i, v in enumerate(rms)]
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    raw = w.readframes(w.getnframes())
-                samples = np.frombuffer(raw, dtype=np.int16).astype(np.float64)
-                n_win = len(samples) // window
-                if not n_win:
-                    continue
-                blocks = samples[: n_win * window].reshape(n_win, window)
-                rms = np.sqrt((blocks * blocks).mean(axis=1))
-                out.extend(
-                    (int(mid), i, round(float(v), 4)) for i, v in enumerate(rms)
-                )
-            yield pd.DataFrame(out, columns=["media_id", "window_idx", "rms"])
-
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        energy,
+    )
 
 
 def synthesize_stereo_flac_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3828,44 +3780,35 @@ def stereo_audio_features(df: DataFrame) -> DataFrame:
     RMS for each channel plus the inter-channel sample correlation
     numerator (sum L_t*R_t — exact integer, the decorrelation-sensitive
     statistic: any mid/side or left/side reconstruction slip changes
-    it).  Same Arrow-batch plumbing contract as audio_features."""
+    it)."""
+    import math
+
+    import numpy as np
+
     schema = (
         "media_id long, sample_rate int, n_samples int, "
         "peak_left int, peak_right int, rms_left double, rms_right double, "
         "lr_dot bigint"
     )
 
-    def compute(batches: Iterator) -> Iterator:
-        import math
+    def features(mid, payload):
+        pcm, sr = decode_flac(bytes(payload))
+        if pcm.ndim != 2 or pcm.shape[1] != 2:
+            raise ValueError("stereo payload expected")
+        left = pcm[:, 0].astype(np.float64)
+        right = pcm[:, 1].astype(np.float64)
+        n = pcm.shape[0]
+        yield (int(mid), sr, n,
+               int(np.max(np.abs(left))), int(np.max(np.abs(right))),
+               round(math.sqrt(float(np.mean(left * left))), 4),
+               round(math.sqrt(float(np.mean(right * right))), 4),
+               int(np.dot(pcm[:, 0].astype(np.int64),
+                          pcm[:, 1].astype(np.int64))))
 
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                pcm, sr = decode_flac(bytes(payload))
-                if pcm.ndim != 2 or pcm.shape[1] != 2:
-                    raise ValueError("stereo payload expected")
-                left = pcm[:, 0].astype(np.float64)
-                right = pcm[:, 1].astype(np.float64)
-                n = pcm.shape[0]
-                out.append(
-                    (int(mid), sr, n,
-                     int(np.max(np.abs(left))), int(np.max(np.abs(right))),
-                     round(math.sqrt(float(np.mean(left * left))), 4),
-                     round(math.sqrt(float(np.mean(right * right))), 4),
-                     int(np.dot(pcm[:, 0].astype(np.int64),
-                                pcm[:, 1].astype(np.int64))))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "sample_rate", "n_samples",
-                         "peak_left", "peak_right", "rms_left", "rms_right",
-                         "lr_dot"],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        features,
+    )
 
 
 def synthesize_gif_media_table(
@@ -4508,30 +4451,20 @@ def synthesize_webm_media_table(
 
 def webm_frame_index(df: DataFrame) -> DataFrame:
     """Explode-shaped WebM probe: one video row -> one row per frame
-    with container timestamp and VP8 frame-header facts.  mapInPandas so
-    the demux happens executor-side per Arrow batch; payload bytes never
-    reach the driver."""
+    with container timestamp and VP8 frame-header facts.  The demux
+    happens executor-side; payload bytes never reach the driver."""
     schema = (
         "media_id long, frame_idx int, ts_ms long, is_keyframe boolean, "
         "kf_width int, kf_height int, part_size int"
     )
 
-    def compute(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def frames(mid, payload):
+        probe = probe_webm_vp8(payload)
+        for idx, fr in enumerate(probe["frames"]):
+            yield (mid, idx, fr["ts_ms"], fr["keyframe"],
+                   fr["width"], fr["height"], fr["part_size"])
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                probe = probe_webm_vp8(payload)
-                for idx, fr in enumerate(probe["frames"]):
-                    out.append(
-                        (mid, idx, fr["ts_ms"], fr["keyframe"],
-                         fr["width"], fr["height"], fr["part_size"])
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "ts_ms", "is_keyframe",
-                         "kf_width", "kf_height", "part_size"],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(compute, schema)
+    return row_stage(
+        df.select("media_id", "payload"), schema, ("media_id", "payload"),
+        frames,
+    )

@@ -5,10 +5,11 @@ The reference walks recursive AND/OR criteria trees per definition
 inherited context: providers/oracle/oval_parser.py:209-247), emitting
 which (namespace_test, package_test) pairs gate a vulnerability.
 
-Spark form: a UDTF-shaped ``mapInPandas`` — one document row in, many
-typed rows out — applied at parse time.  The tree arrives as a JSON
-column (from spark-xml, from_json, or raw); recursion happens in Python
-once per document, after which everything downstream is relational.
+Spark form: a UDTF-shaped Arrow row stage (``vunnel_spark.row_stage``)
+— one document row in, many typed rows out — applied at parse time.
+The tree arrives as a JSON column (from spark-xml, from_json, or raw);
+recursion happens in Python once per document, after which everything
+downstream is relational.
 
 Quirk preserved deliberately: like the reference (oval_v2.py:181-241),
 an AND group pairs its namespace test with package tests found in its
@@ -18,9 +19,10 @@ OR subtrees; nested groups inherit the nearest enclosing namespace test.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+from vunnel_spark.row_stage import row_stage
 
 CRITERIA_ROWS_SCHEMA = (
     "doc_id string, namespace_test string, package_test string, polarity string"
@@ -55,7 +57,6 @@ def flatten_criteria_json(doc_id: str, criteria_json: str, ns_prefix: str = "ns:
     return [(doc_id, ns, pkg, pol) for ns, pkg, pol in out]
 
 
-_CTX_COLUMNS = ["doc_id", "namespace", "package", "version", "module", "arch"]
 CRITERIA_CTX_ROWS_SCHEMA = (
     "doc_id string, namespace string, package string, version string, "
     "module string, arch string"
@@ -157,40 +158,27 @@ def flatten_criteria_ctx(
     patterns: dict | None = None,
 ) -> DataFrame:
     """(id, criteria_json) -> (doc_id, namespace, package, version, module,
-    arch) rows with module/arch inherited down branches (E4), via
-    Arrow-batched mapInPandas — same UDTF shape as ``flatten_criteria``."""
+    arch) rows with module/arch inherited down branches (E4)."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def affected(did, cj):
+        return collect_affected_json(str(did), cj, patterns)
 
-        for pdf in batches:
-            rows = []
-            for did, cj in zip(pdf[id_col], pdf[criteria_col]):
-                rows.extend(collect_affected_json(str(did), cj, patterns))
-            yield pd.DataFrame(rows, columns=_CTX_COLUMNS)
-
-    return df.select(id_col, criteria_col).mapInPandas(gen, CRITERIA_CTX_ROWS_SCHEMA)
+    return row_stage(
+        df.select(id_col, criteria_col), CRITERIA_CTX_ROWS_SCHEMA,
+        (id_col, criteria_col), affected,
+    )
 
 
 def flatten_criteria(
     df: DataFrame, id_col: str = "doc_id", criteria_col: str = "criteria", ns_prefix: str = "ns:"
 ) -> DataFrame:
     """(id, criteria_json) -> exploded (doc_id, namespace_test,
-    package_test, polarity) rows via Arrow-batched mapInPandas."""
+    package_test, polarity) rows."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def pairs(did, cj):
+        return flatten_criteria_json(str(did), cj, ns_prefix)
 
-        for pdf in batches:
-            rows = []
-            # zip over the column arrays, not iterrows(): iterrows
-            # materializes a pandas Series per row (~100 us/row of pure
-            # overhead — more than the tree walk itself on the e3
-            # fixture); the ctx variant below always did it this way
-            for did, cj in zip(pdf[id_col], pdf[criteria_col]):
-                rows.extend(flatten_criteria_json(str(did), cj, ns_prefix))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "namespace_test", "package_test", "polarity"]
-            )
-
-    return df.select(id_col, criteria_col).mapInPandas(gen, CRITERIA_ROWS_SCHEMA)
+    return row_stage(
+        df.select(id_col, criteria_col), CRITERIA_ROWS_SCHEMA,
+        (id_col, criteria_col), pairs,
+    )

@@ -46,7 +46,9 @@ from vunnel_spark.registry import REGISTRY
 #: Round 16: semantics unchanged everywhere; the entries are every query
 #: built on the folded media synthesizers, JPEG encoders and image
 #: stages of operators/multimodal.py (byte-identical payloads, pinned by
-#: tests/test_multimodal_bytes.py) — the whole m-family plus llm2.
+#: tests/test_multimodal_bytes.py) — the whole m-family plus llm2 — and
+#: the OVAL and ALAS HTML queries whose Python stage moved onto the
+#: shared Arrow row stage (vunnel_spark/row_stage.py).
 GATE_PRIORITY: list[str] = [
     "m1_image_feature_extract",
     "m2_resize_pipeline",
@@ -75,6 +77,10 @@ GATE_PRIORITY: list[str] = [
     "m25_ico_feature_extract",
     "m26_webm_vp8_probe",
     "llm2_media_corpus_dag",
+    "e3_oval_criteria_flatten",
+    "e4_oval_ctx_flatten",
+    "f7_alas_html_extract",
+    "alas1_end_to_end_dag",
 ]
 
 #: the round GATE_PRIORITY was written for.  compute_gate_window warns

@@ -32,7 +32,7 @@ here, never inferred from the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -62,11 +62,4 @@ def write_bucketed(
         .sortBy(*(sort_cols or [bucket_col]))
         .saveAsTable(name)
     )
-    return spark.table(name)
-
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    """Read a bucketed table back through the catalog (the bucket spec
-    lives in the catalog entry, not the parquet footers — a plain
-    ``spark.read.parquet(path)`` would lose the layout)."""
     return spark.table(name)

@@ -24,9 +24,10 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from vunnel_spark.row_stage import row_stage
 
 
 def _is_within(base: str, target: str) -> bool:
@@ -86,33 +87,27 @@ def read_tar_members(
 ) -> DataFrame:
     """Scan tar archives into (archive, member, n_bytes, content) rows.
 
-    binaryFile source -> Arrow-batched mapInPandas demux: each executor
-    opens its own archives from the batch's bytes (BytesIO — nothing hits
-    local disk), emits one row per regular-file member, and applies the
-    same traversal guard so hostile member names never propagate
-    downstream as relative paths.  ``suffix`` prunes members early
-    (e.g. ``.json``) so downstream parsing scans less.
+    binaryFile source -> Arrow row-stage demux: each executor opens its
+    own archives from the row's bytes (BytesIO — nothing hits local
+    disk), emits one row per regular-file member, and applies the same
+    traversal guard so hostile member names never propagate downstream
+    as relative paths.  ``suffix`` prunes members early (e.g. ``.json``)
+    so downstream parsing scans less.
     """
 
-    def demux(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                with tarfile.open(fileobj=io.BytesIO(content), mode="r:*") as tar:
-                    for member in tar:
-                        if not member.isfile():
-                            continue
-                        if _traversal_filter(member, "/sandbox") is None:
-                            continue
-                        if suffix and not member.name.endswith(suffix):
-                            continue
-                        data = tar.extractfile(member).read()
-                        rows.append((path, member.name, len(data), data))
-            yield pd.DataFrame(
-                rows, columns=["archive", "member", "n_bytes", "content"]
-            )
+    def demux(path, content):
+        with tarfile.open(fileobj=io.BytesIO(content), mode="r:*") as tar:
+            for member in tar:
+                if not member.isfile():
+                    continue
+                if _traversal_filter(member, "/sandbox") is None:
+                    continue
+                if suffix and not member.name.endswith(suffix):
+                    continue
+                data = tar.extractfile(member).read()
+                yield (path, member.name, len(data), data)
 
     df = spark.read.format("binaryFile").load(path_glob)
-    return df.select("path", "content").mapInPandas(demux, MEMBER_SCHEMA)
+    return row_stage(
+        df.select("path", "content"), MEMBER_SCHEMA, ("path", "content"), demux
+    )

@@ -8,7 +8,7 @@ config 33-76; criteria semantics 139-271).
 Spark form (SURVEY's fallback for the missing spark-xml package):
 
     spark.read.format("binaryFile")  ->  one row per OVAL file
-    -> mapInPandas: per file, decompress-on-the-fly + iterparse, clearing
+    -> row stage: per file, decompress-on-the-fly + iterparse, clearing
        elements as they complete (constant memory per task, like the
        reference), emitting one relational row per (definition,
        package-test) pair — the same rows operators/oval.py produces from
@@ -26,9 +26,10 @@ import bz2
 import gzip
 import io
 import re
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from vunnel_spark.row_stage import row_stage
 
 OVAL_ROWS_SCHEMA = (
     "path string, definition_id string, title string, severity string, "
@@ -147,16 +148,8 @@ def read_oval_xml(spark: SparkSession, path: str) -> DataFrame:
 
     One task per file; each task streams its file with constant memory.
     """
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = [c.split(" ")[0] for c in OVAL_ROWS_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path_v, content_v in zip(pdf["path"], pdf["content"]):
-                rows.extend(parse_oval_bytes(path_v, content_v))
-            yield pd.DataFrame(rows, columns=cols)
-
     files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(gen, OVAL_ROWS_SCHEMA)
+    return row_stage(
+        files.select("path", "content"), OVAL_ROWS_SCHEMA,
+        ("path", "content"), parse_oval_bytes,
+    )
