@@ -62,6 +62,24 @@ def test_kv_cache_changed_keys_skip_compute(spark, tmp_path):
     assert {r.key for r in cache.changed_keys(nxt).collect()} == {"b", "d"}
 
 
+def test_kv_cache_put_recovers_crashed_swap(spark, tmp_path):
+    """A kill between the publish's two renames parks the payload table
+    as a backup; the next put must restore it and merge into it, not
+    treat the cache as empty and drop every cached key."""
+    cache = KVCache(str(tmp_path / "kv"))
+    cache.put(spark.createDataFrame(
+        [("a", bytearray(b"one")), ("b", bytearray(b"two"))],
+        "key string, payload binary",
+    ))
+    data = os.path.join(cache.path, "data")
+    os.rename(data, f"{data}.__old__")  # simulate the crash window
+
+    cache.put(spark.createDataFrame([("c", bytearray(b"three"))], "key string, payload binary"))
+    got = {r.key: bytes(r.payload) for r in cache.get_all(spark).collect()}
+    assert got == {"a": b"one", "b": b"two", "c": b"three"}
+    assert os.listdir(cache.path) == ["data"]
+
+
 def test_kv_cache_metadata_sidecar(tmp_path):
     cache = KVCache(str(tmp_path / "kv"))
     assert cache.get_metadata() == {}  # lazily initialized

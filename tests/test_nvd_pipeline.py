@@ -122,3 +122,27 @@ def test_override_refs_append_in_order_with_duplicates(spark):
     out = apply_overrides(records, overrides).collect()[0]
     assert out.refs == ["z-ref", "base", "a-ref", "a-ref"]
     assert out.severity == "OVR"
+
+
+def test_upsert_recovers_crashed_swap(spark, tmp_path):
+    """A kill between the input store's two publish renames parks the
+    stored corpus as a backup; the next upsert must restore it, or the
+    store shrinks to today's delta."""
+    import os
+
+    from vunnel_spark.pipelines.nvd import upsert_input
+
+    ts = datetime.datetime
+    path = str(tmp_path / "input")
+    upsert_input(spark, path, _records(spark, [
+        ("CVE-2024-0001", "HIGH", "first", ts(2024, 1, 1), ["a"]),
+        ("CVE-2024-0002", "LOW", "second", ts(2024, 1, 2), ["b"]),
+    ]))
+    os.rename(path, f"{path}.__old__")  # simulate the crash window
+
+    corpus = upsert_input(spark, path, _records(spark, [
+        ("CVE-2024-0002", "MEDIUM", "second-updated", ts(2025, 1, 2), ["b2"]),
+    ]))
+    got = {r.cve_id: r.description for r in corpus.collect()}
+    assert got == {"CVE-2024-0001": "first", "CVE-2024-0002": "second-updated"}
+    assert not os.path.exists(f"{path}.__old__")

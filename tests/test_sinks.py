@@ -226,6 +226,95 @@ def test_recover_backup_restores_crashed_swap(spark, tmp_path):
     assert not os.path.exists(f"{path}.__old__")
 
 
+def test_first_observed_merge_recovers_crashed_swap(spark, outdir):
+    """A kill between _atomic_install's two renames parks the state store
+    as __old__.  The next merge must restore it before deciding whether
+    the store exists, or it republishes the delta alone and every stored
+    key loses its first-observed date."""
+    path = os.path.join(outdir, "fixdates")
+    keys1 = spark.createDataFrame([("v1",), ("v2",)], "vuln string")
+    first_observed_merge(spark, path, keys1, ["vuln"], today="2026-01-01")
+    os.rename(path, f"{path}.__old__")  # simulate the crash window
+
+    keys2 = spark.createDataFrame([("v3",)], "vuln string")
+    out = first_observed_merge(spark, path, keys2, ["vuln"], today="2026-02-02")
+    dates = {r.vuln: str(r.first_observed) for r in out.collect()}
+    assert dates == {"v1": "2026-01-01", "v2": "2026-01-01", "v3": "2026-02-02"}
+    assert not os.path.exists(f"{path}.__old__")
+
+
+# ------------------------------------------------------------ schema record
+
+def _newest_job(spark) -> int:
+    """Id of the newest Spark job, once every posted event is recorded."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    it = sc.statusStore().jobsList(None).iterator()
+    return it.next().jobId() if it.hasNext() else -1
+
+
+_LAYOUTS = {
+    "plain": {},
+    "partition_by": {"partition_by": ["rel"]},
+    "hash_buckets": {"hash_buckets": 4},
+}
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_schema_record_reads_as_inferred_without_a_job(spark, outdir, layout):
+    """The publish records its data schema in the store; reads built from
+    it run no Spark job and see exactly the schema inference would give,
+    including partition columns whose values look numeric."""
+    rows = spark.range(6).select(
+        F.col("id").alias("k"), F.when(F.col("id") % 2 == 0, "x").alias("v")
+    )
+    # envelope's item struct carries the non-nullable id field
+    env = envelope(rows, "schema/os/v1", "k", ["k", "v"]).withColumn(
+        "rel", (F.col("item.k") % 2 + 22).cast("string")
+    )
+    assert not env.schema["item"].dataType["k"].nullable
+    path = os.path.join(outdir, layout)
+    w = EnvelopeWriter(path, dedup=None, **_LAYOUTS[layout])
+    w.write(env)
+    assert os.path.isfile(os.path.join(path, "_schema.json"))
+
+    before = _newest_job(spark)
+    got = w.read(spark)
+    keyed = w.read_keys(spark, ["1", "4"])
+    assert _newest_job(spark) == before, "building the read ran a Spark job"
+
+    inferred = spark.read.parquet(path)
+    if w.hash_buckets:
+        inferred = inferred.drop(EnvelopeWriter.BUCKET_COL)
+    assert got.schema == inferred.schema
+    if layout == "partition_by":
+        assert got.schema["rel"].dataType.typeName() == "integer"
+    assert sorted(got.collect(), key=str) == sorted(inferred.collect(), key=str)
+    assert {r.identifier for r in keyed.collect()} == {"1", "4"}
+
+
+def test_store_without_schema_record_reads_by_inference(spark, outdir):
+    path = os.path.join(outdir, "legacy")
+    spark.createDataFrame([("a", 1)], "identifier string, n int").write.parquet(path)
+    got = EnvelopeWriter(path, dedup=None).read(spark)
+    assert got.schema == spark.read.parquet(path).schema
+    assert [tuple(r) for r in got.collect()] == [("a", 1)]
+
+
+def test_snapshot_digest_ignores_schema_record(spark, outdir):
+    from vunnel_spark.sinks.writers import publish_snapshot
+
+    path = os.path.join(outdir, "snap")
+    EnvelopeWriter(path, dedup=None).write(
+        spark.createDataFrame([("a", 1), ("b", 2)], "identifier string, n int")
+    )
+    record = os.path.join(path, "_schema.json")
+    with_record = publish_snapshot(path, built="2026-01-01T00:00:00")["digest"]
+    os.remove(record)
+    without = publish_snapshot(path, built="2026-01-01T00:00:00")["digest"]
+    assert with_record == without
+
+
 # --------------------------------------------------- table-format adapter
 
 def test_delta_adapter_availability_probe(spark):

@@ -44,14 +44,10 @@ def upsert_input(spark: SparkSession, input_path: str, delta: DataFrame) -> Data
     INSERT-OR-REPLACE input db (manager.py:176-183, KEEP result policy).
     Returns the merged full corpus (read back from the store).
     """
-    if os.path.exists(input_path):
-        existing = spark.read.parquet(input_path)
-        merged = existing.unionByName(delta)
-    else:
-        merged = delta
     writer = EnvelopeWriter(
         input_path, key="cve_id", dedup="last_wins", order_col="last_modified"
     )
+    merged = writer.read(spark).unionByName(delta) if writer.exists() else delta
     writer.write(merged)
     return writer.read(spark)
 
@@ -138,7 +134,10 @@ def nvd_pipeline(
     corpus = upsert_input(spark, os.path.join(workdir, "input"), delta)
     if overrides is not None:
         patched = apply_overrides(corpus, overrides)
-        patched = patched.unionByName(synthesize_from_overrides(patched, overrides))
+        # apply_overrides left-joins on cve_id, so the corpus has the same
+        # cve_id set as the patched frame; anti-joining against the stored
+        # corpus keeps the right side a small broadcastable scan
+        patched = patched.unionByName(synthesize_from_overrides(corpus, overrides))
     else:
         patched = corpus.withColumn("was_overridden", F.lit(False))
     if state_path:

@@ -48,7 +48,12 @@ from vunnel_spark.registry import REGISTRY
 #: stages of operators/multimodal.py (byte-identical payloads, pinned by
 #: tests/test_multimodal_bytes.py) — the whole m-family plus llm2 — and
 #: the OVAL and ALAS HTML queries whose Python stage moved onto the
-#: shared Arrow row stage (vunnel_spark/row_stage.py).
+#: shared Arrow row stage (vunnel_spark/row_stage.py).  Then every query
+#: whose construction goes through the envelope writer's recorded-schema
+#: read-back, its crash-safe existence check or the KV cache's publish
+#: through that writer (sinks/writers.py), including nvd1's anti-join
+#: against the stored corpus and the queries reaching debian_pipeline and
+#: ubuntu_pipeline (no registered query reaches secdb_pipeline).
 GATE_PRIORITY: list[str] = [
     "m1_image_feature_extract",
     "m2_resize_pipeline",
@@ -81,6 +86,14 @@ GATE_PRIORITY: list[str] = [
     "e4_oval_ctx_flatten",
     "f7_alas_html_extract",
     "alas1_end_to_end_dag",
+    "nvd1_full_corpus_reemit",
+    "i4_first_observed_merge",
+    "s12_sink_roundtrip",
+    "s14_hash_bucket_keyed_read",
+    "s15_kv_cache_changed_keys",
+    "debian1_legacy_merge_dag",
+    "debian2_legacy_merge_scaled",
+    "ubuntu1_pro_inference",
 ]
 
 #: the round GATE_PRIORITY was written for.  compute_gate_window warns

@@ -14,6 +14,16 @@ Scale notes: dedup is one window shuffle on the identifier; the write
 itself is partition-parallel.  The atomic publish (stage dir -> rename)
 keeps readers consistent without a table format; on a real deployment the
 same code path targets Delta/Iceberg where commit atomicity is native.
+
+Schema record: every publish writes the data schema it wrote into the
+stage dir as ``_schema.json``, so the record swaps in with the data and
+cannot describe other files.  ``_read_store`` hands it to the reader:
+``spark.read.parquet`` on a bare path runs one Spark job to infer the
+schema from the footers, and a merge reads its store back while its plan
+is built, so each inference was an eager job on the load path.
+Partition columns stay out of the record; their types are inferred from
+the directory names as before.  Spark's reader and the checksum listing
+both skip ``_``-prefixed files.
 """
 
 from __future__ import annotations
@@ -28,6 +38,21 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: the data schema a publish wrote, inside the published dir
+_SCHEMA_RECORD = "_schema.json"
+
+
+def _read_store(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet store with the schema its publish recorded (no
+    inference job), or by inference when it carries no record."""
+    reader = spark.read
+    record = os.path.join(path, _SCHEMA_RECORD)
+    if os.path.exists(record):
+        with open(record) as f:
+            reader = reader.schema(StructType.fromJson(json.load(f)))
+    return reader.parquet(path)
 
 
 def envelope(df: DataFrame, schema_url: str, identifier_col: str, item_cols: Sequence[str]) -> DataFrame:
@@ -43,10 +68,12 @@ def envelope(df: DataFrame, schema_url: str, identifier_col: str, item_cols: Seq
 class EnvelopeWriter:
     """Partitioned Parquet result store with dedup-on-write.
 
-    modes:
-      - ``overwrite``: stage + atomic swap (the reference's tmp-db + rename,
-        result.py:259-302)
-      - ``append``: plain append (per-run delta landing)
+    ``write`` replaces the whole store: stage + atomic swap (the
+    reference's tmp-db + rename, result.py:259-302).  Every file of a
+    store therefore comes from one publish, together with its schema
+    record.  Incremental callers read the store, union their delta and
+    write the result back (``exists`` first, so a crashed swap is
+    recovered before the store is judged empty).
 
     dedup:
       - ``last_wins``  (INSERT OR REPLACE, result.py:95-99): highest
@@ -120,17 +147,19 @@ class EnvelopeWriter:
     def _partition_cols(self) -> list[str]:
         return ([self.BUCKET_COL] if self.hash_buckets else []) + self.partition_by
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
+    def exists(self) -> bool:
+        """Whether the store holds data.  Restores a backup that a crash
+        in the swap window left parked first: without that, a merge would
+        treat the store as empty and its write would overwrite the
+        restored data with the delta alone."""
+        _recover_backup(self.path)
+        return os.path.exists(self.path)
+
+    def write(self, df: DataFrame) -> None:
         out = self._apply_dedup(df)
         if self.hash_buckets:
             out = out.withColumn(self.BUCKET_COL, self._bucket_of(F.col(self.key)))
         parts = self._partition_cols()
-        if mode == "append":
-            w = out.write.mode("append")
-            if parts:
-                w = w.partitionBy(*parts)
-            w.parquet(self.path)
-            return
         # atomic publish: write to a stage dir, then swap into place.
         # Single-writer protocol (like the reference's tmp-db + rename):
         # stale stage/backup dirs from a crashed run are cleared up front,
@@ -147,11 +176,13 @@ class EnvelopeWriter:
         if parts:
             w = w.partitionBy(*parts)
         w.parquet(stage)
+        with open(os.path.join(stage, _SCHEMA_RECORD), "w") as f:
+            f.write(out.drop(*parts).schema.json())
         _atomic_install(stage, self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """S14 keyed read-back: the table itself (filter for point lookups)."""
-        df = spark.read.parquet(self.path)
+        df = _read_store(spark, self.path)
         if self.hash_buckets:
             df = df.drop(self.BUCKET_COL)
         return df
@@ -164,7 +195,7 @@ class EnvelopeWriter:
         (pinned by tests/test_sinks.py)."""
         from functools import reduce
 
-        df = spark.read.parquet(self.path)
+        df = _read_store(spark, self.path)
         key_filter = F.col(self.key).isin(list(keys))
         if not self.hash_buckets:
             return df.filter(key_filter)
@@ -304,16 +335,16 @@ def first_observed_merge(
         )
     new_keys = observations.select(*key_cols).distinct()
     today_col = F.lit(today).cast("date") if today else F.current_date()
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
+    writer = EnvelopeWriter(path, key=key_cols[0], dedup=None)
+    if writer.exists():
+        existing = writer.read(spark)
         misses = new_keys.join(existing.select(*key_cols), list(key_cols), "left_anti")
         inserts = misses.withColumn(date_col, today_col)
         merged = existing.unionByName(inserts)
     else:
         merged = new_keys.withColumn(date_col, today_col)
-    writer = EnvelopeWriter(path, key=key_cols[0], dedup=None)
-    writer.write(merged, mode="overwrite")
-    return spark.read.parquet(path)
+    writer.write(merged)
+    return writer.read(spark)
 
 
 def write_checksum_listing(path: str, listing_path: str) -> dict:
@@ -418,7 +449,7 @@ def compact_partitions(
 ) -> dict:
     """Small-file compaction for an append-heavy partitioned store.
 
-    Every ``mode="append"`` batch lands shuffle-partition-many files per
+    Every append batch lands shuffle-partition-many files per
     partition dir; untreated, a 100 TB store degrades to millions of
     KB-sized files whose open/footer costs dominate every scan (the
     standard lakehouse OPTIMIZE problem).  This rewrites ONLY partition

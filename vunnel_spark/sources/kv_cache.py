@@ -8,7 +8,9 @@ the two halves in their right places:
 - payload storage is a keyed PARQUET table (not one file per key — at
   100 TB a directory of billions of small files kills every list
   operation; parquet gives splittable scans, column pruning, and
-  predicate pushdown on the key), written via atomic staging swap;
+  predicate pushdown on the key), published through the result sink's
+  ``EnvelopeWriter``: the same atomic stage+swap, crash recovery and
+  recorded schema, so a read-back runs no schema-inference job;
 - the tiny mutable metadata sidecar stays a driver-side JSON file,
   exactly like the reference — it is scheduler state, not data.
 
@@ -21,11 +23,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from vunnel_spark.sinks.writers import EnvelopeWriter
 
 
 class KVCache:
@@ -38,15 +41,13 @@ class KVCache:
         self.key_col = key_col
         self.payload_col = payload_col
         os.makedirs(path, exist_ok=True)
+        # put() does its own per-key dedup and merge
+        self._store = EnvelopeWriter(os.path.join(path, "data"), key="key", dedup=None)
 
     # ------------------------------------------------------------ payloads
 
-    @property
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
     def exists(self) -> bool:
-        return os.path.isdir(self._data_dir)
+        return self._store.exists()
 
     def put(self, df: DataFrame) -> None:
         """Upsert payload rows; last-wins per key on re-put.
@@ -55,10 +56,10 @@ class KVCache:
         single row (greatest digest wins — a distributed batch has no
         arrival order, so the tie-break must be a value, not a position),
         keeping the one-row-per-key invariant that get()/changed_keys()
-        rely on.  Stages the merged table next to the live one and
-        renames — readers never observe a half-written cache (the
-        reference's tmp+swap discipline, result.py:259-302, applied to
-        the input side).
+        rely on.  Publishes the merged table through the envelope
+        writer's stage+swap — readers never observe a half-written cache
+        (the reference's tmp+swap discipline, result.py:259-302, applied
+        to the input side).
         """
         from pyspark.sql import Window
 
@@ -80,18 +81,11 @@ class KVCache:
             ).unionByName(incoming)
         else:
             merged = incoming
-        stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
-        merged.write.mode("overwrite").parquet(stage)
-        live, old = self._data_dir, os.path.join(self.path, f"_old_{uuid.uuid4().hex}")
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(stage, live)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        self._store.write(merged)
 
     def get_all(self, spark: SparkSession) -> DataFrame:
         """Full keyed scan: (key, payload, digest)."""
-        return spark.read.parquet(self._data_dir)
+        return self._store.read(spark)
 
     def get(self, spark: SparkSession, keys: list[str]) -> DataFrame:
         """Keyed read — the key filter pushes down to the parquet scan."""

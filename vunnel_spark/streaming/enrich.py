@@ -45,8 +45,8 @@ def foreach_batch_upsert(stream: DataFrame, writer, checkpoint: str):
     """Start a stream that merges each micro-batch into ``writer``.
 
     ``writer`` is a sinks.writers.EnvelopeWriter; each micro-batch is
-    unioned with the current table and re-deduped under the writer's mode
-    (read-union-dedup-atomic-swap — the same merge idiom as
+    unioned with the current table and re-deduped under the writer's
+    dedup mode (read-union-dedup-atomic-swap — the same merge idiom as
     first_observed_merge), so a key re-arriving in a later batch follows
     first-wins/last-wins A12 semantics incrementally.  The writer should
     carry an explicit ``order_col`` — with the monotonic-id fallback the
@@ -56,16 +56,14 @@ def foreach_batch_upsert(stream: DataFrame, writer, checkpoint: str):
     same bridge targets a transactional table format's MERGE; the atomic
     stage+swap here is the single-writer parquet equivalent.
     """
-    import os
-
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if os.path.exists(writer.path):
+        if writer.exists():
             merged = writer.read(batch_df.sparkSession).unionByName(batch_df)
         else:
             merged = batch_df
-        writer.write(merged, mode="overwrite")
+        writer.write(merged)
 
     return (
         stream.writeStream.foreachBatch(_merge)
