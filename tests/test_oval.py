@@ -222,26 +222,32 @@ def test_collect_affected_order_insensitive_within_node():
 
 
 def test_criteria_xml_to_tree_module_rows():
-    """XML -> tree -> E4 walk golden path: a module-stream ELSA-shaped
-    criteria parses into context-attributed rows."""
-    import xml.etree.ElementTree as ET
-
+    """E4 walk golden path: a module-stream ELSA-shaped criteria tree
+    yields context-attributed rows."""
     from vunnel_spark.operators.oval import collect_affected_json
-    from vunnel_spark.sources.oval_xml import criteria_to_tree
 
-    xml = """
-    <criteria operator="AND">
-      <criterion comment="Oracle Linux 8 is installed" test_ref="t1"/>
-      <criteria operator="AND">
-        <criterion comment="Module container-tools:ol8 is enabled" test_ref="t2"/>
-        <criteria operator="OR">
-          <criterion comment="podman is earlier than 4.0.2-6" test_ref="t3"/>
-          <criterion comment="buildah is earlier than 1.24.2-4" test_ref="t4"/>
-        </criteria>
-      </criteria>
-    </criteria>
-    """
-    tree = criteria_to_tree(ET.fromstring(xml))
+    tree = {
+        "operator": "AND",
+        "criterions": [{"comment": "Oracle Linux 8 is installed", "test_ref": "t1"}],
+        "children": [
+            {
+                "operator": "AND",
+                "criterions": [
+                    {"comment": "Module container-tools:ol8 is enabled", "test_ref": "t2"}
+                ],
+                "children": [
+                    {
+                        "operator": "OR",
+                        "criterions": [
+                            {"comment": "podman is earlier than 4.0.2-6", "test_ref": "t3"},
+                            {"comment": "buildah is earlier than 1.24.2-4", "test_ref": "t4"},
+                        ],
+                        "children": [],
+                    }
+                ],
+            }
+        ],
+    }
     rows = set(collect_affected_json("elsa-1", json.dumps(tree)))
     assert rows == {
         ("elsa-1", "Oracle Linux 8", "podman", "4.0.2-6", "container-tools:ol8", None),

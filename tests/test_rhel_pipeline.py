@@ -329,34 +329,3 @@ def test_parse_cvss3_feed_score_vs_computed_severity(spark):
     v30 = got["v30"]
     assert v30.version == "3.0" and v30.status is None
     assert v30.base_metrics.base_severity == "Low"  # computed 2.3
-
-
-def test_sles_make_cvss_flavor(spark):
-    """sles/parser.py:171-194 _make_cvss: computed base score (quantized,
-    unlike rhel's feed passthrough) and NO trailing-slash strip (unlike
-    github's removesuffix) — the third envelope flavor, composed from the
-    same shared builders."""
-    from pyspark.sql import functions as F
-
-    from vunnel_spark.pipelines.sles import with_sles_cvss
-
-    rows = [
-        ("ok", "CVSS:3.1/AV:N/AC:L/PR:N/UI:N/S:U/C:H/I:H/A:H"),
-        ("slash", "CVSS:3.1/AV:N/AC:L/PR:N/UI:N/S:U/C:H/I:H/A:H/"),
-        ("v30", "CVSS:3.0/AV:L/AC:H/PR:H/UI:R/S:C/C:L/I:N/A:N"),
-        ("bad", "CVSS:3.1/AV:Q/AC:L/PR:N/UI:N/S:U/C:H/I:H/A:H"),
-        ("none", None),
-    ]
-    df = spark.createDataFrame(rows, "id string, vec string")
-    got = {r.id: r.o for r in
-           with_sles_cvss(df, F.col("vec"), out="o").select("id", "o").collect()}
-    ok = got["ok"]
-    assert ok.version == "3.1" and ok.status == "N/A"
-    assert ok.base_metrics.base_score == 9.8          # COMPUTED, not feed
-    assert ok.base_metrics.exploitability_score == 3.9
-    assert ok.base_metrics.impact_score == 5.9
-    assert ok.base_metrics.base_severity == "Critical"
-    assert got["slash"] is None                        # no removesuffix
-    assert got["v30"].version == "3.0"
-    assert got["v30"].base_metrics.base_score == 2.3
-    assert got["bad"] is None and got["none"] is None

@@ -77,44 +77,6 @@ def test_ivf_join_is_equi_on_cell_no_cartesian(spark, emb, centroids):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_ivf_partitioned_store_prunes_and_matches(spark, sf_dir, tmp_path):
-    """The cell-partitioned serving layout must (a) return exactly what
-    the inline ivf_topk returns and (b) carry a dynamic partition filter
-    on the scan — probes prune BYTES, not just rows."""
-    import contextlib
-    import io
-    import os
-
-    from pyspark.sql import functions as F
-
-    from vunnel_spark.operators.similarity import (
-        fixed_centroids,
-        ivf_topk,
-        ivf_topk_partitioned,
-        write_ivf_partitioned,
-    )
-    from vunnel_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = fixed_centroids(8, 64)
-    store = str(tmp_path / "ivf_store")
-    write_ivf_partitioned(emb, cents, store)
-    assert any(d.startswith("cell=") for d in os.listdir(store))
-
-    queries = emb.filter(F.col("vec_id") < 4)
-    served = ivf_topk_partitioned(spark, store, queries, cents, k=3, nprobe=2)
-    inline = ivf_topk(emb, queries, cents, k=3, nprobe=2)
-    key = lambda r: (r.query_id, r.rank)
-    assert sorted(map(tuple, served.select("query_id", "neighbor_id", "rank").collect())) == \
-           sorted(map(tuple, inline.select("query_id", "neighbor_id", "rank").collect()))
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        served.explain("formatted")
-    plan = buf.getvalue()
-    assert "dynamicpruning" in plan.lower(), plan
-
-
 # ---------------------------------------------------------------- PQ
 
 

@@ -315,6 +315,29 @@ def test_snapshot_digest_ignores_schema_record(spark, outdir):
     assert with_record == without
 
 
+def test_compaction_keeps_schema_record(spark, outdir):
+    """Compacting an unpartitioned store swaps a new root into place;
+    the publish's schema record goes with it, so read-backs stay
+    job-free."""
+    from vunnel_spark.sinks.writers import compact_partitions
+
+    path = os.path.join(outdir, "compacted")
+    w = EnvelopeWriter(path, dedup=None)
+    w.write(
+        spark.range(40)
+        .select(F.col("id").cast("string").alias("identifier"), (F.col("id") * 3).alias("n"))
+        .repartition(8)
+    )
+    rows = sorted(map(tuple, w.read(spark).collect()))
+    assert list(compact_partitions(spark, path, min_files=4)) == ["."]
+    assert os.path.isfile(os.path.join(path, "_schema.json"))
+
+    before = _newest_job(spark)
+    got = w.read(spark)
+    assert _newest_job(spark) == before, "building the read ran a Spark job"
+    assert sorted(map(tuple, got.collect())) == rows
+
+
 # --------------------------------------------------- table-format adapter
 
 def test_delta_adapter_availability_probe(spark):

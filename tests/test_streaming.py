@@ -1,16 +1,13 @@
-"""True Structured Streaming tests: file-source stream -> watermarked
-windowed aggregation -> memory sink, compared against the identical batch
-expression (one definition, two run modes).
+"""True Structured Streaming test: file-source streams -> watermarked
+stream-stream interval join -> memory sink, compared against the
+identical batch expression (one definition, two run modes).
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from vunnel_spark.session import load_table
-from vunnel_spark.streaming import session_counts, sliding_counts, tumbling_counts
 
 
 @pytest.fixture(scope="module")
@@ -23,203 +20,8 @@ def event_stream_dir(spark, sf_dir, tmp_path_factory):
     return d
 
 
-def _run_stream(spark, stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def _as_sets(df, cols):
     return {tuple(str(r[c]) for c in cols) for r in df.collect()}
-
-
-def test_streaming_tumbling_matches_batch(spark, event_stream_dir):
-    batch = load_table(spark, os.path.dirname(event_stream_dir), "events") if False else None
-    static = spark.read.parquet(event_stream_dir)
-    stream = spark.readStream.schema(static.schema).parquet(event_stream_dir)
-    assert stream.isStreaming
-
-    out = _run_stream(spark, tumbling_counts(stream), "t_tumbling")
-    expect = tumbling_counts(static)
-    cols = ["wstart", "wend", "event_type", "n", "total_value"]
-    assert _as_sets(out, cols) == _as_sets(expect, cols)
-    assert out.count() > 0
-
-
-def test_streaming_sliding_matches_batch(spark, event_stream_dir):
-    static = spark.read.parquet(event_stream_dir)
-    stream = spark.readStream.schema(static.schema).parquet(event_stream_dir)
-    out = _run_stream(spark, sliding_counts(stream), "t_sliding")
-    expect = sliding_counts(static)
-    cols = ["wstart", "wend", "n"]
-    assert _as_sets(out, cols) == _as_sets(expect, cols)
-
-
-def test_streaming_session_matches_batch(spark, event_stream_dir):
-    static = spark.read.parquet(event_stream_dir)
-    stream = spark.readStream.schema(static.schema).parquet(event_stream_dir)
-    out = _run_stream(spark, session_counts(stream), "t_session")
-    expect = session_counts(static)
-    cols = ["user_id", "session_start", "session_end", "n_events"]
-    assert _as_sets(out, cols) == _as_sets(expect, cols)
-
-
-def test_stateful_first_observed_across_batches(spark, tmp_path):
-    """applyInPandasWithState: first-observed survives micro-batches; a
-    later batch with earlier timestamps must NOT move the stored date."""
-    import pyspark.sql.functions as F
-
-    from vunnel_spark.streaming.stateful import streaming_first_observed
-
-    src_dir = str(tmp_path / "stream_in")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src_dir)
-    schema = "key string, ts timestamp"
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src_dir)
-
-    # batch 1: v1 first seen at 10:00, v2 at 11:00
-    write_batch("b1", [("v1", __import__("datetime").datetime(2026, 1, 1, 10)),
-                       ("v2", __import__("datetime").datetime(2026, 1, 1, 11))])
-
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    out = streaming_first_observed(stream, "key")
-    q = (
-        out.writeStream.format("memory").queryName("t_state")
-        .outputMode("update").option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    got1 = {r.key: (str(r.first_observed), r.n_seen)
-            for r in spark.sql("SELECT * FROM t_state").collect()}
-    assert got1["v1"] == ("2026-01-01 10:00:00", 1)
-
-    # batch 2 (same running query): v1 AGAIN with an EARLIER ts + new key v3
-    write_batch("b2", [("v1", __import__("datetime").datetime(2026, 1, 1, 9)),
-                       ("v3", __import__("datetime").datetime(2026, 1, 2, 8))])
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM t_state").collect()
-    # memory sink in update mode appends updates; last row per key wins
-    latest = {}
-    for r in rows:
-        if r.key not in latest or r.n_seen > latest[r.key][1]:
-            latest[r.key] = (str(r.first_observed), r.n_seen)
-    # v1's first_observed is FROZEN at 10:00 despite the 09:00 late event
-    assert latest["v1"] == ("2026-01-01 10:00:00", 2)
-    assert latest["v3"][0] == "2026-01-02 08:00:00"
-
-
-def test_streaming_dedup_matches_batch(spark, event_stream_dir):
-    """dropDuplicatesWithinWatermark on a stream == dropDuplicates in
-    batch when all duplicates fall inside the watermark horizon; the
-    streaming form's state stays bounded by that horizon."""
-    from vunnel_spark.streaming import streaming_dedup
-
-    static = spark.read.parquet(event_stream_dir)
-    stream = spark.readStream.schema(static.schema).parquet(event_stream_dir)
-    deduped = streaming_dedup(stream, watermark="10 days")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("t_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT event_type, user_id FROM t_dedup")
-    expect = streaming_dedup(static)
-    assert out.count() == expect.count()
-    assert _as_sets(out, ["event_type", "user_id"]) == _as_sets(
-        expect.select("event_type", "user_id"), ["event_type", "user_id"]
-    )
-
-
-def test_stream_static_enrich_matches_batch(spark, event_stream_dir):
-    """Stream-static broadcast join: per-user lifetime value dim joined to
-    the purchase stream; identical to the batch expression."""
-    import pyspark.sql.functions as F
-
-    from vunnel_spark.streaming import stream_static_enrich
-
-    static = spark.read.parquet(event_stream_dir)
-    dim = (
-        static.groupBy("user_id")
-        .agg(F.round(F.sum("value"), 4).alias("lifetime_value"))
-    )
-    stream = (
-        spark.readStream.schema(static.schema).parquet(event_stream_dir)
-        .where(F.col("event_type") == "purchase")
-        .select("event_id", "user_id")
-    )
-    # append mode: a stream-static join is stateless (no aggregation)
-    q = (
-        stream_static_enrich(stream, dim, ["user_id"])
-        .writeStream.format("memory")
-        .queryName("t_enrich")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM t_enrich")
-    expect = stream_static_enrich(
-        static.where(F.col("event_type") == "purchase").select("event_id", "user_id"),
-        dim,
-        ["user_id"],
-    )
-    cols = ["event_id", "user_id", "lifetime_value"]
-    assert _as_sets(out, cols) == _as_sets(expect, cols)
-    assert out.count() > 0
-
-
-def test_foreach_batch_upsert_first_and_last_wins(spark, tmp_path):
-    """foreachBatch -> EnvelopeWriter merge: a key re-arriving in a later
-    micro-batch replaces under last_wins and is ignored under first_wins."""
-    import datetime as dt
-
-    from vunnel_spark.sinks.writers import EnvelopeWriter
-    from vunnel_spark.streaming import foreach_batch_upsert
-
-    schema = "identifier string, ts timestamp, payload string"
-
-    for dedup, expect_payload in (("last_wins", "new"), ("first_wins", "old")):
-        src = str(tmp_path / f"in_{dedup}")
-        os.makedirs(src)
-        table = str(tmp_path / f"out_{dedup}")
-        ckpt = str(tmp_path / f"ckpt_{dedup}")
-        writer = EnvelopeWriter(table, key="identifier", dedup=dedup, order_col="ts")
-
-        spark.createDataFrame(
-            [("k1", dt.datetime(2026, 1, 1, 10), "old"),
-             ("k2", dt.datetime(2026, 1, 1, 10), "other")], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = foreach_batch_upsert(stream, writer, ckpt)
-        q.processAllAvailable()
-
-        # second micro-batch: k1 re-arrives newer, k3 is new
-        spark.createDataFrame(
-            [("k1", dt.datetime(2026, 1, 2, 10), "new"),
-             ("k3", dt.datetime(2026, 1, 1, 12), "third")], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        q.stop()
-
-        got = {r.identifier: r.payload for r in writer.read(spark).collect()}
-        assert set(got) == {"k1", "k2", "k3"}
-        assert got["k1"] == expect_payload, (dedup, got)
 
 
 def test_stream_stream_interval_join_matches_batch(spark, event_stream_dir):
@@ -267,503 +69,3 @@ def test_stream_stream_interval_join_matches_batch(spark, event_stream_dir):
     assert _as_sets(out, ["l_event_id", "r_event_id"]) == _as_sets(
         expect, ["l_event_id", "r_event_id"]
     )
-
-
-def test_streaming_near_dup_filter_grows_index_across_batches(spark, tmp_path):
-    """Ingestion dedup end-to-end: batch 1 seeds accepted docs (dropping
-    its in-batch twin and a near-dup of the PRE-SEEDED corpus); batch 2's
-    near-dup of a batch-1 SURVIVOR is then dropped because the index grew."""
-    from vunnel_spark.operators.dedup import write_lsh_index
-    from vunnel_spark.streaming import foreach_batch_near_dup_filter
-
-    def doc(seed, tweak=""):
-        base = " ".join(f"tok{seed}w{i}" for i in range(40))
-        return base + (" " + tweak if tweak else "")
-
-    schema = "doc_id long, text string"
-    index = str(tmp_path / "index")
-    survivors = str(tmp_path / "survivors")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-
-    # pre-seeded accepted corpus: docs 1, 2
-    corpus = spark.createDataFrame([(1, doc("a")), (2, doc("b"))], schema)
-    write_lsh_index(corpus, index)
-
-    # batch 1: near-dup of corpus doc 1 (drop), twin pair 11/12 (keep 11),
-    # novel 13 (keep)
-    spark.createDataFrame(
-        [(10, doc("a", "changed")), (11, doc("c")), (12, doc("c", "x")),
-         (13, doc("d"))],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = foreach_batch_near_dup_filter(
-        stream, index, survivors, str(tmp_path / "ckpt")
-    )
-    q.processAllAvailable()
-
-    got1 = {r.doc_id for r in spark.read.parquet(survivors).collect()}
-    assert got1 == {11, 13}, got1
-
-    # batch 2: near-dup of batch-1 survivor 11 (drop — index grew),
-    # novel 21 (keep)
-    spark.createDataFrame(
-        [(20, doc("c", "again")), (21, doc("e"))], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    got2 = {r.doc_id for r in spark.read.parquet(survivors).collect()}
-    assert got2 == {11, 13, 21}, got2
-
-
-def test_foreach_batch_rollup_matches_full_aggregate(spark, tmp_path):
-    """Streaming rollup maintenance (foreach_batch_rollup): after two
-    micro-batches the persisted state equals a full batch aggregate of
-    everything seen — and the second batch merged into existing state
-    (per-key counts accumulate, not reset)."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F
-
-    from vunnel_spark.streaming.enrich import foreach_batch_rollup
-
-    src_dir = str(tmp_path / "roll_in")
-    state = str(tmp_path / "roll_state")
-    ckpt = str(tmp_path / "roll_ckpt")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, value double"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    write_batch([(1, dt.datetime(2026, 1, 1, 10), 2.0),
-                 (2, dt.datetime(2026, 1, 1, 11), 3.0)])
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    q = foreach_batch_rollup(
-        stream, state, ckpt, keys=["user_id"],
-        sum_cols=("value",), max_cols=("ts",),
-    )
-    q.processAllAvailable()
-    write_batch([(1, dt.datetime(2026, 1, 2, 9), 5.0),
-                 (3, dt.datetime(2026, 1, 2, 10), 7.0)])
-    q.processAllAvailable()
-    q.stop()
-
-    got = {
-        r["user_id"]: (r["n_rows"], r["sum_value"], str(r["max_ts"]))
-        for r in spark.read.parquet(state).collect()
-    }
-    assert got == {
-        1: (2, 7.0, "2026-01-02 09:00:00"),
-        2: (1, 3.0, "2026-01-01 11:00:00"),
-        3: (1, 7.0, "2026-01-02 10:00:00"),
-    }
-
-
-def test_foreach_batch_rollup_replayed_batches_skip(spark, tmp_path):
-    """At-least-once safety: re-delivering already-applied micro-batches
-    (fresh checkpoint over the same source) must NOT double the state —
-    the published batch-id watermark rejects them."""
-    import datetime as dt
-
-    from vunnel_spark.streaming.enrich import foreach_batch_rollup
-
-    src_dir = str(tmp_path / "rp_in")
-    state = str(tmp_path / "rp_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, value double"
-    spark.createDataFrame(
-        [(1, dt.datetime(2026, 1, 1, 10), 2.0)], schema
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_rollup(
-            stream, state, str(tmp_path / ckpt), keys=["user_id"],
-            sum_cols=("value",),
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run("ck1")
-    before = {(r["user_id"], r["n_rows"], r["sum_value"])
-              for r in spark.read.parquet(state).collect()}
-    # a fresh checkpoint re-delivers batch 0 — the guard must drop it
-    run("ck2")
-    after = {(r["user_id"], r["n_rows"], r["sum_value"])
-             for r in spark.read.parquet(state).collect()}
-    assert before == after == {(1, 1, 2.0)}
-
-
-def test_foreach_batch_rollup_bucketed_rewrites_only_touched(spark, tmp_path):
-    """Bucketed state (hash_buckets): correctness equals the whole-swap
-    mode, untouched bucket dirs are byte-identical across batches, and a
-    fresh-checkpoint replay is still rejected per bucket."""
-    import datetime as dt
-
-    from vunnel_spark.streaming.enrich import foreach_batch_rollup
-
-    src_dir = str(tmp_path / "bk_in")
-    state = str(tmp_path / "bk_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, value double"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_rollup(
-            stream, state, str(tmp_path / ckpt), keys=["user_id"],
-            sum_cols=("value",), hash_buckets=4,
-        )
-        q.processAllAvailable()
-        q.stop()
-        return q
-
-    # batch 1: several users spread over buckets
-    write_batch([(u, dt.datetime(2026, 1, 1, 10), float(u)) for u in range(8)])
-    run("ck1")
-
-    def listing():
-        out = {}
-        for d in sorted(os.listdir(state)):
-            if d.startswith("_bucket="):
-                out[d] = sorted(
-                    f for f in os.listdir(os.path.join(state, d))
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    before = listing()
-    assert len(before) >= 2  # users actually spread across buckets
-
-    # batch 2 touches ONE user -> only that user's bucket dir may change
-    write_batch([(3, dt.datetime(2026, 1, 2, 9), 10.0)])
-    run("ck1")
-    after = listing()
-    from pyspark.sql import functions as SF
-    b3 = (
-        spark.createDataFrame([(3,)], "user_id long")
-        .select(SF.pmod(SF.xxhash64(SF.col("user_id").cast("string")), SF.lit(4)))
-        .collect()[0][0]
-    )
-    for d in before:
-        if d != f"_bucket={b3}":
-            assert after[d] == before[d], d  # untouched bucket byte-listing stable
-
-    got = {
-        (r["user_id"], r["n_rows"], r["sum_value"])
-        for r in spark.read.parquet(state).drop("_bucket").collect()
-    }
-    expect = {(u, 1, float(u)) for u in range(8) if u != 3} | {(3, 2, 13.0)}
-    assert got == expect
-
-    # fresh checkpoint replays batches 0 and 1 — per-bucket meta rejects both
-    run("ck2")
-    got2 = {
-        (r["user_id"], r["n_rows"], r["sum_value"])
-        for r in spark.read.parquet(state).drop("_bucket").collect()
-    }
-    assert got2 == expect
-
-
-def test_bucketed_rollup_backups_parked_outside_state_and_recovered(spark, tmp_path):
-    """Two swap-safety contracts for bucketed rollup state:
-
-    1. a reader of the state dir can NEVER list a backup — per-bucket
-       backups park under ``<state>.__bucketbak__/``, outside the store,
-       because an in-store ``_bucket=N.__old__`` sibling (the '='
-       makes it non-hidden to partition discovery) would show up as a
-       duplicated/string-typed partition mid-swap;
-    2. a batch recovers EVERY parked backup, including buckets its own
-       delta does not touch — a crash with a replaced checkpoint must
-       not strand a bucket's state forever.
-    """
-    import datetime as dt
-
-    from vunnel_spark.streaming.enrich import foreach_batch_rollup
-
-    src_dir = str(tmp_path / "pk_in")
-    state = str(tmp_path / "pk_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, value double"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_rollup(
-            stream, state, str(tmp_path / ckpt), keys=["user_id"],
-            sum_cols=("value",), hash_buckets=4,
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    write_batch([(u, dt.datetime(2026, 1, 1, 10), float(u)) for u in range(8)])
-    run("ck1")
-
-    # contract 1: nothing backup-shaped inside the state dir, ever
-    assert not [d for d in os.listdir(state) if "__old__" in d or "bak" in d]
-    before = {
-        (r.user_id, r.sum_value)
-        for r in spark.read.parquet(state).drop("_bucket").collect()
-    }
-
-    # simulate a crash mid-swap: one bucket's state is parked in the bak
-    # root and missing from the store, and NO later batch touches it
-    buckets = sorted(d for d in os.listdir(state) if d.startswith("_bucket="))
-    victim = buckets[0]
-    bak_root = f"{state}.__bucketbak__"
-    os.makedirs(bak_root)
-    os.rename(os.path.join(state, victim), os.path.join(bak_root, victim))
-
-    # next batch (same checkpoint) delivers only user 100 — whichever
-    # bucket that hashes to, recovery must also restore the victim even
-    # when the delta doesn't touch it
-    write_batch([(100, dt.datetime(2026, 1, 1, 11), 5.0)])
-    run("ck1")
-
-    after = {
-        (r.user_id, r.sum_value)
-        for r in spark.read.parquet(state).drop("_bucket").collect()
-    }
-    assert before | {(100, 5.0)} == after  # victim bucket's rows are back
-    assert not os.path.exists(bak_root) or not os.listdir(bak_root)
-
-
-def test_foreach_batch_rollup_histogram_state_cross_batch(spark, tmp_path):
-    """The streaming rollup can carry i9's quantile histogram state: bins
-    accumulated across micro-batches must equal the histogram of all
-    rows ever seen, exactly (integer bin addition is the merge algebra)."""
-    import datetime as dt
-
-    from vunnel_spark.operators.incremental import histogram_state
-    from vunnel_spark.streaming.enrich import foreach_batch_rollup
-
-    src_dir = str(tmp_path / "h_in")
-    state = str(tmp_path / "h_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, value double"
-    rows1 = [(u % 3, dt.datetime(2026, 1, 1, 10), float(u * 7 % 50)) for u in range(40)]
-    rows2 = [(u % 3, dt.datetime(2026, 1, 1, 11), float(u * 11 % 50)) for u in range(40)]
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_rollup(
-            stream, state, str(tmp_path / "h_ck"), keys=["user_id"],
-            hist_cols=(("value", 0.0, 50.0, 10),),
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    write_batch(rows1)
-    run()
-    write_batch(rows2)
-    run()
-
-    got = {r.user_id: list(r.hist_value)
-           for r in spark.read.parquet(state).collect()}
-    whole = spark.createDataFrame(rows1 + rows2, schema)
-    want = {r.user_id: list(r.bins)
-            for r in histogram_state(whole, ["user_id"], "value", 0.0, 50.0, 10).collect()}
-    assert got == want
-
-
-def test_foreach_batch_cms_rollup_matches_full_sketch_and_skips_replay(
-    spark, tmp_path
-):
-    """Streaming heavy-hitter maintenance (foreach_batch_cms_rollup):
-    after two micro-batches the persisted sketch is counter-identical to
-    cms_state over everything seen (CMS linearity), point estimates read
-    correctly off it, and a re-delivered batch (fresh checkpoint) does
-    not double the counters."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F
-
-    from vunnel_spark.operators.incremental import cms_state, estimate_frequency
-    from vunnel_spark.streaming.enrich import foreach_batch_cms_rollup
-
-    src_dir = str(tmp_path / "cms_in")
-    state = str(tmp_path / "cms_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, event_type string"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    t0 = dt.datetime(2026, 1, 1, 10)
-    write_batch([(1, t0, "click")] * 3 + [(2, t0, "click"), (1, t0, "view")])
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_cms_rollup(
-            stream, state, str(tmp_path / ckpt),
-            keys=["event_type"], value_col="user_id",
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run("ck1")
-    write_batch([(1, t0, "click")] * 2 + [(3, t0, "view")])
-    run("ck1")
-
-    got = spark.read.parquet(state)
-    full = cms_state(
-        spark.read.parquet(src_dir), ["event_type"], "user_id"
-    )
-    assert got.count() == full.count()
-    assert got.exceptAll(full).count() == 0  # counter-identical sketches
-
-    probes = spark.createDataFrame(
-        [("click", 1), ("click", 2), ("view", 3)], "event_type string, user_id long"
-    )
-    est = {
-        (r["event_type"], r["user_id"]): r["est_count"]
-        for r in estimate_frequency(got, probes, ["event_type"], "user_id").collect()
-    }
-    # CMS estimates are >= true counts; tiny key set -> no collisions here
-    assert est == {("click", 1): 5, ("click", 2): 1, ("view", 3): 1}
-
-    # fresh checkpoint re-delivers both batches — the guard must drop them
-    run("ck2")
-    again = spark.read.parquet(state)
-    assert again.exceptAll(full).count() == 0 and again.count() == full.count()
-
-
-def test_foreach_batch_hll_rollup_matches_full_state_and_survives_replay(
-    spark, tmp_path
-):
-    """Streaming distinct maintenance (foreach_batch_hll_rollup): after
-    two micro-batches the persisted registers are identical to hll_state
-    over everything seen, the estimate tracks exact distinct, and a
-    re-delivered batch changes nothing — idempotent by register-max
-    algebra, not just by the batch-id guard."""
-    import datetime as dt
-
-    from vunnel_spark.operators.incremental import estimate_hll, hll_state
-    from vunnel_spark.streaming.enrich import foreach_batch_hll_rollup
-
-    src_dir = str(tmp_path / "hll_in")
-    state = str(tmp_path / "hll_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, event_type string"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    t0 = dt.datetime(2026, 1, 1, 10)
-    write_batch([(u, t0, "click") for u in range(40)]
-                + [(u, t0, "view") for u in range(10)])
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_hll_rollup(
-            stream, state, str(tmp_path / ckpt),
-            keys=["event_type"], value_col="user_id",
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run("ck1")
-    write_batch([(u, t0, "click") for u in range(30, 70)])
-    run("ck1")
-
-    got = spark.read.parquet(state)
-    full = hll_state(spark.read.parquet(src_dir), ["event_type"], "user_id")
-    assert got.count() == full.count()
-    assert got.exceptAll(full).count() == 0  # register-identical states
-
-    est = {r["event_type"]: r["est_hll"]
-           for r in estimate_hll(got, ["event_type"]).collect()}
-    assert abs(est["click"] - 70) <= max(0.15 * 70, 2.0)
-    assert abs(est["view"] - 10) <= 2.0
-
-    # fresh checkpoint re-delivers both batches; max-merge is idempotent
-    run("ck2")
-    again = spark.read.parquet(state)
-    assert again.exceptAll(full).count() == 0 and again.count() == full.count()
-
-
-def test_foreach_batch_bloom_rollup_matches_full_state_and_survives_replay(
-    spark, tmp_path
-):
-    """Streaming membership maintenance (foreach_batch_bloom_rollup):
-    after two micro-batches the persisted lanes are bit-identical to
-    bloom_state over everything seen, every seen key probes positive
-    (no false negatives), and a re-delivered batch changes nothing —
-    idempotent by lane-OR algebra, not just by the batch-id guard."""
-    import datetime as dt
-
-    from pyspark.sql import functions as SF
-
-    from vunnel_spark.operators.incremental import (
-        bloom_might_contain,
-        bloom_state,
-    )
-    from vunnel_spark.streaming.enrich import foreach_batch_bloom_rollup
-
-    src_dir = str(tmp_path / "bloom_in")
-    state = str(tmp_path / "bloom_state")
-    os.makedirs(src_dir)
-    schema = "user_id long, ts timestamp, event_type string"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    t0 = dt.datetime(2026, 1, 1, 10)
-    write_batch([(u, t0, "click") for u in range(40)]
-                + [(u, t0, "view") for u in range(10)])
-
-    def run(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = foreach_batch_bloom_rollup(
-            stream, state, str(tmp_path / ckpt),
-            keys=["event_type"], value_col="user_id",
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run("ck1")
-    write_batch([(u, t0, "click") for u in range(30, 70)])
-    run("ck1")
-
-    got = spark.read.parquet(state)
-    full = bloom_state(
-        spark.read.parquet(src_dir), ["event_type"], "user_id"
-    )
-    assert got.count() == full.count()
-    assert got.exceptAll(full).count() == 0  # lane-identical states
-
-    seen = spark.read.parquet(src_dir).select(
-        "event_type", "user_id"
-    ).distinct()
-    probed = bloom_might_contain(got, seen, ["event_type"], "user_id")
-    assert probed.filter(~SF.col("might_contain")).count() == 0
-
-    # fresh checkpoint re-delivers both batches; lane OR is idempotent
-    run("ck2")
-    again = spark.read.parquet(state)
-    assert again.exceptAll(full).count() == 0 and again.count() == full.count()

@@ -15,8 +15,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from vunnel_spark.functions.versions import (
-    apk_sort_key_str,
-    apk_vercmp,
     dpkg_sort_key_str,
     dpkg_vercmp,
     rpm_evr_cmp,
@@ -55,14 +53,6 @@ DPKG_CORPUS = [
     "0.0.0", "007", "7", "1.0-1.1", "1.0-1ubuntu1", "", "1~", "1+",
 ]
 
-APK_CORPUS = [
-    "1.0", "1.0.1", "1.0a", "1.0_alpha1", "1.0_beta2", "1.0_pre1",
-    "1.0_rc1", "1.0_rc1_alpha1", "1.0_p1", "1.0_git20220101", "1.0-r0",
-    "1.0-r1", "1.0-r10", "2.36.1-r5", "1.12_rc1", "1.12", "0.5_svn3",
-    "1.0_rc1_p2", "3.16.2-r0", "1.0_cvs1",
-]
-
-
 def check_order_preserving(corpus, cmp_fn, key_fn):
     for a, b in itertools.combinations(corpus, 2):
         c, k = sign(cmp_fn(a, b)), sign(strcmp(key_fn(a), key_fn(b)))
@@ -79,19 +69,6 @@ def test_rpm_evr_corpus_order_preserving():
 
 def test_dpkg_corpus_order_preserving():
     check_order_preserving(DPKG_CORPUS, dpkg_vercmp, dpkg_sort_key_str)
-
-
-def test_apk_corpus_order_preserving():
-    check_order_preserving(APK_CORPUS, apk_vercmp, apk_sort_key_str)
-
-
-def test_apk_trailing_prerelease_suffix_is_older():
-    # ADVICE round-1 regression: a trailing pre-release suffix must be OLDER
-    assert apk_vercmp("1.0_rc1_alpha1", "1.0_rc1") < 0
-    assert apk_sort_key_str("1.0_rc1_alpha1") < apk_sort_key_str("1.0_rc1")
-    # and a trailing post-release suffix NEWER
-    assert apk_vercmp("1.0_rc1_p2", "1.0_rc1") > 0
-    assert apk_sort_key_str("1.0_rc1_p2") > apk_sort_key_str("1.0_rc1")
 
 
 def test_known_rpm_orderings():
@@ -141,15 +118,3 @@ _dpkg_version = st.from_regex(r"([0-9]{1,3}:)?[0-9][A-Za-z0-9.+~]{0,10}(-[A-Za-z
 @given(_dpkg_version, _dpkg_version)
 def test_dpkg_property(a, b):
     assert sign(dpkg_vercmp(a, b)) == sign(strcmp(dpkg_sort_key_str(a), dpkg_sort_key_str(b)))
-
-
-_apk_version = st.from_regex(
-    r"[0-9]{1,3}(\.[0-9]{1,4}){0,3}[a-z]?(_(alpha|beta|pre|rc|cvs|svn|git|hg|p)[0-9]{0,4}){0,2}(-r[0-9]{1,3})?",
-    fullmatch=True,
-)
-
-
-@settings(max_examples=300, deadline=None)
-@given(_apk_version, _apk_version)
-def test_apk_property(a, b):
-    assert sign(apk_vercmp(a, b)) == sign(strcmp(apk_sort_key_str(a), apk_sort_key_str(b)))

@@ -13,7 +13,7 @@ Layout:
     sources     explicit-schema readers + envelope model
     pipelines   provider-style ETL pipelines (secdb, fixdate, ...)
     queries     the declared query inventory (Spark fn + DuckDB oracle SQL)
-    streaming   Structured Streaming helpers (tumbling/sliding/session windows)
+    streaming   Structured Streaming stream-stream interval join
 """
 
 __version__ = "0.1.0"

@@ -1,4 +1,4 @@
-"""Severity normalization and ranking.
+"""Severity normalization.
 
 The reference normalizes per-source severity vocabularies into the
 canonical set {Negligible, Low, Medium, High, Critical, Unknown} with an
@@ -8,22 +8,14 @@ explicit rank order used for max-merges:
 /root/reference/src/vunnel/providers/debian/parser.py:356-374.
 
 Implemented as pure Catalyst expressions (CASE chains / map literals) so
-severity handling never leaves codegen.
+severity handling never leaves codegen.  The debian max-merge keeps its
+own rank map (pipelines/debian.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-SEVERITY_RANK = {
-    "Unknown": 0,
-    "Negligible": 1,
-    "Low": 2,
-    "Medium": 3,
-    "High": 4,
-    "Critical": 5,
-}
 
 # per-source vocabulary -> canonical (union of the reference's mappings)
 _CANONICAL = {
@@ -101,10 +93,3 @@ def debian_severity(urgency: Column, nvd_severity: Column) -> Column:
         .otherwise(F.coalesce(nvd, F.lit("Unknown")))
     )
 
-
-def severity_rank(col: Column) -> Column:
-    """Canonical severity -> integer rank (for max-merge, A2)."""
-    mapping = F.create_map(
-        *[x for k, v in SEVERITY_RANK.items() for x in (F.lit(k), F.lit(v))]
-    )
-    return F.coalesce(mapping[col], F.lit(0))

@@ -23,8 +23,8 @@ and "007" == "7".  Numeric prefix > alpha prefix encodes rpm's "numeric beats
 alpha" rule; terminator < every segment prefix encodes "longer EVR wins";
 tilde < terminator encodes "1.0~rc1 < 1.0".
 
-Pure-Python comparators (`rpm_vercmp`, `dpkg_vercmp`, `apk_vercmp`) exist
-alongside the encoders purely so property tests can assert
+Pure-Python comparators (`rpm_vercmp`, `dpkg_vercmp`) exist alongside
+the encoders purely so property tests can assert
 ``sign(cmp(a,b)) == sign(key(a) vs key(b))`` — see tests/test_versions.py.
 
 At scale: the encoders run as Arrow-batched pandas UDFs; the encoded key is
@@ -272,107 +272,6 @@ def dpkg_vercmp(x: str, y: str) -> int:
     return _dpkg_cmp_part(ra, rb)
 
 
-# -------------------------------------------------------------------- apk
-_APK_SUFFIX_RANK = {
-    "alpha": 0, "beta": 1, "pre": 2, "rc": 3,
-    None: 4, "cvs": 5, "svn": 6, "git": 7, "hg": 8, "p": 9,
-}
-_R_APK = re.compile(
-    r"^(?P<nums>[0-9]+(?:\.[0-9]+)*)"
-    r"(?P<letter>[a-z])?"
-    r"(?P<sufs>(?:_(?:alpha|beta|pre|rc|cvs|svn|git|hg|p)[0-9]*)*)"
-    r"(?:-r(?P<rev>[0-9]+))?$"
-)
-
-
-def apk_sort_key_str(version: str) -> str:
-    """Order-preserving key for apk-tools version ordering.
-
-    Grammar per apk-tools (public): digits(.digits)* [letter] [_suffix[num]]*
-    [-rN].  Unparseable versions sort below all parseable ones (prefix '00')
-    — mirrors apk's "invalid versions compare low" behavior.
-    """
-    m = _R_APK.match((version or "").strip())
-    if not m:
-        return _TILDE + (version or "").encode().hex()
-    out = ["01"]
-    nums = m.group("nums").split(".")
-    for i, n in enumerate(nums):
-        # apk quirk: first component and components w/o leading zeros compare
-        # numerically; keep it simple-numeric (covers the secdb corpus)
-        digits = n.lstrip("0") or ""
-        out.append(_NUM + format(len(digits), "04x") + digits.encode().hex())
-    out.append(_TERM)
-    letter = m.group("letter")
-    out.append(_ALPHA + letter.encode().hex() if letter else _TERM)
-    for rank, num in _apk_suffixes(m.group("sufs")):
-        out.append(format(rank, "02x") + _numkey(num))
-    # terminator: the None-rank sentinel closes the suffix list, so
-    # "1.0_rc1" ([rc]) > "1.0_rc1_alpha1" ([rc, alpha]) — a trailing
-    # pre-release suffix is OLDER per apk-tools — and suffix bytes can
-    # never run into revision bytes.
-    out.append(format(_APK_SUFFIX_RANK[None], "02x") + _numkey(0))
-    out.append(_numkey(int(m.group("rev") or "0")))
-    return "".join(out)
-
-
-def _numkey(n: int) -> str:
-    """Length-prefixed decimal encoding: string order == numeric order."""
-    digits = str(n) if n else ""
-    return format(len(digits), "04x") + digits.encode().hex()
-
-
-def _apk_suffixes(sufs: str | None) -> list[tuple[int, int]]:
-    out = []
-    for s in (sufs or "").split("_"):
-        if not s:
-            continue
-        sm = re.match(r"([a-z]+)([0-9]*)", s)
-        out.append((_APK_SUFFIX_RANK.get(sm.group(1), 4), int(sm.group(2) or "0")))
-    return out
-
-
-def apk_vercmp(a: str, b: str) -> int:
-    """Independent apk-tools ordering comparator (property-test oracle).
-
-    Implements the public apk version grammar directly (parse → compare
-    fields) rather than delegating to the encoded key, so the property
-    ``sign(apk_vercmp(a,b)) == sign(key(a) vs key(b))`` is a real check.
-    """
-    ma = _R_APK.match((a or "").strip())
-    mb = _R_APK.match((b or "").strip())
-    if not ma or not mb:
-        if not ma and not mb:
-            return 0 if (a or "") == (b or "") else (-1 if (a or "") < (b or "") else 1)
-        return -1 if not ma else 1  # invalid sorts low
-    na = [int(x) for x in ma.group("nums").split(".")]
-    nb = [int(x) for x in mb.group("nums").split(".")]
-    for i in range(max(len(na), len(nb))):
-        va = na[i] if i < len(na) else None
-        vb = nb[i] if i < len(nb) else None
-        if va is None or vb is None:
-            return -1 if va is None else 1  # shorter digit list is older
-        if va != vb:
-            return -1 if va < vb else 1
-    la, lb = ma.group("letter"), mb.group("letter")
-    if (la is None) != (lb is None):
-        return -1 if la is None else 1  # no letter is older
-    if la != lb:
-        return -1 if la < lb else 1
-    sa, sb = _apk_suffixes(ma.group("sufs")), _apk_suffixes(mb.group("sufs"))
-    none_entry = (_APK_SUFFIX_RANK[None], 0)
-    for i in range(max(len(sa), len(sb)) + 1):
-        ea = sa[i] if i < len(sa) else none_entry
-        eb = sb[i] if i < len(sb) else none_entry
-        if ea != eb:
-            return -1 if ea < eb else 1
-    ra = int(ma.group("rev") or "0")
-    rb = int(mb.group("rev") or "0")
-    if ra != rb:
-        return -1 if ra < rb else 1
-    return 0
-
-
 # ------------------------------------------------------------- pandas UDFs
 
 def _memo_key_series(series: pd.Series, fn) -> pd.Series:
@@ -404,7 +303,3 @@ def rpm_evr_sort_key(evrs: pd.Series) -> pd.Series:
 def dpkg_sort_key(versions: pd.Series) -> pd.Series:
     return _memo_key_series(versions, dpkg_sort_key_str)
 
-
-@F.pandas_udf(T.StringType())
-def apk_sort_key(versions: pd.Series) -> pd.Series:
-    return _memo_key_series(versions, apk_sort_key_str)

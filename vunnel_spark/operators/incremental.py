@@ -26,10 +26,8 @@ from pyspark.sql import functions as F
 
 
 def _hist_bin(v, lo: float, hi: float, n_bins: int):
-    """Bin index for the fixed-bin histogram state — ONE definition
-    shared by the batch builder, the streaming rollup's hist_cols, and
-    histogram_state, so binning semantics (clamp-to-edge, float
-    division) cannot diverge between states that must merge exactly."""
+    """Bin index for the fixed-bin histogram state: float division,
+    values outside [lo, hi) clamped into the edge bins."""
     width = (hi - lo) / n_bins
     return F.least(
         F.greatest(F.floor((v - F.lit(lo)) / F.lit(width)), F.lit(0)),
@@ -50,9 +48,10 @@ def aggregate_state(
     column shape ``merge_agg_state`` consumes and produces).
 
     ``hist_cols``: ``(col, lo, hi, n_bins)`` specs — each adds a
-    ``hist_<col>`` fixed-bin count array (the i9 quantile state) to the
-    same single groupBy, built with conditional sums; no extra shuffle,
-    no per-bin explode."""
+    ``hist_<col>`` fixed-bin count array (the i9 quantile state, which
+    ``histogram_state`` builds and ``merge_histogram_state`` merges) to
+    the same single groupBy, built with conditional sums; no extra
+    shuffle, no per-bin explode."""
     aggs = [F.count(F.lit(1)).alias(count_col)]
     aggs += [F.sum(c).alias(f"sum_{c}") for c in sum_cols]
     aggs += [F.min(c).alias(f"min_{c}") for c in min_cols]
@@ -79,14 +78,12 @@ def merge_agg_state(
     sum_cols: tuple[str, ...] = (),
     min_cols: tuple[str, ...] = (),
     max_cols: tuple[str, ...] = (),
-    hist_cols: tuple[tuple, ...] = (),
 ) -> DataFrame:
     """Fold state frames (prior state + one or more delta states) into the
     updated state.  Keys absent from one side pass through; keys present
     in several merge by the aggregate's own algebra (sum of counts/sums,
-    min of mins, max of maxs, element-wise addition of histogram bins) —
-    so the result equals aggregating the concatenated raw inputs, which
-    is what the oracle checks."""
+    min of mins, max of maxs) — so the result equals aggregating the
+    concatenated raw inputs, which is what the oracle checks."""
     merged = states[0]
     for s in states[1:]:
         merged = merged.unionByName(s)
@@ -94,13 +91,6 @@ def merge_agg_state(
     aggs += [F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols]
     aggs += [F.min(f"min_{c}").alias(f"min_{c}") for c in min_cols]
     aggs += [F.max(f"max_{c}").alias(f"max_{c}") for c in max_cols]
-    for c, _lo, _hi, nb in hist_cols:
-        h = f"hist_{c}"
-        aggs.append(
-            F.array(
-                *[F.sum(F.element_at(F.col(h), i + 1)) for i in range(nb)]
-            ).alias(h)
-        )
     return merged.groupBy(*keys).agg(*aggs)
 
 

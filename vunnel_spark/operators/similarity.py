@@ -339,10 +339,9 @@ def ivf_topk(
     queries probe their ``nprobe`` nearest cells and score only those
     inverted lists.
 
-    Scale shape: the corpus shuffles once on cell id (or not at all if
-    written cell-partitioned), and each query touches ~nprobe/nlist of
-    the data.  Rank/tie rules match brute_force_topk so recall is
-    directly measurable.
+    Scale shape: the corpus shuffles once on cell id, and each query
+    touches ~nprobe/nlist of the data.  Rank/tie rules match
+    brute_force_topk so recall is directly measurable.
 
     SIZE nlist WITH THE CORPUS (nlist ~ n_vectors / target_cell_size):
     per-query candidate cost is nprobe * cell_size, so a fixed nlist
@@ -453,83 +452,6 @@ def lsh_topk(
     scored = (
         cand.join(cvec, "neighbor_id")
         .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cos_sim",
-            F.round(
-                cosine_hoisted(
-                    F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")
-                ),
-                6,
-            ),
-        )
-        .drop("_qv", "_cv", "_qn", "_cn")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def write_ivf_partitioned(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the corpus PARTITIONED BY its IVF cell — the ANN
-    serving layout.
-
-    At query time the cell equi-join against the (broadcast) probed
-    query cells becomes a dynamic partition filter on this store:
-    Spark reads only the probed cells' directories, so a probe touches
-    ~nprobe/nlist of the BYTES, not just of the rows — the difference
-    between pruning compute and pruning I/O at 100 TB.
-    """
-    cb = add_ivf_cells(corpus, centroids, vec_col, nprobe=1).select(
-        F.col(id_col), F.col(vec_col), F.element_at("cells", 1).alias("cell")
-    )
-    cb.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN top-k over a cell-partitioned store (write_ivf_partitioned).
-
-    Same rank/tie semantics as ivf_topk; the difference is physical:
-    corpus cells are precomputed (no per-scan centroid arithmetic) and
-    the cell join key is the store's PARTITION column, so dynamic
-    partition pruning drops unprobed cells at the file-listing level.
-    """
-    cb = spark.read.parquet(path).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        "cell",
-        norm2(F.col(vec_col)).alias("_cn"),
-    )
-    # norm below the Generate (see ivf_topk/lsh_topk): per document,
-    # not per probed cell
-    qb = (
-        add_ivf_cells(queries, centroids, vec_col, nprobe=nprobe)
-        .withColumn("_qn", norm2(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.explode("cells").alias("cell"),
-            "_qn",
-        )
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cos_sim",
             F.round(
@@ -821,8 +743,8 @@ def ivf_pq_topk(
 
     Both index columns are plain Catalyst projections, so at scale the
     corpus side materializes once as (id, cell, code) — cell as the
-    partition column (dynamic partition pruning, see
-    write_ivf_partitioned), code instead of the embedding.  Scoring is
+    partition column (dynamic partition pruning on the cell join),
+    code instead of the embedding.  Scoring is
     ADC against broadcast query vectors, rank/tie rules as pq_adc_topk.
     """
     cb = pq_encode(

@@ -21,9 +21,9 @@ Reference flow (/root/reference/src/vunnel/providers/secureos/parser.py:
     ->  Available from the fixdate finder (vid, pkg, version,
         ecosystem)
 
-The provider's comparator is NOT real apk semantics (functions/
-versions.py apk_vercmp is) — it int-compares numeric dot-parts and
-string-compares anything mixed, with a trailing ``-rN`` revision.
+The provider's comparator is NOT real apk-tools semantics — it
+int-compares numeric dot-parts and string-compares anything mixed,
+with a trailing ``-rN`` revision.
 That comparator is not even transitive on adversarial inputs (e.g.
 {2, 10, '1x'} has a preference cycle), so no order-preserving sort KEY
 can exist; the pin therefore sorts each package's (tiny) version list

@@ -63,45 +63,3 @@ def release_resolver(
         .filter((F.col("_n") == 1) | (F.col("_best") <= 1))
         .select(*keys, *[F.col("_pick")[c].alias(c) for c in payload])
     )
-
-
-def with_sles_cvss(df, vector, out="cvss_obj"):
-    """SLES ``_make_cvss`` (sles/parser.py:171-194) appended as struct
-    column ``out``: the third CVSS-envelope flavor in the reference,
-    distinct from BOTH gated siblings —
-
-    * unlike github's ``_make_legacy_cvss`` (parser.py:604-628) there is
-      NO trailing-slash ``removesuffix``: the raw vector feeds CVSS3(),
-      so a trailing '/' is a parse error and the object is None;
-    * unlike rhel's ``RHELCVSS3`` (parser.py:1155-1176) the base_score
-      IS the library-computed score quantized to 0.1 (:179) — no feed
-      passthrough — alongside esc/isc quantized the same way and
-      ``severities()[0]``; ``status`` is the literal "N/A" (:184).
-
-    Pure composition of the shared functions/cvss.py builders, each
-    already oracle-gated (e17 covers computed+strip, rhel2 covers
-    no-strip+feed-score; this is computed+no-strip), unit-pinned in
-    tests/test_landing.py-style branch tests.  DataFrame form since r14
-    (layered one-evaluation projections — see with_rhel_cvss3's note);
-    ``vector`` should be an attribute reference on ``df``.
-    """
-    from vunnel_spark.functions.cvss import cvss3_eval_cols, with_cvss3_eval
-
-    p = "_sc3"
-    df = with_cvss3_eval(df, vector, p)
-    ok = vector.isNotNull() & F.col(f"{p}_ok")
-    obj = F.when(
-        ok,
-        F.struct(
-            F.col(f"{p}_ver").alias("version"),
-            vector.alias("vector_string"),
-            F.struct(
-                F.col(f"{p}_base").alias("base_score"),
-                F.col(f"{p}_esc").alias("exploitability_score"),
-                F.col(f"{p}_isc").alias("impact_score"),
-                F.col(f"{p}_sev").alias("base_severity"),
-            ).alias("base_metrics"),
-            F.lit("N/A").alias("status"),
-        ),
-    )
-    return df.withColumn(out, obj).drop(*cvss3_eval_cols(p))

@@ -54,7 +54,7 @@ def a1(spark, sf_dir):
     GROUP BY o_custkey
     """,
     doc="A2 severity max-merge via rank (utils/vulnerability.py:10-17): "
-        "max_by(severity, severity_rank)",
+        "max_by(severity, rank)",
     tags=("agg",),
 )
 def a2(spark, sf_dir):

@@ -4,8 +4,7 @@ engine; incremental I1/I2 semantics in batch form).
 
 These run in batch here, but every expression is Structured-Streaming-safe:
 ``F.window`` / ``F.session_window`` are the same operators a
-``readStream`` plan would use with a watermark (see
-vunnel_spark/streaming/ for the streaming wrappers + tests).
+``readStream`` plan would use with a watermark.
 """
 
 from __future__ import annotations

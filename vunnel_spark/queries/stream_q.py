@@ -1,8 +1,8 @@
-"""Queries for the streaming operator family run in batch mode.
+"""The stream-stream interval join, run in batch mode.
 
-Every streaming transformation in this engine is one definition with two
-run modes; these registry entries run the batch mode over the events
-table so the driver gate value-verifies the expression itself, while
+``streaming.interval_join`` is one definition with two run modes; this
+registry entry runs the batch mode over the events table so the driver
+gate value-verifies the expression itself, while
 tests/test_streaming.py proves the streaming mode produces identical
 sets through a real file-source stream.
 

@@ -425,9 +425,9 @@ def overwrite_partitions(
 
 def _recover_parked_partitions(path: str) -> None:
     """Recover EVERY partition dir parked under ``{path}.__old__/`` by a
-    crashed compaction/swap — not just dirs a current operation touches
-    (the streaming rollup learned this the hard way: an untouched parked
-    bucket otherwise stays lost until some later batch happens by)."""
+    crashed compaction/swap — not just dirs a current operation touches:
+    an untouched parked dir would otherwise stay lost until some later
+    run happens to rewrite it."""
     root = f"{path}.__old__"
     if not os.path.isdir(root):
         return
@@ -489,6 +489,11 @@ def compact_partitions(
         stage = os.path.join(stage_root, rel) if rel != "." else stage_root
         os.makedirs(os.path.dirname(stage) if rel != "." else stage_root, exist_ok=True)
         spark.read.parquet(dirpath).coalesce(k).write.mode("overwrite").parquet(stage)
+        # an unpartitioned store's root carries its publish's schema
+        # record; a re-layout leaves the schema as it was, so it goes over
+        record = os.path.join(dirpath, _SCHEMA_RECORD)
+        if os.path.exists(record):
+            shutil.copyfile(record, os.path.join(stage, _SCHEMA_RECORD))
         backup = (
             os.path.join(f"{path}.__old__", rel) if rel != "." else None
         )  # root compaction: the default sibling backup has no '=' issue

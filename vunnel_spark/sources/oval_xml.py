@@ -74,33 +74,6 @@ def _walk_criteria(elem, ns_test, out):
     return ns_test
 
 
-def criteria_to_tree(elem) -> dict:
-    """XML criteria element -> the JSON tree shape the E3/E4 walkers consume
-    (``operators/oval.py``): operator + criterion comments/refs + children.
-
-    Bridges the streaming XML scan to ``flatten_criteria_ctx`` so
-    module/arch-bearing OVAL (Oracle ELSA with module streams) flattens
-    with inherited context instead of losing it at parse time.
-    """
-    node = {
-        "operator": elem.get("operator", "AND"),
-        "criterions": [],
-        "children": [],
-    }
-    for child in elem:
-        tag = _local(child.tag)
-        if tag == "criterion":
-            crit = {"comment": child.get("comment", "")}
-            if child.get("test_ref") is not None:
-                crit["test_ref"] = child.get("test_ref")
-            if child.get("negate") == "true":
-                crit["negate"] = True
-            node["criterions"].append(crit)
-        elif tag == "criteria":
-            node["children"].append(criteria_to_tree(child))
-    return node
-
-
 def parse_oval_bytes(path: str, content: bytes) -> list[tuple]:
     """Pure-python core (unit-testable without Spark): stream one OVAL file
     into (path, definition_id, title, severity, cves, ns_test, pkg_test,

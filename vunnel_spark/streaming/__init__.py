@@ -1,20 +1,11 @@
-"""Structured Streaming wrappers (SURVEY §2.10 generalized surface).
+"""Structured Streaming surface: the stream-stream interval join.
 
-The reference is batch with incremental bookkeeping (I1-I6); the Spark
-engine exposes true event-time streaming: tumbling/sliding/session windows
-with watermarks.  Every transformation here is the SAME expression used by
-the batch queries in queries/events.py — one definition, two run modes.
+``interval_join`` is one definition with two run modes: on streaming
+frames it adds the watermarks that bound the join state, and on batch
+frames the same expression runs stateless.  The registered
+``v4_stream_stream_interval_join`` runs the batch mode against the
+oracle, and tests/test_streaming.py checks the streaming mode against it
+over a real file-source stream.
 """
 
-from vunnel_spark.streaming.dedup import foreach_batch_near_dup_filter  # noqa: F401
 from vunnel_spark.streaming.joins import interval_join  # noqa: F401
-from vunnel_spark.streaming.enrich import (  # noqa: F401
-    foreach_batch_upsert,
-    stream_static_enrich,
-)
-from vunnel_spark.streaming.windows import (  # noqa: F401
-    session_counts,
-    streaming_dedup,
-    sliding_counts,
-    tumbling_counts,
-)

@@ -6,9 +6,9 @@ rows until the other side can no longer produce a match.  The watermark +
 time-bound join condition is what lets Spark evict that state — without
 the interval condition, stream-stream join state grows forever.
 
-One definition, two run modes (like streaming/windows.py): on batch
-frames the same expression is a plain inner join with an interval
-predicate, which is what the parity test compares against.
+One definition, two run modes: on batch frames the same expression is a
+plain inner join with an interval predicate, which is what the parity
+test compares against.
 """
 
 from __future__ import annotations
