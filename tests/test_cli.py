@@ -191,3 +191,15 @@ def test_cli_compact_reports_rewrites(tmp_path, capsys, spark):
     assert out["rewritten"]["p=a"]["files_after"] < 8
     assert {r.v for r in spark.read.parquet(store).collect()} == set(range(100))
     assert main(["compact", str(tmp_path / "missing")]) == 2
+
+
+def test_cli_status_counts_match_duckdb(spark, sf_dir, ddb, capsys):
+    import json as jsonlib
+
+    assert main(["status", "--sf-dir", sf_dir]) == 0
+    out = jsonlib.loads(capsys.readouterr().out)
+    views = [r[0] for r in ddb.execute(
+        "SELECT view_name FROM duckdb_views() WHERE NOT internal").fetchall()]
+    want = {t: ddb.execute(f"SELECT count(*) FROM {t}").fetchone()[0] for t in views}
+    assert out["tables"] == want
+    assert out["queries"] == len(REGISTRY)

@@ -338,6 +338,31 @@ def test_compaction_keeps_schema_record(spark, outdir):
     assert sorted(map(tuple, got.collect())) == rows
 
 
+@pytest.mark.parametrize("layout", ["plain", "partition_by"])
+def test_compaction_reads_with_schema_record(spark, outdir, layout):
+    """Compaction reads each rewritten dir with the store's schema record:
+    one Spark job (the rewrite) per dir, none to infer its schema."""
+    from vunnel_spark.sinks.writers import compact_partitions
+
+    path = os.path.join(outdir, layout)
+    w = EnvelopeWriter(path, dedup=None, **_LAYOUTS[layout])
+    w.write(
+        spark.range(40)
+        .select(
+            F.col("id").cast("string").alias("identifier"),
+            (F.col("id") * 3).alias("n"),
+            (F.col("id") % 2 + 22).cast("string").alias("rel"),
+        )
+        .repartition(8)
+    )
+    rows = sorted(map(tuple, w.read(spark).collect()))
+    before = _newest_job(spark)
+    report = compact_partitions(spark, path, min_files=4)
+    assert len(report) == (2 if layout == "partition_by" else 1)
+    assert _newest_job(spark) - before == len(report)
+    assert sorted(map(tuple, w.read(spark).collect())) == rows
+
+
 # --------------------------------------------------- table-format adapter
 
 def test_delta_adapter_availability_probe(spark):

@@ -54,6 +54,39 @@ def test_load_table_fanout_knob(spark, sf_dir, monkeypatch):
     assert load_table(spark, sf_dir, "nation").rdd.getNumPartitions() <= 2
 
 
+def test_load_table_infers_schema_once_per_file_version(spark, sf_dir, tmp_path, ddb):
+    """The second read of an unchanged file starts no Spark job and has
+    the inferred schema; each read is its own relation, so two reads of
+    one table self-join; a rewritten file is inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.test_sinks import _newest_job
+    from vunnel_spark.session import load_table
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "orders.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "orders.parquet"), path)
+
+    first = load_table(spark, sf, "orders")
+    before = _newest_job(spark)
+    second = load_table(spark, sf, "orders")
+    assert _newest_job(spark) == before, "a repeated read ran a Spark job"
+    assert second.schema == first.schema == spark.read.parquet(path).schema
+
+    pairs = first.join(second, first["o_custkey"] == second["o_custkey"]).count()
+    (want,) = ddb.execute(
+        "SELECT count(*) FROM orders a JOIN orders b ON a.o_custkey = b.o_custkey"
+    ).fetchone()
+    assert pairs == want
+
+    table = pq.read_table(path)
+    pq.write_table(table.append_column("extra", pa.array(range(table.num_rows))), path)
+    assert load_table(spark, sf, "orders").columns == first.columns + ["extra"]
+
+
 def test_jsonl_explicit_schema_and_corrupt_routing(spark, tmp_path):
     p = str(tmp_path / "in.jsonl")
     with open(p, "w") as f:

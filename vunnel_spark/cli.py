@@ -203,15 +203,9 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "status":
-        import os
+        from vunnel_spark.session import load_tables
 
-        spark = _session()
-        tables = {}
-        for t in ["region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "events", "documents", "embeddings"]:
-            path = os.path.join(args.sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                tables[t] = spark.read.parquet(path).count()
+        tables = {t: df.count() for t, df in load_tables(_session(), args.sf_dir).items()}
         print(json.dumps({
             "queries": len(REGISTRY),
             "with_oracle": sum(1 for s in REGISTRY.values() if s.oracle),

@@ -13,8 +13,10 @@ partition-count agnostic because AQE coalesces post-shuffle.
 from __future__ import annotations
 
 import os
+import stat
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -79,6 +81,21 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # with the fallback (OPTIMIZATION_r15.md).
         .config("spark.sql.codegen.hugeMethodLimit",
                 os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
+        # Generated classes stay compiled for the life of the driver.
+        # CodeGenerator's cache is keyed by (context classloader, source),
+        # and task threads run under another loader than the driver
+        # thread, so a source compiled on both sides takes two entries:
+        # one store_updates pass fills 98 entries from about 60 sources,
+        # one parse_kernels pass 43.  Spark's default of 100 is split into
+        # four LRU segments of 25, and the segment of an entry depends on
+        # the loader's identity hash.  In most processes a segment
+        # overflowed, and every warm store_updates pass compiled ~44
+        # classes again in Janino and loaded them fresh for HotSpot to
+        # interpret and JIT anew.  1000 holds both working sets with room.
+        # It is a constant: an entry costs one generated class, and no
+        # caller is better served by a smaller cache.  A static conf, so
+        # it takes effect only when this builder starts the context.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # Spark cannot read TIMESTAMP(NANOS) parquet natively; read the raw
@@ -92,6 +109,29 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: real path -> (file version, inferred schema); one entry per path
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with a regular file's schema inferred
+    once per version of the file (see ``load_table``)."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:  # not a local path: Spark resolves it, or says why not
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    version = (spark.sparkContext.applicationId, st.st_ino, st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[real] = (version, df.schema)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict:
@@ -119,6 +159,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     ``events.ts`` is parquet TIMESTAMP(NANOS) which Spark reads as int64
     nanos (legacy.parquet.nanosAsLong); convert to a µs timestamp with
     truncation — identical to duckdb's ns→µs narrowing.
+
+    ``spark.read.parquet`` on a bare path runs a Spark job to infer the
+    schema from the footer, and builders read their inputs while their
+    plans are built, so every read was an eager job.  The schema of a
+    regular file is inferred once per file version: the memo keys it on
+    the SparkContext's application id and the file's real path, inode,
+    size and mtime, so a rewritten file or a new context infers again.
+    Later reads pass the schema and start no job.  The memo holds the
+    schema, not the DataFrame: each call returns a fresh relation with
+    fresh attribute ids, so a builder may read one table twice and join
+    it with itself.  Directories are read by inference every time.
     """
     from pyspark.sql import functions as F
 
@@ -127,7 +178,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     # only in get_spark()'s builder.  It is runtime-settable.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Driver parquet may carry tz-naive timestamps, which Spark 4 reads as

@@ -17,7 +17,7 @@ same code path targets Delta/Iceberg where commit atomicity is native.
 
 Schema record: every publish writes the data schema it wrote into the
 stage dir as ``_schema.json``, so the record swaps in with the data and
-cannot describe other files.  ``_read_store`` hands it to the reader:
+cannot describe other files.  ``_store_reader`` hands it to the reader:
 ``spark.read.parquet`` on a bare path runs one Spark job to infer the
 schema from the footers, and a merge reads its store back while its plan
 is built, so each inference was an eager job on the load path.
@@ -36,7 +36,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -44,15 +44,15 @@ from pyspark.sql.types import StructType
 _SCHEMA_RECORD = "_schema.json"
 
 
-def _read_store(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet store with the schema its publish recorded (no
-    inference job), or by inference when it carries no record."""
+def _store_reader(spark: SparkSession, path: str) -> DataFrameReader:
+    """A reader with the schema the store's publish recorded (no
+    inference job), or one that infers when the store carries no record."""
     reader = spark.read
     record = os.path.join(path, _SCHEMA_RECORD)
     if os.path.exists(record):
         with open(record) as f:
             reader = reader.schema(StructType.fromJson(json.load(f)))
-    return reader.parquet(path)
+    return reader
 
 
 def envelope(df: DataFrame, schema_url: str, identifier_col: str, item_cols: Sequence[str]) -> DataFrame:
@@ -182,7 +182,7 @@ class EnvelopeWriter:
 
     def read(self, spark: SparkSession) -> DataFrame:
         """S14 keyed read-back: the table itself (filter for point lookups)."""
-        df = _read_store(spark, self.path)
+        df = _store_reader(spark, self.path).parquet(self.path)
         if self.hash_buckets:
             df = df.drop(self.BUCKET_COL)
         return df
@@ -195,7 +195,7 @@ class EnvelopeWriter:
         (pinned by tests/test_sinks.py)."""
         from functools import reduce
 
-        df = _read_store(spark, self.path)
+        df = _store_reader(spark, self.path).parquet(self.path)
         key_filter = F.col(self.key).isin(list(keys))
         if not self.hash_buckets:
             return df.filter(key_filter)
@@ -483,12 +483,15 @@ def compact_partitions(
         if k >= len(parts):
             continue
         targets.append((dirpath, len(parts), k))
+    # a publish's record holds the data columns, which is exactly what
+    # the files of every partition leaf hold, so no dir needs inference
+    reader = _store_reader(spark, path)
     report: dict = {}
     for dirpath, n_before, k in targets:
         rel = os.path.relpath(dirpath, path)
         stage = os.path.join(stage_root, rel) if rel != "." else stage_root
         os.makedirs(os.path.dirname(stage) if rel != "." else stage_root, exist_ok=True)
-        spark.read.parquet(dirpath).coalesce(k).write.mode("overwrite").parquet(stage)
+        reader.parquet(dirpath).coalesce(k).write.mode("overwrite").parquet(stage)
         # an unpartitioned store's root carries its publish's schema
         # record; a re-layout leaves the schema as it was, so it goes over
         record = os.path.join(dirpath, _SCHEMA_RECORD)
