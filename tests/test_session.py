@@ -28,3 +28,39 @@ def test_generated_code_is_compiled_once_per_process(spark, sf_dir):
     before = compiles.getCount()
     one_pass()
     assert compiles.getCount() == before
+
+
+def test_python_tasks_reuse_zip_directories(spark):
+    """A Python task after the first reads no zip archive's directory
+    again.  PySpark's worker calls importlib.invalidate_caches() at the
+    start of every task; before CPython 3.13 each of a worker's
+    zipimporters then read its archive's whole directory (pyspark.zip has
+    1,328 entries).  The workers fork from vunnel_spark.worker_daemon,
+    which reads an archive again only when it has changed.  The row
+    function counts the reads one more invalidate_caches() makes."""
+    from vunnel_spark.row_stage import row_stage
+
+    assert spark.conf.get("spark.python.daemon.module") == "vunnel_spark.worker_daemon"
+
+    def count_reads(_):
+        import importlib
+        import zipimport
+
+        read = zipimport._read_directory
+        reads = []
+
+        def counted(archive):
+            reads.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        yield (len(reads),)
+
+    df = spark.range(1).coalesce(1)
+    stage = row_stage(df, "reads int", ["id"], count_reads)
+    stage.collect()
+    assert stage.collect()[0].reads == 0

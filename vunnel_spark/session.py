@@ -21,6 +21,15 @@ from pyspark.sql.types import StructType
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """16g, or half the machine's physical memory when that is less: a
+    16 GiB heap on a 16 GB machine leaves nothing for the Python workers
+    or a second process, and the driver collects fully only on the
+    periodic GC, so its heap grows to what it is given."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> SparkSession:
     """Build (or reuse) the SparkSession.
 
@@ -43,12 +52,14 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         # ContextCleaner frees broadcast blocks and shuffle files only
-        # when the DRIVER GC collects their references; with a 16 GiB
-        # heap a multi-query session can run for many minutes without a
-        # full GC, so debris from dozens of earlier queries piles onto
-        # the block manager and every later query measures slower (the
+        # when the DRIVER GC collects their references; with a heap of
+        # several GiB (half the machine, at most 16) a multi-query
+        # session can run for many minutes without a full GC, so debris
+        # from dozens of earlier queries piles onto the block manager
+        # and every later query measures slower (the
         # in-session degradation the r14 profile sessions kept seeing —
         # x1's bench slot read 7x its fresh-session time late in a run).
         # Spark's own escape hatch is periodic driver GC; the 30min
@@ -96,6 +107,20 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # caller is better served by a smaller cache.  A static conf, so
         # it takes effect only when this builder starts the context.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Python workers fork from vunnel_spark's daemon, which stops
+        # every task from reading pyspark.zip's directory again.  PySpark's
+        # worker calls importlib.invalidate_caches() at the start of each
+        # task, and before CPython 3.13 each of a worker's 14-16
+        # zipimporters then reads its archive's whole central directory
+        # (pyspark.zip has 1,328 entries) in pure Python: 0.16-0.24 s of
+        # CPU per task, in reused workers too, about 1.4 s of a 6 s warm
+        # parse_kernels pass.  The daemon reads an archive again only when
+        # its inode, size or mtime changed; on 3.13+ it patches nothing.
+        # The workers' Python must import vunnel_spark before a task ships
+        # any file, which every Python stage already needs: its UDFs pickle
+        # vunnel_spark functions by reference.  A static conf, so it takes
+        # effect only when this builder starts the context.
+        .config("spark.python.daemon.module", "vunnel_spark.worker_daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # Spark cannot read TIMESTAMP(NANOS) parquet natively; read the raw
