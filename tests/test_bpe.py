@@ -128,7 +128,7 @@ def test_apply_merges_matches_reference(spark):
 def test_apply_merges_empty_word_guard(spark):
     """sequence(1, 0) descends to [1, 0] — without the guard an empty
     word would tokenize to two phantom empty symbols + EOW (n_tok=3)
-    instead of the correct [EOW] (or [] with eow=False)."""
+    instead of the correct [EOW]."""
     from vunnel_spark.operators.bpe import EOW, apply_merges
     from vunnel_spark.queries.text import _BPE_FROZEN_MERGES
 
@@ -139,11 +139,6 @@ def test_apply_merges_empty_word_guard(spark):
     }
     assert got[""] == [EOW]
     assert got["a"] == ["a", EOW]
-    got_no_eow = {
-        r["word"]: list(r["symbols"])
-        for r in apply_merges(df, _BPE_FROZEN_MERGES, eow=False).collect()
-    }
-    assert got_no_eow[""] == []
 
 
 def test_apply_merges_null_word_stays_null(spark):
@@ -153,13 +148,12 @@ def test_apply_merges_null_word_stays_null(spark):
     from vunnel_spark.queries.text import _BPE_FROZEN_MERGES
 
     df = spark.createDataFrame([(None,), ("ab",)], "word string")
-    for eow in (True, False):
-        got = {
-            r["word"]: r["symbols"]
-            for r in apply_merges(df, _BPE_FROZEN_MERGES, eow=eow).collect()
-        }
-        assert got[None] is None
-        assert got["ab"] is not None
+    got = {
+        r["word"]: r["symbols"]
+        for r in apply_merges(df, _BPE_FROZEN_MERGES).collect()
+    }
+    assert got[None] is None
+    assert got["ab"] is not None
 
 
 def test_x23_oracle_replace_trick_matches_fold():

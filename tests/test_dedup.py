@@ -65,7 +65,7 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
 def test_simhash_finds_planted_near_dups(spark, docs):
     from vunnel_spark.operators.dedup import simhash_pairs
 
-    found = {(r.id_a, r.id_b) for r in simhash_pairs(docs, max_hamming=3).collect()}
+    found = {(r.id_a, r.id_b) for r in simhash_pairs(docs).collect()}
     planted = planted_pairs(docs)
     hit = len(found & planted) / len(planted)
     # one appended word on a >=20-word doc flips few simhash bits
@@ -188,11 +188,11 @@ def test_containment_pairs_freq_cap_kills_stopword_flood(spark):
     rows = flood + [(100, base), (101, base + " zeta")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    uncapped = containment_pairs(docs, k=3, threshold=0.95).collect()
+    uncapped = containment_pairs(docs, threshold=0.95).collect()
     assert len(uncapped) == 28 + 1  # C(8,2) flood pairs + the real one
 
     capped = containment_pairs(
-        docs, k=3, threshold=0.95, max_shingle_freq=5
+        docs, threshold=0.95, max_shingle_freq=5
     ).collect()
     assert [(r.id_a, r.id_b) for r in capped] == [(100, 101)]
     assert capped[0].containment_a == 1.0  # doc 100's shingles all in 101

@@ -10,9 +10,11 @@ The classes that already bit twice get a lint here so the fourth
 incident fails at commit time with a pointer to the postmortem, not
 at an external gate three weeks later.
 
-The reachability lint at the end is source-level rather than
-oracle-level: product code that only tests reach fails it unless
-``ALLOWED`` records why it stays.
+The reachability and options lints at the end are source-level rather
+than oracle-level: product code that only tests reach fails the first
+unless ``ALLOWED`` records why it stays, and a defaulted parameter or
+environment knob that no execution root sets fails the second unless
+``ALLOWED_OPTIONS`` does.
 
 Known-but-unlinted hazard (round 8, llm1): ``round(avg(<double>), n)``
 over GROUPS is accumulation-order-sensitive — Spark's partial-sum merge
@@ -240,13 +242,28 @@ def _scan():
             if module == "vunnel_spark.cli" or any(map(_is_register, stmt.decorator_list)):
                 roots |= refs | {stmt.name}
         roots |= _refs(module_code, docs)
-    for path in [_REPO / "bench.py", _REPO / "__spark_entry__.py",
-                 *(_REPO / "scripts").rglob("*.py"),
-                 *(_REPO / "perfbench").rglob("*.py")]:
-        if "tests" not in path.relative_to(_REPO).parts:
-            tree = ast.parse(path.read_text())
-            roots |= _refs([tree], _docstrings(tree))
+    for path in _root_files():
+        tree = ast.parse(path.read_text())
+        roots |= _refs([tree], _docstrings(tree))
     return defs, roots
+
+
+def _root_files() -> list[Path]:
+    """The entry points, scripts/ and perfbench/ (its tests aside)."""
+    return [
+        path for path in [_REPO / "bench.py", _REPO / "__spark_entry__.py",
+                          *(_REPO / "scripts").rglob("*.py"),
+                          *(_REPO / "perfbench").rglob("*.py")]
+        if "tests" not in path.relative_to(_REPO).parts
+    ]
+
+
+def _allowed_roots(defs) -> set[str]:
+    """The names ``ALLOWED`` keeps: its bare keys and every def of the
+    modules it names."""
+    return {k for k in ALLOWED if "." not in k} | {
+        name for module, name in defs if module in ALLOWED
+    }
 
 
 def _reached(defs, roots: set[str]) -> set[tuple[str, str]]:
@@ -277,10 +294,7 @@ def test_product_code_is_reached_or_allowed():
     outlive what it excuses.  Pure AST walk, no Spark."""
     defs, roots = _scan()
     modules = {module for module, _ in defs}
-    allowed_roots = {k for k in ALLOWED if "." not in k} | {
-        name for module, name in defs if module in ALLOWED
-    }
-    reached = _reached(defs, roots | allowed_roots)
+    reached = _reached(defs, roots | _allowed_roots(defs))
     unreached = sorted(
         f"{module}.{name} ({defs[module, name][1]} lines)"
         for module, name in defs if (module, name) not in reached
@@ -297,3 +311,223 @@ def test_product_code_is_reached_or_allowed():
     by_roots = {name for _, name in _reached(defs, roots)}
     stale = sorted(k for k in ALLOWED if k in by_roots)
     assert not stale, f"ALLOWED entries the execution roots reach anyway: {stale}"
+
+
+# ---------------------------------------------------------------- options
+
+def _trees(paths) -> list[tuple[Path, ast.Module]]:
+    return [(p, ast.parse(p.read_text())) for p in paths]
+
+
+def _is_staticmethod(fn: ast.AST) -> bool:
+    return any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
+
+
+def _defaulted(fn, method: bool) -> list[tuple[str, int | None]]:
+    """``fn``'s defaulted parameters as (name, positional index or None
+    for keyword-only); a method's index does not count self/cls."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    skip = 1 if method and not _is_staticmethod(fn) else 0
+    first = len(positional) - len(a.defaults)
+    out = [(p.arg, i - skip) for i, p in enumerate(positional) if i >= first]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _env_reads(tree: ast.AST):
+    """``os.environ.get(NAME, default)`` / ``os.getenv(NAME, default)``."""
+    for sub in ast.walk(tree):
+        if (isinstance(sub, ast.Call) and len(sub.args) == 2
+                and isinstance(sub.args[0], ast.Constant)
+                and isinstance(sub.args[0].value, str)
+                and (ast.unparse(sub.func) in ("os.environ.get", "os.getenv"))):
+            yield sub.args[0].value
+
+
+class _Calls:
+    """What the calls in some code pass, by callee name: keywords, the
+    longest positional list, and whether ``*args``/``**kwargs`` forward
+    everything.  ``partial(f, ...)`` counts as a call of ``f``, and a call
+    through ``from m import f as g`` as one of ``f``."""
+
+    def __init__(self):
+        self.keywords: dict[str, set[str]] = {}
+        self.positional: dict[str, int] = {}
+        self.star: set[str] = set()
+        self.starstar: set[str] = set()
+        self.strings: set[str] = set()
+        self.aliases: dict[str, set[str]] = {}
+
+    def add(self, nodes) -> None:
+        for node in nodes:
+            for sub in ast.walk(node):
+                if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+                    self.strings.add(sub.value)
+                if isinstance(sub, ast.alias) and sub.asname:
+                    self.aliases.setdefault(sub.name.rsplit(".", 1)[-1], set()).add(sub.asname)
+                if not isinstance(sub, ast.Call):
+                    continue
+                func, args = sub.func, sub.args
+                if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
+                    func, args = args[0], args[1:]
+                name = getattr(func, "id", getattr(func, "attr", None))
+                if name is None:
+                    continue
+                if any(isinstance(a, ast.Starred) for a in args):
+                    self.star.add(name)
+                n = sum(not isinstance(a, ast.Starred) for a in args)
+                self.positional[name] = max(self.positional.get(name, 0), n)
+                for kw in sub.keywords:
+                    if kw.arg is None:
+                        self.starstar.add(name)
+                    else:
+                        self.keywords.setdefault(name, set()).add(kw.arg)
+
+    def sets(self, callee: str, param: str, index: int | None) -> bool:
+        return any(
+            param in self.keywords.get(name, ())
+            or name in self.starstar
+            or (index is not None and (name in self.star
+                                       or index < self.positional.get(name, 0)))
+            for name in {callee} | self.aliases.get(callee, set())
+        )
+
+
+def _options():
+    """Every option of vunnel_spark/ as ``{key: (def key, callee names,
+    param, index)}``: a defaulted parameter of a top-level function
+    (``module.f.p``), method (``module.C.m.p``) or constructor
+    (``module.C.__init__.p``, called as ``C`` or ``super().__init__``),
+    with ``module`` relative to vunnel_spark; or an environment variable
+    read with a default (key and param are its name, callees None)."""
+    out = {}
+    for path, tree in _trees(sorted((_REPO / "vunnel_spark").rglob("*.py"))):
+        module = ".".join(path.relative_to(_REPO).with_suffix("").parts)
+        prefix = module.removeprefix("vunnel_spark.") + "."
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for p, i in _defaulted(stmt, method=False):
+                    out[f"{prefix}{stmt.name}.{p}"] = ((module, stmt.name), (stmt.name,), p, i)
+            elif isinstance(stmt, ast.ClassDef):
+                for fn in stmt.body:
+                    if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        continue
+                    callees = (stmt.name, "__init__") if fn.name == "__init__" else (fn.name,)
+                    for p, i in _defaulted(fn, method=True):
+                        out[f"{prefix}{stmt.name}.{fn.name}.{p}"] = (
+                            (module, stmt.name), callees, p, i)
+        for name in _env_reads(tree):
+            out[name] = ((module, None), None, name, None)
+    return out
+
+
+def _option_calls(defs, roots):
+    """The calls that can set an option, as ``(root, test, files,
+    only_allowed)``.  ``root`` holds the calls in the execution roots and
+    in every def they or ``ALLOWED`` reach; ``test`` the calls in tests/,
+    which count only for the options of ``only_allowed``, the defs that
+    ``ALLOWED`` alone keeps.  ``files.strings`` holds the string
+    constants of the entry points, scripts/ and perfbench/, where an
+    environment variable is set."""
+    root, test, files = _Calls(), _Calls(), _Calls()
+    reached = _reached(defs, roots | _allowed_roots(defs))
+    for path, tree in _trees(sorted((_REPO / "vunnel_spark").rglob("*.py"))):
+        module = ".".join(path.relative_to(_REPO).with_suffix("").parts)
+        for stmt in tree.body:
+            if (not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                    or (module, stmt.name) in reached):
+                root.add([stmt])
+            else:
+                root.add(stmt.decorator_list)
+    for _, tree in _trees(_root_files()):
+        root.add([tree])
+        files.add([tree])
+    test.add(tree for _, tree in _trees(sorted((_REPO / "tests").rglob("*.py"))))
+    return root, test, files, reached - _reached(defs, roots)
+
+
+def _unset_options() -> list[str]:
+    """Options no root sets (for defs only ``ALLOWED`` keeps: no root and
+    no test)."""
+    defs, roots = _scan()
+    root, test, files, only_allowed = _option_calls(defs, roots)
+    unset = []
+    for key, (owner, callees, param, index) in _options().items():
+        if callees is None:
+            is_set = param in files.strings
+        else:
+            calls = (root, test) if owner in only_allowed else (root,)
+            is_set = any(c.sets(name, param, index) for c in calls for name in callees)
+        if not is_set:
+            unset.append(key)
+    return unset
+
+
+_SEAM = "test seam: tests pass a temp dir, a fixed clock or argv here"
+_REFERENCE = (
+    "makes the reference streams the decoder must read (the only source "
+    "of restart markers / LPC orders / strip layouts in the tests)"
+)
+_DEPLOY = "deployment setting a caller of the library chooses"
+
+#: options (defaulted parameters and environment knobs) that no
+#: execution root sets, kept on purpose.  A key is what ``_options``
+#: reports: ``module.function.param``, ``module.Class.method.param`` or
+#: an environment variable's name.
+ALLOWED_OPTIONS = {
+    "cli.main.argv": _SEAM,
+    "session.get_spark.cpus": _SEAM,
+    "queries.__init__.compute_gate_window.root": _SEAM,
+    "pipelines.nvd.nvd_pipeline.state_path": _SEAM,
+    "pipelines.nvd.nvd_pipeline.today": _SEAM,
+    "pipelines.ubuntu.ubuntu_pipeline.state_path": _SEAM,
+    "pipelines.ubuntu.ubuntu_pipeline.today_date": _SEAM,
+    "operators.multimodal.encode_jpeg_gray.restart_interval": _REFERENCE,
+    "operators.multimodal.encode_jpeg_gray_progressive.restart_interval": _REFERENCE,
+    "operators.multimodal.encode_flac.lpc_order": _REFERENCE,
+    "operators.multimodal.encode_tiff.rows_per_strip": _REFERENCE,
+    "functions.zorder.write_clustered.n_files": f"{_DEPLOY}: output file count",
+    "operators.dedup.write_lsh_index.mode": (
+        f"{_DEPLOY}: 'append' grows the incremental index batch by batch"
+    ),
+    "pipelines.echo.echo_pipeline.namespace": f"{_DEPLOY}: published namespace",
+    "pipelines.echo.echo_pipeline.release": f"{_DEPLOY}: published namespace",
+    "pipelines.secureos.secureos_pipeline.namespace": f"{_DEPLOY}: published namespace",
+    "pipelines.secureos.secureos_pipeline.release": f"{_DEPLOY}: published namespace",
+    "pipelines.osv.osv_patch_fix_dates.ecosystem_processor": (
+        f"{_DEPLOY}: the provider's ecosystem rule (rocky_normalize_ecosystem)"
+    ),
+    "pipelines.osv.osv_patch_fix_dates.validate_store_dim": (
+        f"{_DEPLOY}: checks a fix-date store's key uniqueness at run time"
+    ),
+    "pipelines.ubuntu.osv_to_os.include_esm": (
+        f"{_DEPLOY}: whether Ubuntu Pro (ESM) fixes are published"
+    ),
+    "sinks.writers.EnvelopeWriter.__init__.partition_by": f"{_DEPLOY}: store layout",
+    "sources.http.get_with_retry.timeout": f"{_DEPLOY}: HTTP timeout",
+    "streaming.joins.interval_join.watermark": f"{_DEPLOY}: lateness bound",
+}
+
+
+def test_options_are_set_or_allowed():
+    """Every option of vunnel_spark/ is set by an execution root (for
+    code only ``ALLOWED`` keeps: by a test), or is kept by an
+    ``ALLOWED_OPTIONS`` entry that says why.  An option nothing sets is
+    a branch nothing runs: inline its default, or record the reason it
+    stays.  Calls match by name and any ``*args``/``**kwargs`` forward
+    everything, so the lint can miss an unused option but never flags
+    one a root passes.  Pure AST walk, no Spark."""
+    unset = _unset_options()
+    missing = sorted(k for k in unset if k not in ALLOWED_OPTIONS)
+    assert not missing, (
+        "options that no registered query, CLI command, script or "
+        "benchmark workload sets — inline the default (a value used more "
+        "than once becomes a module constant), or add the option to "
+        f"ALLOWED_OPTIONS with the reason it stays: {missing}"
+    )
+    live = _options()
+    gone = sorted(k for k in ALLOWED_OPTIONS if k not in live)
+    assert not gone, f"ALLOWED_OPTIONS names options that no longer exist: {gone}"
+    stale = sorted(k for k in ALLOWED_OPTIONS if k not in unset)
+    assert not stale, f"ALLOWED_OPTIONS entries the execution roots set anyway: {stale}"

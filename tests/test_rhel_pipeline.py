@@ -166,41 +166,28 @@ def test_reduce_fix_streams_matches_reference_example(spark):
 def test_reduce_fix_streams_deterministic_representative(spark):
     """r13 ADVICE fix: rpm-equal but TEXTUALLY different versions
     ('1.0-1' vs '0:1.0-1' — epoch 0 is implicit in rpm ordering) pick a
-    deterministic representative: first-seen when an input-order column
-    is supplied (the reference's bucket.append guard,
-    rhel/parser.py:569-571), else the lexicographically smallest
+    deterministic representative: the lexicographically smallest
     version text."""
     from vunnel_spark.pipelines.rhel import reduce_fix_streams
 
     rows = spark.createDataFrame(
-        [
-            ("pkgA", "1.0-1", 1),
-            ("pkgA", "0:1.0-1", 2),  # rpm-equal to the first
-            ("pkgA", "1.0-2", 3),
-        ],
-        "bucket string, version string, ord int",
+        [("pkgA", "1.0-1"), ("pkgA", "0:1.0-1"), ("pkgA", "1.0-2")],
+        "bucket string, version string",
     )
-    # first-seen with an order column: '1.0-1' arrived before '0:1.0-1'
-    out = {r.bucket: r for r in
-           reduce_fix_streams(rows, ["bucket"], order_col="ord").collect()}
-    assert out["pkgA"].canonical == "1.0-2"
-    assert out["pkgA"].vulnerable_range is None  # same base either way
-
-    # reversed arrival order flips the representative (range would show
-    # it if the bases differed textually); canonical still the highest
+    # the range shows the representative when the bases differ
+    # textually; canonical is still the highest
     rev = spark.createDataFrame(
-        [("pkgA", "0:1.0-1", 1), ("pkgA", "1.0-1", 2), ("pkgA", "2.0-1", 3)],
-        "bucket string, version string, ord int",
+        [("pkgA", "1.0-1"), ("pkgA", "0:1.0-1"), ("pkgA", "2.0-1")],
+        "bucket string, version string",
     )
     out_rev = {r.bucket: r for r in
-               reduce_fix_streams(rev, ["bucket"], order_col="ord").collect()}
+               reduce_fix_streams(rev, ["bucket"]).collect()}
     assert out_rev["pkgA"].vulnerable_range == "< 0:1.0-1 || >= 2.0, < 2.0-1"
 
-    # no order column: lexicographic min text, stable across runs
-    no_ord = rows.drop("ord")
+    # stable across runs
     for _ in range(2):
         got = {r.bucket: r for r in
-               reduce_fix_streams(no_ord, ["bucket"]).collect()}
+               reduce_fix_streams(rows, ["bucket"]).collect()}
         assert got["pkgA"].canonical == "1.0-2"
 
 

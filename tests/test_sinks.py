@@ -134,10 +134,6 @@ def test_snapshot_import_gates(spark, outdir):
     assert import_snapshot(snap2, dest) == "imported"
     assert {r.id for r in spark.read.parquet(dest).collect()} == {"v2"}
 
-    # forced import ignores the newer check but still validates checksums
-    assert import_snapshot(snap, dest, skip_newer_check=True) == "imported"
-    assert {r.id for r in spark.read.parquet(dest).collect()} == {"v1"}
-
 
 def test_snapshot_import_rejects_tampered(spark, outdir):
     import glob as _glob
@@ -156,6 +152,32 @@ def test_snapshot_import_rejects_tampered(spark, outdir):
     with _pytest.raises(ValueError, match="checksum"):
         import_snapshot(snap, dest)
     assert not os.path.exists(dest), "tampered snapshot must not install"
+
+
+def test_snapshot_validation_writes_nothing_into_snapshot(spark, outdir, monkeypatch):
+    """Checking a snapshot must leave it untouched, so a read-only
+    snapshot validates: no file under it is opened for writing."""
+    import builtins
+
+    from vunnel_spark.sinks.writers import _LISTING, publish_snapshot
+
+    snap = os.path.join(outdir, "snapR")
+    spark.createDataFrame([("v1", 1)], "id string, n int").write.parquet(snap)
+    publish_snapshot(snap, built="2026-01-01T00:00:00")
+    before = sorted(os.listdir(snap))
+
+    writes, real_open = [], builtins.open
+
+    def recording_open(file, mode="r", *args, **kwargs):
+        if any(c in mode for c in "wax+") and str(file).startswith(snap):
+            writes.append(str(file))
+        return real_open(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", recording_open)
+    assert validate_checksum_listing(snap, os.path.join(snap, _LISTING))
+    monkeypatch.undo()
+    assert writes == []
+    assert sorted(os.listdir(snap)) == before
 
 
 def test_dedup_without_order_col_stable_across_partitioning(spark, outdir):
@@ -363,68 +385,40 @@ def test_compaction_reads_with_schema_record(spark, outdir, layout):
     assert sorted(map(tuple, w.read(spark).collect())) == rows
 
 
-# --------------------------------------------------- table-format adapter
+# ----------------------------------------------------- one table format
 
-def test_delta_adapter_availability_probe(spark):
-    """delta_available() must answer without raising in every
-    environment; in this container (no delta-spark) it reports False and
-    both sink idioms fall back to the parquet swap."""
-    from vunnel_spark.sinks.table_format import delta_available
+def test_sinks_write_parquet_when_delta_imports(spark, tmp_path, monkeypatch):
+    """The sinks have one format, single-writer parquet: an importable
+    ``delta`` package (a stub here) must not send a new store down another
+    path.  Both idioms write stores that ``spark.read.parquet`` reads."""
+    import sys
+    import types
 
-    assert delta_available(spark) in (True, False)
-
-
-def test_forced_delta_raises_cleanly_when_unavailable(spark, tmp_path):
-    import pytest
-
-    from vunnel_spark.sinks.table_format import delta_available
     from vunnel_spark.sinks.writers import first_observed_merge, overwrite_partitions
 
-    if delta_available(spark):
-        pytest.skip("delta-spark present; the forced path is exercised below")
-    obs = spark.createDataFrame([("k1",), ("k2",)], "k string")
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        first_observed_merge(
-            spark, str(tmp_path / "fo"), obs, ["k"], table_format="delta"
-        )
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        overwrite_partitions(
-            obs.withColumn("p", obs.k), str(tmp_path / "ow"), "p",
-            table_format="delta",
-        )
-
-
-def test_delta_merge_and_replacewhere_roundtrip(spark, tmp_path):
-    """Runs only where delta-spark is installed (CI with the jar): the
-    MERGE INTO path must keep first_observed_merge's insert-on-miss
-    idempotence, and replaceWhere must leave absent partitions frozen."""
-    import pytest
-
-    from vunnel_spark.sinks.table_format import delta_available
-    from vunnel_spark.sinks.writers import first_observed_merge, overwrite_partitions
-
-    if not delta_available(spark):
-        pytest.skip("delta-spark not on the classpath")
+    delta, tables = types.ModuleType("delta"), types.ModuleType("delta.tables")
+    tables.DeltaTable = type("DeltaTable", (), {})
+    delta.tables = tables
+    monkeypatch.setitem(sys.modules, "delta", delta)
+    monkeypatch.setitem(sys.modules, "delta.tables", tables)
 
     fo = str(tmp_path / "fo")
-    obs1 = spark.createDataFrame([("a",), ("b",)], "k string")
-    got1 = first_observed_merge(spark, fo, obs1, ["k"], today="2026-01-01")
-    assert got1.count() == 2
-    # re-merge same keys + one new key on a later day: dates never change
-    obs2 = spark.createDataFrame([("a",), ("c",)], "k string")
-    got2 = {r.k: str(r.first_observed)
-            for r in first_observed_merge(spark, fo, obs2, ["k"],
-                                          today="2026-02-02").collect()}
-    assert got2 == {"a": "2026-01-01", "b": "2026-01-01", "c": "2026-02-02"}
+    obs = spark.createDataFrame([("a",), ("b",)], "k string")
+    got = first_observed_merge(spark, fo, obs, ["k"], today="2026-01-01")
+    assert {r.k: str(r.first_observed) for r in got.collect()} == {
+        "a": "2026-01-01", "b": "2026-01-01",
+    }
+    assert {r.k for r in spark.read.parquet(fo).collect()} == {"a", "b"}
 
     ow = str(tmp_path / "ow")
     day1 = spark.createDataFrame([("p1", 1), ("p2", 2)], "p string, v int")
     overwrite_partitions(day1, ow, "p")
     day2 = spark.createDataFrame([("p2", 20)], "p string, v int")
     overwrite_partitions(day2, ow, "p")
-    rows = {(r.p, r.v) for r in
-            spark.read.format("delta").load(ow).collect()}
+    rows = {(r.p, r.v) for r in spark.read.parquet(ow).collect()}
     assert rows == {("p1", 1), ("p2", 20)}  # p1 frozen, p2 replaced
+    for store in (fo, ow):
+        assert not os.path.exists(os.path.join(store, "_delta_log"))
 
 
 # ------------------------------------------------------------- compaction

@@ -20,11 +20,11 @@ def test_salted_agg_equals_plain_groupby(spark, sf_dir):
     plain = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("n_chars").alias("sum_n_chars"),
-        F.min("n_chars").alias("min_n_chars"),
+        F.max("n_chars").alias("max_n_chars"),
     )
     salted = salted_agg(
         docs.repartition(13), ["lang"], "doc_id", num_buckets=5,
-        sum_cols=("n_chars",), min_cols=("n_chars",),
+        sum_cols=("n_chars",), max_cols=("n_chars",),
     )
     assert _rows(salted) == _rows(plain)
 

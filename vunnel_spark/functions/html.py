@@ -84,9 +84,7 @@ class _AlasParser(HTMLParser):
             self.overview_parts.append(data)
 
 
-def extract_alas_packages(
-    df: DataFrame, html_col: str = "html", id_col: str = "page_id"
-) -> DataFrame:
+def extract_alas_packages(df: DataFrame) -> DataFrame:
     """(page_id, arch, pkg, overview) rows from ALAS-style HTML documents.
 
     One input row per HTML page; output fan-out is one row per fixed
@@ -100,7 +98,7 @@ def extract_alas_packages(
         for arch, pkg in p.fixes:
             yield (pid, arch, pkg, overview)
 
-    return row_stage(df, EXTRACT_SCHEMA, (id_col, html_col), parse)
+    return row_stage(df, EXTRACT_SCHEMA, ("page_id", "html"), parse)
 
 
 def alas_name_version(pkg):

@@ -61,8 +61,8 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(npunct / n)
 
 
-def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS)])
+def stopword_ratio(col: Column) -> Column:
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
     t = tokens(F.lower(col))
     counted = F.aggregate(
         t,
@@ -86,8 +86,8 @@ def quality_score(col: Column) -> Column:
     return F.round(len_score * 0.5 + punct_pen * 0.3 + sw_score * 0.2, 6)
 
 
-def fingerprint(col: Column, head: int = 500) -> Column:
-    """Order-sensitive document fingerprint: ``md5`` of the first ``head``
+def fingerprint(col: Column) -> Column:
+    """Order-sensitive document fingerprint: ``md5`` of the first 500
     characters (lowercase hex).
 
     Earlier formulations (regex word-split in r4, per-codepoint positional
@@ -101,7 +101,7 @@ def fingerprint(col: Column, head: int = 500) -> Column:
     ``fingerprint_dedup`` needs); NULL stays NULL, empty text hashes to
     md5("").
     """
-    return F.md5(F.substring(col, 1, head))
+    return F.md5(F.substring(col, 1, 500))
 
 
 # ---------------------------------------------------------------- language-ID

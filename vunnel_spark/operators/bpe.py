@@ -31,13 +31,13 @@ from pyspark.sql import DataFrame, functions as F
 EOW = "</w>"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, freq) over whitespace tokens — the Zipf-bounded dimension
     all later passes run on.  Empty tokens (leading/trailing split
     artifacts, empty docs) are dropped."""
     return (
         docs.select(
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
         )
         .filter(F.length("word") > 0)
         .groupBy("word")
@@ -102,9 +102,7 @@ def merge_pair(symbol_words: DataFrame, a: str, b: str) -> DataFrame:
     return symbol_words.select(_merge_fold(a, b).alias("symbols"), "freq")
 
 
-def apply_merges(
-    words: DataFrame, merges: list, eow: bool = True
-) -> DataFrame:
+def apply_merges(words: DataFrame, merges: list) -> DataFrame:
     """(word, symbols): tokenize each distinct word with a FROZEN merge
     table — the apply path of the trainer, how a pinned tokenizer
     artifact runs over a new corpus.  Input is one ``word`` column
@@ -127,21 +125,19 @@ def apply_merges(
             lambda i: F.col("word").substr(i, F.lit(1)),
         ),
     ).when(F.col("word").isNotNull(), F.array().cast("array<string>"))
-    symbols = F.concat(chars, F.array(F.lit(EOW))) if eow else chars
+    symbols = F.concat(chars, F.array(F.lit(EOW)))
     out = words.select("word", symbols.alias("symbols"))
     for a, b in merges:
         out = out.select("word", _merge_fold(a, b).alias("symbols"))
     return out
 
 
-def bpe_train(
-    docs: DataFrame, n_merges: int, text_col: str = "text", eow: bool = True
-) -> list[tuple[str, str, int]]:
+def bpe_train(docs: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns [(a, b, count), ...] in
     merge order.  Ties break deterministically (count desc, a asc,
     b asc) so every engine and every run learns the identical merge
     table.  Driver traffic is ONE row per merge step."""
-    words = to_symbols(word_counts(docs, text_col), eow=eow)
+    words = to_symbols(word_counts(docs))
     # the word table is reused n_merges times: cache it once
     words = words.cache()
     merges: list[tuple[str, str, int]] = []

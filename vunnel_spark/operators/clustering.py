@@ -7,7 +7,8 @@ profile the clusters, rebalance the mixture so no topic dominates
 recipes).  The quantizer primitives are shared with the ANN family
 (operators/similarity.py) — a cluster assignment IS an IVF cell
 assignment — so this module adds only the k-means *update* machinery and
-the sampling policy on top.
+the sampling policy on top.  Every operator reads ``vec_id`` and
+``embedding`` columns.
 
 Scale shape (the 100 TB contract):
 
@@ -42,8 +43,6 @@ _HASH_MOD = 4294967296
 def assign_clusters(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
     d2_col: str | None = "d2",
 ) -> DataFrame:
     """Nearest-centroid assignment: adds ``cell`` (int) and optionally the
@@ -54,8 +53,8 @@ def assign_clusters(
     Catalyst — pipelines with the scan."""
     from vunnel_spark.operators.similarity import ranked_cells
 
-    best = F.element_at(ranked_cells(vec_col, centroids), 1)
-    out = df.withColumn(cell_col, best.getField("cell"))
+    best = F.element_at(ranked_cells(centroids), 1)
+    out = df.withColumn("cell", best.getField("cell"))
     if d2_col:
         out = out.withColumn(d2_col, best.getField("d2"))
     return out
@@ -64,25 +63,22 @@ def assign_clusters(
 def cluster_profile(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Per-cluster profile: size, mean squared distance (a per-cell
     inertia — the quantity k-means minimizes), and the id range.  ONE
     shuffle of k rows after map-side partial aggregation."""
-    assigned = assign_clusters(df, centroids, vec_col)
+    assigned = assign_clusters(df, centroids)
     return assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.round(F.avg("d2"), 6).alias("avg_d2"),
-        F.min(id_col).alias("min_vec_id"),
-        F.max(id_col).alias("max_vec_id"),
+        F.min("vec_id").alias("min_vec_id"),
+        F.max("vec_id").alias("max_vec_id"),
     )
 
 
 def lloyd_update(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     flat: bool = True,
 ) -> DataFrame:
     """One Lloyd iteration's centroid update: the per-cell mean vector.
@@ -97,9 +93,9 @@ def lloyd_update(
     loop.
     """
     dim = len(centroids[0])
-    assigned = assign_clusters(df, centroids, vec_col)
+    assigned = assign_clusters(df, centroids)
     sums = [
-        F.sum(F.element_at(F.col(vec_col), i + 1).cast("double")).alias(f"_s{i}")
+        F.sum(F.element_at(F.col("embedding"), i + 1).cast("double")).alias(f"_s{i}")
         for i in range(dim)
     ]
     agg = assigned.groupBy("cell").agg(
@@ -119,7 +115,6 @@ def kmeans_fit(
     df: DataFrame,
     init_centroids: list[list[float]],
     n_iter: int = 5,
-    vec_col: str = "embedding",
 ) -> tuple[list[list[float]], list[float]]:
     """Driver-looped Lloyd's algorithm on the distributed update.
 
@@ -134,7 +129,7 @@ def kmeans_fit(
     cents = [list(c) for c in init_centroids]
     inertias: list[float] = []
     for _ in range(n_iter):
-        rows = lloyd_update(df, cents, vec_col, flat=False).collect()
+        rows = lloyd_update(df, cents, flat=False).collect()
         by_cell = {r["cell"]: r for r in rows}
         inertias.append(float(sum(r["inertia"] for r in rows)))
         cents = [
@@ -148,8 +143,6 @@ def cluster_balanced_sample(
     df: DataFrame,
     centroids: list[list[float]],
     cap_per_cell: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Downsample each cluster to ~``cap_per_cell`` expected rows — the
     mixture-rebalancing step that stops a mega-cluster (boilerplate,
@@ -170,15 +163,15 @@ def cluster_balanced_sample(
     onto the scan — the x7/x12 sampling discipline with data-derived
     rates.
     """
-    assigned = assign_clusters(df, centroids, vec_col, d2_col=None)
+    assigned = assign_clusters(df, centroids, d2_col=None)
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_cell"))
     dec = "decimal(38,0)"
-    h = F.pmod(F.col(id_col).cast(dec) * F.lit(_HASH_MULT), F.lit(_HASH_MOD))
+    h = F.pmod(F.col("vec_id").cast(dec) * F.lit(_HASH_MULT), F.lit(_HASH_MOD))
     return (
         assigned.join(F.broadcast(counts), "cell")
         .filter(
             h * F.col("n_cell").cast(dec)
             < F.lit(cap_per_cell * _HASH_MOD).cast(dec)
         )
-        .select(id_col, "cell")
+        .select("vec_id", "cell")
     )

@@ -12,6 +12,9 @@ Five families, ordered by cost:
   simhash_pairs        64-bit SimHash + hamming-ball bucketing
   embedding_dup_pairs  cosine near-dup over embeddings within LSH buckets
 
+The text operators read a document frame with ``doc_id`` and ``text``
+columns; the embedding ones read ``vec_id`` and ``embedding``.
+
 Scale notes: every operator shuffles on a *derived small key* (hash,
 band bucket, shingle) and never materializes the cross product.  Skewed
 shingles (stopword-only shingles at 100 TB) are handled by a frequency cap:
@@ -25,38 +28,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: word-shingle width of the Jaccard, containment and MinHash operators
+SHINGLE_K = 3
+#: MinHash signature length and band count of the incremental LSH index;
+#: the index writer and the batch probe must agree on both
+INDEX_HASHES, INDEX_BANDS = 64, 16
 
-def exact_dedup(df: DataFrame, content_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the lowest-id representative of each identical-content group.
 
     groupBy on sha256(content) — the content itself never shuffles twice;
     at 100 TB, group on the 32-byte digest, not the raw text.
     """
     return (
-        df.withColumn("_h", F.sha2(F.col(content_col), 256))
+        df.withColumn("_h", F.sha2(F.col("text"), 256))
         .groupBy("_h")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .drop("_h")
     )
 
 
-def duplicate_groups(df: DataFrame, content_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def duplicate_groups(df: DataFrame) -> DataFrame:
     """(doc_id, keep_id) mapping: every doc points at its group representative."""
     w = Window.partitionBy("_h")
     return (
-        df.withColumn("_h", F.sha2(F.col(content_col), 256))
-        .withColumn("keep_id", F.min(id_col).over(w))
-        .withColumn("is_duplicate", F.col(id_col) != F.col("keep_id"))
+        df.withColumn("_h", F.sha2(F.col("text"), 256))
+        .withColumn("keep_id", F.min("doc_id").over(w))
+        .withColumn("is_duplicate", F.col("doc_id") != F.col("keep_id"))
         .drop("_h")
     )
 
 
-def fingerprint_dedup(
-    df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def fingerprint_dedup(df: DataFrame) -> DataFrame:
     """Head-fingerprint dedup: cheap order-sensitive candidate pass.
 
     Same shape as exact_dedup but keyed on the md5-of-head fingerprint
@@ -67,22 +74,18 @@ def fingerprint_dedup(
     from vunnel_spark.functions.text import fingerprint
 
     return (
-        df.withColumn("_fp", fingerprint(F.col(content_col)))
+        df.withColumn("_fp", fingerprint(F.col("text")))
         .groupBy("_fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
         .withColumnRenamed("_fp", "fingerprint")
     )
 
 
 def embedding_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_tables: int = 4,
     n_bits: int = 8,
-    dim: int = 64,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within LSH buckets.
 
@@ -97,17 +100,14 @@ def embedding_dup_pairs(
     and OOMs the executor).  Ids group thin, successor pairs emit thin,
     distinct dedups thin; vectors join back for the cosine verify only on
     candidate ids (broadcast semi-join first, so the verify never
-    re-shuffles the corpus).  ``max_bucket_size`` is the standard LSH
-    skew cap (see minhash_lsh_pairs): a bucket of B members emits
-    B(B-1)/2 pairs, so one degenerate bucket can dominate the job; at
-    corpus scale cap it and let the within-family pairs surface through
-    exact dedup / a representative pass instead.
+    re-shuffles the corpus).  Input columns are ``vec_id`` and 64-dim
+    ``embedding``.
     """
     from vunnel_spark.functions.vectors import cosine_hoisted, norm2
     from vunnel_spark.operators.similarity import add_lsh_buckets
 
-    b = add_lsh_buckets(df, vec_col, n_tables, n_bits, dim).select(
-        F.col(id_col).alias("id"),
+    b = add_lsh_buckets(df, n_tables, n_bits).select(
+        F.col("vec_id").alias("id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
     grouped = (
@@ -115,8 +115,6 @@ def embedding_dup_pairs(
         .agg(F.sort_array(F.collect_set("id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    if max_bucket_size:
-        grouped = grouped.filter(F.size("ids") <= max_bucket_size)
     # ids are sorted, so successor pairing yields canonical id_a < id_b
     pair_structs = F.expr(
         "flatten(transform(ids, (x, i) -> "
@@ -139,7 +137,7 @@ def embedding_dup_pairs(
     # (functions/vectors.cosine_hoisted — bit-identical, 3x less
     # per-pair work)
     vecs = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
         .join(F.broadcast(cand_ids), "id", "left_semi")
         .withColumn("_n", norm2(F.col("vec")))
         .persist()
@@ -176,7 +174,7 @@ def embedding_dup_pairs(
     )
 
 
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Hash-repartition on the id before explode/hash-heavy map stages.
 
     Document corpora often arrive as a handful of parquet files, so
@@ -193,14 +191,12 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     exploded frame, where it is far more expensive.)
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target, F.col(id_col))
+    return df.repartition(target, F.col("doc_id"))
 
 
 def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     nprobe: int = 1,
 ) -> DataFrame:
@@ -242,8 +238,8 @@ def semantic_dedup(
     # exact OOM class the d7 rework removed.  Pairing thin id arrays and
     # joining vectors back puts the cosine in a flat codegen projection
     # and streams the quadratic enumeration instead of materializing it.)
-    cells = add_ivf_cells(df, centroids, vec_col, nprobe=nprobe).select(
-        F.col(id_col).alias("id"),
+    cells = add_ivf_cells(df, centroids, nprobe=nprobe).select(
+        F.col("vec_id").alias("id"),
         F.explode("cells").alias("cell"),
     )
     grouped = (
@@ -275,7 +271,7 @@ def semantic_dedup(
     # norms computed once per candidate doc, not per pair (see
     # embedding_dup_pairs)
     vecs = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
         .join(F.broadcast(cand_ids), "id", "left_semi")
         .withColumn("_n", norm2(F.col("vec")))
         .persist()
@@ -321,7 +317,7 @@ def semantic_dedup(
     )
 
 
-def _word_shingles(df: DataFrame, content_col: str, id_col: str, k: int = 3) -> DataFrame:
+def _word_shingles(df: DataFrame) -> DataFrame:
     """(id, shingle) distinct word-k-gram rows, built with JVM expressions.
 
     transform over a sequence of start positions -> slice -> concat; no UDF.
@@ -335,9 +331,10 @@ def _word_shingles(df: DataFrame, content_col: str, id_col: str, k: int = 3) -> 
     # that's once per shingle position, O(tokens) whole-text splits per
     # document (the r14 split-once lesson; _positioned_shingles already
     # had this form)
-    base = _spread(df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.split(F.trim(F.col(content_col)), r"\s+").alias("_w"),
+    k = SHINGLE_K
+    base = _spread(df).select(
+        F.col("doc_id").alias("id"),
+        F.split(F.trim(F.col("text")), r"\s+").alias("_w"),
     )
     n = F.size("_w")
     starts = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
@@ -351,9 +348,7 @@ def _word_shingles(df: DataFrame, content_col: str, id_col: str, k: int = 3) -> 
     )
 
 
-def _positioned_shingles(
-    df: DataFrame, content_col: str, id_col: str, k: int
-) -> DataFrame:
+def _positioned_shingles(df: DataFrame, k: int) -> DataFrame:
     """(id, pos, shingle) word-k-gram rows WITH start positions (0-based).
 
     Unlike _word_shingles this keeps every occurrence — positions are the
@@ -361,10 +356,10 @@ def _positioned_shingles(
     below shingle width is below any sensible min_span threshold).
     """
     base = (
-        _spread(df, id_col)
+        _spread(df)
         .select(
-            F.col(id_col).alias("id"),
-            F.split(F.trim(F.col(content_col)), r"\s+").alias("_w"),
+            F.col("doc_id").alias("id"),
+            F.split(F.trim(F.col("text")), r"\s+").alias("_w"),
         )
         .filter(F.size("_w") >= k)
     )
@@ -381,8 +376,6 @@ def _positioned_shingles(
 
 def shared_span_pairs(
     df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     min_span_tokens: int = 15,
     max_shingle_freq: int | None = None,
@@ -408,7 +401,7 @@ def shared_span_pairs(
     Returns (id_a, id_b, span_tokens) for pairs sharing a span of at
     least ``min_span_tokens`` tokens.
     """
-    sh = _positioned_shingles(df, content_col, id_col, k)
+    sh = _positioned_shingles(df, k)
     if max_shingle_freq:
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
         sh = sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
@@ -436,9 +429,6 @@ def shared_span_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
@@ -448,7 +438,7 @@ def ngram_jaccard_pairs(
     never meet).  ``max_shingle_freq`` drops ubiquitous shingles before the
     self-join — at scale this is what keeps the join linear-ish.
     """
-    sh = _word_shingles(df, content_col, id_col, k)
+    sh = _word_shingles(df)
     if max_shingle_freq:
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
         sh = sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
@@ -476,9 +466,6 @@ def ngram_jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.9,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
@@ -497,7 +484,7 @@ def containment_pairs(
     reaches ``threshold``, decided on the ROUNDED value so any SQL
     oracle agrees.
     """
-    sh = _word_shingles(df, content_col, id_col, k)
+    sh = _word_shingles(df)
     if max_shingle_freq:
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
         sh = sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
@@ -524,13 +511,7 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signatures.
 
     The shingle string is hashed ONCE (xxhash64) to a 64-bit base value;
@@ -576,7 +557,7 @@ def minhash_signatures(
     naive form — explode 64 seed rows per shingle then groupBy — shuffles
     64x the rows; same pathology the simhash bit-sum fix removed.)
     """
-    sh = _word_shingles(df, content_col, id_col, k).withColumn(
+    sh = _word_shingles(df).withColumn(
         "_h", F.xxhash64(F.col("shingle"))
     )
     # whole signature as ONE parsed aggregate expression — num_hashes
@@ -593,14 +574,7 @@ def minhash_signatures(
     return sh.groupBy("id").agg(F.expr(sig_expr).alias("sig"))
 
 
-def _band_buckets(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
+def _band_buckets(df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) banded-LSH bucket rows for a document frame.
 
     All ``bands`` bucket keys in ONE projection with literal band indices:
@@ -611,7 +585,7 @@ def _band_buckets(
     16-long array instead of the 64-long signature.)
     """
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, content_col, id_col, k, num_hashes)
+    sig = minhash_signatures(df, num_hashes)
     # one parse for the whole bucket array (see minhash_signatures)
     bucket_sqls = []
     for b in range(bands):
@@ -627,11 +601,6 @@ def _band_buckets(
 def write_lsh_index(
     df: DataFrame,
     path: str,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
     mode: str = "overwrite",
 ) -> None:
     """Materialize the (id, band, bucket) LSH index for a corpus — the
@@ -643,20 +612,12 @@ def write_lsh_index(
     Append new batches' buckets with ``mode="append"`` after probing so
     the next batch sees them.
     """
-    _band_buckets(df, content_col, id_col, k, num_hashes, bands).write.mode(
-        mode
-    ).parquet(path)
+    _band_buckets(df, INDEX_HASHES, INDEX_BANDS).write.mode(mode).parquet(path)
 
 
 def minhash_lsh_pairs_incremental(
     new_docs: DataFrame,
     index_path: str,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup CANDIDATES between a new batch and an indexed corpus.
 
@@ -667,19 +628,11 @@ def minhash_lsh_pairs_incremental(
     (left to AQE).  Returns distinct (new_id, corpus_id) pairs; callers
     verify against their corpus text store exactly like the batch
     operator's candidates-only verify phase, then append the new batch's
-    buckets to the index.  ``max_bucket_size`` caps per-(band, bucket)
-    corpus membership against degenerate boilerplate buckets.
+    buckets to the index.
     """
     spark = new_docs.sparkSession
     corpus = spark.read.parquet(index_path)
-    if max_bucket_size:
-        sizes = corpus.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        corpus = corpus.join(
-            sizes.filter(F.col("_n") <= max_bucket_size), ["band", "bucket"]
-        ).drop("_n")
-    nb = _band_buckets(new_docs, content_col, id_col, k, num_hashes, bands)
+    nb = _band_buckets(new_docs, INDEX_HASHES, INDEX_BANDS)
     return (
         corpus.withColumnRenamed("id", "corpus_id")
         .join(nb.withColumnRenamed("id", "new_id"), ["band", "bucket"])
@@ -691,13 +644,9 @@ def minhash_lsh_pairs_incremental(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
     verify_threshold: float | None = 0.5,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH candidate pairs, optionally Jaccard-verified.
 
@@ -708,20 +657,13 @@ def minhash_lsh_pairs(
     whole minhash stage once per join side) and one shuffle of the thin
     (id, band, bucket) frame.  With 64 hashes / 16 bands (rows=4) the
     S-curve crosses ~0.5 Jaccard.
-
-    ``max_bucket_size`` drops degenerate buckets (near-identical boilerplate
-    floods at corpus scale): a bucket of B ids emits B(B-1)/2 candidate
-    pairs, so one pathological bucket can dominate the output; capping
-    mirrors the max_shingle_freq knob and standard LSH practice.
     """
-    buckets = _band_buckets(df, content_col, id_col, k, num_hashes, bands)
+    buckets = _band_buckets(df, num_hashes, bands)
     grouped = (
         buckets.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_set("id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    if max_bucket_size:
-        grouped = grouped.filter(F.size("ids") <= max_bucket_size)
     # ids are sorted, so pairing each element with its successors yields
     # canonical (id_a < id_b) pairs with no post-hoc ordering fixup
     # (single parsed text — the Python-lambda HOF build was ~15 py4j
@@ -766,9 +708,9 @@ def minhash_lsh_pairs(
         .distinct()
     )
     cand_docs = df.join(
-        F.broadcast(cand_ids.withColumnRenamed("id", id_col)), id_col, "left_semi"
+        F.broadcast(cand_ids.withColumnRenamed("id", "doc_id")), "doc_id", "left_semi"
     )
-    sh = _word_shingles(cand_docs, content_col, id_col, k)
+    sh = _word_shingles(cand_docs)
     sets = sh.groupBy("id").agg(
         F.collect_set("shingle").alias("shset"), F.count(F.lit(1)).alias("n_sh")
     ).persist()
@@ -807,17 +749,13 @@ def md5_prefix_hash(c):
 
 def simhash_pairs(
     df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    n_tables: int = 4,
     word_hash=None,
 ) -> DataFrame:
     """64-bit SimHash near-dup pairs via banded bucketing.
 
     SimHash built with JVM expressions: explode words -> word hash ->
     per-bit +/-1 sums -> sign bits reassembled.  Pair generation buckets on
-    each of ``n_tables`` 16-bit slices (a pair within hamming distance 3 of
+    each of 4 16-bit slices (a pair within hamming distance 3 of
     a 64-bit key agrees exactly on at least one of 4 slices — pigeonhole),
     then verifies true hamming distance with bit_count(xor).
 
@@ -829,9 +767,9 @@ def simhash_pairs(
     """
     if word_hash is None:
         word_hash = F.xxhash64
-    words = _spread(df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(content_col)), r"\s+")).alias("w"),
+    words = _spread(df).select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
     ).withColumn("h", word_hash(F.col("w")))
     # 64 conditional-sum aggregates over the words frame: ONE shuffle keyed
     # on id, no per-bit row explosion (the old 64x explode shuffled 64 rows
@@ -855,7 +793,7 @@ def simhash_pairs(
     slices = sim.select(
         "id",
         "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(n_tables - 1))).alias("t"),
+        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("t"),
     ).withColumn(
         # SQL shiftright accepts a column shift amount (the python F.shiftright doesn't)
         "slice",
@@ -885,5 +823,5 @@ def simhash_pairs(
         grouped.select(F.explode(pair_structs).alias("p"))
         .select("p.id_a", "p.id_b", "p.hamming")
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )

@@ -31,7 +31,7 @@ picked by the MEASURED edge count the convergence signature already
 provides (guide §2: derive partitioning from input size, never from the
 box):
 
-- **tight loop** (edge sets below ``VS_CC_TIGHT_MAX_EDGES``, default 5M):
+- **tight loop** (edge sets below ``_TIGHT_MAX_EDGES``, 5M):
   each star is ONE exchange — shuffle by the star's key and take the
   per-partition window min in the same pass — and the loop runs with AQE
   off over a partition count derived from the measured edge count.  An
@@ -63,9 +63,11 @@ from pyspark.sql import functions as F
 
 #: Edge-count boundary between the tight window-star loop and the
 #: AQE/skew-safe join-star loop.  A row-count contract (the signature
-#: aggregate the loop already computes), not a box tune; override via
-#: the environment for scale experiments.
-_TIGHT_MAX_EDGES = int(os.environ.get("VS_CC_TIGHT_MAX_EDGES", 5_000_000))
+#: aggregate the loop already computes), not a box tune.
+_TIGHT_MAX_EDGES = 5_000_000
+
+#: star rounds after which connected_components stops without converging
+_MAX_ROUNDS = 25
 
 #: Partition sizing for the tight loop: enough partitions to keep
 #: per-task row counts bounded, never more than the session's own
@@ -161,7 +163,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
     """Resolve the undirected graph of ``edges`` into components.
@@ -241,7 +242,7 @@ def connected_components(
         e = _cross_session(e, iso, "in")
         spark = iso
     rounds = 0
-    while rounds < max_iter:
+    while rounds < _MAX_ROUNDS:
         rounds += 1
         step = (
             _small_star_w(_large_star_w(e))
@@ -285,7 +286,7 @@ def connected_components(
         stats["edges_fixpoint"] = sig["n"]
         stats["loop"] = "tight" if tight else "join"
     # at fixpoint every edge is (member -> component min); a node can still
-    # carry >1 edge if max_iter cut iteration short — min() keeps the
+    # carry >1 edge if _MAX_ROUNDS cut iteration short — min() keeps the
     # result well-defined either way.
     return out
 
@@ -293,9 +294,6 @@ def connected_components(
 def transitive_dedup(
     docs: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
-    pair_a: str = "id_a",
-    pair_b: str = "id_b",
 ) -> DataFrame:
     """Full-corpus keep/drop list from a near-dup pair set.
 
@@ -305,16 +303,16 @@ def transitive_dedup(
     components ≈ number of duplicated docs, orders of magnitude smaller
     than the corpus.
     """
-    cc = connected_components(pairs, pair_a, pair_b)
+    cc = connected_components(pairs, "id_a", "id_b")
     return (
         docs.join(
-            F.broadcast(cc), docs[id_col] == cc["node"], "left"
+            F.broadcast(cc), docs["doc_id"] == cc["node"], "left"
         )
         .select(
-            docs[id_col],
-            (F.col("component").isNull() | (F.col("component") == docs[id_col]))
+            docs["doc_id"],
+            (F.col("component").isNull() | (F.col("component") == docs["doc_id"]))
             .cast("int")
             .alias("keep"),
-            F.coalesce("component", docs[id_col]).alias("cluster_id"),
+            F.coalesce("component", docs["doc_id"]).alias("cluster_id"),
         )
     )

@@ -94,9 +94,7 @@ def merge_agg_state(
     return merged.groupBy(*keys).agg(*aggs)
 
 
-def distinct_state(
-    df: DataFrame, keys: list[str], value_col: str, lg_k: int = 12
-) -> DataFrame:
+def distinct_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     """Mergeable per-key DISTINCT-count state: a Datasketches HLL sketch
     per key (``hll_<col>`` binary column).
 
@@ -107,10 +105,10 @@ def distinct_state(
     IDEMPOTENT — a replayed delta batch cannot double-count, the
     property that makes the maintenance loop safe under at-least-once
     delivery (where a retried count/sum delta would corrupt i7-style
-    state).  ~2^lg_k bytes per key, ~2% relative error at the default.
+    state).  ~2^12 bytes per key (lg_k 12), ~2% relative error.
     """
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias(f"hll_{value_col}")
+        F.hll_sketch_agg(value_col, F.lit(12)).alias(f"hll_{value_col}")
     )
 
 
@@ -340,7 +338,11 @@ def estimate_hll(state: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def _cms_cells(value_col: str, depth: int):
+#: rows of the count-min sketch; a state and its probes must agree
+CMS_DEPTH = 4
+
+
+def _cms_cells(value_col: str):
     """(j, cell) hash cells for one value: cell_j = first 2 hex chars of
     md5(j ':' value) — 256 buckets per row, engine-portable (md5 is
     bit-identical everywhere; keeping the cell as the HEX STRING itself
@@ -356,37 +358,35 @@ def _cms_cells(value_col: str, depth: int):
                     2,
                 ).alias("cell"),
             )
-            for j in range(depth)
+            for j in range(CMS_DEPTH)
         ]
     )
 
 
-def cms_state(
-    df: DataFrame, keys: list[str], value_col: str, depth: int = 4
-) -> DataFrame:
+def cms_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     """Mergeable per-key FREQUENCY state: a count-min sketch (Cormode &
-    Muthukrishnan 2005) of ``depth`` x 256 counters per key, stored as
+    Muthukrishnan 2005) of ``CMS_DEPTH`` x 256 counters per key, stored as
     (keys..., j, cell, cnt) rows.
 
     Point frequency is the third canonical non-decomposable read (after
     distinct and quantiles): exact per-value counts need |values| state,
-    unbounded.  The CMS bounds state at depth*256 counters per key
+    unbounded.  The CMS bounds state at CMS_DEPTH*256 counters per key
     REGARDLESS of how many distinct values flow through, and its
     counters are LINEAR — state(A) + state(B) = state(A ∪ B) counter by
     counter, exactly — so delta maintenance is integer addition with no
     history rescan, and the merged sketch is bit-identical to the
     sketch of the concatenated raw data (the property the gate
     verifies; estimates are upper bounds with error eps*N at
-    probability 1-(1/2)^depth).
+    probability 1-(1/2)^CMS_DEPTH).
 
-    Plan shape: one ``depth``-wide explode (4x row inflation, collapsed
-    by map-side partial aggregation to <= |keys|*depth*256 rows per
+    Plan shape: one ``CMS_DEPTH``-wide explode (4x row inflation, collapsed
+    by map-side partial aggregation to <= |keys|*CMS_DEPTH*256 rows per
     partition) feeding a single shuffle — NOT the per-permutation
     explode pathology the minhash signature stage avoids, because here
     the post-aggregate width (1024 cells) IS the state being built.
     """
     return (
-        df.select(*keys, F.explode(_cms_cells(value_col, depth)).alias("_c"))
+        df.select(*keys, F.explode(_cms_cells(value_col)).alias("_c"))
         .groupBy(*keys, F.col("_c.j").alias("j"), F.col("_c.cell").alias("cell"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -394,7 +394,7 @@ def cms_state(
 
 def merge_cms_state(states: list[DataFrame], keys: list[str]) -> DataFrame:
     """Element-wise counter addition across state/delta frames: one
-    shuffle of <= |keys|*depth*256 fixed-width rows."""
+    shuffle of <= |keys|*CMS_DEPTH*256 fixed-width rows."""
     merged = states[0]
     for s in states[1:]:
         merged = merged.unionByName(s)
@@ -406,26 +406,24 @@ def estimate_frequency(
     probes: DataFrame,
     keys: list[str],
     value_col: str,
-    depth: int = 4,
-    out_col: str = "est_count",
 ) -> DataFrame:
     """CMS point-frequency read: est(v) = min over rows j of
     counter[j][cell_j(v)], missing cells read 0.
 
-    The probe frame re-derives each value's ``depth`` cells and
+    The probe frame re-derives each value's ``CMS_DEPTH`` cells and
     left-joins the state on (keys, j, cell) — the state side is bounded
-    (|keys|*depth*256 rows) so AQE broadcasts it at any corpus scale;
-    the probe side streams.  min() over exactly ``depth`` rows per
+    (|keys|*CMS_DEPTH*256 rows) so AQE broadcasts it at any corpus scale;
+    the probe side streams.  min() over exactly ``CMS_DEPTH`` rows per
     probe closes the read.
     """
     ex = probes.select(
-        *keys, F.col(value_col), F.explode(_cms_cells(value_col, depth)).alias("_c")
+        *keys, F.col(value_col), F.explode(_cms_cells(value_col)).alias("_c")
     ).select(*keys, value_col, F.col("_c.j").alias("j"), F.col("_c.cell").alias("cell"))
     return (
         ex.join(state, [*keys, "j", "cell"], "left")
         .withColumn("cnt", F.coalesce(F.col("cnt"), F.lit(0)))
         .groupBy(*keys, value_col)
-        .agg(F.min("cnt").cast("bigint").alias(out_col))
+        .agg(F.min("cnt").cast("bigint").alias("est_count"))
     )
 
 

@@ -1794,7 +1794,11 @@ def pack_frames(frames: list[bytes]) -> bytes:
     return b"".join(out)
 
 
-def encode_avi_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 30) -> bytes:
+#: frame rate of every synthesized video container
+VIDEO_FPS = 30
+
+
+def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """JPEG frame payloads -> a real AVI (RIFF) MJPEG container.
 
     Standard public layout: RIFF('AVI ') / LIST('hdrl'){avih,
@@ -1815,12 +1819,12 @@ def encode_avi_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 30
     n = len(frames)
     max_frame = max((len(f) for f in frames), default=0)
     avih = struct.pack(
-        "<10I", 1_000_000 // fps, max_frame * fps, 0, 0x10, n, 0, 1,
+        "<10I", 1_000_000 // VIDEO_FPS, max_frame * VIDEO_FPS, 0, 0x10, n, 0, 1,
         max_frame, width, height,
     ) + b"\x00" * 16
     strh = (
         b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIII", 0, 0, 0, 0, 1, fps, 0, n, max_frame, 0xFFFFFFFF)
+        + struct.pack("<IHHIIIIIII", 0, 0, 0, 0, 1, VIDEO_FPS, 0, n, max_frame, 0xFFFFFFFF)
         + struct.pack("<I", 0) + struct.pack("<4h", 0, 0, width, height)
     )
     strf = struct.pack(
@@ -1866,7 +1870,7 @@ def iter_avi_frames(payload: bytes) -> Iterator[bytes]:
     raise ValueError("no movi LIST in AVI payload")
 
 
-def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 30) -> bytes:
+def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """JPEG frame payloads -> a minimal ISO-BMFF (mp4) container.
 
     Standard public layout (ISO/IEC 14496-12): ``ftyp`` + ``mdat``
@@ -1888,8 +1892,8 @@ def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 30
     mdat = box(b"mdat", b"".join(frames))
     data_off = len(ftyp) + 8  # first sample starts after mdat's header
 
-    timescale = fps
-    dur = n  # 1 tick per frame at `fps` ticks/sec
+    timescale = VIDEO_FPS
+    dur = n  # 1 tick per frame at VIDEO_FPS ticks/sec
     mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, timescale, dur)
                 + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
                 + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -1931,7 +1935,7 @@ def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 30
     return ftyp + mdat + moov
 
 
-def encode_mp4f_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 30) -> bytes:
+def encode_mp4f_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """JPEG frame payloads -> a FRAGMENTED ISO-BMFF container (fMP4, the
     DASH/HLS streaming layout): ``ftyp`` + ``moov`` whose stbl is empty
     and whose ``mvex/trex`` announces fragments, then one
@@ -1948,7 +1952,7 @@ def encode_mp4f_mjpeg(frames: list[bytes], width: int, height: int, fps: int = 3
 
     n = len(frames)
     ftyp = box(b"ftyp", b"iso5" + struct.pack(">I", 0x200) + b"iso5iso6")
-    timescale = fps
+    timescale = VIDEO_FPS
     mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, timescale, 0)
                 + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
                 + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -2377,7 +2381,11 @@ def _gif_color_table(colors) -> bytes:
     return bytes(table)
 
 
-def encode_gif(frames, comment: bytes = b"vunnel-spark synthetic") -> bytes:
+#: the comment extension every encoded GIF carries
+_GIF_COMMENT = b"vunnel-spark synthetic"
+
+
+def encode_gif(frames) -> bytes:
     """Encode frames (equal-size (h, w, 3) uint8 arrays) as animated
     GIF89a: frame 0 uses the global color table, later frames carry
     local tables, odd frames are interlaced — one payload walks every
@@ -2393,8 +2401,7 @@ def encode_gif(frames, comment: bytes = b"vunnel-spark synthetic") -> bytes:
     out += struct.pack("<HHBBB", w, h, 0x80 | (7 << 4) | (gbits - 1), 0, 0)
     out += _gif_color_table(g_colors)
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    if comment:
-        out += b"\x21\xfe" + bytes([len(comment)]) + comment + b"\x00"
+    out += b"\x21\xfe" + bytes([len(_GIF_COMMENT)]) + _GIF_COMMENT + b"\x00"
     for f, img in enumerate(frames):
         if img.shape[:2] != (h, w):
             raise ValueError("all GIF frames must share the logical screen size")
@@ -2638,11 +2645,12 @@ def decode_bmp(payload: bytes):
 
 # -------------------------------------------------------------- synthesis
 
-def _synth_table(docs: DataFrame, id_col: str, meta_fields: str, row_fn,
+def _synth_table(docs: DataFrame, meta_fields: str, row_fn,
                  pixel_col: str | None = None) -> DataFrame:
     """The shell every media synthesizer runs through: one row stage
-    over ``docs`` yielding ``(media_id, payload, meta)`` rows, where
-    ``row_fn(id) -> (payload, meta dict)`` builds one row's bytes and
+    over the ``doc_id`` column of ``docs`` yielding ``(media_id,
+    payload, meta)`` rows, where ``row_fn(id) -> (payload, meta dict)``
+    builds one row's bytes and
     ``meta_fields`` (Spark DDL ``name:type`` pairs) declares its meta
     struct; ``n_bytes`` (the payload length) is appended to every meta.
     ``pixel_col`` (default: the id itself) is the column fed to
@@ -2652,15 +2660,15 @@ def _synth_table(docs: DataFrame, id_col: str, meta_fields: str, row_fn,
         "media_id long, payload binary, "
         f"meta struct<{meta_fields}, n_bytes:bigint>"
     )
-    px = pixel_col or id_col
+    px = pixel_col or "doc_id"
 
     def synth(mid, did):
         payload, meta = row_fn(int(did))
         meta["n_bytes"] = len(payload)
         yield (int(mid), payload, meta)
 
-    cols = [id_col] if px == id_col else [id_col, px]
-    return row_stage(docs.select(*cols), schema, (id_col, px), synth)
+    cols = ["doc_id"] if px == "doc_id" else ["doc_id", px]
+    return row_stage(docs.select(*cols), schema, ("doc_id", px), synth)
 
 
 _IMAGE_META = "format:string, width:int, height:int"
@@ -2681,7 +2689,7 @@ def _gradient_image(did: int):
     return img
 
 
-def _gradient_table(docs, id_col, fmt: str, encode, pixel_col=None):
+def _gradient_table(docs, fmt: str, encode, pixel_col=None):
     """Synthesizer over ``_gradient_image``: ``encode(img, id) -> bytes``."""
 
     def row(did):
@@ -2690,12 +2698,10 @@ def _gradient_table(docs, id_col, fmt: str, encode, pixel_col=None):
             "format": fmt, "width": img.shape[1], "height": img.shape[0],
         }
 
-    return _synth_table(docs, id_col, _IMAGE_META, row, pixel_col)
+    return _synth_table(docs, _IMAGE_META, row, pixel_col)
 
 
-def synthesize_ppm_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_ppm_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-image media table from the documents corpus.
 
     Each doc becomes a PPM whose pixels are closed-form in the doc id:
@@ -2705,11 +2711,11 @@ def synthesize_ppm_media_table(
     downstream statistic is therefore exactly computable in SQL, which is
     what gives m1/m2 true value oracles instead of rows-only checks.
     """
-    return _gradient_table(docs, id_col, "ppm", lambda img, did: encode_ppm(img))
+    return _gradient_table(docs, "ppm", lambda img, did: encode_ppm(img))
 
 
 def synthesize_png_media_table(
-    docs: DataFrame, id_col: str = "doc_id", pixel_col: str | None = None
+    docs: DataFrame, pixel_col: str | None = None
 ) -> DataFrame:
     """Deterministic REAL-PNG media table from the documents corpus.
 
@@ -2725,15 +2731,13 @@ def synthesize_png_media_table(
     duplicate rows (llm2) can give two media_ids byte-identical images.
     """
     return _gradient_table(
-        docs, id_col, "png",
+        docs, "png",
         lambda img, did: encode_png(img, row_filter=lambda y: y % 5),
         pixel_col,
     )
 
 
-def synthesize_palette_png_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_palette_png_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic palette (color type 3) + Adam7-interlaced PNG table.
 
     Same closed-form pixel model as ``synthesize_png_media_table`` (the
@@ -2744,16 +2748,14 @@ def synthesize_palette_png_media_table(
     m7: a value mismatch therefore isolates the palette/Adam7 code.
     """
     return _gradient_table(
-        docs, id_col, "png",
+        docs, "png",
         lambda img, did: encode_png(
             img, row_filter=lambda y: y % 5, palette=True, interlace=True
         ),
     )
 
 
-def synthesize_png16_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_png16_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic 16-bit (depth 16) Adam7-interlaced PNG table.
 
     Pixel model = the m7 gradient scaled by 257 (so samples span the
@@ -2763,7 +2765,7 @@ def synthesize_png16_media_table(
     per-sample filter offsets (bpp=6) across all 7 Adam7 passes.
     """
     return _gradient_table(
-        docs, id_col, "png",
+        docs, "png",
         lambda img, did: encode_png(
             img.astype("uint16") * 257, row_filter=lambda y: y % 5,
             interlace=True,
@@ -2771,9 +2773,7 @@ def synthesize_png16_media_table(
     )
 
 
-def synthesize_rgba_png_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_rgba_png_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic RGBA (color type 6) Adam7-interlaced PNG table.
 
     RGB = the m7 gradient; alpha = its own per-pixel gradient
@@ -2793,10 +2793,10 @@ def synthesize_rgba_png_media_table(
             interlace=True,
         )
 
-    return _gradient_table(docs, id_col, "png", encode)
+    return _gradient_table(docs, "png", encode)
 
 
-def _mjpeg_table(docs, id_col, fmt: str, container, mul: int, step: int):
+def _mjpeg_table(docs, fmt: str, container, mul: int, step: int):
     """Video synthesizer core: each doc becomes ``container(frames, 8,
     8)`` over ``id%6+2`` genuine baseline-JPEG frames, frame f an 8x8
     constant at the EVEN value ``2*((id*mul + step*f) % 128)`` (the
@@ -2814,12 +2814,10 @@ def _mjpeg_table(docs, id_col, fmt: str, container, mul: int, step: int):
         ]
         return container(frames, 8, 8), {"format": fmt, "n_frames": nf}
 
-    return _synth_table(docs, id_col, "format:string, n_frames:int", row)
+    return _synth_table(docs, "format:string, n_frames:int", row)
 
 
-def synthesize_avi_mjpeg_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_avi_mjpeg_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-video table: each doc becomes an AVI (RIFF)
     MJPEG container of ``id%6+2`` genuine baseline-JPEG frames, each one
     8x8 constant at the EVEN value ``2*((id*3 + 17*f) % 128)`` — the
@@ -2827,69 +2825,59 @@ def synthesize_avi_mjpeg_table(
     the video path, so container demux + per-frame entropy decode verify
     by exact value.
     """
-    return _mjpeg_table(docs, id_col, "avi", encode_avi_mjpeg, 3, 17)
+    return _mjpeg_table(docs, "avi", encode_avi_mjpeg, 3, 17)
 
 
-def synthesize_jpeg420_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_jpeg420_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL 4:2:0-JPEG media table: grayscale-valued even
     16x16-constant tiles — tile (r, c) holds ``2*((id*13 + r*7 + c*5) %
     128)``, dims ``(id%2+1) x (id%3+1)`` tiles — which survive chroma
     subsampling + the lossy pipeline bit-exactly (constant chroma
     box-averages to itself)."""
     return _synthesize_block_jpeg_table(
-        docs, id_col, encode_jpeg_rgb420,
+        docs, encode_jpeg_rgb420,
         dims_fn=lambda did: (did % 2 + 1, did % 3 + 1),
         value_fn=lambda did, r, c: 2 * ((did * 13 + r * 7 + c * 5) % 128),
         fmt="jpeg", block_px=16, rgb=True,
     )
 
 
-def synthesize_progressive420_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_progressive420_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic PROGRESSIVE 4:2:0 JPEG media table — the dominant
     real-world web-JPEG layout: grayscale-valued even 16x16-constant
     tiles — tile (r, c) holds ``2*((id*17 + r*9 + c*11) % 128)``, dims
     ``(id%3+1) x (id%2+1)`` tiles — encoded by the 14-scan SOF2 420
     script.  Bit-exact by the same two-step argument as m13 + m15."""
     return _synthesize_block_jpeg_table(
-        docs, id_col, encode_jpeg_rgb420_progressive,
+        docs, encode_jpeg_rgb420_progressive,
         dims_fn=lambda did: (did % 3 + 1, did % 2 + 1),
         value_fn=lambda did, r, c: 2 * ((did * 17 + r * 9 + c * 11) % 128),
         fmt="jpeg-progressive", block_px=16, rgb=True,
     )
 
 
-def synthesize_fmp4_mjpeg_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_fmp4_mjpeg_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL fragmented-mp4 table: like
     ``synthesize_mp4_mjpeg_table`` but fMP4 (moof/traf/trun) packaging —
     ``id%6+2`` exact-roundtrip JPEG frames at ``2*((id*9 + 11*f) % 128)``."""
-    return _mjpeg_table(docs, id_col, "fmp4", encode_mp4f_mjpeg, 9, 11)
+    return _mjpeg_table(docs, "fmp4", encode_mp4f_mjpeg, 9, 11)
 
 
-def synthesize_mp4_mjpeg_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_mp4_mjpeg_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-mp4 table: like ``synthesize_avi_mjpeg_table``
     but packed in ISO-BMFF — ``id%6+2`` exact-roundtrip JPEG frames at
     the EVEN value ``2*((id*5 + 13*f) % 128)`` per frame f."""
-    return _mjpeg_table(docs, id_col, "mp4", encode_mp4_mjpeg, 5, 13)
+    return _mjpeg_table(docs, "mp4", encode_mp4_mjpeg, 5, 13)
 
 
-def synthesize_color_jpeg_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_color_jpeg_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL color-JPEG media table: 3-component YCbCr
     4:4:4 payloads of grayscale-valued (R=G=B) even blocks — block
     (r, c) holds ``2*((id*11 + r*3 + c*7) % 128)`` — which convert to
     Y=value, Cb=Cr=128 exactly and therefore survive the color pipeline
     bit-exactly."""
     return _synthesize_block_jpeg_table(
-        docs, id_col, encode_jpeg_rgb,
+        docs, encode_jpeg_rgb,
         dims_fn=lambda did: (did % 2 + 1, did % 3 + 1),
         value_fn=lambda did, r, c: 2 * ((did * 11 + r * 3 + c * 7) % 128),
         fmt="jpeg", rgb=True,
@@ -2898,7 +2886,6 @@ def synthesize_color_jpeg_media_table(
 
 def _synthesize_block_jpeg_table(
     docs: DataFrame,
-    id_col: str,
     encoder,
     dims_fn,
     value_fn,
@@ -2930,12 +2917,10 @@ def _synthesize_block_jpeg_table(
             "format": fmt, "width": wb * block_px, "height": hb * block_px,
         }
 
-    return _synth_table(docs, id_col, _IMAGE_META, row)
+    return _synth_table(docs, _IMAGE_META, row)
 
 
-def synthesize_jpeg_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_jpeg_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-JPEG media table from the documents corpus:
     baseline-JFIF grayscale, block (r, c) holds ``2*((id*7 + r*5 + c*3)
     % 128)``, dims ``(id%2+1) x (id%3+1)`` blocks — payloads are
@@ -2943,32 +2928,28 @@ def synthesize_jpeg_media_table(
     whose decoded pixels stay closed-form in the id (see
     _synthesize_block_jpeg_table for the exactness argument)."""
     return _synthesize_block_jpeg_table(
-        docs, id_col, encode_jpeg_gray,
+        docs, encode_jpeg_gray,
         dims_fn=lambda did: (did % 2 + 1, did % 3 + 1),
         value_fn=lambda did, r, c: 2 * ((did * 7 + r * 5 + c * 3) % 128),
         fmt="jpeg",
     )
 
 
-def synthesize_progressive_jpeg_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_progressive_jpeg_table(docs: DataFrame) -> DataFrame:
     """Deterministic PROGRESSIVE-JPEG media table: same even-block
     discipline with block value ``2*((id*11 + r*3 + c*7) % 128)`` and
     dims ``(id%3+1) x (id%2+1)`` blocks, encoded with the six-scan SOF2
     script — the payload is genuine multi-scan spectral-selection +
     successive-approximation entropy data."""
     return _synthesize_block_jpeg_table(
-        docs, id_col, encode_jpeg_gray_progressive,
+        docs, encode_jpeg_gray_progressive,
         dims_fn=lambda did: (did % 3 + 1, did % 2 + 1),
         value_fn=lambda did, r, c: 2 * ((did * 11 + r * 3 + c * 7) % 128),
         fmt="jpeg-progressive",
     )
 
 
-def synthesize_video_table(
-    docs: DataFrame, id_col: str = "doc_id", frame_w: int = 4, frame_h: int = 4
-) -> DataFrame:
+def synthesize_video_table(docs: DataFrame) -> DataFrame:
     """Deterministic video table: each doc becomes a VSPK container of
     ``id % 6 + 2`` constant-color PPM frames (frame i's pixel value is
     ``(id + 17*i) mod 256`` on every channel) — every sampled frame's
@@ -2981,13 +2962,13 @@ def synthesize_video_table(
         n = did % 6 + 2
         frames = [
             encode_ppm(
-                np.full((frame_h, frame_w, 3), (did + 17 * i) % 256, dtype=np.uint8)
+                np.full((4, 4, 3), (did + 17 * i) % 256, dtype=np.uint8)
             )
             for i in range(n)
         ]
         return pack_frames(frames), {"n_frames": n}
 
-    return _synth_table(docs, id_col, "n_frames:int", row).select(
+    return _synth_table(docs, "n_frames:int", row).select(
         "media_id", "payload", "meta.n_frames"
     )
 
@@ -3304,7 +3285,7 @@ _FLAC_STEREO_MODES = {
 
 
 def encode_flac_stereo(left, right, sample_rate: int, mode: str = "ms",
-                       method: str = "fixed", lpc_order: int = 8) -> bytes:
+                       method: str = "fixed") -> bytes:
     """int16 stereo -> FLAC bytes with REAL channel decorrelation.
 
     All four spec channel assignments: ``lr`` (independent), ``ls``
@@ -3345,10 +3326,8 @@ def encode_flac_stereo(left, right, sample_rate: int, mode: str = "ms",
     header.append(_crc8(bytes(header)))
     for b in header:
         bw.write(b, 8)
-    _write_flac_subframe(bw, ch0, bits=bits0, method=method,
-                         lpc_order=lpc_order)
-    _write_flac_subframe(bw, ch1, bits=bits1, method=method,
-                         lpc_order=lpc_order)
+    _write_flac_subframe(bw, ch0, bits=bits0, method=method)
+    _write_flac_subframe(bw, ch1, bits=bits1, method=method)
     bw.align()
     frame = bw.bytes()
     frame += struct.pack(">H", _crc16(frame))
@@ -3594,19 +3573,19 @@ def decode_flac(payload: bytes):
     return samples, int(sr)
 
 
-def _sine(n: int, f: int, a: int, sr: int = 8000):
-    """``n`` int16 samples of ``trunc(a * sin(2*pi*f*t / sr))`` — the
+def _sine(n: int, f: int, a: int):
+    """``n`` int16 samples of ``trunc(a * sin(2*pi*f*t / 8000))`` — the
     closed-form tone every audio synthesizer (and its SQL oracle) uses."""
     import numpy as np
 
     t = np.arange(n, dtype=np.float64)
-    return np.trunc(a * np.sin(2.0 * np.pi * f * t / sr)).astype(np.int16)
+    return np.trunc(a * np.sin(2.0 * np.pi * f * t / 8000)).astype(np.int16)
 
 
 _AUDIO_META = "format:string, sample_rate:int, n_samples:int"
 
 
-def synthesize_wav_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_wav_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-audio media table: each doc becomes an honest
     RIFF/WAVE file (stdlib ``wave`` writer — real header, real 16-bit PCM
     mono frames), carrying a sine tone whose every sample is closed-form
@@ -3641,10 +3620,10 @@ def synthesize_wav_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             "format": "wav", "sample_rate": 8000, "n_samples": n,
         }
 
-    return _synth_table(docs, id_col, _AUDIO_META, row)
+    return _synth_table(docs, _AUDIO_META, row)
 
 
-def synthesize_flac_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_flac_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-FLAC media table: the WAV synth discipline
     (closed-form truncated sine per doc id) through the lossless
     compressed codec —
@@ -3667,7 +3646,7 @@ def synthesize_flac_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             "format": "flac", "sample_rate": 8000, "n_samples": n,
         }
 
-    return _synth_table(docs, id_col, _AUDIO_META, row)
+    return _synth_table(docs, _AUDIO_META, row)
 
 
 def audio_features(df: DataFrame) -> DataFrame:
@@ -3710,14 +3689,18 @@ def audio_features(df: DataFrame) -> DataFrame:
     )
 
 
-def audio_windowed_energy(df: DataFrame, window: int = 80) -> DataFrame:
+#: samples per audio_windowed_energy block
+_ENERGY_WINDOW = 80
+
+
+def audio_windowed_energy(df: DataFrame) -> DataFrame:
     """Fixed-window energy track per clip — the audio analogue of video
     frame sampling: decode once, reshape the PCM frames into
-    ``window``-sample blocks (10 ms at 8 kHz for the default), emit one
+    ``_ENERGY_WINDOW``-sample blocks (10 ms at 8 kHz), emit one
     RMS row per complete window (trailing partial windows drop, matching
     the analytic oracle).  Feature tracks like this are the front end of
     audio dedup/quality filtering; shape-wise it is one Arrow hop that
-    explodes each clip into n/window rows — bounded by clip length,
+    explodes each clip into n/_ENERGY_WINDOW rows — bounded by clip length,
     never corpus-wide."""
     import io
     import wave
@@ -3730,10 +3713,10 @@ def audio_windowed_energy(df: DataFrame, window: int = 80) -> DataFrame:
         with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
             raw = w.readframes(w.getnframes())
         samples = np.frombuffer(raw, dtype=np.int16).astype(np.float64)
-        n_win = len(samples) // window
+        n_win = len(samples) // _ENERGY_WINDOW
         if not n_win:
             return []
-        blocks = samples[: n_win * window].reshape(n_win, window)
+        blocks = samples[: n_win * _ENERGY_WINDOW].reshape(n_win, _ENERGY_WINDOW)
         rms = np.sqrt((blocks * blocks).mean(axis=1))
         return [(int(mid), i, round(float(v), 4)) for i, v in enumerate(rms)]
 
@@ -3743,7 +3726,7 @@ def audio_windowed_energy(df: DataFrame, window: int = 80) -> DataFrame:
     )
 
 
-def synthesize_stereo_flac_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_stereo_flac_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL stereo-FLAC media table: two closed-form sine
     channels per doc id through the full stereo codec —
 
@@ -3772,7 +3755,7 @@ def synthesize_stereo_flac_table(docs: DataFrame, id_col: str = "doc_id") -> Dat
             "format": "flac", "sample_rate": 8000, "n_samples": n, "mode": mode,
         }
 
-    return _synth_table(docs, id_col, _AUDIO_META + ", mode:string", row)
+    return _synth_table(docs, _AUDIO_META + ", mode:string", row)
 
 
 def stereo_audio_features(df: DataFrame) -> DataFrame:
@@ -3811,9 +3794,7 @@ def stereo_audio_features(df: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_gif_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_gif_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL animated-GIF table: each doc becomes an
     ``id%4+2``-frame GIF89a whose frame f holds the closed-form pixels
     R[y, x] = (id + 17f + x) % 256, G = (7id + 5f) % 256,
@@ -3838,12 +3819,10 @@ def synthesize_gif_media_table(
             "format": "gif", "width": w, "height": h, "n_frames": nf,
         }
 
-    return _synth_table(docs, id_col, _IMAGE_META + ", n_frames:int", row)
+    return _synth_table(docs, _IMAGE_META + ", n_frames:int", row)
 
 
-def synthesize_bmp_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_bmp_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-BMP media table: the m1/m7 closed-form pixel
     model (R gradient ``(id + x) % 256``, G/B constant in the id, dims
     ``w = id%16+8`` / ``h = id%8+8``), encoded 8-bit-palette for even
@@ -3851,7 +3830,7 @@ def synthesize_bmp_media_table(
     — one corpus covers all four encoder paths against the SAME
     closed-form oracle as m1."""
     return _gradient_table(
-        docs, id_col, "bmp",
+        docs, "bmp",
         lambda img, did: encode_bmp(
             img, palette=(did % 2 == 0), top_down=(did % 3 == 0)
         ),
@@ -4050,16 +4029,14 @@ def decode_tiff(payload: bytes):
     return np.frombuffer(bytes(raster), np.uint8, h * w * 3).reshape(h, w, 3)
 
 
-def synthesize_tiff_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_tiff_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-TIFF media table: the m1 closed-form pixel
     model, written big-endian for odd ids, PackBits-compressed when
     ``id % 3 == 0``, 4-row strips everywhere — one corpus covers both
     byte orders, both baseline compressions, and multi-strip assembly
     against the SAME closed-form oracle as m1."""
     return _gradient_table(
-        docs, id_col, "tiff",
+        docs, "tiff",
         lambda img, did: encode_tiff(
             img, big_endian=(did % 2 == 1), packbits=(did % 3 == 0)
         ),
@@ -4153,15 +4130,13 @@ def decode_ico(payload: bytes):
     return images
 
 
-def synthesize_ico_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_ico_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-ICO media table: the m1 closed-form pixel
     model, one image per icon, embedded as PNG for even ids and as a
     doubled-height DIB for odd ids — one corpus covers directory
     parsing and both entry payload styles against the m1 oracle."""
     return _gradient_table(
-        docs, id_col, "ico",
+        docs, "ico",
         lambda img, did: encode_ico([img], png_entry=lambda i: did % 2 == 0),
     )
 
@@ -4194,14 +4169,13 @@ _WEBM_SEGMENT = b"\x18\x53\x80\x67"
 _VP8_SYNC = b"\x9d\x01\x2a"
 
 
-def _ebml_size_encode(v: int, n: int | None = None) -> bytes:
+def _ebml_size_encode(v: int) -> bytes:
     """EBML variable-length size: n-byte big-endian with a marker bit at
     position (8 - n) of the first byte.  All-ones is 'unknown size' and
     is never emitted here, hence the -1 in the capacity check."""
-    if n is None:
-        n = 1
-        while v >= (1 << (7 * n)) - 1:
-            n += 1
+    n = 1
+    while v >= (1 << (7 * n)) - 1:
+        n += 1
     out = bytearray(n)
     out[0] = (1 << (8 - n)) | (v >> (8 * (n - 1)))
     for i in range(1, n):
@@ -4285,14 +4259,12 @@ def encode_vp8_frame(
     return bytes(out)
 
 
-def encode_webm_vp8(
-    frames: list[bytes],
-    width: int,
-    height: int,
-    frames_per_cluster: int = 4,
-    cluster_ms: int = 1000,
-    frame_ms: int = 40,
-) -> bytes:
+#: WebM clustering: frames per Cluster, the Cluster timestamp step and
+#: the frame step inside a Cluster (ms)
+_WEBM_CLUSTER_FRAMES, _WEBM_CLUSTER_MS, _WEBM_FRAME_MS = 4, 1000, 40
+
+
+def encode_webm_vp8(frames: list[bytes], width: int, height: int) -> bytes:
     """VP8 frame payloads -> a real WebM (Matroska) file: EBML header
     (DocType webm), Segment{Info{TimestampScale}, Tracks{TrackEntry:
     video, V_VP8, PixelWidth/Height}, Cluster*{Timestamp,
@@ -4331,14 +4303,14 @@ def encode_webm_vp8(
     )
     tracks = _ebml_el(b"\x16\x54\xae\x6b", track)
     clusters = b""
-    for c0 in range(0, len(frames), frames_per_cluster):
-        cluster_ts = (c0 // frames_per_cluster) * cluster_ms
+    for c0 in range(0, len(frames), _WEBM_CLUSTER_FRAMES):
+        cluster_ts = (c0 // _WEBM_CLUSTER_FRAMES) * _WEBM_CLUSTER_MS
         body = _ebml_el(b"\xe7", _ebml_uint(cluster_ts))
-        for j, frame in enumerate(frames[c0 : c0 + frames_per_cluster]):
+        for j, frame in enumerate(frames[c0 : c0 + _WEBM_CLUSTER_FRAMES]):
             kf = (frame[0] & 1) == 0
             blk = (
                 _ebml_size_encode(1)                  # track number varint
-                + struct.pack(">h", j * frame_ms)     # relative timestamp
+                + struct.pack(">h", j * _WEBM_FRAME_MS)  # relative timestamp
                 + bytes((0x80 if kf else 0x00,))      # flags: keyframe
                 + frame
             )
@@ -4422,9 +4394,7 @@ def probe_webm_vp8(payload: bytes) -> dict:
     return out
 
 
-def synthesize_webm_media_table(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_webm_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-WebM media table: doc_id%6+2 VP8 frames per
     file (keyframe every 3rd), closed-form dimensions and partition
     sizes, 4 frames per cluster — covers multi-cluster walks, keyframe
@@ -4446,7 +4416,7 @@ def synthesize_webm_media_table(
             "format": "webm", "width": w, "height": h,
         }
 
-    return _synth_table(docs, id_col, _IMAGE_META, row)
+    return _synth_table(docs, _IMAGE_META, row)
 
 
 def webm_frame_index(df: DataFrame) -> DataFrame:

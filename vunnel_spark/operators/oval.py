@@ -44,7 +44,7 @@ def _walk(node: dict, ns_test: str | None, out: list, is_ns) -> None:
         _walk(child, ns_test, out, is_ns)
 
 
-def flatten_criteria_json(doc_id: str, criteria_json: str, ns_prefix: str = "ns:") -> list[tuple]:
+def flatten_criteria_json(doc_id: str, criteria_json: str) -> list[tuple]:
     """Pure-python core (unit-testable without Spark)."""
     try:
         tree = json.loads(criteria_json) if criteria_json else None
@@ -53,7 +53,7 @@ def flatten_criteria_json(doc_id: str, criteria_json: str, ns_prefix: str = "ns:
     if not tree:
         return []
     out: list = []
-    _walk(tree, None, out, lambda ref: ref.startswith(ns_prefix))
+    _walk(tree, None, out, lambda ref: ref.startswith("ns:"))
     return [(doc_id, ns, pkg, pol) for ns, pkg, pol in out]
 
 
@@ -62,7 +62,7 @@ CRITERIA_CTX_ROWS_SCHEMA = (
     "module string, arch string"
 )
 
-_DEFAULT_PATTERNS = {
+_PATTERNS = {
     # match the reference's Oracle config shapes (providers/oracle/parser_factory
     # wiring into oval_parser.py Config): comment-text classification
     "pkg": r"^(\S+)\s+is earlier than\s+(\S+)$",
@@ -73,7 +73,7 @@ _DEFAULT_PATTERNS = {
 
 
 def _collect_affected(
-    node: dict, patterns: dict, arch: str | None = None, module: str | None = None
+    node: dict, arch: str | None = None, module: str | None = None
 ) -> tuple:
     """Context-inheriting walk of one criteria group (SURVEY E4).
 
@@ -92,26 +92,26 @@ def _collect_affected(
     versions: list = []
     for crit in node.get("criterions", []) or []:
         comment = crit.get("comment") or ""
-        m = _re.search(patterns["pkg"], comment)
+        m = _re.search(_PATTERNS["pkg"], comment)
         if m:
             versions.append((m.group(1), m.group(2)))
             continue
-        m = _re.search(patterns["ns"], comment)
+        m = _re.search(_PATTERNS["ns"], comment)
         if m:
             ns_name = m.group(1)
             continue
-        m = _re.search(patterns["module"], comment)
+        m = _re.search(_PATTERNS["module"], comment)
         if m:
             local_module = m.group(1)
             continue
-        m = _re.search(patterns["arch"], comment)
+        m = _re.search(_PATTERNS["arch"], comment)
         if m:
             local_arch = m.group(1)
 
     affected = [(pkg, ver, local_module, local_arch) for pkg, ver in versions]
     for child in node.get("children", []) or []:
         child_ns, child_affected = _collect_affected(
-            child, patterns, local_arch, local_module
+            child, local_arch, local_module
         )
         if child_ns:
             ns_name = child_ns
@@ -119,9 +119,7 @@ def _collect_affected(
     return ns_name, affected
 
 
-def collect_affected_json(
-    doc_id: str, criteria_json: str, patterns: dict | None = None
-) -> list[tuple]:
+def collect_affected_json(doc_id: str, criteria_json: str) -> list[tuple]:
     """Pure-python E4 core: criteria tree -> (doc, ns, pkg, ver, module, arch).
 
     Like the reference (oval_parser.py:209-231), an outermost OR splits
@@ -129,7 +127,6 @@ def collect_affected_json(
     is itself the single group.  Rows from a group with no namespace or no
     packages are dropped (reference logs-and-skips the same way).
     """
-    patterns = patterns or _DEFAULT_PATTERNS
     try:
         tree = json.loads(criteria_json) if criteria_json else None
     except (ValueError, TypeError):
@@ -142,7 +139,7 @@ def collect_affected_json(
         groups = [tree]
     out: list = []
     for group in groups:
-        ns_name, affected = _collect_affected(group, patterns)
+        ns_name, affected = _collect_affected(group)
         if not ns_name or not affected:
             continue
         # set-dedup like the reference's ns_pkgs_dict set union
@@ -151,34 +148,27 @@ def collect_affected_json(
     return out
 
 
-def flatten_criteria_ctx(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    criteria_col: str = "criteria",
-    patterns: dict | None = None,
-) -> DataFrame:
+def flatten_criteria_ctx(df: DataFrame) -> DataFrame:
     """(id, criteria_json) -> (doc_id, namespace, package, version, module,
     arch) rows with module/arch inherited down branches (E4)."""
 
     def affected(did, cj):
-        return collect_affected_json(str(did), cj, patterns)
+        return collect_affected_json(str(did), cj)
 
     return row_stage(
-        df.select(id_col, criteria_col), CRITERIA_CTX_ROWS_SCHEMA,
-        (id_col, criteria_col), affected,
+        df.select("doc_id", "criteria"), CRITERIA_CTX_ROWS_SCHEMA,
+        ("doc_id", "criteria"), affected,
     )
 
 
-def flatten_criteria(
-    df: DataFrame, id_col: str = "doc_id", criteria_col: str = "criteria", ns_prefix: str = "ns:"
-) -> DataFrame:
+def flatten_criteria(df: DataFrame) -> DataFrame:
     """(id, criteria_json) -> exploded (doc_id, namespace_test,
     package_test, polarity) rows."""
 
     def pairs(did, cj):
-        return flatten_criteria_json(str(did), cj, ns_prefix)
+        return flatten_criteria_json(str(did), cj)
 
     return row_stage(
-        df.select(id_col, criteria_col), CRITERIA_ROWS_SCHEMA,
-        (id_col, criteria_col), pairs,
+        df.select("doc_id", "criteria"), CRITERIA_ROWS_SCHEMA,
+        ("doc_id", "criteria"), pairs,
     )

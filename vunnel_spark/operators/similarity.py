@@ -13,6 +13,8 @@ Two paths:
 
 Hyperplanes are derived deterministically from xxhash64(table, bit, dim) —
 no RNG state to ship, any executor can regenerate them.
+
+Every operator reads ``vec_id`` and a 64-dim ``embedding`` column.
 """
 
 from __future__ import annotations
@@ -22,13 +24,16 @@ from pyspark.sql import functions as F
 
 from vunnel_spark.functions.vectors import cosine_hoisted, norm2
 
+#: seed and iteration cap of the k-means fits behind IVF and PQ training
+KMEANS_SEED, KMEANS_MAX_ITER = 7, 20
+#: half-width of the hash-derived fixed centroids and PQ codewords
+_FIXED_SCALE = 0.15
+
 
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries x corpus, window-ranked.
 
@@ -39,10 +44,10 @@ def brute_force_topk(
     cosine (see functions/vectors.cosine_hoisted).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     ).withColumn("_qn", norm2(F.col("_qv")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     ).withColumn("_cn", norm2(F.col("_cv")))
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -70,9 +75,6 @@ def hard_negatives(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: per
     query, the top-k most-similar corpus items with a DIFFERENT label —
@@ -91,14 +93,14 @@ def hard_negatives(
     cos_sim, rank), rank 1..k by similarity desc, neighbor id tie-break.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("query_label"),
+        F.col("embedding").alias("_qv"),
     ).withColumn("_qn", norm2(F.col("_qv")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
+        F.col("embedding").alias("_cv"),
     ).withColumn("_cn", norm2(F.col("_cv")))
     scored = (
         c.join(
@@ -170,11 +172,8 @@ def scaled_ivf_nlist(n_vectors: int, target_cell: int = 375) -> int:
 
 def add_lsh_buckets(
     df: DataFrame,
-    vec_col: str = "embedding",
     n_tables: int = 4,
     n_bits: int = 8,
-    dim: int = 64,
-    out_col: str = "buckets",
 ) -> DataFrame:
     """Project sign-bit LSH bucket keys: array of n_tables bucket ids.
 
@@ -201,10 +200,10 @@ def add_lsh_buckets(
         bits = []
         for b in range(n_bits):
             plane = ", ".join(
-                f"CAST('{_plane_value(t, b, i)!r}' AS DOUBLE)" for i in range(dim)
+                f"CAST('{_plane_value(t, b, i)!r}' AS DOUBLE)" for i in range(64)
             )
             d = (
-                f"aggregate(zip_with(`{vec_col}`, array({plane}), "
+                f"aggregate(zip_with(`embedding`, array({plane}), "
                 f"(x, p) -> CAST(x AS DOUBLE) * p), 0.0D, (acc, v) -> acc + v)"
             )
             bits.append(f"(CASE WHEN {d} >= 0 THEN {1 << b} ELSE 0 END)")
@@ -215,16 +214,14 @@ def add_lsh_buckets(
     # construction profile: the single-text form is 3-4x cheaper to
     # construct and yields the byte-identical tree)
     return df.withColumn(
-        out_col,
+        "buckets",
         F.expr(
             "array(" + ", ".join(bucket_sql(t) for t in range(n_tables)) + ")"
         ),
     )
 
 
-def fixed_centroids(
-    nlist: int = 8, dim: int = 64, scale: float = 0.15
-) -> list[list[float]]:
+def fixed_centroids(nlist: int = 8, dim: int = 64) -> list[list[float]]:
     """Deterministic sha256-derived coarse centroids (no training pass).
 
     Same derivation discipline as the LSH hyperplanes: any process —
@@ -232,8 +229,9 @@ def fixed_centroids(
     so IVF cell assignment becomes engine-portable.  Used where a
     data-trained quantizer would make external verification impossible
     (the n4 gate query); the trained path (``train_ivf_centroids``) is
-    verified by n5's planted-pair oracle and the recall tests.  ``scale``
-    places the Voronoi sites inside the embedding cloud's radius.
+    verified by n5's planted-pair oracle and the recall tests.
+    ``_FIXED_SCALE`` places the Voronoi sites inside the embedding
+    cloud's radius.
     """
     import hashlib
 
@@ -242,7 +240,7 @@ def fixed_centroids(
         row = []
         for i in range(dim):
             h = hashlib.sha256(f"ivf:{j}:{i}".encode()).digest()
-            row.append((int.from_bytes(h[:8], "big") / float(2**63) - 1.0) * scale)
+            row.append((int.from_bytes(h[:8], "big") / float(2**63) - 1.0) * _FIXED_SCALE)
         out.append(row)
     return out
 
@@ -250,11 +248,6 @@ def fixed_centroids(
 def train_ivf_centroids(
     corpus: DataFrame,
     nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_mod: int = 1,
-    seed: int = 7,
-    max_iter: int = 20,
 ) -> list[list[float]]:
     """Train an IVF coarse quantizer: k-means centroids over the corpus.
 
@@ -263,27 +256,22 @@ def train_ivf_centroids(
     literals exactly like the LSH hyperplanes: executors evaluate constant
     expressions, nothing is regenerated or broadcast per row.
 
-    At 100 TB the quantizer trains on a deterministic hash sample
-    (``sample_mod`` keeps ~1/sample_mod of rows): k-means needs only
-    ~100x nlist points to place cells, while full-corpus assignment stays
-    a Catalyst expression scan.  MLlib's k-means|| runs distributed, so
-    even the training pass never collects vectors to the driver — only
-    the fitted centroids come back.
+    Full-corpus assignment stays a Catalyst expression scan.  MLlib's
+    k-means|| runs distributed, so even the training pass never collects
+    vectors to the driver — only the fitted centroids come back.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     df = corpus
-    if sample_mod > 1:
-        df = df.filter(F.pmod(F.xxhash64(F.col(id_col)), sample_mod) == 0)
     feat = df.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=nlist, seed=seed, maxIter=max_iter).fit(feat)
+    model = KMeans(k=nlist, seed=KMEANS_SEED, maxIter=KMEANS_MAX_ITER).fit(feat)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
-def ranked_cells(vec_col: str, centroids: list[list[float]]):
+def ranked_cells(centroids: list[list[float]]):
     """array<struct<d2,cell>> sorted by (squared L2 distance, cell id) —
     THE quantizer-assignment expression, shared by IVF cell assignment
     here and k-means clustering (operators/clustering.py).  One
@@ -300,7 +288,7 @@ def ranked_cells(vec_col: str, centroids: list[list[float]]):
         # ranked array is ONE expr() parse, not one per cell
         cent = ", ".join(f"CAST('{float(p)!r}' AS DOUBLE)" for p in c)
         d2 = (
-            f"aggregate(zip_with(`{vec_col}`, array({cent}), "
+            f"aggregate(zip_with(`embedding`, array({cent}), "
             f"(x, p) -> (CAST(x AS DOUBLE) - p) * (CAST(x AS DOUBLE) - p)), "
             f"0.0D, (acc, v) -> acc + v)"
         )
@@ -311,18 +299,16 @@ def ranked_cells(vec_col: str, centroids: list[list[float]]):
 def add_ivf_cells(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     nprobe: int = 1,
-    out_col: str = "cells",
 ) -> DataFrame:
     """Assign each vector its ``nprobe`` nearest coarse cells (squared L2).
 
     Zero Python at runtime (see ranked_cells), so cell assignment
     pipelines into the same whole-stage-codegen span as the parquet scan.
     """
-    ranked = F.slice(ranked_cells(vec_col, centroids), 1, nprobe)
+    ranked = F.slice(ranked_cells(centroids), 1, nprobe)
     return df.withColumn(
-        out_col, F.transform(ranked, lambda s: s.getField("cell"))
+        "cells", F.transform(ranked, lambda s: s.getField("cell"))
     )
 
 
@@ -332,8 +318,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors live in their single nearest cell,
     queries probe their ``nprobe`` nearest cells and score only those
@@ -349,22 +333,22 @@ def ivf_topk(
     (SCALECURVE.md: n5 at fixed nlist=8 ran 24x on 10x data; nlist=64
     cut the sf1 time 2.2x with recall preserved).
     """
-    cb = add_ivf_cells(corpus, centroids, vec_col, nprobe=1).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
+    cb = add_ivf_cells(corpus, centroids, nprobe=1).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
         F.element_at("cells", 1).alias("cell"),
-        norm2(F.col(vec_col)).alias("_cn"),
+        norm2(F.col("embedding")).alias("_cn"),
     )
     # norm BEFORE the explode: a fold in the same select as a generator
     # lands in the Project ABOVE Generate and re-evaluates per exploded
     # row (nprobe x) — withColumn keeps it below, once per document
     # (n6 after-profile regression, plans/r14)
     qb = (
-        add_ivf_cells(queries, centroids, vec_col, nprobe=nprobe)
-        .withColumn("_qn", norm2(F.col(vec_col)))
+        add_ivf_cells(queries, centroids, nprobe=nprobe)
+        .withColumn("_qn", norm2(F.col("embedding")))
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("_qv"),
             F.explode("cells").alias("cell"),
             "_qn",
         )
@@ -390,18 +374,15 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_tables: int = 4,
     n_bits: int = 8,
-    dim: int = 64,
 ) -> DataFrame:
     """ANN top-k searching only LSH-bucket collisions.
 
     Recall < 1.0 by construction; rank/tie rules match brute_force_topk so
     the two are directly comparable in tests (recall measurement).
 
-    ID CONTRACT (r14 ADVICE): ``id_col`` must be unique within corpus
+    ID CONTRACT (r14 ADVICE): ``vec_id`` must be unique within corpus
     and within queries.  The thin-pair dedup below collapses candidate
     pairs to distinct (query_id, neighbor_id) and joins vectors back by
     id — duplicate ids would fan each deduped pair back out per
@@ -425,12 +406,12 @@ def lsh_topk(
     # per DISTINCT candidate pair instead; the cosine inputs are the
     # identical per-side norm2/vector columns, so scores and ranks are
     # unchanged.
-    cb = add_lsh_buckets(corpus, vec_col, n_tables, n_bits, dim).select(
-        F.col(id_col).alias("neighbor_id"),
+    cb = add_lsh_buckets(corpus, n_tables, n_bits).select(
+        F.col("vec_id").alias("neighbor_id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
-    qb = add_lsh_buckets(queries, vec_col, n_tables, n_bits, dim).select(
-        F.col(id_col).alias("query_id"),
+    qb = add_lsh_buckets(queries, n_tables, n_bits).select(
+        F.col("vec_id").alias("query_id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
     cand = (
@@ -440,14 +421,14 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        norm2(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
+        norm2(F.col("embedding")).alias("_cn"),
     )
     qvec = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm2(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qv"),
+        norm2(F.col("embedding")).alias("_qn"),
     )
     scored = (
         cand.join(cvec, "neighbor_id")
@@ -477,7 +458,7 @@ def lsh_topk(
 # here because each is a plain column (cell id, code array).
 
 def fixed_pq_codebooks(
-    m: int = 8, ks: int = 16, dim: int = 64, scale: float = 0.15
+    m: int = 8, ks: int = 16, dim: int = 64
 ) -> list[list[list[float]]]:
     """Deterministic sha256-derived PQ codebooks: ``m`` subspaces of
     ``dim//m`` dims, ``ks`` codewords each.
@@ -496,7 +477,7 @@ def fixed_pq_codebooks(
             row = []
             for i in range(sub):
                 h = hashlib.sha256(f"pq:{j}:{c}:{i}".encode()).digest()
-                row.append((int.from_bytes(h[:8], "big") / float(2**63) - 1.0) * scale)
+                row.append((int.from_bytes(h[:8], "big") / float(2**63) - 1.0) * _FIXED_SCALE)
             book.append(row)
         books.append(book)
     return books
@@ -507,11 +488,6 @@ def train_pq_codebooks(
     m: int = 8,
     ks: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_mod: int = 1,
-    seed: int = 7,
-    max_iter: int = 20,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: one distributed k-means per subspace slice.
 
@@ -525,8 +501,6 @@ def train_pq_codebooks(
     from pyspark.ml.functions import array_to_vector
 
     df = corpus
-    if sample_mod > 1:
-        df = df.filter(F.pmod(F.xxhash64(F.col(id_col)), sample_mod) == 0)
     sub = dim // m
 
     # Persist the sampled training frame ONCE across the m subspace
@@ -539,7 +513,7 @@ def train_pq_codebooks(
     # changes no trained model (same rows, same per-j seeds) and is
     # released in the ``finally`` so multi-query sessions don't
     # accumulate blocks (r14 ADVICE).
-    df = df.select(F.col(vec_col).cast("array<double>").alias("_v")).persist()
+    df = df.select(F.col("embedding").cast("array<double>").alias("_v")).persist()
 
     def _fit(j: int) -> list[list[float]]:
         feat = df.select(
@@ -547,7 +521,7 @@ def train_pq_codebooks(
                 "features"
             )
         )
-        model = KMeans(k=ks, seed=seed + j, maxIter=max_iter).fit(feat)
+        model = KMeans(k=ks, seed=KMEANS_SEED + j, maxIter=KMEANS_MAX_ITER).fit(feat)
         return [[float(x) for x in c] for c in model.clusterCenters()]
 
     # The m per-subspace fits are independent jobs with per-j seeds —
@@ -569,8 +543,6 @@ def train_pq_codebooks(
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "code",
 ) -> DataFrame:
     """Assign each vector its per-subspace nearest-codeword indices.
 
@@ -595,7 +567,7 @@ def pq_encode(
             # construction profile, 3-4x cheaper single-text).
             cwl = ", ".join(f"CAST('{float(p)!r}' AS DOUBLE)" for p in cw)
             d2 = (
-                f"aggregate(zip_with(slice(`{vec_col}`, {j * sub + 1}, {sub}), "
+                f"aggregate(zip_with(slice(`embedding`, {j * sub + 1}, {sub}), "
                 f"array({cwl}), "
                 f"(x, p) -> (CAST(x AS DOUBLE) - p) * (CAST(x AS DOUBLE) - p)), "
                 f"0.0D, (acc, v) -> acc + v)"
@@ -605,7 +577,7 @@ def pq_encode(
             f"element_at(array_sort(array({', '.join(dists)})), 1).c"
         )
     return df.withColumn(
-        out_col,
+        "code",
         F.expr(f"CAST(array({', '.join(codes)}) AS array<int>)"),
     )
 
@@ -613,9 +585,6 @@ def pq_encode(
 def _with_adc_distance(
     df: DataFrame,
     codebooks: list[list[list[float]]],
-    qv_col: str = "_qv",
-    code_col: str = "code",
-    out_col: str = "adc_dist",
 ) -> DataFrame:
     """Add the asymmetric (query-exact vs corpus-code) squared L2,
     rounded to 6 places: a strict left-to-right chain of per-subspace
@@ -641,7 +610,7 @@ def _with_adc_distance(
         )
         cw_cols[f"_cw{j}"] = F.expr(
             f"element_at(array({book_sql}), "
-            f"element_at(`{code_col}`, {j + 1}) + 1)"
+            f"element_at(`code`, {j + 1}) + 1)"
         )
         tmp.append(f"_cw{j}")
     # one withColumns: m separate withColumn calls re-analyzed the
@@ -650,15 +619,15 @@ def _with_adc_distance(
     parts = []
     for j in range(m):
         terms = " + ".join(
-            f"((CAST(try_element_at(`{qv_col}`, {j * sub + i + 1}) AS DOUBLE)"
+            f"((CAST(try_element_at(`_qv`, {j * sub + i + 1}) AS DOUBLE)"
             f" - try_element_at(`_cw{j}`, {i + 1}))"
-            f" * (CAST(try_element_at(`{qv_col}`, {j * sub + i + 1}) AS DOUBLE)"
+            f" * (CAST(try_element_at(`_qv`, {j * sub + i + 1}) AS DOUBLE)"
             f" - try_element_at(`_cw{j}`, {i + 1})))"
             for i in range(sub)
         )
         parts.append(f"(0.0D + {terms})")
     return df.withColumn(
-        out_col, F.round(F.expr(" + ".join(parts)), 6)
+        "adc_dist", F.round(F.expr(" + ".join(parts)), 6)
     ).drop(*tmp)
 
 
@@ -667,8 +636,6 @@ def pq_adc_topk(
     queries: DataFrame,
     codebooks: list[list[list[float]]],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rerank: int = 0,
 ) -> DataFrame:
     """PQ ANN top-k by asymmetric distance computation.
@@ -685,10 +652,10 @@ def pq_adc_topk(
     rounded ADC; with rerank, (query_id, neighbor_id, cos_sim, rank)
     ranked like brute_force_topk for direct recall comparison.
     """
-    codes = pq_encode(corpus, codebooks, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "code"
+    codes = pq_encode(corpus, codebooks).select(
+        F.col("vec_id").alias("neighbor_id"), "code"
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
     scored = _with_adc_distance(
         codes.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")),
         codebooks,
@@ -701,7 +668,7 @@ def pq_adc_topk(
     if not rerank:
         return shortlist.drop("_qv")
     exact = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     ).withColumn("_cn", norm2(F.col("_cv")))
     wr = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
@@ -732,8 +699,6 @@ def ivf_pq_topk(
     codebooks: list[list[list[float]]],
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF+PQ composed ANN (the FAISS IVFPQ layout, the de facto shape
     for web-scale vector stores): the coarse quantizer prunes WHICH
@@ -748,15 +713,15 @@ def ivf_pq_topk(
     ADC against broadcast query vectors, rank/tie rules as pq_adc_topk.
     """
     cb = pq_encode(
-        add_ivf_cells(corpus, centroids, vec_col, nprobe=1), codebooks, vec_col
+        add_ivf_cells(corpus, centroids, nprobe=1), codebooks
     ).select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.element_at("cells", 1).alias("cell"),
         "code",
     )
-    qb = add_ivf_cells(queries, centroids, vec_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
+    qb = add_ivf_cells(queries, centroids, nprobe=nprobe).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qv"),
         F.explode("cells").alias("cell"),
     )
     scored = _with_adc_distance(

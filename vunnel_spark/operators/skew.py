@@ -36,12 +36,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def add_salt(
-    df: DataFrame, salt_src: str | Column, num_buckets: int, salt_col: str = "_salt"
-) -> DataFrame:
+def add_salt(df: DataFrame, salt_src: str | Column, num_buckets: int) -> DataFrame:
     """Deterministic per-row salt in [0, num_buckets)."""
     src = F.col(salt_src) if isinstance(salt_src, str) else salt_src
-    return df.withColumn(salt_col, F.pmod(F.xxhash64(src), F.lit(num_buckets)))
+    return df.withColumn("_salt", F.pmod(F.xxhash64(src), F.lit(num_buckets)))
 
 
 def salted_agg(
@@ -49,27 +47,20 @@ def salted_agg(
     keys: list[str],
     salt_src: str,
     num_buckets: int = 8,
-    count_col: str | None = "n_rows",
     sum_cols: tuple[str, ...] = (),
-    min_cols: tuple[str, ...] = (),
     max_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Two-phase salted aggregation; output == plain groupBy(keys).
 
-    Output columns: ``count_col`` plus ``sum_<c>``/``min_<c>``/``max_<c>``
+    Output columns: ``n_rows`` plus ``sum_<c>``/``max_<c>``
     for each requested column.
     """
     salted = add_salt(df, salt_src, num_buckets)
-    partials, finals = [], []
-    if count_col:
-        partials.append(F.count(F.lit(1)).alias("_pc"))
-        finals.append(F.sum("_pc").alias(count_col))
+    partials = [F.count(F.lit(1)).alias("_pc")]
+    finals = [F.sum("_pc").alias("n_rows")]
     for c in sum_cols:
         partials.append(F.sum(c).alias(f"_ps_{c}"))
         finals.append(F.sum(f"_ps_{c}").alias(f"sum_{c}"))
-    for c in min_cols:
-        partials.append(F.min(c).alias(f"_pn_{c}"))
-        finals.append(F.min(f"_pn_{c}").alias(f"min_{c}"))
     for c in max_cols:
         partials.append(F.max(c).alias(f"_px_{c}"))
         finals.append(F.max(f"_px_{c}").alias(f"max_{c}"))

@@ -17,7 +17,6 @@ def priority_pick(
     df: DataFrame,
     partition_by: Sequence[str],
     order_by: Sequence[Column],
-    keep: str = "_rank",
 ) -> DataFrame:
     """Keep the single best row per key under an explicit priority ordering.
 
@@ -28,9 +27,9 @@ def priority_pick(
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return (
-        df.withColumn(keep, F.row_number().over(w))
-        .filter(F.col(keep) == 1)
-        .drop(keep)
+        df.withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") == 1)
+        .drop("_rank")
     )
 
 
@@ -68,16 +67,14 @@ def fill_down_global(
     df: DataFrame,
     cols: Sequence[str],
     order_col: str,
-    bucket: Column | None = None,
     bucket_size: int = 1000,
 ) -> DataFrame:
     """Exact GLOBAL fill-down without a global window: the distributed
     two-level carry (the x11/o3 prefix-sum discipline applied to
     last-non-null instead of sum).
 
-    Phase 1 fills within order-aligned buckets (default: ranges of the
-    numeric ``order_col``; pass ``bucket`` for a custom order-aligned
-    bucketing expression — bucket(a) < bucket(b) must imply a <= b).
+    Phase 1 fills within order-aligned buckets: ranges of
+    ``bucket_size`` values of the numeric ``order_col``.
     Phase 2 reduces each bucket to its LAST non-null value per column
     (one row per bucket), fills THAT down across the tiny bucket frame
     (the only unpartitioned window, #buckets rows), and broadcasts the
@@ -101,8 +98,7 @@ def fill_down_global(
     value the naive window could legally return, this picks one of them
     deterministically.
     """
-    if bucket is None:
-        bucket = F.expr(f"{order_col} div {bucket_size}")
+    bucket = F.expr(f"{order_col} div {bucket_size}")
     out = df.withColumn("_fd_bucket", bucket)
     w_local = (
         Window.partitionBy("_fd_bucket")
@@ -155,12 +151,11 @@ def top_k_per_group(
     partition_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Classic top-k per group (W5/O4) — row_number <= k."""
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
+    return df.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 

@@ -140,8 +140,7 @@ def fix_records(nodes: DataFrame, fixdates: DataFrame | None = None) -> DataFram
     )
 
 
-def cvss_severities_envelope(df: DataFrame, v3_col: str = "cvss_v3_vector",
-                             v4_col: str = "cvss_v4_vector") -> DataFrame:
+def cvss_severities_envelope(df: DataFrame) -> DataFrame:
     """The reference's ``_make_cvss_severities`` envelope
     (github/parser.py:604-687) over vector columns.
 
@@ -149,8 +148,8 @@ def cvss_severities_envelope(df: DataFrame, v3_col: str = "cvss_v3_vector",
     or a falsy ``vectorString`` is a NULL here, matching the reference's
     ``if v3: / if vector:`` guards at :669-672/:679-682):
 
-    * ``v3_col`` — ``cvssSeverities.cvssV3.vectorString``
-    * ``v4_col`` — ``cvssSeverities.cvssV4.vectorString``
+    * ``cvss_v3_vector`` — ``cvssSeverities.cvssV3.vectorString``
+    * ``cvss_v4_vector`` — ``cvssSeverities.cvssV4.vectorString``
 
     Adds three columns:
 
@@ -184,14 +183,14 @@ def cvss_severities_envelope(df: DataFrame, v3_col: str = "cvss_v3_vector",
     the structs assemble from cheap attribute references only.
     """
     p3, p4 = "_g3", "_g4"
-    mid = with_cvss3_eval(df, strip_trailing_slash(F.col(v3_col)), p3)
-    mid = with_cvss4_valid(mid, strip_trailing_slash(F.col(v4_col)), p4)
+    mid = with_cvss3_eval(df, strip_trailing_slash(F.col("cvss_v3_vector")), p3)
+    mid = with_cvss4_valid(mid, strip_trailing_slash(F.col("cvss_v4_vector")), p4)
     helpers = ["_v3ok", "_v4ok", "_v3ver", "_v3s", "_v4s",
                "_base", "_esc", "_isc", "_sev"]
     mid = mid.select(
         "*",
-        (F.col(v3_col).isNotNull() & F.col(f"{p3}_ok")).alias("_v3ok"),
-        (F.col(v4_col).isNotNull() & F.col(f"{p4}_ok")).alias("_v4ok"),
+        (F.col("cvss_v3_vector").isNotNull() & F.col(f"{p3}_ok")).alias("_v3ok"),
+        (F.col("cvss_v4_vector").isNotNull() & F.col(f"{p4}_ok")).alias("_v4ok"),
         F.col(f"{p3}_ver").alias("_v3ver"),
         F.col(f"{p3}_vec").alias("_v3s"),
         F.col(f"{p4}_vec").alias("_v4s"),

@@ -118,14 +118,13 @@ def mariner_pipeline(
     tests: DataFrame,
     objects: DataFrame,
     states: DataFrame,
-    mariner_version: str = "2.0",
 ) -> DataFrame:
     """definitions(def_id, ref_id, ref_url, severity, patchable,
     description, advisory_date, criteria: array<string>) +
     tests(test_id, object_ref, state_ref) + objects(object_id, name) +
     states(state_id, evr_value, evr_operation) -> one vulnerability row
     per surviving definition (parser.py:208-236)."""
-    ns = f"mariner:{mariner_version}"
+    ns = "mariner:2.0"
     live = definitions.filter(
         F.col("severity").isNotNull()
         & (

@@ -58,10 +58,10 @@ def resolve_tests(
     )
 
 
-def drop_ksplice(resolved: DataFrame, pattern: str = r".*ksplice.*") -> DataFrame:
+def drop_ksplice(resolved: DataFrame) -> DataFrame:
     """P6: drop fixes whose rpm release matches the ksplice pattern."""
     return resolved.filter(
-        F.col("release").isNull() | ~F.col("release").rlike(pattern)
+        F.col("release").isNull() | ~F.col("release").rlike(r".*ksplice.*")
     )
 
 

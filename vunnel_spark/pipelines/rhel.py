@@ -33,9 +33,9 @@ _SEV = {
 }
 
 
-def normalize_severity(df: DataFrame, col: str = "threat_severity") -> DataFrame:
+def normalize_severity(df: DataFrame) -> DataFrame:
     """Severity case-fold + rank mapping; anything unrecognized -> Unknown."""
-    lowered = F.lower(F.col(col))
+    lowered = F.lower(F.col("threat_severity"))
     expr = F.lit("Unknown")
     for raw, mapped in reversed(list(_SEV.items())):
         expr = F.when(lowered == raw, mapped).otherwise(expr)
@@ -277,7 +277,6 @@ def reduce_fix_streams(
     df: DataFrame,
     keys: list[str],
     version_col: str = "version",
-    order_col: str | None = None,
 ) -> DataFrame:
     """The (package, platform, module)-bucket reduction of
     _parse_affected_release (parser.py:565-676): rpm-equal duplicate
@@ -300,25 +299,21 @@ def reduce_fix_streams(
     FIRST-SEEN version string in document order (the bucket.append
     guard at parser.py:569-571 rejects later rpm-equal entries), so
     textually different but rpm-equal versions ('1.0-1' vs '0:1.0-1')
-    must resolve deterministically.  Pass ``order_col`` (a stable
-    input-order column) to reproduce first-seen exactly; without one a
-    DataFrame has no document order, so the fallback keeps the
-    lexicographically smallest version string per rpm-equal group —
-    deterministic across runs/partitionings, and identical to the
-    reference whenever duplicates are textually canonical (every
-    current caller's fixtures are).
+    must resolve deterministically.  A DataFrame has no document order,
+    so this keeps the lexicographically smallest version string per
+    rpm-equal group — deterministic across runs/partitionings, and
+    identical to the reference whenever duplicates are textually
+    canonical (every current caller's fixtures are).
     """
     from vunnel_spark.functions.versions import rpm_evr_sort_key
 
     keyed = df.withColumn("_vkey", rpm_evr_sort_key(F.col(version_col)))
     # rpm-EQUAL dedup: identical sort keys compare 0 (the key is the
     # F1 property-tested total order); keep the deterministic
-    # representative (first-seen via order_col, else min version text)
-    pick = (F.min_by(F.col(version_col), F.col(order_col))
-            if order_col is not None else F.min(F.col(version_col)))
+    # representative, the min version text
     uniq = (
         keyed.groupBy(*keys, "_vkey")
-        .agg(pick.alias(version_col))
+        .agg(F.min(F.col(version_col)).alias(version_col))
         .withColumn("_base", rpm_version_base(F.col(version_col)))
     )
     # per-base keep-highest = max _vkey per (keys, base); fixes sharing

@@ -105,7 +105,6 @@ def secureos_pipeline(
     release: str = "rolling",
     namespace: str = "secureos",
     fixdates: DataFrame | None = None,
-    security_reference_url: str = SECURITY_REFERENCE_URL,
 ) -> DataFrame:
     """packages(pos, pkg, secfixes array<struct<version string,
     vids array<string>>>) -> one record per vulnerability id.
@@ -258,7 +257,7 @@ def secureos_pipeline(
     link = (
         F.when(
             F.col("vid").startswith("CVE-"),
-            F.concat(F.lit(security_reference_url + "/"), F.col("vid")),
+            F.concat(F.lit(SECURITY_REFERENCE_URL + "/"), F.col("vid")),
         )
         .when(
             F.col("vid").startswith("GHSA-"),

@@ -27,26 +27,21 @@ from pyspark.sql import DataFrame, functions as F
 _RELEASE_PRIORITY = ("sles-release", "sles-ltss-release")
 
 
-def release_resolver(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    release_col: str = "release",
-) -> DataFrame:
+def release_resolver(df: DataFrame) -> DataFrame:
     """One row per (vuln, version): the reference's condensing pick.
 
-    ``df`` carries one row per (keys..., release) — release names are
+    ``df`` carries one row per (vuln_id, version, release) — release names are
     unique within a group by construction (the reference's inner dict
     keys on them).  Output drops the release column and the
     all-unrecognized multi-release groups.
     """
-    if keys is None:
-        keys = ["vuln_id", "version"]
+    keys = ["vuln_id", "version"]
     rk = (
-        F.when(F.col(release_col) == _RELEASE_PRIORITY[0], F.lit(0))
-        .when(F.col(release_col) == _RELEASE_PRIORITY[1], F.lit(1))
+        F.when(F.col("release") == _RELEASE_PRIORITY[0], F.lit(0))
+        .when(F.col("release") == _RELEASE_PRIORITY[1], F.lit(1))
         .otherwise(F.lit(2))
     )
-    payload = [c for c in df.columns if c not in (*keys, release_col)]
+    payload = [c for c in df.columns if c not in (*keys, "release")]
     agg = (
         df.withColumn("_rk", rk)
         .groupBy(*keys)

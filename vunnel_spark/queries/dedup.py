@@ -699,8 +699,6 @@ def d13(spark, sf_dir):
                 "doc_id",
                 "left_semi",
             ),
-            "text",
-            "doc_id",
         )
         .groupBy("id")
         .agg(F.collect_set("shingle").alias("_sa"), F.count(F.lit(1)).alias("n_a"))
@@ -715,8 +713,6 @@ def d13(spark, sf_dir):
                 "doc_id",
                 "left_semi",
             ),
-            "text",
-            "doc_id",
         )
         .groupBy("id")
         .agg(F.collect_set("shingle").alias("_sb"), F.count(F.lit(1)).alias("n_b"))

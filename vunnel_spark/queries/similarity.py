@@ -44,19 +44,19 @@ def _dvec(vals: list[float]) -> str:
     return "[" + ",".join(f"'{v!r}'::DOUBLE" for v in vals) + "]"
 
 
-def _fold_dot(vec: str, plane: str, dim: int = _DIM) -> str:
+def _fold_dot(vec: str, plane: str) -> str:
     """Strict left-fold dot product — matches functions/vectors.dot
     bit-for-bit (list_dot_product uses a different accumulation order)."""
     return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({dim}), "
+        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({_DIM}), "
         f"i -> {vec}[i+1] * {plane}[i+1])), (a, b) -> a + b)"
     )
 
 
-def _fold_l2sq(vec: str, cent: str, dim: int = _DIM) -> str:
+def _fold_l2sq(vec: str, cent: str) -> str:
     """Strict left-fold squared L2 — matches operators/similarity.add_ivf_cells."""
     return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({dim}), "
+        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({_DIM}), "
         f"i -> ({vec}[i+1] - {cent}[i+1]) * ({vec}[i+1] - {cent}[i+1]))), "
         f"(a, b) -> a + b)"
     )

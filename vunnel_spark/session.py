@@ -74,8 +74,7 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # 10min keeps the r14 long-session debris collection (fires
         # every 10 min in sweep sessions, bounding ContextCleaner
         # backlog) without ever landing inside a short timed run.
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"))
+        .config("spark.cleaner.periodicGC.interval", "10min")
         # The JVM JIT refuses to compile methods over 8000 bytecode bytes
         # (HotSpot -XX:DontCompileHugeMethods, HugeMethodLimit=8000 — a
         # property of every executor JVM, not of local[32]), so a fused
@@ -90,8 +89,7 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # rhel2 12.3 KB, d5 9.4 KB, photon1 9.3 KB — and the e17 sf10
         # A/B measured the interpreted fused stage at ~32 s vs ~17 s
         # with the fallback (OPTIMIZATION_r15.md).
-        .config("spark.sql.codegen.hugeMethodLimit",
-                os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
+        .config("spark.sql.codegen.hugeMethodLimit", "8000")
         # Generated classes stay compiled for the life of the driver.
         # CodeGenerator's cache is keyed by (context classloader, source),
         # and task threads run under another loader than the driver

@@ -41,7 +41,6 @@ def write_bucketed(
     path: str,
     bucket_col: str,
     num_buckets: int = 8,
-    sort_cols: list[str] | None = None,
 ) -> DataFrame:
     """Write ``df`` as a bucketed+sorted parquet table and return the
     catalog-backed frame reading it.
@@ -59,7 +58,7 @@ def write_bucketed(
         .format("parquet")
         .option("path", path)
         .bucketBy(num_buckets, bucket_col)
-        .sortBy(*(sort_cols or [bucket_col]))
+        .sortBy(bucket_col)
         .saveAsTable(name)
     )
     return spark.table(name)

@@ -182,16 +182,7 @@ OSV_SCHEMA = {
 }
 
 
-def os_envelope_json(
-    df: DataFrame,
-    id_col: str = "cve_id",
-    namespace_col: str = "namespace",
-    severity_col: str = "severity",
-    description_col: str = "description",
-    fixedin_col: str = "FixedIn",
-    link_prefix: str = "https://access.redhat.com/security/cve/",
-    version_format: str = "rpm",
-) -> DataFrame:
+def os_envelope_json(df: DataFrame) -> DataFrame:
     """Assemble pipeline output rows into OS-vulnerability envelopes.
 
     Input: one row per (vulnerability, namespace) with a ``FixedIn`` array
@@ -201,14 +192,14 @@ def os_envelope_json(
     the driver only sees documents a test chooses to collect.
     """
     fi_fields = {
-        f.name for f in df.schema[fixedin_col].dataType.elementType.fields
+        f.name for f in df.schema["FixedIn"].dataType.elementType.fields
     }
     def fixed_entry(f):
         entry = [
             f.getField("Name").alias("Name"),
-            F.col(namespace_col).alias("NamespaceName"),
+            F.col("namespace").alias("NamespaceName"),
             f.getField("Version").alias("Version"),
-            F.lit(version_format).alias("VersionFormat"),
+            F.lit("rpm").alias("VersionFormat"),
         ]
         if "Module" in fi_fields:
             entry.append(f.getField("Module").alias("Module"))
@@ -221,24 +212,24 @@ def os_envelope_json(
         return F.struct(*entry)
 
     desc = (
-        F.coalesce(F.col(description_col), F.lit(""))
-        if description_col in df.columns
+        F.coalesce(F.col("description"), F.lit(""))
+        if "description" in df.columns
         else F.lit("")
     )
     vuln = F.struct(
-        F.col(id_col).alias("Name"),
-        F.col(namespace_col).alias("NamespaceName"),
+        F.col("cve_id").alias("Name"),
+        F.col("namespace").alias("NamespaceName"),
         desc.alias("Description"),
-        F.concat(F.lit(link_prefix), F.col(id_col)).alias("Link"),
-        F.col(severity_col).alias("Severity"),
-        F.struct(F.col(id_col).alias("RefId")).alias("Metadata"),
-        F.transform(F.col(fixedin_col), fixed_entry).alias("FixedIn"),
+        F.concat(F.lit("https://access.redhat.com/security/cve/"), F.col("cve_id")).alias("Link"),
+        F.col("severity").alias("Severity"),
+        F.struct(F.col("cve_id").alias("RefId")).alias("Metadata"),
+        F.transform(F.col("FixedIn"), fixed_entry).alias("FixedIn"),
     )
     return df.select(
         F.to_json(
             F.struct(
                 F.lit(SCHEMA_URL_OS).alias("schema"),
-                F.col(id_col).alias("identifier"),
+                F.col("cve_id").alias("identifier"),
                 F.struct(vuln.alias("Vulnerability")).alias("item"),
             )
         ).alias("doc")

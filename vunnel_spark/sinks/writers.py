@@ -8,12 +8,15 @@ Reference parity targets:
   first-wins (INSERT OR IGNORE), default -> last-wins (INSERT OR REPLACE)
 - I4 first-observed state store (tool/fixdate/first_observed.py:35-63):
   ``first_observed_merge`` — MERGE WHEN NOT MATCHED INSERT (key, today)
-- S16 checksum listing (workspace.py:234-284): ``write_checksum_listing``
+- S16 checksum listing (workspace.py:234-284): ``checksum_listing``,
+  ``write_checksum_listing``
 
 Scale notes: dedup is one window shuffle on the identifier; the write
 itself is partition-parallel.  The atomic publish (stage dir -> rename)
-keeps readers consistent without a table format; on a real deployment the
-same code path targets Delta/Iceberg where commit atomicity is native.
+keeps readers consistent without a table format.  Every sink here is
+single-writer: two writers publishing to one store race on the swap, and
+concurrent writers need a transactional table format, which this module
+does not provide.
 
 Schema record: every publish writes the data schema it wrote into the
 stage dir as ``_schema.json``, so the record swaps in with the data and
@@ -36,7 +39,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession, Window
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -62,6 +65,18 @@ def envelope(df: DataFrame, schema_url: str, identifier_col: str, item_cols: Seq
         F.lit(schema_url).alias("schema"),
         F.col(identifier_col).cast("string").alias("identifier"),
         F.struct(*[F.col(c) for c in item_cols]).alias("item"),
+    )
+
+
+def keep_one_per_key(df: DataFrame, key: str, order: Column) -> DataFrame:
+    """One row per ``key``: the first in ``order``.  The one keep-one-row
+    window of the sinks, shared by ``EnvelopeWriter``'s dedup and
+    ``KVCache.put``."""
+    w = Window.partitionBy(key).orderBy(order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 
@@ -131,12 +146,7 @@ class EnvelopeWriter:
             order = F.xxhash64(F.to_json(F.struct(*df.columns)))
         if self.dedup == "last_wins":
             order = order.desc()
-        w = Window.partitionBy(self.key).orderBy(order)
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return keep_one_per_key(df, self.key, order)
 
     def _bucket_of(self, key_expr) -> F.Column:
         """Bucket id for a key expression — used identically at write
@@ -265,9 +275,7 @@ def publish_snapshot(path: str, built: str) -> dict:
     return manifest
 
 
-def import_snapshot(
-    snapshot_path: str, dest_path: str, skip_newer_check: bool = False
-) -> str:
+def import_snapshot(snapshot_path: str, dest_path: str) -> str:
     """S17 archive import / skip-compute (provider.py:215-269, 357-378):
     install an already-computed hosted snapshot instead of recomputing.
 
@@ -287,7 +295,7 @@ def import_snapshot(
     with open(os.path.join(snapshot_path, _MANIFEST)) as f:
         snap = json.load(f)
     dest_manifest = os.path.join(dest_path, _MANIFEST)
-    if not skip_newer_check and os.path.exists(dest_manifest):
+    if os.path.exists(dest_manifest):
         with open(dest_manifest) as f:
             installed = json.load(f)
         if installed.get("built", "") >= snap["built"]:
@@ -307,51 +315,36 @@ def first_observed_merge(
     path: str,
     observations: DataFrame,
     key_cols: Sequence[str],
-    date_col: str = "first_observed",
     today: str | None = None,
-    table_format: str = "auto",
 ) -> DataFrame:
     """I4 first-observed state store as a merge-on-miss table.
 
     Semantics (tool/fixdate/first_observed.py:35-63): look up each key; on
     miss, insert today's date; always return the (key, first_observed) map
     covering every input key.  Idempotent per run: re-merging the same keys
-    never changes existing dates.
-
-    ``table_format``: 'auto' routes through a real Delta MERGE INTO when
-    delta-spark is on the classpath (multi-writer safe) and otherwise
-    uses the single-writer parquet swap; 'delta'/'parquet' force a path
-    ('delta' raising if unavailable).
+    never changes existing dates.  Published through the single-writer
+    parquet swap of ``EnvelopeWriter``.
     """
-    from vunnel_spark.sinks.table_format import (
-        merge_first_observed_delta,
-        should_use_delta,
-    )
-
-    if should_use_delta(spark, path, table_format):
-        return merge_first_observed_delta(
-            spark, path, observations.select(*key_cols), key_cols,
-            date_col=date_col, today=today,
-        )
     new_keys = observations.select(*key_cols).distinct()
     today_col = F.lit(today).cast("date") if today else F.current_date()
     writer = EnvelopeWriter(path, key=key_cols[0], dedup=None)
     if writer.exists():
         existing = writer.read(spark)
         misses = new_keys.join(existing.select(*key_cols), list(key_cols), "left_anti")
-        inserts = misses.withColumn(date_col, today_col)
+        inserts = misses.withColumn("first_observed", today_col)
         merged = existing.unionByName(inserts)
     else:
-        merged = new_keys.withColumn(date_col, today_col)
+        merged = new_keys.withColumn("first_observed", today_col)
     writer.write(merged)
     return writer.read(spark)
 
 
-def write_checksum_listing(path: str, listing_path: str) -> dict:
+def checksum_listing(path: str) -> dict:
     """S16 checksum listing: sha256 per data file + digest-of-digests.
 
     Mirrors workspace.py:234-284 (xxh64 file listing + tamper detection);
-    sorted filenames give a stable listing digest (O3).
+    sorted filenames give a stable listing digest (O3).  Reads the tree
+    and writes nothing.
     """
     entries = []
     for root, _dirs, files in os.walk(path):
@@ -368,55 +361,41 @@ def write_checksum_listing(path: str, listing_path: str) -> dict:
     overall = hashlib.sha256()
     for e in entries:
         overall.update(e["sha256"].encode())
-    doc = {"files": entries, "digest": overall.hexdigest()}
+    return {"files": entries, "digest": overall.hexdigest()}
+
+
+def write_checksum_listing(path: str, listing_path: str) -> dict:
+    """Write ``checksum_listing(path)`` to ``listing_path``."""
+    doc = checksum_listing(path)
     with open(listing_path, "w") as f:
         json.dump(doc, f, indent=2, sort_keys=True)
     return doc
 
 
 def validate_checksum_listing(path: str, listing_path: str) -> bool:
-    """Re-hash and compare — True iff nothing was tampered."""
+    """Re-hash and compare — True iff nothing was tampered.  The digest is
+    computed in memory, so a read-only snapshot validates and the tree
+    never holds a file it did not ship with."""
     with open(listing_path) as f:
         recorded = json.load(f)
-    tmp = listing_path + ".check"
-    try:
-        current = write_checksum_listing(path, tmp)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
-    return current["digest"] == recorded["digest"]
+    return checksum_listing(path)["digest"] == recorded["digest"]
 
 
 def overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_col: str,
-    partitions: Sequence[str] | None = None,
-    table_format: str = "auto",
 ) -> None:
     """I6 frozen-fragment layering (ubuntu/parser.py:307-373): rewrite ONLY
-    the partitions present in today's data (or an explicit list); absent
-    (EOL'd) partitions stay frozen on disk.
+    the partitions present in today's data; absent (EOL'd) partitions
+    stay frozen on disk.
 
     Dynamic partition overwrite — Spark's ``partitionOverwriteMode=dynamic``
     replaces exactly the partitions the frame contains, atomically per
-    partition directory.  ``table_format='auto'`` upgrades to Delta's
-    transactional ``replaceWhere`` (whole-set-atomic) when delta-spark is
-    on the classpath; 'delta'/'parquet' force a path.
+    partition directory (single writer, like every sink here).
     """
-    from vunnel_spark.sinks.table_format import (
-        overwrite_partitions_delta,
-        should_use_delta,
-    )
-
-    if should_use_delta(df.sparkSession, path, table_format):
-        overwrite_partitions_delta(df, path, partition_col, partitions)
-        return
-    out = df
-    if partitions is not None:
-        out = df.filter(F.col(partition_col).isin(list(partitions)))
     (
-        out.write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)

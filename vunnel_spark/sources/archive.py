@@ -54,7 +54,7 @@ def _traversal_filter(member: tarfile.TarInfo, dest: str):
     return member
 
 
-def safe_extract(archive_path: str, dest_dir: str, clean: bool = True) -> list[str]:
+def safe_extract(archive_path: str, dest_dir: str) -> list[str]:
     """Extract ``archive_path`` under ``dest_dir``; returns extracted names.
 
     Any member that would escape the destination (traversal, absolute
@@ -63,7 +63,7 @@ def safe_extract(archive_path: str, dest_dir: str, clean: bool = True) -> list[s
     """
     import shutil
 
-    if clean and os.path.exists(dest_dir):
+    if os.path.exists(dest_dir):
         shutil.rmtree(dest_dir)
     os.makedirs(dest_dir, exist_ok=True)
     kept: list[str] = []

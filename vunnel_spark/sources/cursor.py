@@ -35,11 +35,11 @@ class CursorCheckpoint:
         with open(self.path) as f:
             return json.load(f)
 
-    def advance(self, cursor, n_pages: int | None = None) -> None:
+    def advance(self, cursor) -> None:
         state = self.get()
         state["cursor"] = cursor
         state["done"] = cursor is None
-        state["n_pages"] = state["n_pages"] + 1 if n_pages is None else n_pages
+        state["n_pages"] = state["n_pages"] + 1
         tmp = f"{self.path}.tmp{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
             json.dump(state, f)
@@ -53,7 +53,6 @@ class CursorCheckpoint:
 def paginate(
     fetch_page: Callable,
     checkpoint: CursorCheckpoint,
-    max_pages: int | None = None,
 ) -> Iterator:
     """Cursor loop with durable resume.
 
@@ -73,6 +72,6 @@ def paginate(
         yield items
         n += 1
         checkpoint.advance(next_cursor)
-        if next_cursor is None or (max_pages and n >= max_pages):
+        if next_cursor is None:
             return
         cursor = next_cursor

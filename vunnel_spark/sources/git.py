@@ -23,7 +23,7 @@ from collections.abc import Callable
 from vunnel_spark.sources.http import backoff_sleep_interval
 
 
-def _default_runner(args: list[str], cwd: str | None = None) -> str:
+def _default_runner(args: list[str], cwd: str | None) -> str:
     return subprocess.check_output(  # noqa: S603 — running git by design
         args, text=True, stderr=subprocess.PIPE, cwd=cwd
     )
@@ -50,7 +50,6 @@ class GitLanding:
         dest: str,
         depth: int | None = 1,
         retries: int = 3,
-        backoff_seconds: float = 2.0,
         runner: Callable[[list[str], str | None], str] | None = None,
         sleep: Callable[[float], None] = time.sleep,
     ):
@@ -59,7 +58,6 @@ class GitLanding:
         self.dest = dest
         self.depth = depth
         self.retries = retries
-        self.backoff_seconds = backoff_seconds
         self.runner = runner or _default_runner
         self.sleep = sleep
 
@@ -109,7 +107,7 @@ class GitLanding:
         for attempt in range(self.retries + 1):
             if attempt:
                 self.sleep(
-                    backoff_sleep_interval(self.backoff_seconds, attempt - 1)
+                    backoff_sleep_interval(2.0, attempt - 1)
                 )
             try:
                 if self._is_repo():

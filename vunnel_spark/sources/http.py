@@ -24,12 +24,13 @@ class HTTPStatusError(Exception):
         self.url = url
 
 
-def backoff_sleep_interval(
-    base: float, attempt: int, max_value: float = 600.0, jitter: bool = True
-) -> float:
-    """Exponential backoff with optional full jitter, capped at max_value."""
-    v = min(float(max_value), base * (2**attempt))
-    return random.uniform(0, v) if jitter else v
+#: cap of one backoff sleep (s)
+_MAX_BACKOFF_S = 600.0
+
+
+def backoff_sleep_interval(base: float, attempt: int) -> float:
+    """Exponential backoff with full jitter, capped at ``_MAX_BACKOFF_S``."""
+    return random.uniform(0, min(_MAX_BACKOFF_S, base * (2**attempt)))
 
 
 def _default_transport(url: str, timeout: float, headers: dict):
@@ -53,9 +54,7 @@ def _default_transport(url: str, timeout: float, headers: dict):
 def get_with_retry(
     url: str,
     retries: int = 5,
-    backoff_seconds: float = 3.0,
     timeout: float = 30.0,
-    max_interval: float = 600.0,
     headers: dict | None = None,
     status_handler: Callable | None = None,
     transport: Callable | None = None,
@@ -77,7 +76,7 @@ def get_with_retry(
     skip_backoff = False
     for attempt in range(retries + 1):
         if last_exc is not None and not skip_backoff:
-            sleep(backoff_sleep_interval(backoff_seconds, attempt - 1, max_interval))
+            sleep(backoff_sleep_interval(3.0, attempt - 1))
         skip_backoff = False
         last_exc = None
         try:
@@ -90,7 +89,7 @@ def get_with_retry(
                     wait = float(retry_after) if retry_after else 60.0
                 except ValueError:
                     wait = 60.0
-                sleep(min(wait, max_interval))
+                sleep(min(wait, _MAX_BACKOFF_S))
                 last_exc = HTTPStatusError(status, url)
                 skip_backoff = True
                 continue
@@ -111,7 +110,6 @@ def should_full_sync(
     metadata: dict,
     interval_days: int,
     now: datetime,
-    key: str = "last_full_sync",
 ) -> bool:
     """Full-sync-interval policy (reference providers run a full refresh
     every N days on top of incremental deltas, e.g. nvd/manager.py).
@@ -119,7 +117,7 @@ def should_full_sync(
     True when no full sync is recorded or the recorded one is older than
     ``interval_days``.  Pairs with KVCache.get_metadata()/set_metadata().
     """
-    last = metadata.get(key)
+    last = metadata.get("last_full_sync")
     if not last:
         return True
     last_dt = datetime.fromisoformat(last)

@@ -28,7 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vunnel_spark.sinks.writers import EnvelopeWriter
+from vunnel_spark.sinks.writers import EnvelopeWriter, keep_one_per_key
 
 
 class KVCache:
@@ -36,10 +36,8 @@ class KVCache:
 
     META_NAME = ".__meta__.json"
 
-    def __init__(self, path: str, key_col: str = "key", payload_col: str = "payload"):
+    def __init__(self, path: str):
         self.path = path
-        self.key_col = key_col
-        self.payload_col = payload_col
         os.makedirs(path, exist_ok=True)
         # put() does its own per-key dedup and merge
         self._store = EnvelopeWriter(os.path.join(path, "data"), key="key", dedup=None)
@@ -61,18 +59,11 @@ class KVCache:
         (the reference's tmp+swap discipline, result.py:259-302, applied
         to the input side).
         """
-        from pyspark.sql import Window
-
         incoming = df.select(
-            F.col(self.key_col).cast("string").alias("key"),
-            F.col(self.payload_col).alias("payload"),
+            F.col("key").cast("string").alias("key"),
+            F.col("payload").alias("payload"),
         ).withColumn("digest", F.xxhash64("payload"))
-        w = Window.partitionBy("key").orderBy(F.col("digest").desc())
-        incoming = (
-            incoming.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        incoming = keep_one_per_key(incoming, "key", F.col("digest").desc())
         spark = df.sparkSession
         if self.exists():
             current = self.get_all(spark)
@@ -99,8 +90,8 @@ class KVCache:
         are never compared directly.
         """
         inc = incoming.select(
-            F.col(self.key_col).cast("string").alias("key"),
-            F.xxhash64(self.payload_col).alias("digest"),
+            F.col("key").cast("string").alias("key"),
+            F.xxhash64("payload").alias("digest"),
         )
         if not self.exists():
             return inc.select("key")

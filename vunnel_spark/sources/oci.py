@@ -57,7 +57,6 @@ def fetch_oci_artifact(
     repository: str,
     reference: str,
     dest: str,
-    headers: dict | None = None,
     transport: Callable | None = None,
     retries: int = 3,
 ) -> list[str]:
@@ -72,7 +71,7 @@ def fetch_oci_artifact(
     base = registry.rstrip("/")
     if not base.startswith(("http://", "https://")):
         base = f"https://{base}"
-    hdrs = dict(headers or {})
+    hdrs = {}
 
     _, _, manifest_body = get_with_retry(
         f"{base}/v2/{repository}/manifests/{reference}",

@@ -29,12 +29,12 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str) -> Da
 
 
 def read_nested_json(
-    spark: SparkSession, path: str, schema: T.StructType | str, multiline: bool = True
+    spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame:
     """Whole-document JSON scan (one document per file, nested)."""
     return (
         spark.read.schema(schema)
-        .option("multiLine", "true" if multiline else "false")
+        .option("multiLine", "true")
         .json(path)
     )
 
@@ -43,7 +43,6 @@ def read_csv_with_comment_header(
     spark: SparkSession,
     path: str,
     schema: T.StructType | str,
-    comment_prefix: str = "#",
     lift_key: str | None = None,
 ) -> DataFrame:
     """CSV scan skipping '#' comment lines; optionally lift a
@@ -53,11 +52,11 @@ def read_csv_with_comment_header(
     metadata, not data) — same split the reference makes in
     epss/manager.py:64-134 (score_date from the '#…score_date' line).
     """
-    df = spark.read.schema(schema).option("comment", comment_prefix).option(
+    df = spark.read.schema(schema).option("comment", "#").option(
         "header", "true"
     ).csv(path)
     if lift_key:
-        lifted = _lift_comment_value(spark, path, comment_prefix, lift_key)
+        lifted = _lift_comment_value(spark, path, "#", lift_key)
         df = df.withColumn(lift_key, F.lit(lifted))
     return df
 

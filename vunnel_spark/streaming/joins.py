@@ -20,41 +20,38 @@ from pyspark.sql import functions as F
 def interval_join(
     left: DataFrame,
     right: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
     within: str = "30 minutes",
     watermark: str = "1 hour",
-    left_prefix: str = "l",
-    right_prefix: str = "r",
 ) -> DataFrame:
-    """Inner join of two event streams on ``key`` where the right event
-    lands within ``[left.ts - within, left.ts]``.
+    """Inner join of two event streams on ``user_id`` where the right
+    event lands within ``[left.ts - within, left.ts]``; the other columns
+    come out prefixed ``l_``/``r_``.
 
     State bound: each side keeps at most ``watermark + within`` of
     buffered rows per key; everything older is evicted because the join
     condition can no longer match it.  On batch inputs the identical
     expression runs stateless.
     """
-    l_ts, r_ts = f"{left_prefix}_{ts_col}", f"{right_prefix}_{ts_col}"
+    l_ts, r_ts = "l_ts", "r_ts"
     lf = left.select(
-        F.col(key).alias(key),
-        F.col(ts_col).alias(l_ts),
-        *[F.col(c).alias(f"{left_prefix}_{c}")
-          for c in left.columns if c not in (key, ts_col)],
+        F.col("user_id"),
+        F.col("ts").alias(l_ts),
+        *[F.col(c).alias(f"l_{c}")
+          for c in left.columns if c not in ("user_id", "ts")],
     )
     rf = right.select(
-        F.col(key).alias(f"_{key}"),
-        F.col(ts_col).alias(r_ts),
-        *[F.col(c).alias(f"{right_prefix}_{c}")
-          for c in right.columns if c not in (key, ts_col)],
+        F.col("user_id").alias("_user_id"),
+        F.col("ts").alias(r_ts),
+        *[F.col(c).alias(f"r_{c}")
+          for c in right.columns if c not in ("user_id", "ts")],
     )
     if left.isStreaming:
         lf = lf.withWatermark(l_ts, watermark)
     if right.isStreaming:
         rf = rf.withWatermark(r_ts, watermark)
     cond = (
-        (F.col(key) == F.col(f"_{key}"))
+        (F.col("user_id") == F.col("_user_id"))
         & (F.col(r_ts) >= F.col(l_ts) - F.expr(f"INTERVAL {within}"))
         & (F.col(r_ts) <= F.col(l_ts))
     )
-    return lf.join(rf, cond).drop(f"_{key}")
+    return lf.join(rf, cond).drop("_user_id")
