@@ -7,18 +7,23 @@
 
 PY ?= python
 
-.PHONY: preflight lint gate test check bench smoke
+.PHONY: preflight lint daemon gate test check bench smoke
 
 # static lints + plan/registry invariants (no Spark jobs beyond plan
 # construction) then the CURRENT gate window against the DuckDB oracle
 # at sf0.001 — the same compare the external driver runs at sf0.01
-preflight: lint gate smoke
+preflight: lint daemon gate smoke
 
 lint:
 	GATE_LINT_STRICT=1 $(PY) -m pytest tests/test_registry_lint.py \
 	  tests/test_plans.py::test_gate_window_composition_stable \
 	  tests/test_plans.py::test_gate_priority_stamp_current \
 	  tests/test_plans.py::test_local_evidence_spliced_current -q
+
+# the worker daemon's two patches, in subprocesses (no Spark): fails when a
+# PySpark or CPython upgrade renames what they replace
+daemon:
+	$(PY) -m pytest tests/test_worker_daemon.py -q
 
 gate:
 	$(PY) -c "from vunnel_spark.queries import GATE_WINDOW; import subprocess, sys; \

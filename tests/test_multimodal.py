@@ -1888,3 +1888,33 @@ def test_webm_ebml_varint_edges():
         enc = _ebml_size_encode(v)
         got, pos = _ebml_read_vint(enc, 0, mask_marker=True)
         assert got == v and pos == len(enc), v
+
+
+def test_jpeg_decode_tables_built_once_and_left_as_built():
+    """Each distinct DHT table is inverted once, through a bounded memo
+    keyed on the table's bytes (they are untrusted), and every decode with
+    that table shares the dict.  No decoder may change it: a second decode
+    of each payload gives the same pixels, and each shared table still
+    equals a fresh build."""
+    from vunnel_spark.operators import multimodal as mm
+
+    rng = np.random.default_rng(3)
+    gray = rng.integers(0, 256, (32, 48), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (32, 48, 3), dtype=np.uint8)
+    payloads = [
+        mm.encode_jpeg_gray(gray), mm.encode_jpeg_gray(gray, restart_interval=2),
+        mm.encode_jpeg_rgb(rgb), mm.encode_jpeg_rgb420(rgb),
+        mm.encode_jpeg_gray_progressive(gray), mm.encode_jpeg_rgb420_progressive(rgb),
+    ]
+    specs = [bytes(bits + list(vals)) for bits, vals in (
+        (mm._JPEG_DC_BITS, mm._JPEG_DC_VALS), (mm._JPEG_AC_BITS, mm._JPEG_AC_VALS),
+        (mm._JPEG_PROG_AC_BITS, mm._JPEG_PROG_AC_VALS))]
+    mm._jpeg_decode_table.cache_clear()
+    first = [mm.decode_jpeg(p) for p in payloads]
+    again = [mm.decode_jpeg(p) for p in payloads]
+    assert all(np.array_equal(a, b) for a, b in zip(first, again))
+    info = mm._jpeg_decode_table.cache_info()
+    assert info.misses == len(specs) and info.hits > 0, info
+    assert info.maxsize is not None
+    for spec in specs:
+        assert mm._jpeg_decode_table(spec) == mm._jpeg_decode_table.__wrapped__(spec)

@@ -64,3 +64,36 @@ def test_python_tasks_reuse_zip_directories(spark):
     stage = row_stage(df, "reads int", ["id"], count_reads)
     stage.collect()
     assert stage.collect()[0].reads == 0
+
+
+def test_python_tasks_freeze_the_worker_heap(spark):
+    """After a reused worker's first task, its post-task collections scan
+    only what the last task made.  PySpark's daemon runs a full
+    gc.collect() after every task; vunnel_spark.worker_daemon freezes the
+    survivors after each, so the import-time heap (about 74k objects) is
+    walked once per worker, not once per task.  The row function reports
+    its worker's unfrozen GC-tracked objects and frozen count; the frozen
+    count staying flat over repeated tasks guards against the freeze
+    holding on to each task's objects."""
+    from collections import defaultdict
+
+    from vunnel_spark.row_stage import row_stage
+
+    def probe(_):
+        import gc
+        import os
+
+        yield (os.getpid(), len(gc.get_objects()), gc.get_freeze_count())
+
+    stage = row_stage(spark.range(1).coalesce(1), "pid int, unfrozen int, frozen long",
+                      ["id"], probe)
+    seen = defaultdict(list)  # worker pid -> its probes, in task order
+    for _ in range(150):  # idle workers take tasks in turn: a few may share them
+        row = stage.collect()[0]
+        seen[row.pid].append(row)
+        if len(seen[row.pid]) == 12:
+            break
+    runs = max(seen.values(), key=len)
+    assert len(runs) == 12, {pid: len(r) for pid, r in seen.items()}
+    assert all(r.unfrozen < 5000 for r in runs[1:]), [r.unfrozen for r in runs]
+    assert len({r.frozen for r in runs[2:]}) == 1, [r.frozen for r in runs]

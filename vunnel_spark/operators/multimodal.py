@@ -1163,17 +1163,39 @@ def _parse_dqt_body(body: bytes, qtables: dict) -> None:
         b = b[65:]
 
 
+@functools.lru_cache(maxsize=64)
+def _jpeg_decode_table(spec: bytes) -> dict:
+    """One DHT table's BITS and HUFFVAL bytes -> its inverted ``(length,
+    code) -> symbol`` table, built once per distinct table (bounded: the
+    bytes are untrusted).  Every decode shares the dict; none may change it."""
+    codes = _jpeg_huff_codes(spec[:16], spec[16:])
+    return {(ln_, code): sym for sym, (code, ln_) in codes.items()}
+
+
 def _parse_dht_body(body: bytes, huff: dict) -> None:
     """DHT segment body -> inverted decode tables keyed (class, id)."""
     b = body
     while b:
         tc, th = b[0] >> 4, b[0] & 0xF
-        bits = list(b[1:17])
-        nvals = sum(bits)
-        vals = list(b[17 : 17 + nvals])
-        codes = _jpeg_huff_codes(bits, vals)
-        huff[(tc, th)] = {(ln_, code): sym for sym, (code, ln_) in codes.items()}
+        nvals = sum(b[1:17])
+        huff[(tc, th)] = _jpeg_decode_table(bytes(b[1 : 17 + nvals]))
         b = b[17 + nvals :]
+
+
+def _jpeg_dequant(qtable: list):
+    """Zigzag-order quant table -> 8x8 natural-order float multipliers."""
+    import numpy as np
+
+    deq = np.empty(64)
+    deq[_JPEG_ZIGZAG] = np.array(qtable, dtype=np.float64)
+    return deq.reshape(8, 8)
+
+
+def _check_jpeg_sampling(samp: list) -> None:
+    """Component sampling factors other than 4:4:4 and 4:2:0 do not decode."""
+    if not (all(s == 0x11 for s in samp) or samp == [0x22, 0x11, 0x11]):
+        raise NotImplementedError(
+            f"unsupported sampling layout {samp} (4:4:4 and 4:2:0 decode here)")
 
 
 def decode_jpeg(payload: bytes):
@@ -1221,14 +1243,7 @@ def decode_jpeg(payload: bytes):
                 _cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
                 sampling_factors.append(sampling)
                 comp_q.append(tq)
-            if not (
-                all(s == 0x11 for s in sampling_factors)
-                or sampling_factors == [0x22, 0x11, 0x11]
-            ):
-                raise NotImplementedError(
-                    f"unsupported sampling layout {sampling_factors} "
-                    "(4:4:4 and 4:2:0 decode here)"
-                )
+            _check_jpeg_sampling(sampling_factors)
         elif marker == 0xC2:  # SOF2 — hand the whole stream to the
             return _decode_jpeg_progressive(payload)  # multi-scan decoder
         elif marker in (0xC1, 0xC3):
@@ -1250,11 +1265,7 @@ def decode_jpeg(payload: bytes):
         raise ValueError("missing SOF0/SOS")
     ncomp = len(comp_q)
     m = _dct_matrix()
-    deqs = []
-    for tq in comp_q:
-        deq = np.empty(64)
-        deq[_JPEG_ZIGZAG] = np.array(qtables[tq], dtype=np.float64)
-        deqs.append(deq.reshape(8, 8))
+    deqs = [_jpeg_dequant(qtables[tq]) for tq in comp_q]
 
     read_symbol = _read_jpeg_symbol
     br = _BitReader(scan_data)
@@ -1534,11 +1545,7 @@ def _decode_jpeg_progressive(payload: bytes):
                 comps.append({"cid": cid, "hs": sampling >> 4,
                               "vs": sampling & 0xF, "tq": tq})
                 samp.append(sampling)
-            if not (all(s == 0x11 for s in samp) or samp == [0x22, 0x11, 0x11]):
-                raise NotImplementedError(
-                    f"unsupported sampling layout {samp} "
-                    "(4:4:4 and 4:2:0 decode here)"
-                )
+            _check_jpeg_sampling(samp)
             hmax = max(c["hs"] for c in comps)
             vmax = max(c["vs"] for c in comps)
             mcu_cols = -(-w // (8 * hmax))
@@ -1628,9 +1635,7 @@ def _decode_jpeg_progressive(payload: bytes):
     vmax = max(c["vs"] for c in comps)
     planes = []
     for c in comps:
-        deq = np.empty(64)
-        deq[_JPEG_ZIGZAG] = np.array(qtables[c["tq"]], dtype=np.float64)
-        deq = deq.reshape(8, 8)
+        deq = _jpeg_dequant(qtables[c["tq"]])
         plane = np.zeros((c["bh"] * 8, c["bw"] * 8), dtype=np.float64)
         for bi, zz in enumerate(c["coefs"]):
             coeff = np.zeros(64)
@@ -1658,6 +1663,16 @@ def decode_jpeg_gray(payload: bytes):
     return out
 
 
+def _as_rgb(img):
+    """A decoded gray, gray+alpha, RGB or RGBA image -> (h, w, 3): gray is
+    replicated, alpha dropped (the image stages' statistics are RGB)."""
+    import numpy as np
+
+    if img.ndim == 2:
+        img = img[:, :, None]
+    return np.repeat(img[:, :, :1], 3, axis=2) if img.shape[2] < 3 else img[:, :, :3]
+
+
 def decode_image(payload: bytes):
     """Decode one image payload.
 
@@ -1669,25 +1684,13 @@ def decode_image(payload: bytes):
     remaining variants (arithmetic-coded JPEG, HEIC, ...) need codec
     libraries this container doesn't ship and raise NotImplementedError.
     """
-    import numpy as np
-
     payload = bytes(payload)
     if payload[:2] == b"P6":
         return decode_ppm(payload)
     if payload[:8] == _PNG_SIG:
-        img = decode_png(payload)
-        if img.ndim == 2:  # grayscale -> replicated RGB for uniform stages
-            img = np.repeat(img[:, :, None], 3, axis=2)
-        elif img.shape[2] == 2:  # gray+alpha -> replicated RGB, alpha dropped
-            img = np.repeat(img[:, :, :1], 3, axis=2)
-        elif img.shape[2] == 4:  # RGBA -> alpha dropped (stats are RGB-defined)
-            img = img[:, :, :3]
-        return img
+        return _as_rgb(decode_png(payload))
     if payload[:2] == b"\xff\xd8":
-        img = decode_jpeg(payload)
-        if img.ndim == 2:
-            img = np.repeat(img[:, :, None], 3, axis=2)
-        return img
+        return _as_rgb(decode_jpeg(payload))
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:4] == b"GIF8":
@@ -1870,6 +1873,55 @@ def iter_avi_frames(payload: bytes) -> Iterator[bytes]:
     raise ValueError("no movi LIST in AVI payload")
 
 
+def _box(btype: bytes, payload: bytes) -> bytes:
+    """One ISO-BMFF box: 32-bit size, type, payload."""
+    import struct
+
+    return struct.pack(">I", len(payload) + 8) + btype + payload
+
+
+def _full_box(btype: bytes, payload: bytes, verflags: int = 0) -> bytes:
+    """An ISO-BMFF full box: version (top byte) and flags before the payload."""
+    import struct
+
+    return _box(btype, struct.pack(">I", verflags) + payload)
+
+
+def _mp4_moov(width: int, height: int, dur: int, tables: bytes, mvex: bytes) -> bytes:
+    """Both MP4 encoders' ``moov``: one MJPEG track at ``VIDEO_FPS`` ticks/s,
+    ``tables`` its stts+stsc+stsz+stco after stsd, ``mvex`` after the track."""
+    import struct
+
+    timescale = VIDEO_FPS
+    matrix = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
+    mvhd = _full_box(b"mvhd", struct.pack(">IIII", 0, 0, timescale, dur)
+                     + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
+                     + matrix + b"\x00" * 24 + struct.pack(">I", 2))
+    # v0 tkhd body after version/flags: creation, modification, track_ID,
+    # reserved, duration (20) + reserved[8] + layer/alt_group/volume/
+    # reserved (8) + matrix (36) + width/height (8) = 80 bytes (spec size);
+    # flags 3 = enabled + in-movie
+    tkhd = _full_box(b"tkhd", struct.pack(">IIIII", 0, 0, 1, 0, dur) + b"\x00" * 8
+                     + struct.pack(">HHHH", 0, 0, 0, 0) + matrix
+                     + struct.pack(">II", width << 16, height << 16), verflags=3)
+    mdhd = _full_box(b"mdhd", struct.pack(">IIIIHH", 0, 0, timescale, dur, 0x55C4, 0))
+    hdlr = _full_box(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"mjpeg\x00")
+    sample_entry = (
+        struct.pack(">I", 86) + b"jpeg" + b"\x00" * 6 + struct.pack(">H", 1)
+        + b"\x00" * 16 + struct.pack(">HH", width, height)
+        + struct.pack(">II", 0x480000, 0x480000) + struct.pack(">I", 0)
+        + struct.pack(">H", 1) + b"\x00" * 32 + struct.pack(">Hh", 24, -1)
+    )
+    stsd = _full_box(b"stsd", struct.pack(">I", 1) + sample_entry)
+    # url_ full box with the self-contained flag set
+    url_ = struct.pack(">I", 12) + b"url " + struct.pack(">I", 1)
+    dinf = _box(b"dinf", _full_box(b"dref", struct.pack(">I", 1) + url_))
+    vmhd = _full_box(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0), verflags=1)
+    minf = _box(b"minf", vmhd + dinf + _box(b"stbl", stsd + tables))
+    trak = _box(b"trak", tkhd + _box(b"mdia", mdhd + hdlr + minf))
+    return _box(b"moov", mvhd + trak + mvex)
+
+
 def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """JPEG frame payloads -> a minimal ISO-BMFF (mp4) container.
 
@@ -1881,58 +1933,18 @@ def encode_mp4_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """
     import struct
 
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + btype + payload
-
-    def full(btype: bytes, payload: bytes, version: int = 0) -> bytes:
-        return box(btype, struct.pack(">I", version << 24) + payload)
-
     n = len(frames)
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
-    mdat = box(b"mdat", b"".join(frames))
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
+    mdat = _box(b"mdat", b"".join(frames))
     data_off = len(ftyp) + 8  # first sample starts after mdat's header
-
-    timescale = VIDEO_FPS
-    dur = n  # 1 tick per frame at VIDEO_FPS ticks/sec
-    mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, timescale, dur)
-                + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
-                + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-                + b"\x00" * 24 + struct.pack(">I", 2))
-    # v0 tkhd body after version/flags: creation, modification, track_ID,
-    # reserved, duration (20) + reserved[8] + layer/alt_group/volume/
-    # reserved (8) + matrix (36) + width/height (8) = 80 bytes (spec size)
-    tkhd = full(b"tkhd", struct.pack(">IIIII", 0, 0, 1, 0, dur) + b"\x00" * 8
-                + struct.pack(">HHHH", 0, 0, 0, 0)
-                + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-                + struct.pack(">II", width << 16, height << 16), version=0)
-    # flags=3 (enabled+in-movie) live in the low bits of the version word
-    tkhd = bytearray(tkhd); tkhd[11] = 3; tkhd = bytes(tkhd)
-    mdhd = full(b"mdhd", struct.pack(">IIIIHH", 0, 0, timescale, dur, 0x55C4, 0))
-    hdlr = full(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"mjpeg\x00")
-    sample_entry = (
-        struct.pack(">I", 86) + b"jpeg" + b"\x00" * 6 + struct.pack(">H", 1)
-        + b"\x00" * 16 + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x480000, 0x480000) + struct.pack(">I", 0)
-        + struct.pack(">H", 1) + b"\x00" * 32 + struct.pack(">Hh", 24, -1)
+    tables = (  # 1 tick per frame; 1 chunk of n samples
+        _full_box(b"stts", struct.pack(">III", 1, n, 1))
+        + _full_box(b"stsc", struct.pack(">IIII", 1, 1, n, 1))
+        + _full_box(b"stsz", struct.pack(">II", 0, n)
+                    + b"".join(struct.pack(">I", len(f)) for f in frames))
+        + _full_box(b"stco", struct.pack(">II", 1, data_off))
     )
-    stsd = full(b"stsd", struct.pack(">I", 1) + sample_entry)
-    stts = full(b"stts", struct.pack(">III", 1, n, 1))
-    stsc = full(b"stsc", struct.pack(">IIII", 1, 1, n, 1))  # 1 chunk, n samples
-    stsz = full(b"stsz", struct.pack(">II", 0, n)
-                + b"".join(struct.pack(">I", len(f)) for f in frames))
-    stco = full(b"stco", struct.pack(">II", 1, data_off))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    # url_ full box with the self-contained flag set
-    url_ = struct.pack(">I", 12) + b"url " + struct.pack(">I", 1)
-    dref = full(b"dref", struct.pack(">I", 1) + url_)
-    dinf = box(b"dinf", dref)
-    vmhd = bytearray(full(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0)))
-    vmhd[11] = 1
-    minf = box(b"minf", bytes(vmhd) + dinf + stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
+    return ftyp + mdat + _mp4_moov(width, height, n, tables, b"")
 
 
 def encode_mp4f_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
@@ -1944,66 +1956,32 @@ def encode_mp4f_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     the moof start (default-base-is-moof)."""
     import struct
 
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + btype + payload
-
-    def full(btype: bytes, payload: bytes, verflags: int = 0) -> bytes:
-        return box(btype, struct.pack(">I", verflags) + payload)
-
     n = len(frames)
-    ftyp = box(b"ftyp", b"iso5" + struct.pack(">I", 0x200) + b"iso5iso6")
-    timescale = VIDEO_FPS
-    mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, timescale, 0)
-                + struct.pack(">iH", 0x00010000, 0x0100) + b"\x00" * 10
-                + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-                + b"\x00" * 24 + struct.pack(">I", 2))
-    tkhd = full(b"tkhd", struct.pack(">IIIII", 0, 0, 1, 0, 0) + b"\x00" * 8
-                + struct.pack(">HHHH", 0, 0, 0, 0)
-                + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-                + struct.pack(">II", width << 16, height << 16), verflags=3)
-    mdhd = full(b"mdhd", struct.pack(">IIIIHH", 0, 0, timescale, 0, 0x55C4, 0))
-    hdlr = full(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"mjpeg\x00")
-    sample_entry = (
-        struct.pack(">I", 86) + b"jpeg" + b"\x00" * 6 + struct.pack(">H", 1)
-        + b"\x00" * 16 + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x480000, 0x480000) + struct.pack(">I", 0)
-        + struct.pack(">H", 1) + b"\x00" * 32 + struct.pack(">Hh", 24, -1)
-    )
-    stsd = full(b"stsd", struct.pack(">I", 1) + sample_entry)
+    ftyp = _box(b"ftyp", b"iso5" + struct.pack(">I", 0x200) + b"iso5iso6")
     # empty sample tables: samples live in fragments
-    stts = full(b"stts", struct.pack(">I", 0))
-    stsc = full(b"stsc", struct.pack(">I", 0))
-    stsz = full(b"stsz", struct.pack(">II", 0, 0))
-    stco = full(b"stco", struct.pack(">I", 0))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    url_ = struct.pack(">I", 12) + b"url " + struct.pack(">I", 1)
-    dref = full(b"dref", struct.pack(">I", 1) + url_)
-    dinf = box(b"dinf", dref)
-    vmhd = full(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0), verflags=1)
-    minf = box(b"minf", vmhd + dinf + stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    trex = full(b"trex", struct.pack(">IIIII", 1, 1, 1, 0, 0))
-    mvex = box(b"mvex", trex)
-    moov = box(b"moov", mvhd + trak + mvex)
+    tables = (_full_box(b"stts", struct.pack(">I", 0)) + _full_box(b"stsc", struct.pack(">I", 0))
+              + _full_box(b"stsz", struct.pack(">II", 0, 0))
+              + _full_box(b"stco", struct.pack(">I", 0)))
+    mvex = _box(b"mvex", _full_box(b"trex", struct.pack(">IIIII", 1, 1, 1, 0, 0)))
+    moov = _mp4_moov(width, height, 0, tables, mvex)
 
-    mfhd = full(b"mfhd", struct.pack(">I", 1))
+    mfhd = _full_box(b"mfhd", struct.pack(">I", 1))
     # tfhd: default-base-is-moof (0x020000), track_ID only
-    tfhd = full(b"tfhd", struct.pack(">I", 1), verflags=0x020000)
+    tfhd = _full_box(b"tfhd", struct.pack(">I", 1), verflags=0x020000)
 
     def build_trun(data_offset: int) -> bytes:
         # flags: data-offset present (0x01) + sample-size present (0x200)
         body = struct.pack(">Ii", n, data_offset)
         body += b"".join(struct.pack(">I", len(f)) for f in frames)
-        return full(b"trun", body, verflags=0x000201)
+        return _full_box(b"trun", body, verflags=0x000201)
 
     # trun's data_offset counts from the moof START to the first sample;
     # the moof length is independent of the offset VALUE (fixed int32),
     # so build once with a placeholder to measure, then rebuild
-    moof_placeholder = box(b"moof", mfhd + box(b"traf", tfhd + build_trun(0)))
+    moof_placeholder = _box(b"moof", mfhd + _box(b"traf", tfhd + build_trun(0)))
     data_offset = len(moof_placeholder) + 8  # + mdat header
-    moof = box(b"moof", mfhd + box(b"traf", tfhd + build_trun(data_offset)))
-    mdat = box(b"mdat", b"".join(frames))
+    moof = _box(b"moof", mfhd + _box(b"traf", tfhd + build_trun(data_offset)))
+    mdat = _box(b"mdat", b"".join(frames))
     return ftyp + moov + moof + mdat
 
 
@@ -3005,11 +2983,22 @@ class _PlainBitWriter:
             self.nbits -= 8
             self.acc &= (1 << self.nbits) - 1
 
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
+    def write_rice(self, u, p: int) -> None:
+        """Rice codewords of parameter ``p`` for the int64 array ``u`` of
+        non-negative values, built as one bit array: each codeword is
+        ``u >> p`` zeros, a one, then the low ``p`` bits of ``u``."""
+        import numpy as np
+
+        ends = self.nbits + np.cumsum((u >> p) + (p + 1))  # one past each codeword
+        bits = np.zeros(int(ends[-1]) if len(ends) else self.nbits, np.uint8)
+        bits[: self.nbits] = [self.acc >> i & 1 for i in range(self.nbits - 1, -1, -1)]
+        bits[ends - (p + 1)] = 1
+        for k in range(p):  # remainder bits, most significant first
+            bits[ends - (p - k)] = (u >> (p - 1 - k)) & 1
+        packed = np.packbits(bits).tobytes()
+        self.nbits = len(bits) % 8
+        self.out += packed[: len(bits) // 8]
+        self.acc = packed[-1] >> (8 - self.nbits) if self.nbits else 0
 
     def align(self) -> None:
         if self.nbits:
@@ -3027,6 +3016,7 @@ class _PlainBitReader:
         self.data = data
         self.byte = pos
         self.bit = 0
+        self.win = None  # (first byte, bits, next-one list) of read_rice
 
     def read_bit(self) -> int:
         if self.byte >= len(self.data):
@@ -3063,35 +3053,50 @@ class _PlainBitReader:
         v = self.read_bits(n)
         return v - (1 << n) if v >= (1 << (n - 1)) else v
 
-    def read_unary(self) -> int:
-        # byte-skip (r15): zero remainders consume whole bytes at once;
-        # the terminating one-bit is located with bit_length
-        q = 0
-        data, byte, bit = self.data, self.byte, self.bit
-        ln = len(data)
-        while True:
-            if byte >= ln:
-                self.byte, self.bit = byte, bit
-                raise ValueError("truncated FLAC stream")
-            rest = data[byte] & ((1 << (8 - bit)) - 1)
-            if rest == 0:
-                q += 8 - bit
-                bit = 0
-                byte += 1
-                continue
-            pos = 8 - rest.bit_length()  # MSB-relative index of the 1
-            q += pos - bit
-            bit = pos + 1
-            if bit == 8:
-                bit = 0
-                byte += 1
-            self.byte, self.bit = byte, bit
-            return q
-
     def align(self) -> None:
         if self.bit:
             self.bit = 0
             self.byte += 1
+
+    def read_rice(self, cnt: int, rp: int):
+        """``cnt`` rice codewords of parameter ``rp`` -> int64 array of the
+        signed residuals.  A window of bits is unpacked once, with the next
+        set bit's index at each bit; the codeword starts are walked with one
+        lookup each, the quotients and remainders gathered as arrays."""
+        import numpy as np
+
+        if cnt <= 0:
+            return np.zeros(0, np.int64)
+        step = rp + 1
+        want = cnt * (step + 2) + 64  # bits, grown while the window is short
+        while True:
+            end = min(len(self.data), self.byte + (self.bit + want + 7) // 8)
+            if self.win is None or self.win[0] + len(self.win[1]) // 8 < end:
+                if self.byte >= len(self.data):
+                    raise ValueError("truncated FLAC stream")
+                end = min(len(self.data), max(end, self.byte + 1024))
+                bits = np.unpackbits(np.frombuffer(self.data, np.uint8, end - self.byte, self.byte))
+                ones = np.where(bits, np.arange(len(bits)), len(bits))
+                nxt = np.minimum.accumulate(ones[::-1])[::-1].tolist()
+                self.win = (self.byte, bits, nxt)  # the frame's subframes share it
+            base, bits, nxt = self.win
+            p = start = (self.byte - base) * 8 + self.bit
+            try:
+                ends = [p := nxt[p] + step for _ in range(cnt)]
+                if ends[-1] <= len(bits):
+                    break
+            except IndexError:  # ran off the window
+                pass
+            if base + len(bits) // 8 >= len(self.data):
+                raise ValueError("truncated FLAC stream")
+            want *= 2
+        ends = np.array(ends, dtype=np.int64)
+        ones = ends - step
+        u = (ones - np.concatenate([[start], ends[:-1]])) << rp
+        for k in range(1, step):  # remainder bits, most significant first
+            u |= bits[ones + k].astype(np.int64) << (rp - k)
+        self.byte, self.bit = divmod(base * 8 + int(ends[-1]), 8)
+        return (u >> 1) ^ -(u & 1)
 
 
 def _crc_tables() -> tuple[list, list]:
@@ -3131,8 +3136,7 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-def _write_flac_subframe(bw, samples, bits: int = 16, method: str = "fixed",
-                         lpc_order: int = 8) -> None:
+def _write_flac_subframe(bw, samples, bits: int, method: str, lpc_order: int) -> None:
     """One subframe (header + warmup + residuals) onto the bit writer.
 
     ``bits`` is the subframe sample size — 16 for plain channels, 17
@@ -3207,8 +3211,8 @@ def _write_flac_subframe(bw, samples, bits: int = 16, method: str = "fixed",
     else:
         bw.write(0b001000 + o, 7)  # subframe header: 0 pad + FIXED(o) type
     bw.write(0, 1)  # no wasted bits
-    for t in range(o):  # warmup samples, raw at sample size
-        bw.write(int(samples[t]) & ((1 << bits) - 1), bits)
+    for v in samples[:o].tolist():  # warmup samples, raw at sample size
+        bw.write(v & ((1 << bits) - 1), bits)
     if lpc:
         _o, prec, shift, qc = lpc
         bw.write(prec - 1, 4)
@@ -3218,11 +3222,7 @@ def _write_flac_subframe(bw, samples, bits: int = 16, method: str = "fixed",
     bw.write(0b00, 2)  # residual method: 4-bit rice
     bw.write(0, 4)  # partition order 0
     bw.write(p, 4)
-    mask = (1 << p) - 1
-    for u in folded.tolist():  # plain ints: no numpy scalar boxing per sample
-        bw.write_unary(u >> p)
-        if p:
-            bw.write(u & mask, p)
+    bw.write_rice(folded, p)
 
 
 def encode_flac(samples, sample_rate: int, method: str = "fixed",
@@ -3240,34 +3240,39 @@ def encode_flac(samples, sample_rate: int, method: str = "fixed",
     (LPC prediction is integer-exact on both sides, so lossless holds
     regardless of how well the float fit converged).
     """
-    import hashlib
-    import struct
-
     import numpy as np
 
     samples = np.asarray(samples, dtype=np.int64)
-    n = len(samples)
-    if not 1 <= n <= 0x10000:
+    if not 1 <= len(samples) <= 0x10000:
         raise ValueError("encode_flac handles 1..65536 samples per clip")
+    return _flac_stream([(samples, 16)], 0, sample_rate, samples.astype("<i2").tobytes(),
+                        method, lpc_order)
 
+
+def _flac_stream(channels, code: int, sample_rate: int, pcm: bytes, method: str,
+                 lpc_order: int) -> bytes:
+    """A one-frame FLAC file: each subframe's (samples, sample size) under
+    channel code ``code`` (0: mono); the STREAMINFO MD5 covers ``pcm``."""
+    import hashlib
+    import struct
+
+    n = len(channels[0][0])
     bw = _PlainBitWriter()
     # frame header: sync+fixed-blocking, blocksize code 0111 (16-bit at
-    # end), sample-rate code 0000 (from STREAMINFO), mono, 16-bit, frame 0
-    header = bytearray([0xFF, 0xF8, 0x70, 0x08, 0x00])
+    # end), sample-rate code 0000 (from STREAMINFO), channels, 16-bit, frame 0
+    header = bytearray([0xFF, 0xF8, 0x70, (code << 4) | 0x08, 0x00])
     header += struct.pack(">H", n - 1)
     header.append(_crc8(bytes(header)))
-    for b in header:
-        bw.write(b, 8)
-    _write_flac_subframe(bw, samples, bits=16, method=method,
-                         lpc_order=lpc_order)
+    bw.out += header
+    for samples, bits in channels:
+        _write_flac_subframe(bw, samples, bits, method, lpc_order)
     bw.align()
     frame = bw.bytes()
     frame += struct.pack(">H", _crc16(frame))
 
-    pcm = samples.astype("<i2").tobytes()
     info = struct.pack(">HH", n, n) + b"\x00" * 6  # blocksizes; framesizes 0
     # 20-bit sr | 3-bit channels-1 | 5-bit bps-1 | 36-bit total samples
-    packed = (sample_rate << 44) | (0 << 41) | (15 << 36) | n
+    packed = (sample_rate << 44) | ((len(channels) - 1) << 41) | (15 << 36) | n
     info += packed.to_bytes(8, "big")
     info += hashlib.md5(pcm).digest()
     meta = bytes([0x80]) + len(info).to_bytes(3, "big") + info
@@ -3295,9 +3300,6 @@ def encode_flac_stereo(left, right, sample_rate: int, mode: str = "ms",
     that keeps mid/side lossless).  STREAMINFO MD5 covers the
     interleaved L,R PCM so losslessness is verified end to end.
     """
-    import hashlib
-    import struct
-
     import numpy as np
 
     left = np.asarray(left, dtype=np.int64)
@@ -3320,50 +3322,35 @@ def encode_flac_stereo(left, right, sample_rate: int, mode: str = "ms",
     else:  # ms
         ch0, ch1 = (left + right) >> 1, left - right
 
-    bw = _PlainBitWriter()
-    header = bytearray([0xFF, 0xF8, 0x70, (code << 4) | 0x08, 0x00])
-    header += struct.pack(">H", n - 1)
-    header.append(_crc8(bytes(header)))
-    for b in header:
-        bw.write(b, 8)
-    _write_flac_subframe(bw, ch0, bits=bits0, method=method)
-    _write_flac_subframe(bw, ch1, bits=bits1, method=method)
-    bw.align()
-    frame = bw.bytes()
-    frame += struct.pack(">H", _crc16(frame))
-
-    inter = np.empty(2 * n, dtype=np.int16)
-    inter[0::2] = left.astype(np.int16)
-    inter[1::2] = right.astype(np.int16)
-    info = struct.pack(">HH", n, n) + b"\x00" * 6
-    packed = (sample_rate << 44) | (1 << 41) | (15 << 36) | n
-    info += packed.to_bytes(8, "big")
-    info += hashlib.md5(inter.astype("<i2").tobytes()).digest()
-    meta = bytes([0x80]) + len(info).to_bytes(3, "big") + info
-    return b"fLaC" + meta + frame
+    pcm = np.stack([left, right], axis=1).astype("<i2").tobytes()  # interleaved L, R
+    return _flac_stream([(ch0, bits0), (ch1, bits1)], code, sample_rate, pcm, method,
+                        8)  # encode_flac's order
 
 
-def _read_flac_subframe(br, blocksize: int, bits: int = 16) -> list:
-    """One subframe off the bit reader -> list of ints.
+def _read_flac_subframe(br, blocksize: int, bits: int = 16):
+    """One subframe off the bit reader -> int64 array of ``blocksize``
+    samples.
 
     ``bits`` is the subframe sample size (17 for stereo side channels).
     CONSTANT / VERBATIM / FIXED / LPC types, partitioned rice residuals
     (4- and 5-bit params, escape codes)."""
+    import numpy as np
+
     if br.read_bit():
         raise ValueError("subframe padding bit set")
     stype = br.read_bits(6)
     if br.read_bit():
         raise NotImplementedError("wasted bits unsupported")
     if stype == 0:  # CONSTANT
-        return [br.read_signed(bits)] * blocksize
+        return np.full(blocksize, br.read_signed(bits), dtype=np.int64)
     if stype == 1:  # VERBATIM
-        return [br.read_signed(bits) for _ in range(blocksize)]
+        return np.array([br.read_signed(bits) for _ in range(blocksize)], dtype=np.int64)
     if 8 <= stype <= 12:  # FIXED order 0-4
         order = stype - 8
-        warm = [br.read_signed(bits) for _ in range(order)]
-        res = _read_flac_residuals(br, blocksize, order)
+        warm = np.array([br.read_signed(bits) for _ in range(order)], dtype=np.int64)
+        seq = _read_flac_residuals(br, blocksize, order)
         if order == 0:
-            return res
+            return seq
         # FIXED reconstruction = order-fold integration of the residual
         # difference sequence (r15): res[m] is diff^order(x)[m], so each
         # level j recovers diff^j(x) as last-warmup-diff + cumsum of the
@@ -3373,10 +3360,7 @@ def _read_flac_subframe(br, blocksize: int, bits: int = 16) -> list:
         # past that bound is corrupt or adversarial.  Checking it before
         # each cumsum keeps int64 exact (bound * 65536 samples < 2^38)
         # instead of letting crafted residuals wrap silently.
-        import numpy as np
-
-        seq = np.asarray(res, dtype=np.int64)
-        levels = [np.asarray(warm, dtype=np.int64)]
+        levels = [warm]
         for _ in range(1, order):
             levels.append(np.diff(levels[-1]))
         bound = 1 << (bits + order)
@@ -3384,7 +3368,7 @@ def _read_flac_subframe(br, blocksize: int, bits: int = 16) -> list:
             if len(seq) and int(np.abs(seq).max()) >= bound:
                 raise ValueError("FLAC FIXED residuals out of range")
             seq = levels[j][-1] + np.cumsum(seq)
-        return warm + seq.tolist()
+        return np.concatenate([warm, seq])
     if stype >= 32:  # LPC, order = low 5 bits + 1
         order = (stype & 0x1F) + 1
         warm = [br.read_signed(bits) for _ in range(order)]
@@ -3395,30 +3379,56 @@ def _read_flac_subframe(br, blocksize: int, bits: int = 16) -> list:
         if shift >= 16:  # never occur in practice and we reject them
             raise NotImplementedError("negative LPC shift unsupported")
         coefs = [br.read_signed(prec) for _ in range(order)]
-        res = _read_flac_residuals(br, blocksize, order)
-        block = list(warm)
-        # C-level dot per sample (r15): a reversed slice + map(mul) in
-        # place of the per-coefficient Python generator — same ints,
-        # same floor shift
-        from operator import mul
-
-        lo = -order - 1
-        for r in res:
-            pred = sum(map(mul, coefs, block[-1:lo:-1])) >> shift
-            block.append(r + pred)  # Python >> floors like the spec
-        return block
+        res = _read_flac_residuals(br, blocksize, order).tolist()
+        return np.array(_lpc_restorer(order)(coefs, warm, res, shift, 1 << (bits - 1)),
+                        dtype=np.int64)
     raise ValueError("reserved subframe type")
 
 
-def _read_flac_residuals(br, blocksize: int, order: int) -> list:
-    """Partitioned rice residual section shared by FIXED and LPC."""
+@functools.cache
+def _lpc_restorer(order: int):
+    """The LPC recurrence of one predictor order, ``(coefs, warm, residuals,
+    shift, lim) -> samples``: residual plus the coefficients' dot with the
+    last ``order`` samples, floor-shifted by ``shift`` (exact Python ints).
+    Coefficients and history live in locals: no slice or ``map`` per
+    sample.  A sample outside ``[-lim, lim)`` does not fit the sample size,
+    so the stream is corrupt; stopping there also stops crafted
+    coefficients from growing the integers without bound."""
+    c = [f"c{j}" for j in range(order)]
+    s = [f"s{j}" for j in range(order)]  # s0 is the latest sample
+    src = (
+        "def restore(coefs, warm, res, shift, lim):\n"
+        f"    {', '.join(c)}, = coefs\n"
+        f"    {', '.join(s)}, = warm[::-1]\n"
+        "    out = list(warm)\n"
+        "    append = out.append\n"
+        "    for r in res:\n"
+        f"        x = r + (({' + '.join(f'{a} * {b}' for a, b in zip(c, s))}) >> shift)\n"
+        "        if not -lim <= x < lim:\n"
+        "            raise ValueError('FLAC LPC sample out of range')\n"
+        "        append(x)\n"
+        f"        {', '.join(s)} = {', '.join(['x'] + s[:-1])}\n"
+        "    return out\n"
+    )
+    scope: dict = {}
+    exec(compile(src, f"<lpc order {order}>", "exec"), scope)  # noqa: S102 - fixed template
+    return scope["restore"]
+
+
+def _read_flac_residuals(br, blocksize: int, order: int):
+    """Partitioned rice residual section shared by FIXED and LPC -> int64
+    array of ``blocksize - order`` residuals."""
+    import numpy as np
+
     method = br.read_bits(2)
     if method > 1:
         raise ValueError("reserved residual coding method")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
     porder = br.read_bits(4)
-    res = []
+    if blocksize % (1 << porder) or (blocksize >> porder) < order:
+        raise ValueError("FLAC partition order does not fit the block")
+    parts = []
     for part in range(1 << porder):
         cnt = blocksize >> porder
         if part == 0:
@@ -3426,14 +3436,10 @@ def _read_flac_residuals(br, blocksize: int, order: int) -> list:
         rp = br.read_bits(pbits)
         if rp == escape:
             raw = br.read_bits(5)
-            for _ in range(cnt):
-                res.append(br.read_signed(raw) if raw else 0)
+            parts.append(np.array([br.read_signed(raw) if raw else 0 for _ in range(cnt)], int))
             continue
-        for _ in range(cnt):
-            q = br.read_unary()
-            u = (q << rp) | (br.read_bits(rp) if rp else 0)
-            res.append((u >> 1) if u % 2 == 0 else -((u + 1) >> 1))
-    return res
+        parts.append(br.read_rice(cnt, rp))
+    return np.concatenate(parts)
 
 
 def decode_flac(payload: bytes):
@@ -3459,10 +3465,14 @@ def decode_flac(payload: bytes):
     sr = bps = total = nch = None
     md5_expect = None
     while True:  # metadata blocks
+        if pos + 4 > len(payload):
+            raise ValueError("truncated FLAC stream")
         head = payload[pos]
         btype, last = head & 0x7F, head & 0x80
         ln = int.from_bytes(payload[pos + 1 : pos + 4], "big")
         body = payload[pos + 4 : pos + 4 + ln]
+        if len(body) < ln:
+            raise ValueError("truncated FLAC stream")
         if btype == 0:  # STREAMINFO
             packed = int.from_bytes(body[10:18], "big")
             sr = packed >> 44
@@ -3498,12 +3508,17 @@ def decode_flac(payload: bytes):
         if ss_code != 0b100:
             raise NotImplementedError("16-bit FLAC only")
         pos += 4
+        if pos >= len(payload):
+            raise ValueError("truncated FLAC stream")
         first = payload[pos]  # UTF-8-coded frame/sample number
         nfollow = 0
         while (first << nfollow) & 0x80 and nfollow < 7:
             nfollow += 1
         nfollow = max(nfollow - 1, 0)
         pos += 1 + nfollow
+        # the blocksize bytes its code calls for, then the CRC-8 byte
+        if pos + {0b0110: 1, 0b0111: 2}.get(bs_code, 0) >= len(payload):
+            raise ValueError("truncated FLAC stream")
         if bs_code == 0b0110:
             blocksize = payload[pos] + 1
             pos += 1
@@ -3535,18 +3550,14 @@ def decode_flac(payload: bytes):
             if ch_code == 1:  # independent left/right
                 lch, rch = ch0, ch1
             elif ch_code == 8:  # left-side: side = left - right
-                lch = ch0
-                rch = [a - s for a, s in zip(ch0, ch1)]
+                lch, rch = ch0, ch0 - ch1
             elif ch_code == 9:  # right-side: side = left - right
-                rch = ch1
-                lch = [s + b for s, b in zip(ch0, ch1)]
+                lch, rch = ch0 + ch1, ch1
             else:  # mid-side: side's parity recovers mid's dropped bit
-                lch, rch = [], []
-                for m, s in zip(ch0, ch1):
-                    m2 = (m << 1) | (s & 1)
-                    lch.append((m2 + s) >> 1)
-                    rch.append((m2 - s) >> 1)
-            block = [v for pair in zip(lch, rch) for v in pair]
+                m2 = (ch0 << 1) | (ch1 & 1)
+                lch, rch = (m2 + ch1) >> 1, (m2 - ch1) >> 1
+            block = np.empty(2 * blocksize, dtype=np.int64)
+            block[0::2], block[1::2] = lch, rch
         br.align()
         pos = br.byte
         if pos + 2 > len(payload):
@@ -3558,15 +3569,11 @@ def decode_flac(payload: bytes):
         )[0]:
             raise ValueError("frame CRC-16 mismatch")
         pos += 2
-        out.extend(block)
+        out.append(block)
         seen += blocksize
 
-    if nch == 1:
-        samples = np.array(out[: int(total)], dtype=np.int16)
-        flat = samples
-    else:
-        flat = np.array(out[: 2 * int(total)], dtype=np.int16)
-        samples = flat.reshape(-1, 2)
+    flat = np.concatenate(out or [np.zeros(0, np.int64)])[: nch * int(total)].astype(np.int16)
+    samples = flat if nch == 1 else flat.reshape(-1, 2)
     if md5_expect and md5_expect != b"\x00" * 16:
         if hashlib.md5(flat.astype("<i2").tobytes()).digest() != md5_expect:
             raise ValueError("decoded audio MD5 mismatch (lossy corruption)")
@@ -4106,16 +4113,7 @@ def decode_ico(payload: bytes):
         )
         sub = payload[off : off + size]
         if sub[:8] == _PNG_SIG:
-            img = decode_png(sub)
-            import numpy as np
-
-            if img.ndim == 2:
-                img = np.repeat(img[:, :, None], 3, axis=2)
-            elif img.shape[2] == 2:  # gray+alpha: replicate gray, drop alpha
-                img = np.repeat(img[:, :, :1], 3, axis=2)
-            elif img.shape[2] == 4:
-                img = img[:, :, :3]
-            images.append(img)
+            images.append(_as_rgb(decode_png(sub)))
             continue
         hsize, w, h2 = struct.unpack_from("<Iii", sub, 0)
         (bpp,) = struct.unpack_from("<H", sub, 14)

@@ -114,6 +114,10 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # CPU per task, in reused workers too, about 1.4 s of a 6 s warm
         # parse_kernels pass.  The daemon reads an archive again only when
         # its inode, size or mtime changed; on 3.13+ it patches nothing.
+        # It also freezes what survives the full gc.collect() PySpark's
+        # daemon runs after every task, so that collection no longer walks
+        # the ~73k import-time objects each time (34-45 ms -> under 0.2 ms
+        # of CPU per task).
         # The workers' Python must import vunnel_spark before a task ships
         # any file, which every Python stage already needs: its UDFs pickle
         # vunnel_spark functions by reference.  A static conf, so it takes
