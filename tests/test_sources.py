@@ -1,15 +1,9 @@
-"""Source reader tests: explicit-schema scans, corrupt-row routing,
-comment-header CSV with lifted metadata."""
+"""Table loading tests: the dtype contract, scan fan-out, and schema
+inference once per file version."""
 
 from __future__ import annotations
 
-import gzip
-import json
 import os
-
-import pytest
-
-from vunnel_spark.sources import read_csv_with_comment_header, read_jsonl, read_nested_json
 
 
 # Rounds 2 and 3 both shipped a "driver data != builder session" dtype bug
@@ -85,78 +79,3 @@ def test_load_table_infers_schema_once_per_file_version(spark, sf_dir, tmp_path,
     table = pq.read_table(path)
     pq.write_table(table.append_column("extra", pa.array(range(table.num_rows))), path)
     assert load_table(spark, sf, "orders").columns == first.columns + ["extra"]
-
-
-def test_jsonl_explicit_schema_and_corrupt_routing(spark, tmp_path):
-    p = str(tmp_path / "in.jsonl")
-    with open(p, "w") as f:
-        f.write(json.dumps({"id": "CVE-1", "sev": "High"}) + "\n")
-        f.write(json.dumps({"id": "CVE-2", "sev": "Low"}) + "\n")
-        f.write("{broken json\n")
-    df = read_jsonl(spark, p, "id string, sev string, _corrupt_record string")
-    rows = df.collect()
-    assert len(rows) == 3
-    good = [r for r in rows if r._corrupt_record is None]
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert {r.id for r in good} == {"CVE-1", "CVE-2"}
-    assert len(bad) == 1  # corrupt row routed, not fatal
-
-
-def test_nested_json_multilevel_explode(spark, tmp_path):
-    # secdb-shaped document (alpine/wolfi: packages[].pkg.secfixes{ver: [ids]})
-    doc = {
-        "distro": "alp",
-        "packages": [
-            {"pkg": {"name": "openssl", "secfixes": [
-                {"version": "3.0.1", "ids": ["CVE-1", "CVE-2"]},
-                {"version": "3.0.2", "ids": ["CVE-3"]}]}},
-            {"pkg": {"name": "zlib", "secfixes": [
-                {"version": "1.2.12", "ids": ["CVE-4"]}]}},
-        ],
-    }
-    p = str(tmp_path / "secdb.json")
-    with open(p, "w") as f:
-        json.dump(doc, f)
-    schema = (
-        "distro string, packages array<struct<pkg: struct<name: string, "
-        "secfixes: array<struct<version: string, ids: array<string>>>>>>"
-    )
-    import pyspark.sql.functions as F
-
-    df = read_nested_json(spark, p, schema)
-    flat = (
-        df.select("distro", F.explode("packages").alias("p"))
-        .select("distro", F.col("p.pkg.name").alias("pkg"), F.explode("p.pkg.secfixes").alias("fx"))
-        .select("distro", "pkg", F.col("fx.version").alias("version"), F.explode("fx.ids").alias("vid"))
-    )
-    rows = {(r.pkg, r.version, r.vid) for r in flat.collect()}
-    assert rows == {
-        ("openssl", "3.0.1", "CVE-1"), ("openssl", "3.0.1", "CVE-2"),
-        ("openssl", "3.0.2", "CVE-3"), ("zlib", "1.2.12", "CVE-4"),
-    }
-
-
-@pytest.mark.parametrize("gz", [False, True])
-def test_csv_comment_header_with_lift(spark, tmp_path, gz):
-    # EPSS-shaped: '#model_version:v2023.03.01,score_date:2024-05-01'
-    content = (
-        "#model_version:v2023.03.01,score_date:2024-05-01\n"
-        "cve,epss,percentile\n"
-        "CVE-1,0.5,0.9\n"
-        "CVE-2,0.1,0.4\n"
-    )
-    name = "epss.csv.gz" if gz else "epss.csv"
-    p = str(tmp_path / name)
-    if gz:
-        with gzip.open(p, "wt") as f:
-            f.write(content)
-    else:
-        with open(p, "w") as f:
-            f.write(content)
-    df = read_csv_with_comment_header(
-        spark, p, "cve string, epss double, percentile double", lift_key="score_date"
-    )
-    rows = df.collect()
-    assert len(rows) == 2
-    assert all(r.score_date == "2024-05-01" for r in rows)
-    assert {r.cve for r in rows} == {"CVE-1", "CVE-2"}

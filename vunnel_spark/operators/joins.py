@@ -24,7 +24,6 @@ def salted_join(
     small: DataFrame,
     on: str | Sequence[str],
     n_salts: int = 8,
-    how: str = "inner",
     salt_src: str | None = None,
     merge_hint: bool = False,
 ) -> DataFrame:
@@ -42,16 +41,9 @@ def salted_join(
     operator exists for (an auto-broadcast would silently drop the salt
     spread being demonstrated/tested).
 
-    ``how`` is restricted to 'inner'/'left' (left = big side preserved):
-    any outer mode that preserves the *small* side would emit each
-    unmatched small-side row once per salt replica — n_salts phantom rows.
+    Inner only: an outer mode preserving the small side would emit each
+    unmatched small-side row once per salt replica.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left' only (got {how!r}): "
-            "outer modes preserving the small side would emit its unmatched "
-            "rows once per salt replica"
-        )
     on_cols = [on] if isinstance(on, str) else list(on)
     src = [F.col(salt_src)] if salt_src else [F.col(c) for c in big.columns]
     salted_big = big.withColumn("_salt", F.pmod(F.xxhash64(*src), F.lit(n_salts)))
@@ -60,5 +52,5 @@ def salted_join(
     )
     if merge_hint:
         salted_small = salted_small.hint("merge")
-    out = salted_big.join(salted_small, [*on_cols, "_salt"], how)
+    out = salted_big.join(salted_small, [*on_cols, "_salt"])
     return out.drop("_salt")

@@ -3243,8 +3243,6 @@ def encode_flac(samples, sample_rate: int, method: str = "fixed",
     import numpy as np
 
     samples = np.asarray(samples, dtype=np.int64)
-    if not 1 <= len(samples) <= 0x10000:
-        raise ValueError("encode_flac handles 1..65536 samples per clip")
     return _flac_stream([(samples, 16)], 0, sample_rate, samples.astype("<i2").tobytes(),
                         method, lpc_order)
 
@@ -3257,6 +3255,8 @@ def _flac_stream(channels, code: int, sample_rate: int, pcm: bytes, method: str,
     import struct
 
     n = len(channels[0][0])
+    if not 1 <= n <= 0xFFFF:  # STREAMINFO's blocksize fields are 16-bit
+        raise ValueError(f"FLAC encodes 1..65535 samples per clip, got {n}")
     bw = _PlainBitWriter()
     # frame header: sync+fixed-blocking, blocksize code 0111 (16-bit at
     # end), sample-rate code 0000 (from STREAMINFO), channels, 16-bit, frame 0
@@ -3306,9 +3306,6 @@ def encode_flac_stereo(left, right, sample_rate: int, mode: str = "ms",
     right = np.asarray(right, dtype=np.int64)
     if left.shape != right.shape:
         raise ValueError("left/right length mismatch")
-    n = len(left)
-    if not 1 <= n <= 0x10000:
-        raise ValueError("encode_flac_stereo handles 1..65536 samples")
     if mode not in _FLAC_STEREO_MODES:
         raise ValueError(f"unknown stereo mode {mode!r}")
     code, bits0, bits1 = _FLAC_STEREO_MODES[mode]

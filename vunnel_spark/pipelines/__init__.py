@@ -7,11 +7,10 @@ providers NOT listed here are true near-clones of a listed family
 (minimos -> secdb, chainguard -> secdb/osv selection wrapper,
 bitnami/rocky -> osv_patch_fix_dates, rocky adding only
 rocky_normalize_ecosystem, govulndb -> the same OSV-passthrough shape:
-a zip fetch behind the S9 safe-extract guard (sources/archive.py —
-providers/govulndb/parser.py:70-84 is the identical traversal check),
-sorted per-id JSON loads, osv_patch_fix_dates with the published
-fallback (gated by osv1), and alma's verbatim (id, schema_version,
-entry) normalize minus the modularity/gap branches).
+a zip fetch outside this engine, sorted per-id JSON loads,
+osv_patch_fix_dates with the published fallback (gated by osv1), and
+alma's verbatim (id, schema_version, entry) normalize minus the
+modularity/gap branches).
 """
 
 from vunnel_spark.pipelines.sles import release_resolver  # noqa: F401

@@ -16,13 +16,10 @@ the arrays are rebuilt in their original order from collected position
 structs.  No UDFs, no per-document Python — the whole patch is Catalyst
 expressions, so it scales to an arbitrary advisory corpus.
 
-Sourcing (fetch tier): the advisory corpus lands via
-``sources.git.GitLanding`` — the alma/bitnami repos are git checkouts
-(reference providers/alma/git.py:20-50) — and the first-observed
-fix-date table via ``sources.oci.fetch_oci_artifact`` (reference pulls
-it from an OCI registry, tool/fixdate/grype_db_first_observed.py:
-67-114); both land files that ``spark.read.json``/``read_jsonl`` take
-over, keeping fetch driver-side and the data plane declarative.
+Sourcing: the advisory corpus (git checkouts for alma/bitnami, reference
+providers/alma/git.py:20-50) and the first-observed fix-date table (an
+OCI artifact, reference tool/fixdate/grype_db_first_observed.py:67-114)
+are fetched outside this engine; Spark reads the landed files.
 """
 
 from __future__ import annotations

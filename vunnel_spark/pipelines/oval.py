@@ -10,8 +10,8 @@ releases (parser.py:145-201, P6), and keeps the higher definition version
 when duplicates share a name (oval_parser.py:186-206, A13).
 
 Spark form: the dict lookups become a three-hop equi-join chain over the
-four relational frames the scan tier produces (sources/oval_xml.py emits
-definition/criteria rows; tests/objects/states arrive the same way from
+four relational frames a scan of the landed OVAL feed produces
+(definition/criteria rows; tests/objects/states arrive the same way from
 their element kinds).  All stages are Catalyst expressions; the dimension
 frames are small relative to definitions at real feed sizes, so the
 resolution joins broadcast.

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vunnel_spark.sinks.writers import EnvelopeWriter, envelope, first_observed_merge
-from vunnel_spark.sources import read_nested_json
 
 SECDB_SCHEMA = (
     "distro string, urlprefix string, apkurl string, "
@@ -34,7 +33,7 @@ SECDB_SCHEMA = (
 
 
 def scan(spark: SparkSession, path: str) -> DataFrame:
-    return read_nested_json(spark, path, SECDB_SCHEMA)
+    return spark.read.schema(SECDB_SCHEMA).option("multiLine", "true").json(path)
 
 
 def explode_fixes(db: DataFrame) -> DataFrame:

@@ -247,8 +247,7 @@ def kev1(spark, sf_dir):
     doc="EPSS provider DAG end-to-end (reference providers/epss/"
         "manager.py:64-134): the S5 CSV-with-comment-header scan shape — "
         "float score casts, the '#…score_date' comment lifted into a "
-        "literal column (read_csv_with_comment_header, unit-tested in "
-        "tests/test_sources.py), one record per CVE with its percentile; "
+        "literal column, one record per CVE with its percentile; "
         "percent_rank is rank-based so ties stay deterministic.  "
         "percentile-of-corpus is inherently global, but the plan is NOT a "
         "single-partition window (the last one in the registry, retired "

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.operators.skew import salted_agg, salted_join
+from vunnel_spark.operators.joins import salted_join
+from vunnel_spark.operators.skew import salted_agg
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
 
@@ -51,7 +52,7 @@ def h1(spark, sf_dir):
     SELECT d.doc_id, d.lang, dim.lang_total, dim.lang_avg_chars
     FROM documents d JOIN dim USING (lang)
     """,
-    doc="Replicate-and-salt skewed equi-join (operators/skew.py "
+    doc="Replicate-and-salt skewed equi-join (operators/joins.py "
         "salted_join): every document joins its per-lang dim row; the big "
         "side salts deterministically on doc_id, the 5-row dim explodes x8 "
         "so each (lang, salt) bucket finds its row, and the merge hint "
@@ -68,5 +69,5 @@ def h2(spark, sf_dir):
     )
     return salted_join(
         docs.select("doc_id", "lang"), dim, on=["lang"],
-        big_salt_src="doc_id", num_buckets=_BUCKETS,
+        n_salts=_BUCKETS, salt_src="doc_id", merge_hint=True,
     ).select("doc_id", "lang", "lang_total", "lang_avg_chars")

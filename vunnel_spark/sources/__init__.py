@@ -1,22 +1,8 @@
-"""Explicit-schema source readers (SURVEY §2.1).
+"""The landing zone's keyed input cache (SURVEY S15).
 
-Production rule: schema-on-read with EXPLICIT StructTypes, never inference
-(inference reads the data twice and drifts silently).  The fetch tier
-(HTTP retry, git clone, archive extract — S7-S11) stays driver-side plain
-Python by design; Spark reads the landing zone.
+Fetching (HTTP retry, git clone, OCI pull, archive extract, cursors —
+S7-S11) is driver-side plain Python outside this engine: Spark reads the
+files a fetch lands, with explicit schemas, in the pipeline that owns them.
 """
 
-from vunnel_spark.sources.archive import (  # noqa: F401
-    read_tar_members,
-    safe_extract,
-)
-from vunnel_spark.sources.cursor import CursorCheckpoint, paginate  # noqa: F401
-from vunnel_spark.sources.git import GitLanding  # noqa: F401
 from vunnel_spark.sources.kv_cache import KVCache  # noqa: F401
-from vunnel_spark.sources.oci import fetch_oci_artifact  # noqa: F401
-from vunnel_spark.sources.oval_xml import read_oval_xml  # noqa: F401
-from vunnel_spark.sources.readers import (  # noqa: F401
-    read_csv_with_comment_header,
-    read_jsonl,
-    read_nested_json,
-)
