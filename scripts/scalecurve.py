@@ -204,7 +204,7 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
     # identified as a duplicate of a family member
     cents = train_ivf_centroids(corpus, nlist=nlist)
     dt, rows = _timed(
-        lambda: semantic_dedup(corpus, cents, threshold=0.95, nprobe=2)
+        lambda: semantic_dedup(corpus, cents, nprobe=2)
         .filter(
             (F.col("dropped_id") >= base)
             & family_match("dropped_id", "kept_id")
@@ -221,7 +221,7 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
 
     # --- n5 IVF retrieval, scaled nlist (reuses the trained centroids)
     dt, rows = _timed(
-        lambda: ivf_topk(corpus, planted, cents, k=1, nprobe=4)
+        lambda: ivf_topk(corpus, planted, cents, k=1)
         .filter(
             (F.col("cos_sim") >= 0.9)
             & family_match("query_id", "neighbor_id")
@@ -252,13 +252,13 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
     # --- n8's scale path MEASURED: IVF+PQ (n9's operator) on n8's
     # trained-codebook workload — coarse quantizer prunes the lists,
     # ADC shortlist k=16, exact-cosine rerank surfaces the family
-    books = train_pq_codebooks(corpus, m=8, ks=16, dim=64)
+    books = train_pq_codebooks(corpus)
     corpus_vecs = corpus.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     )
 
     def _ivfpq_rerank():
-        short = ivf_pq_topk(corpus, planted, cents, books, k=16, nprobe=4)
+        short = ivf_pq_topk(corpus, planted, cents, books, k=16)
         from vunnel_spark.functions.vectors import cosine
 
         qv = planted.select(
@@ -327,7 +327,7 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
 
     dt, rows = _timed(
         lambda: embedding_dup_pairs(
-            corpus, threshold=0.9, n_tables=4, n_bits=bits
+            corpus, threshold=0.9, n_bits=bits
         )
         .filter(family_match("id_a", "id_b"))
         .select(F.explode(F.array("id_a", "id_b")).alias("v"))
@@ -381,7 +381,7 @@ def run_d7_scaled(sf_dir: str, out_json: str) -> None:
     bits = scaled_bits(n_corpus)
     dt, found = _timed(
         lambda: embedding_dup_pairs(
-            corpus, threshold=0.9, n_tables=4, n_bits=bits
+            corpus, threshold=0.9, n_bits=bits
         )
         .filter((F.col("id_a") % family) == (F.col("id_b") % family))
         .select(F.explode(F.array("id_a", "id_b")).alias("v"))

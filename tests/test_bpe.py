@@ -14,7 +14,6 @@ from vunnel_spark.operators.bpe import (
     bpe_train,
     merge_pair,
     pair_counts,
-    to_symbols,
     word_counts,
 )
 
@@ -77,20 +76,14 @@ def test_bpe_degenerate_docs(spark):
 
 
 def test_merge_pair_is_greedy_left_to_right(spark):
-    sw = to_symbols(
-        spark.createDataFrame([("aaa", 1)], "word string, freq long"),
-        eow=False,
-    )
+    sw = spark.createDataFrame([(["a", "a", "a"], 1)], "symbols array<string>, freq long")
     out = merge_pair(sw, "a", "a").collect()[0]["symbols"]
     assert out == ["aa", "a"]  # not ["a", "aa"], not ["aa", "aa"]
 
 
 def test_pair_counts_weighted_by_word_freq(spark):
-    sw = to_symbols(
-        spark.createDataFrame(
-            [("ab", 3), ("ba", 2)], "word string, freq long"
-        ),
-        eow=False,
+    sw = spark.createDataFrame(
+        [(["a", "b"], 3), (["b", "a"], 2)], "symbols array<string>, freq long"
     )
     got = {(r["a"], r["b"]): r["cnt"] for r in pair_counts(sw).collect()}
     assert got == {("a", "b"): 3, ("b", "a"): 2}

@@ -15,7 +15,7 @@ from vunnel_spark.operators.clustering import (
 from vunnel_spark.operators.similarity import fixed_centroids
 from vunnel_spark.session import load_table
 
-_CENTS = fixed_centroids(8, 64)
+_CENTS = fixed_centroids()
 
 
 def test_kmeans_fit_inertia_monotone(spark, sf_dir):

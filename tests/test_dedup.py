@@ -123,7 +123,7 @@ def test_semantic_dedup_keep_lowest_and_best_match(spark):
     # one centroid: everything lands in a single cell -> pure semantics test
     out = {
         r.dropped_id: (r.kept_id, r.cos_sim)
-        for r in semantic_dedup(df, [[0.5, 0.5]], threshold=0.95).collect()
+        for r in semantic_dedup(df, [[0.5, 0.5]]).collect()
     }
     assert set(out) == {2, 4}
     assert out[2][0] == 1
@@ -150,13 +150,13 @@ def test_shared_span_pairs_exact_runs(spark):
     )
     out = {
         (r.id_a, r.id_b): r.span_tokens
-        for r in shared_span_pairs(docs, k=3, min_span_tokens=8).collect()
+        for r in shared_span_pairs(docs, min_span_tokens=8).collect()
     }
     assert out[(1, 2)] == 10 and out[(1, 4)] == 10 and out[(2, 4)] == 10
     assert not any(3 in pair for pair in out)
 
     # below-threshold spans are excluded; k-1 overlap never counts as a run
-    none = shared_span_pairs(docs, k=3, min_span_tokens=11).collect()
+    none = shared_span_pairs(docs, min_span_tokens=11).collect()
     assert none == []
 
 
@@ -169,8 +169,8 @@ def test_shared_span_pairs_freq_cap_splits_runs(spark):
     rows = [(i, f"p{i} {span} q{i}") for i in range(6)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     # every span shingle occurs 6x; cap=5 drops them all -> no pairs
-    assert shared_span_pairs(docs, k=3, min_span_tokens=5, max_shingle_freq=5).collect() == []
-    out = shared_span_pairs(docs, k=3, min_span_tokens=5, max_shingle_freq=6).collect()
+    assert shared_span_pairs(docs, min_span_tokens=5, max_shingle_freq=5).collect() == []
+    out = shared_span_pairs(docs, min_span_tokens=5, max_shingle_freq=6).collect()
     assert len(out) == 15  # all C(6,2) pairs share the full 8-token span
     assert all(r.span_tokens == 8 for r in out)
 
@@ -230,7 +230,7 @@ def test_shared_span_pairs_matches_dp_reference(spark):
         )
         got = {
             (r.id_a, r.id_b): r.span_tokens
-            for r in shared_span_pairs(docs, k=3, min_span_tokens=4).collect()
+            for r in shared_span_pairs(docs, min_span_tokens=4).collect()
         }
         want = {}
         for i in toks:

@@ -13,8 +13,8 @@ at an external gate three weeks later.
 The reachability and options lints at the end are source-level rather
 than oracle-level: product code that only tests reach fails the first
 unless ``ALLOWED`` records why it stays, and a defaulted parameter or
-environment knob that no execution root sets fails the second unless
-``ALLOWED_OPTIONS`` does.
+environment knob that no execution root sets (to anything but its
+default) fails the second unless ``ALLOWED_OPTIONS`` does.
 
 Known-but-unlinted hazard (round 8, llm1): ``round(avg(<double>), n)``
 over GROUPS is accumulation-order-sensitive — Spark's partial-sum merge
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import ast
 import re
+import textwrap
 from pathlib import Path
 
 from vunnel_spark.registry import REGISTRY, _ensure_loaded
@@ -311,15 +312,17 @@ def _is_staticmethod(fn: ast.AST) -> bool:
     return any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
 
 
-def _defaulted(fn, method: bool) -> list[tuple[str, int | None]]:
+def _defaulted(fn, method: bool) -> list[tuple[str, int | None, ast.expr]]:
     """``fn``'s defaulted parameters as (name, positional index or None
-    for keyword-only); a method's index does not count self/cls."""
+    for keyword-only, default); a method's index does not count
+    self/cls."""
     a = fn.args
     positional = a.posonlyargs + a.args
     skip = 1 if method and not _is_staticmethod(fn) else 0
     first = len(positional) - len(a.defaults)
-    out = [(p.arg, i - skip) for i, p in enumerate(positional) if i >= first]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    out = [(p.arg, i - skip, d) for i, (p, d) in
+           enumerate(zip(positional[first:], a.defaults), first)]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return out
 
 
@@ -333,22 +336,126 @@ def _env_reads(tree: ast.AST):
             yield sub.args[0].value
 
 
+#: a value the lint cannot evaluate: a forwarded name, an expression,
+#: ``*args``/``**kwargs``, or a default it cannot read
+_UNKNOWN = object()
+
+
+def _value(node: ast.expr, constants: dict):
+    """``node``'s value if it is a literal or a module constant of its
+    file, else ``_UNKNOWN``."""
+    if isinstance(node, ast.Name):
+        return constants.get(node.id, _UNKNOWN)
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _UNKNOWN
+
+
+def _constants(tree: ast.Module) -> dict:
+    """The module constants of ``tree``: names bound once at module level,
+    to a literal."""
+    bound: dict[str, list] = {}
+    for stmt in tree.body:
+        if isinstance(stmt, ast.Assign):
+            targets, value = stmt.targets, stmt.value
+        elif isinstance(stmt, (ast.AnnAssign, ast.AugAssign)):
+            targets, value = [stmt.target], getattr(stmt, "value", None)
+        else:
+            continue
+        for target in targets:
+            if isinstance(target, ast.Name):
+                bound.setdefault(target.id, []).append(value)
+    return {
+        name: v for name, values in bound.items() if len(values) == 1
+        and values[0] is not None and (v := _value(values[0], {})) is not _UNKNOWN
+    }
+
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef,
+           ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _bound(scope: ast.AST) -> set[str]:
+    """The names bound anywhere inside ``scope``: parameters, assignment
+    and loop targets, imports, nested defs.  Over-counting is safe: a
+    shadowed name is read as ``_UNKNOWN``, which counts as set."""
+    out = set()
+    for sub in ast.walk(scope):
+        if isinstance(sub, ast.arg):
+            out.add(sub.arg)
+        elif isinstance(sub, ast.Name) and not isinstance(sub.ctx, ast.Load):
+            out.add(sub.id)
+        elif isinstance(sub, ast.alias):
+            out.add(sub.asname or sub.name.split(".")[0])
+        elif isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(sub.name)
+    return out
+
+
+def _shadowed(node: ast.AST) -> dict[int, set[str]]:
+    """For each call in ``node`` (by ``id``), the names its enclosing
+    functions, classes and comprehensions bind, which hide a module
+    constant of the same name."""
+    out: dict[int, set[str]] = {}
+    for scope in ast.walk(node):
+        if isinstance(scope, _SCOPES):
+            names = _bound(scope)
+            for sub in ast.walk(scope):
+                if isinstance(sub, ast.Call):
+                    out.setdefault(id(sub), set()).update(names)
+    return out
+
+
+def _external(tree: ast.Module) -> set[str]:
+    """The names ``tree`` imports from outside vunnel_spark (``gc``, ``np``,
+    ``F``, ...), anywhere in the file."""
+    out = set()
+    for sub in ast.walk(tree):
+        if isinstance(sub, ast.Import):
+            out |= {a.asname or a.name.split(".")[0] for a in sub.names
+                    if a.name.split(".")[0] != "vunnel_spark"}
+        elif (isinstance(sub, ast.ImportFrom) and not sub.level
+              and sub.module.split(".")[0] != "vunnel_spark"):
+            out |= {a.asname or a.name for a in sub.names}
+    return out
+
+
+def _receiver(func: ast.expr) -> str | None:
+    """The name a call's callee hangs off: ``x`` for ``x.f`` or ``x.y.f``,
+    ``f`` for a bare ``f``, else None."""
+    while isinstance(func, ast.Attribute):
+        func = func.value
+    return func.id if isinstance(func, ast.Name) else None
+
+
+def _differs(value, default) -> bool:
+    return (value is _UNKNOWN or default is _UNKNOWN
+            or type(value) is not type(default) or value != default)
+
+
 class _Calls:
-    """What the calls in some code pass, by callee name: keywords, the
-    longest positional list, and whether ``*args``/``**kwargs`` forward
-    everything.  ``partial(f, ...)`` counts as a call of ``f``, and a call
-    through ``from m import f as g`` as one of ``f``."""
+    """What the calls in some code pass, by callee name: per call, the
+    positional values, the keyword values, and whether ``*args`` /
+    ``**kwargs`` forward everything.  A literal or a module constant of
+    the calling file is a value, unless a function, class or
+    comprehension around the call binds the same name; anything else is
+    ``_UNKNOWN``.
+    ``partial(f, ...)`` counts as a call of ``f``, and a call through
+    ``from m import f as g`` as one of ``f``.  A call whose callee hangs
+    off a name imported from outside vunnel_spark (``gc.collect(n)``,
+    ``np.random.shuffle(x)``) calls no vunnel_spark def and is skipped."""
 
     def __init__(self):
-        self.keywords: dict[str, set[str]] = {}
-        self.positional: dict[str, int] = {}
-        self.star: set[str] = set()
-        self.starstar: set[str] = set()
+        self.calls: dict[str, list[tuple[list, bool, dict, bool]]] = {}
         self.strings: set[str] = set()
         self.aliases: dict[str, set[str]] = {}
 
-    def add(self, nodes) -> None:
+    def add(self, nodes, module: ast.Module) -> None:
+        """Record the calls in ``nodes``, which sit in the file ``module``."""
+        constants, external = _constants(module), _external(module)
         for node in nodes:
+            shadowed = _shadowed(node)
             for sub in ast.walk(node):
                 if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
                     self.strings.add(sub.value)
@@ -360,53 +467,60 @@ class _Calls:
                 if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
                     func, args = args[0], args[1:]
                 name = getattr(func, "id", getattr(func, "attr", None))
-                if name is None:
+                if name is None or _receiver(func) in external:
                     continue
-                if any(isinstance(a, ast.Starred) for a in args):
-                    self.star.add(name)
-                n = sum(not isinstance(a, ast.Starred) for a in args)
-                self.positional[name] = max(self.positional.get(name, 0), n)
-                for kw in sub.keywords:
-                    if kw.arg is None:
-                        self.starstar.add(name)
-                    else:
-                        self.keywords.setdefault(name, set()).add(kw.arg)
+                hidden = shadowed.get(id(sub), set())
+                visible = {k: v for k, v in constants.items() if k not in hidden}
+                self.calls.setdefault(name, []).append((
+                    [_value(a, visible) for a in args if not isinstance(a, ast.Starred)],
+                    any(isinstance(a, ast.Starred) for a in args),
+                    {kw.arg: _value(kw.value, visible) for kw in sub.keywords if kw.arg},
+                    any(kw.arg is None for kw in sub.keywords),
+                ))
 
-    def sets(self, callee: str, param: str, index: int | None) -> bool:
-        return any(
-            param in self.keywords.get(name, ())
-            or name in self.starstar
-            or (index is not None and (name in self.star
-                                       or index < self.positional.get(name, 0)))
-            for name in {callee} | self.aliases.get(callee, set())
-        )
+    def sets(self, callee: str, param: str, index: int | None,
+             default=_UNKNOWN) -> bool:
+        """Whether some call of ``callee`` passes ``param`` (at ``index``
+        if positional) a value other than ``default``."""
+        for name in {callee} | self.aliases.get(callee, set()):
+            for positional, star, keywords, starstar in self.calls.get(name, ()):
+                values = [keywords[param]] if param in keywords else []
+                if index is not None and index < len(positional):
+                    values.append(positional[index])
+                if (starstar or (index is not None and star)
+                        or any(_differs(v, default) for v in values)):
+                    return True
+        return False
 
 
 def _options():
     """Every option of vunnel_spark/ as ``{key: (def key, callee names,
-    param, index)}``: a defaulted parameter of a top-level function
-    (``module.f.p``), method (``module.C.m.p``) or constructor
+    param, index, default)}``: a defaulted parameter of a top-level
+    function (``module.f.p``), method (``module.C.m.p``) or constructor
     (``module.C.__init__.p``, called as ``C`` or ``super().__init__``),
-    with ``module`` relative to vunnel_spark; or an environment variable
-    read with a default (key and param are its name, callees None)."""
+    with ``module`` relative to vunnel_spark and the default's value as
+    ``_value`` reads it; or an environment variable read with a default
+    (key and param are its name, callees None)."""
     out = {}
     for path, tree in _trees(sorted((_REPO / "vunnel_spark").rglob("*.py"))):
         module = ".".join(path.relative_to(_REPO).with_suffix("").parts)
         prefix = module.removeprefix("vunnel_spark.") + "."
+        constants = _constants(tree)
         for stmt in tree.body:
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                for p, i in _defaulted(stmt, method=False):
-                    out[f"{prefix}{stmt.name}.{p}"] = ((module, stmt.name), (stmt.name,), p, i)
+                for p, i, d in _defaulted(stmt, method=False):
+                    out[f"{prefix}{stmt.name}.{p}"] = (
+                        (module, stmt.name), (stmt.name,), p, i, _value(d, constants))
             elif isinstance(stmt, ast.ClassDef):
                 for fn in stmt.body:
                     if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                         continue
                     callees = (stmt.name, "__init__") if fn.name == "__init__" else (fn.name,)
-                    for p, i in _defaulted(fn, method=True):
+                    for p, i, d in _defaulted(fn, method=True):
                         out[f"{prefix}{stmt.name}.{fn.name}.{p}"] = (
-                            (module, stmt.name), callees, p, i)
+                            (module, stmt.name), callees, p, i, _value(d, constants))
         for name in _env_reads(tree):
-            out[name] = ((module, None), None, name, None)
+            out[name] = ((module, None), None, name, None, _UNKNOWN)
     return out
 
 
@@ -422,16 +536,19 @@ def _option_calls(defs, roots):
     reached = _reached(defs, roots | _allowed_roots(defs))
     for path, tree in _trees(sorted((_REPO / "vunnel_spark").rglob("*.py"))):
         module = ".".join(path.relative_to(_REPO).with_suffix("").parts)
+        nodes = []
         for stmt in tree.body:
             if (not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
                     or (module, stmt.name) in reached):
-                root.add([stmt])
+                nodes.append(stmt)
             else:
-                root.add(stmt.decorator_list)
+                nodes.extend(stmt.decorator_list)
+        root.add(nodes, tree)
     for _, tree in _trees(_root_files()):
-        root.add([tree])
-        files.add([tree])
-    test.add(tree for _, tree in _trees(sorted((_REPO / "tests").rglob("*.py"))))
+        root.add([tree], tree)
+        files.add([tree], tree)
+    for _, tree in _trees(sorted((_REPO / "tests").rglob("*.py"))):
+        test.add([tree], tree)
     return root, test, files, reached - _reached(defs, roots)
 
 
@@ -441,12 +558,13 @@ def _unset_options() -> list[str]:
     defs, roots = _scan()
     root, test, files, only_allowed = _option_calls(defs, roots)
     unset = []
-    for key, (owner, callees, param, index) in _options().items():
+    for key, (owner, callees, param, index, default) in _options().items():
         if callees is None:
             is_set = param in files.strings
         else:
             calls = (root, test) if owner in only_allowed else (root,)
-            is_set = any(c.sets(name, param, index) for c in calls for name in callees)
+            is_set = any(c.sets(name, param, index, default)
+                         for c in calls for name in callees)
         if not is_set:
             unset.append(key)
     return unset
@@ -493,6 +611,18 @@ ALLOWED_OPTIONS = {
         f"{_DEPLOY}: whether Ubuntu Pro (ESM) fixes are published"
     ),
     "sinks.writers.EnvelopeWriter.__init__.partition_by": f"{_DEPLOY}: store layout",
+    "sinks.bucketed.write_bucketed.num_buckets": (
+        f"{_DEPLOY}: bucket count, a layout contract (DEPLOY.md, bucketed fact tables)"
+    ),
+    "operators.joins.salted_join.n_salts": f"{_DEPLOY}: salt count (DEPLOY.md skew playbook)",
+    "operators.dedup.shared_span_pairs.min_span_tokens": (
+        f"{_SEAM}: the span tests check run detection on documents shorter "
+        "than d10's 15-token threshold"
+    ),
+    "worker_daemon._FreezingGC.collect.generation": (
+        "mirrors gc.collect's signature: it stands in for the gc module, "
+        "whose callers may pass a generation"
+    ),
     "streaming.joins.interval_join.watermark": f"{_DEPLOY}: lateness bound",
 }
 
@@ -500,11 +630,20 @@ ALLOWED_OPTIONS = {
 def test_options_are_set_or_allowed():
     """Every option of vunnel_spark/ is set by an execution root (for
     code only ``ALLOWED`` keeps: by a test), or is kept by an
-    ``ALLOWED_OPTIONS`` entry that says why.  An option nothing sets is
-    a branch nothing runs: inline its default, or record the reason it
-    stays.  Calls match by name and any ``*args``/``**kwargs`` forward
-    everything, so the lint can miss an unused option but never flags
-    one a root passes.  Pure AST walk, no Spark."""
+    ``ALLOWED_OPTIONS`` entry that says why.  An option nothing sets, or
+    that every caller sets to its default, is a branch nothing runs:
+    inline its default, or record the reason it stays.
+
+    Two rules decide what a call sets.  First, a call sets an option
+    only when it passes a value other than the default: a literal, or a
+    module constant of the calling file that no function, class or
+    comprehension around the call rebinds, equal to the default sets
+    nothing.  Second, a call ``x.f(...)`` whose ``x`` is imported from
+    outside vunnel_spark (``gc.collect(n)``) calls no vunnel_spark def
+    named ``f``.  Other calls match by name, and a forwarded name, an
+    expression or ``*args``/``**kwargs`` counts as setting a value, so
+    the lint can miss an unused option but never flags one a root
+    passes.  Pure AST walk, no Spark."""
     unset = _unset_options()
     missing = sorted(k for k in unset if k not in ALLOWED_OPTIONS)
     assert not missing, (
@@ -518,3 +657,76 @@ def test_options_are_set_or_allowed():
     assert not gone, f"ALLOWED_OPTIONS names options that no longer exist: {gone}"
     stale = sorted(k for k in ALLOWED_OPTIONS if k not in unset)
     assert not stale, f"ALLOWED_OPTIONS entries the execution roots set anyway: {stale}"
+
+
+def _synthetic_calls(source: str) -> _Calls:
+    tree = ast.parse(textwrap.dedent(source))
+    calls = _Calls()
+    calls.add([tree], tree)
+    return calls
+
+
+def test_options_lint_counts_default_values_as_unset():
+    """Rule one on synthetic input: for ``f(x, n=16)``, a call passing 16
+    as a literal or as a module constant of its file sets nothing; 8 sets
+    ``n``, and so does a name bound twice (not a constant)."""
+    literal = _synthetic_calls("""
+        f(x, n=16)
+        f(x, 16)
+    """)
+    assert not literal.sets("f", "n", 1, 16)
+    constant = _synthetic_calls("""
+        _N = 16
+        f(x, n=_N)
+        f(x, _N)
+    """)
+    assert not constant.sets("f", "n", 1, 16)
+    assert _synthetic_calls("f(x, n=8)").sets("f", "n", 1, 16)
+    assert _synthetic_calls("""
+        _N = 16
+        _N = 8
+        f(x, n=_N)
+    """).sets("f", "n", 1, 16)
+
+
+def test_options_lint_skips_calls_into_imported_modules():
+    """Rule two on synthetic input: ``gc.collect(n)`` and
+    ``np.random.shuffle(a, b)`` call no vunnel_spark def, so they set no
+    option of a method named ``collect`` or ``shuffle``; the same call on
+    an object the lint cannot resolve still does."""
+    external = _synthetic_calls("""
+        import gc
+        import numpy as np
+
+        def collect(generation):
+            gc.collect(generation)
+            np.random.shuffle(generation, 3)
+    """)
+    assert not external.sets("collect", "generation", 0, 2)
+    assert not external.sets("shuffle", "n", 1, 1)
+    assert _synthetic_calls("self.gc.collect(generation)").sets("collect", "generation", 0, 2)
+
+
+def test_options_lint_counts_unknown_values_as_set():
+    """What the lint cannot evaluate counts as set: a forwarded name (also
+    one that hides a module constant equal to the default), an
+    expression, ``**kwargs`` and (for a positional parameter) ``*args``."""
+    assert _synthetic_calls("def g(n):\n    f(x, n=n)").sets("f", "n", 1, 16)
+    assert _synthetic_calls("""
+        _N = 16
+
+        def g(_N):
+            f(x, n=_N)
+    """).sets("f", "n", 1, 16)
+    assert _synthetic_calls("""
+        _N = 16
+
+        def g():
+            _N = 8
+            f(x, _N)
+    """).sets("f", "n", 1, 16)
+    assert _synthetic_calls("_N = 16\n[f(x, n=_N) for _N in (8,)]").sets("f", "n", 1, 16)
+    assert _synthetic_calls("f(x, n=4 * 4)").sets("f", "n", 1, 16)
+    assert _synthetic_calls("f(x, **kw)").sets("f", "n", 1, 16)
+    assert _synthetic_calls("f(*args)").sets("f", "n", 1, 16)
+    assert not _synthetic_calls("f(*args)").sets("f", "n", None, 16)

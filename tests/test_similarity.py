@@ -61,7 +61,7 @@ def test_ivf_retrieves_planted_dups_rank1(spark, emb, centroids):
     cents = train_ivf_centroids(corpus, nlist=8)
     n_planted = planted.count()
     hits = (
-        ivf_topk(corpus, planted, cents, k=1, nprobe=4)
+        ivf_topk(corpus, planted, cents, k=1)
         .filter(F.col("neighbor_id") == F.col("query_id") - 10_000)
         .count()
     )
@@ -72,7 +72,7 @@ def test_ivf_join_is_equi_on_cell_no_cartesian(spark, emb, centroids):
     from vunnel_spark.operators.similarity import ivf_topk
 
     queries = emb.filter(F.col("vec_id") < 4)
-    p = plan_of(ivf_topk(emb, queries, centroids, k=3, nprobe=2))
+    p = plan_of(ivf_topk(emb, queries, centroids, k=3))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -84,7 +84,7 @@ def test_ivf_join_is_equi_on_cell_no_cartesian(spark, emb, centroids):
 def pq_books(spark, emb):
     from vunnel_spark.operators.similarity import train_pq_codebooks
 
-    return train_pq_codebooks(emb, m=8, ks=16)
+    return train_pq_codebooks(emb)
 
 
 def test_pq_encode_shape_and_range(spark, emb, pq_books):
@@ -145,8 +145,8 @@ def test_ivfpq_candidates_are_cell_equi_join(spark, emb, pq_books):
     from vunnel_spark.operators.similarity import fixed_centroids, ivf_pq_topk
 
     queries = emb.filter(F.col("vec_id") < 8)
-    cents = fixed_centroids(8, 64)
-    p = plan_of(ivf_pq_topk(emb, queries, cents, pq_books, k=5, nprobe=4))
+    cents = fixed_centroids()
+    p = plan_of(ivf_pq_topk(emb, queries, cents, pq_books, k=5))
     assert "BroadcastHashJoin" in p, p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, p
 
@@ -159,12 +159,12 @@ def test_ivfpq_subset_of_pq_ranking(spark, emb, pq_books):
     )
 
     queries = emb.filter(F.col("vec_id") < 8)
-    cents = fixed_centroids(8, 64)
+    cents = fixed_centroids()
     full = {
         (r.query_id, r.neighbor_id): r.adc_dist
         for r in pq_adc_topk(emb, queries, pq_books, k=500).collect()
     }
-    pruned = ivf_pq_topk(emb, queries, cents, pq_books, k=5, nprobe=4).collect()
+    pruned = ivf_pq_topk(emb, queries, cents, pq_books, k=5).collect()
     assert len(pruned) > 0
     for r in pruned:
         assert full[(r.query_id, r.neighbor_id)] == r.adc_dist

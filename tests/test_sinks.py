@@ -5,6 +5,9 @@ modes; first-observed merge idempotence; checksum listing tamper detection.
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
@@ -489,3 +492,34 @@ def test_compact_partitions_recovers_parked_backup(spark, tmp_path):
         ("a", 1), ("b", 2)
     }
     assert not os.path.exists(store + ".__old__")
+
+
+_SCRATCH_SCRIPT = """
+import os, sys
+from vunnel_spark.queries._util import scratch_dir
+
+store = scratch_dir("s12_")
+open(os.path.join(store, "part-0"), "w").write("rows")
+root = os.path.dirname(store)
+if os.fork() == 0:
+    sys.exit(0)  # a forked child exits normally and runs its atexit hooks
+os.wait()
+print(root, os.path.isfile(os.path.join(store, "part-0")))
+"""
+
+
+def test_scratch_dirs_go_when_their_process_exits(tmp_path):
+    """Query-build stores live under one per-process root in the temp
+    dir: a forked child's exit leaves it, the owning process's exit
+    removes it.  Subprocess only, no Spark session."""
+    repo = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_SCRIPT], capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": str(repo)},
+        cwd=repo, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    root, store_after_child = out.stdout.split()
+    assert Path(root).parent == tmp_path
+    assert store_after_child == "True"
+    assert not Path(root).exists()

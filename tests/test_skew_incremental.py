@@ -24,7 +24,7 @@ def test_salted_agg_equals_plain_groupby(spark, sf_dir):
         F.max("n_chars").alias("max_n_chars"),
     )
     salted = salted_agg(
-        docs.repartition(13), ["lang"], "doc_id", num_buckets=5,
+        docs.repartition(13), ["lang"], "doc_id",
         sum_cols=("n_chars",), max_cols=("n_chars",),
     )
     assert _rows(salted) == _rows(plain)

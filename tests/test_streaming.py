@@ -47,7 +47,6 @@ def test_stream_stream_interval_join_matches_batch(spark, event_stream_dir):
     joined = interval_join(
         lp.select("user_id", "ts", "event_id"),
         rc.select("user_id", "ts", "event_id"),
-        within="30 minutes",
         watermark="100 days",  # bounded-state knob; generous so none drop here
     )
     q = (
@@ -63,7 +62,6 @@ def test_stream_stream_interval_join_matches_batch(spark, event_stream_dir):
     expect = interval_join(
         purchases_s.select("user_id", "ts", "event_id"),
         clicks_s.select("user_id", "ts", "event_id"),
-        within="30 minutes",
     ).select("l_event_id", "r_event_id")
     assert out.count() > 0
     assert _as_sets(out, ["l_event_id", "r_event_id"]) == _as_sets(

@@ -10,7 +10,7 @@ from vunnel_spark.operators.temporal import asof_join, range_bucket_join
 
 
 def _ts(minute, second=0):
-    return dt.datetime(2024, 1, 1, 12, minute, second)
+    return dt.datetime(2024, 1, 1, 12) + dt.timedelta(minutes=minute, seconds=second)
 
 
 def test_asof_backward_semantics(spark):
@@ -23,7 +23,7 @@ def test_asof_backward_semantics(spark):
          (103, 2, _ts(4)), (104, 3, _ts(9))],
         "event_id long, user_id long, ts timestamp",
     )
-    rows = {r["event_id"]: r["v"] for r in asof_join(fact, dim, ["user_id"], "ts", ["v"]).collect()}
+    rows = {r["event_id"]: r["v"] for r in asof_join(fact, dim, ["user_id"], ["v"]).collect()}
     assert rows[100] == 10.0          # between versions -> earlier one
     assert rows[101] == 20.0          # equal ts -> inclusive (<=)
     assert rows[102] == 20.0          # after last version
@@ -36,13 +36,13 @@ def test_asof_preserves_fact_rowcount(spark):
     fact = spark.createDataFrame(
         [(i, 1, _ts(i)) for i in range(20)], "event_id long, user_id long, ts timestamp"
     )
-    assert asof_join(fact, dim, ["user_id"], "ts", ["v"]).count() == 20
+    assert asof_join(fact, dim, ["user_id"], ["v"]).count() == 20
 
 
 def test_asof_single_exchange(spark):
     dim = spark.createDataFrame([(1, _ts(0), 1.0)], "user_id long, ts timestamp, v double")
     fact = spark.createDataFrame([(1, 1, _ts(1))], "event_id long, user_id long, ts timestamp")
-    plan = asof_join(fact, dim, ["user_id"], "ts", ["v"])._jdf.queryExecution().executedPlan().toString()
+    plan = asof_join(fact, dim, ["user_id"], ["v"])._jdf.queryExecution().executedPlan().toString()
     # one hash-partitioning exchange on the key, no join operator at all
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
@@ -55,17 +55,18 @@ def test_range_bucket_join_boundaries(spark):
     pts = spark.createDataFrame(
         [(_ts(0),), (_ts(30),), (_ts(30, 1),), (_ts(15),)], "ts timestamp"
     )
-    got = range_bucket_join(pts, iv, "ts", "start_ts", "end_ts", 600).count()
+    got = range_bucket_join(pts, iv).count()
     assert got == 3  # inclusive both ends; 12:30:01 excluded
 
 
 def test_range_bucket_join_interval_spanning_many_buckets(spark):
     # interval longer than the bucket width still matches everything inside
+    # (12:00-16:00 spans nine 30-minute buckets; the points fall in eight)
     iv = spark.createDataFrame(
-        [(1, _ts(0), _ts(59))], "iid long, start_ts timestamp, end_ts timestamp"
+        [(1, _ts(0), _ts(240))], "iid long, start_ts timestamp, end_ts timestamp"
     )
-    pts = spark.createDataFrame([( _ts(m),) for m in range(0, 60, 7)], "ts timestamp")
-    got = range_bucket_join(pts, iv, "ts", "start_ts", "end_ts", 300).count()
+    pts = spark.createDataFrame([(_ts(m),) for m in range(0, 240, 28)], "ts timestamp")
+    got = range_bucket_join(pts, iv).count()
     assert got == 9
 
 
@@ -107,7 +108,7 @@ def test_asof_matches_pandas_merge_asof(spark):
     fact = spark.createDataFrame(fact_rows, "event_id long, user_id long, ts timestamp")
     got = {
         r["event_id"]: r["v"]
-        for r in asof_join(fact, dim, ["user_id"], "ts", ["v"]).collect()
+        for r in asof_join(fact, dim, ["user_id"], ["v"]).collect()
     }
 
     pdim = pd.DataFrame(dim_rows, columns=["user_id", "ts", "v"]).sort_values("ts")
@@ -146,7 +147,6 @@ def test_interval_join_matches_bruteforce(spark):
         for r in interval_join(
             left.select("user_id", "ts", "event_id"),
             right.select("user_id", "ts", "event_id"),
-            within="30 minutes",
         ).collect()
     }
     within = dt.timedelta(minutes=30)

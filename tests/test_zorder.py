@@ -27,13 +27,13 @@ _DAY_BOX = (
 
 
 def test_z_value_is_morton_interleave(spark):
-    # equal widths: textbook Morton pairs
+    # below 2^5 both columns keep every bit: textbook Morton pairs
     df = spark.createDataFrame(
         [(0, 0), (1, 0), (0, 1), (1, 1), (2, 0), (3, 3)], "a long, b long"
     )
     out = {
         (r["a"], r["b"]): r["z"]
-        for r in df.select("a", "b", z_value("a", "b", 4, 4).alias("z")).collect()
+        for r in df.select("a", "b", z_value("a", "b").alias("z")).collect()
     }
     assert out == {(0, 0): 0, (1, 0): 1, (0, 1): 2, (1, 1): 3, (2, 0): 4, (3, 3): 15}
 
@@ -43,7 +43,7 @@ def test_zorder_prunes_more_files_than_linear(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="zorder_test_")
     zp, lp = os.path.join(root, "z"), os.path.join(root, "lin")
     write_clustered(
-        ev, zp, z_value("user_id", F.dayofmonth("ts"), 11, 5), n_files=32
+        ev, zp, z_value("user_id", F.dayofmonth("ts")), n_files=32
     )
     write_clustered(ev, lp, F.col("ts"), n_files=32)
     user_box = (2, 3)
@@ -102,7 +102,7 @@ def test_z_value_matches_python_reference_property(spark):
     df = spark.createDataFrame(cases, "a long, b long")
     got = {
         (r["a"], r["b"]): r["z"]
-        for r in df.select("a", "b", z_value("a", "b", 11, 5).alias("z")).collect()
+        for r in df.select("a", "b", z_value("a", "b").alias("z")).collect()
     }
     for a, b in cases:
         assert got[(a, b)] == ref(a, b, 11, 5), (a, b)

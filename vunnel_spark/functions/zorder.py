@@ -10,10 +10,10 @@ folded shifts — used ONLY at write time to cluster rows; readers filter
 on the original columns and get the benefit through ordinary parquet
 min/max pruning, with zero reader-side changes.
 
-Bit widths are per-dimension knobs: choose them to cover the domain
-(values beyond 2^bits wrap via the mask, which only loosens clustering
-for the wrapped keys, never correctness — membership still comes from
-the real columns at read time).
+Bit widths are 11 and 5 (user ids, days of month): values beyond 2^bits
+wrap via the mask, which only loosens clustering for the wrapped keys,
+never correctness — membership still comes from the real columns at
+read time.
 """
 
 from __future__ import annotations
@@ -28,23 +28,23 @@ from pyspark.sql import functions as F
 # write_clustered (concurrent clustered writes would race on the conf)
 _TS_CONF_LOCK = threading.Lock()
 
+#: low bits of each z_value column that the interleave keeps
+_BITS_A, _BITS_B = 11, 5
 
-def z_value(
-    col_a: str | Column, col_b: str | Column, bits_a: int = 11, bits_b: int = 5
-) -> Column:
-    """Morton-interleave the low ``bits_a``/``bits_b`` bits of two
-    non-negative integer columns into one sortable long."""
+
+def z_value(col_a: str | Column, col_b: str | Column) -> Column:
+    """Morton-interleave the low 11 bits of one non-negative integer
+    column and the low 5 of another into one sortable long."""
     a = (F.col(col_a) if isinstance(col_a, str) else col_a).cast("long")
     b = (F.col(col_b) if isinstance(col_b, str) else col_b).cast("long")
-    a = a.bitwiseAND(F.lit((1 << bits_a) - 1))
-    b = b.bitwiseAND(F.lit((1 << bits_b) - 1))
+    a = a.bitwiseAND(F.lit((1 << _BITS_A) - 1))
+    b = b.bitwiseAND(F.lit((1 << _BITS_B) - 1))
     terms = []
     pos = 0
-    for i in range(max(bits_a, bits_b)):
-        if i < bits_a:
-            terms.append(F.shiftright(a, i).bitwiseAND(F.lit(1)) * F.lit(1 << pos))
-            pos += 1
-        if i < bits_b:
+    for i in range(_BITS_A):
+        terms.append(F.shiftright(a, i).bitwiseAND(F.lit(1)) * F.lit(1 << pos))
+        pos += 1
+        if i < _BITS_B:
             terms.append(F.shiftright(b, i).bitwiseAND(F.lit(1)) * F.lit(1 << pos))
             pos += 1
     out = terms[0]

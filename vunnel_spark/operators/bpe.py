@@ -45,15 +45,14 @@ def word_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def to_symbols(words: DataFrame, eow: bool = True) -> DataFrame:
+def to_symbols(words: DataFrame) -> DataFrame:
     """(symbols: array<string>, freq): each word as its character
-    symbols, optionally with the end-of-word sentinel appended."""
+    symbols with the end-of-word sentinel appended."""
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)),
     )
-    symbols = F.concat(chars, F.array(F.lit(EOW))) if eow else chars
-    return words.select(symbols.alias("symbols"), "freq")
+    return words.select(F.concat(chars, F.array(F.lit(EOW))).alias("symbols"), "freq")
 
 
 def pair_counts(symbol_words: DataFrame) -> DataFrame:

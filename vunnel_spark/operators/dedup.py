@@ -28,11 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: word-shingle width of the Jaccard, containment and MinHash operators
+#: word-shingle width of every shingling operator
 SHINGLE_K = 3
-#: MinHash signature length and band count of the incremental LSH index;
+#: LSH band count, and the MinHash length of the incremental LSH index;
 #: the index writer and the batch probe must agree on both
-INDEX_HASHES, INDEX_BANDS = 64, 16
+LSH_BANDS, INDEX_HASHES = 16, 64
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -84,14 +84,13 @@ def fingerprint_dedup(df: DataFrame) -> DataFrame:
 def embedding_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
-    n_tables: int = 4,
     n_bits: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within LSH buckets.
 
-    Candidate pairs come from random-hyperplane bucket collisions
-    (operators/similarity.py) — a self-equi-join on (table, bucket), never
-    a cross join; cosine is then scored only on candidates.
+    Candidate pairs come from random-hyperplane bucket collisions in 4
+    tables (operators/similarity.py) — a self-equi-join on (table, bucket),
+    never a cross join; cosine is then scored only on candidates.
 
     Same shape discipline as minhash_lsh_pairs: bucket rows carry IDS
     ONLY (the round-11 sf10 push found the old shape — member lists with
@@ -106,7 +105,7 @@ def embedding_dup_pairs(
     from vunnel_spark.functions.vectors import cosine_hoisted, norm2
     from vunnel_spark.operators.similarity import add_lsh_buckets
 
-    b = add_lsh_buckets(df, n_tables, n_bits).select(
+    b = add_lsh_buckets(df, 4, n_bits).select(
         F.col("vec_id").alias("id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
@@ -197,12 +196,11 @@ def _spread(df: DataFrame) -> DataFrame:
 def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
-    threshold: float = 0.95,
     nprobe: int = 1,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     method): cluster embeddings with a k-means coarse quantizer, then
-    prune within-cluster pairs whose cosine exceeds ``threshold`` — the
+    prune within-cluster pairs whose cosine reaches 0.95 — the
     higher id of each such pair is marked dropped (keep-lowest, matching
     exact_dedup's survivor rule).
 
@@ -303,7 +301,7 @@ def semantic_dedup(
                 6,
             ),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= 0.95)
         .select("dropped_id", "kept_id", "cos_sim")
     )
     # a doc may match several kept docs in its cell; report its best match
@@ -348,13 +346,14 @@ def _word_shingles(df: DataFrame) -> DataFrame:
     )
 
 
-def _positioned_shingles(df: DataFrame, k: int) -> DataFrame:
+def _positioned_shingles(df: DataFrame) -> DataFrame:
     """(id, pos, shingle) word-k-gram rows WITH start positions (0-based).
 
     Unlike _word_shingles this keeps every occurrence — positions are the
     payload here — and drops documents shorter than k tokens (a span
     below shingle width is below any sensible min_span threshold).
     """
+    k = SHINGLE_K
     base = (
         _spread(df)
         .select(
@@ -374,9 +373,17 @@ def _positioned_shingles(df: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _capped(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
+    """``sh`` without the shingles that occur in more than
+    ``max_shingle_freq`` of its rows (all of it when the cap is unset)."""
+    if not max_shingle_freq:
+        return sh
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
+    return sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
+
+
 def shared_span_pairs(
     df: DataFrame,
-    k: int = 3,
     min_span_tokens: int = 15,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
@@ -386,11 +393,11 @@ def shared_span_pairs(
     paper's suffix array is a single-machine construction, this is the
     shuffle-native equivalent for the >= min_span regime).
 
-    A shared run of L >= k consecutive tokens appears as exactly L-k+1
-    matching k-shingles at consecutive positions with a CONSTANT position
-    offset between the two documents.  So: positioned shingles ->
-    equi-join on shingle (id_a < id_b) -> group by (pair, pos_a - pos_b)
-    -> gaps-and-islands (pos_a - row_number is constant within a
+    A shared run of L >= k (``SHINGLE_K``) consecutive tokens appears as
+    exactly L-k+1 matching k-shingles at consecutive positions with a
+    CONSTANT position offset between the two documents.  So: positioned
+    shingles -> equi-join on shingle (id_a < id_b) -> group by (pair,
+    pos_a - pos_b) -> gaps-and-islands (pos_a - row_number is constant within a
     consecutive run) -> longest island per pair + k - 1 tokens.
 
     Scale shape: candidate generation is the shingle equi-join — ONE
@@ -401,10 +408,7 @@ def shared_span_pairs(
     Returns (id_a, id_b, span_tokens) for pairs sharing a span of at
     least ``min_span_tokens`` tokens.
     """
-    sh = _positioned_shingles(df, k)
-    if max_shingle_freq:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-        sh = sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
+    sh = _capped(_positioned_shingles(df), max_shingle_freq)
     a, b = sh.alias("a"), sh.alias("b")
     matches = a.join(
         b,
@@ -422,9 +426,29 @@ def shared_span_pairs(
     )
     return (
         runs.groupBy("id_a", "id_b")
-        .agg((F.max("_run") + F.lit(k - 1)).alias("span_tokens"))
+        .agg((F.max("_run") + F.lit(SHINGLE_K - 1)).alias("span_tokens"))
         .filter(F.col("span_tokens") >= min_span_tokens)
     )
+
+
+def _shingle_overlap(df: DataFrame, max_shingle_freq: int | None) -> DataFrame:
+    """(id_a, id_b, n_common, n_a, n_b) for each document pair (id_a <
+    id_b) sharing a word shingle: the shared count and each side's
+    distinct shingle count, the inputs of Jaccard and containment.  The
+    pairs come from an equi-join on shingle after the ``_capped``
+    frequency cap."""
+    sh = _capped(_word_shingles(df), max_shingle_freq)
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    common = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
+    return common.join(sa, "id_a").join(sb, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -438,23 +462,8 @@ def ngram_jaccard_pairs(
     never meet).  ``max_shingle_freq`` drops ubiquitous shingles before the
     self-join — at scale this is what keeps the join linear-ish.
     """
-    sh = _word_shingles(df)
-    if max_shingle_freq:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-        sh = sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, max_shingle_freq)
         .withColumn(
             "jaccard",
             F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
@@ -484,23 +493,8 @@ def containment_pairs(
     reaches ``threshold``, decided on the ROUNDED value so any SQL
     oracle agrees.
     """
-    sh = _word_shingles(df)
-    if max_shingle_freq:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-        sh = sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, max_shingle_freq)
         .withColumn("containment_a", F.round(F.col("n_common") / F.col("n_a"), 6))
         .withColumn("containment_b", F.round(F.col("n_common") / F.col("n_b"), 6))
         .filter(
@@ -574,21 +568,21 @@ def minhash_signatures(df: DataFrame, num_hashes: int) -> DataFrame:
     return sh.groupBy("id").agg(F.expr(sig_expr).alias("sig"))
 
 
-def _band_buckets(df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _band_buckets(df: DataFrame, num_hashes: int) -> DataFrame:
     """(id, band, bucket) banded-LSH bucket rows for a document frame.
 
-    All ``bands`` bucket keys in ONE projection with literal band indices:
+    All ``LSH_BANDS`` bucket keys in ONE projection with literal band indices:
     xxhash64 directly over the band's signature longs.  (The first form
     exploded 16 band rows per doc and then built a per-row STRING from a
     runtime slice — cast + concat_ws dominated the stage; hashing fixed-
     width longs is ~3x cheaper and the explode now carries a precomputed
     16-long array instead of the 64-long signature.)
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = num_hashes // LSH_BANDS
     sig = minhash_signatures(df, num_hashes)
     # one parse for the whole bucket array (see minhash_signatures)
     bucket_sqls = []
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         elems = ", ".join(
             f"element_at(sig, {b * rows_per_band + i + 1})"
             for i in range(rows_per_band)
@@ -612,7 +606,7 @@ def write_lsh_index(
     Append new batches' buckets with ``mode="append"`` after probing so
     the next batch sees them.
     """
-    _band_buckets(df, INDEX_HASHES, INDEX_BANDS).write.mode(mode).parquet(path)
+    _band_buckets(df, INDEX_HASHES).write.mode(mode).parquet(path)
 
 
 def minhash_lsh_pairs_incremental(
@@ -632,7 +626,7 @@ def minhash_lsh_pairs_incremental(
     """
     spark = new_docs.sparkSession
     corpus = spark.read.parquet(index_path)
-    nb = _band_buckets(new_docs, INDEX_HASHES, INDEX_BANDS)
+    nb = _band_buckets(new_docs, INDEX_HASHES)
     return (
         corpus.withColumnRenamed("id", "corpus_id")
         .join(nb.withColumnRenamed("id", "new_id"), ["band", "bucket"])
@@ -645,10 +639,10 @@ def minhash_lsh_pairs_incremental(
 def minhash_lsh_pairs(
     df: DataFrame,
     num_hashes: int = 64,
-    bands: int = 16,
     verify_threshold: float | None = 0.5,
 ) -> DataFrame:
-    """MinHash + banded LSH candidate pairs, optionally Jaccard-verified.
+    """MinHash + banded LSH candidate pairs (``LSH_BANDS`` bands),
+    optionally Jaccard-verified.
 
     Band bucket key = hash(band_index, signature slice); candidates are
     pairs sharing >=1 bucket.  Pair generation groups ids per (band,
@@ -658,7 +652,7 @@ def minhash_lsh_pairs(
     (id, band, bucket) frame.  With 64 hashes / 16 bands (rows=4) the
     S-curve crosses ~0.5 Jaccard.
     """
-    buckets = _band_buckets(df, num_hashes, bands)
+    buckets = _band_buckets(df, num_hashes)
     grouped = (
         buckets.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_set("id")).alias("ids"))

@@ -180,12 +180,15 @@ def merge_histogram_state(states: list[DataFrame], keys: list[str]) -> DataFrame
     )
 
 
+#: the percentiles estimate_quantiles reads off, as columns p50, p95, p99
+_PERCENTILES = (50, 95, 99)
+
+
 def estimate_quantiles(
     state: DataFrame,
     keys: list[str],
     lo: float,
     hi: float,
-    percentiles: tuple[int, ...] = (50, 95, 99),
 ) -> DataFrame:
     """Quantile read-off from histogram state: percentile p maps to the
     LOWER EDGE of the smallest bin whose cumulative count reaches
@@ -209,7 +212,7 @@ def estimate_quantiles(
         F.min(
             F.when(100 * F.col("_cum") >= p * F.col("_total"), F.col("_bin"))
         ).alias(f"_bin_p{p}")
-        for p in percentiles
+        for p in _PERCENTILES
     ]
     agg = ex.groupBy(*keys, "_n").agg(*picks)
     out = agg.select(
@@ -217,7 +220,7 @@ def estimate_quantiles(
         *[
             (F.lit(lo) + F.col(f"_bin_p{p}") * (F.lit(hi - lo) / F.col("_n")))
             .alias(f"p{p}")
-            for p in percentiles
+            for p in _PERCENTILES
         ],
     )
     return out

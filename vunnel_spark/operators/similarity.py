@@ -14,7 +14,8 @@ Two paths:
 Hyperplanes are derived deterministically from xxhash64(table, bit, dim) —
 no RNG state to ship, any executor can regenerate them.
 
-Every operator reads ``vec_id`` and a 64-dim ``embedding`` column.
+Every operator reads ``vec_id`` and a ``DIM``-wide (64) ``embedding``
+column.
 """
 
 from __future__ import annotations
@@ -28,6 +29,14 @@ from vunnel_spark.functions.vectors import cosine_hoisted, norm2
 KMEANS_SEED, KMEANS_MAX_ITER = 7, 20
 #: half-width of the hash-derived fixed centroids and PQ codewords
 _FIXED_SCALE = 0.15
+#: embedding width every operator reads
+DIM = 64
+#: cells of the fixed IVF quantizer (fixed_centroids)
+NLIST = 8
+#: cells each IVF query probes (ivf_topk, ivf_pq_topk)
+NPROBE = 4
+#: PQ subspaces, and codewords per subspace
+PQ_M, PQ_KS = 8, 16
 
 
 def brute_force_topk(
@@ -200,7 +209,7 @@ def add_lsh_buckets(
         bits = []
         for b in range(n_bits):
             plane = ", ".join(
-                f"CAST('{_plane_value(t, b, i)!r}' AS DOUBLE)" for i in range(64)
+                f"CAST('{_plane_value(t, b, i)!r}' AS DOUBLE)" for i in range(DIM)
             )
             d = (
                 f"aggregate(zip_with(`embedding`, array({plane}), "
@@ -221,8 +230,9 @@ def add_lsh_buckets(
     )
 
 
-def fixed_centroids(nlist: int = 8, dim: int = 64) -> list[list[float]]:
-    """Deterministic sha256-derived coarse centroids (no training pass).
+def fixed_centroids() -> list[list[float]]:
+    """Deterministic sha256-derived coarse centroids (no training pass):
+    ``NLIST`` cells of ``DIM`` dims.
 
     Same derivation discipline as the LSH hyperplanes: any process —
     including an external SQL oracle — can regenerate the exact doubles,
@@ -236,9 +246,9 @@ def fixed_centroids(nlist: int = 8, dim: int = 64) -> list[list[float]]:
     import hashlib
 
     out = []
-    for j in range(nlist):
+    for j in range(NLIST):
         row = []
-        for i in range(dim):
+        for i in range(DIM):
             h = hashlib.sha256(f"ivf:{j}:{i}".encode()).digest()
             row.append((int.from_bytes(h[:8], "big") / float(2**63) - 1.0) * _FIXED_SCALE)
         out.append(row)
@@ -317,18 +327,17 @@ def ivf_topk(
     queries: DataFrame,
     centroids: list[list[float]],
     k: int = 10,
-    nprobe: int = 4,
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors live in their single nearest cell,
-    queries probe their ``nprobe`` nearest cells and score only those
+    queries probe their ``NPROBE`` nearest cells and score only those
     inverted lists.
 
     Scale shape: the corpus shuffles once on cell id, and each query
-    touches ~nprobe/nlist of the data.  Rank/tie rules match
+    touches ~NPROBE/nlist of the data.  Rank/tie rules match
     brute_force_topk so recall is directly measurable.
 
     SIZE nlist WITH THE CORPUS (nlist ~ n_vectors / target_cell_size):
-    per-query candidate cost is nprobe * cell_size, so a fixed nlist
+    per-query candidate cost is NPROBE * cell_size, so a fixed nlist
     grows it linearly with the corpus — measured in the r9 scale-curve
     (SCALECURVE.md: n5 at fixed nlist=8 ran 24x on 10x data; nlist=64
     cut the sf1 time 2.2x with recall preserved).
@@ -344,7 +353,7 @@ def ivf_topk(
     # row (nprobe x) — withColumn keeps it below, once per document
     # (n6 after-profile regression, plans/r14)
     qb = (
-        add_ivf_cells(queries, centroids, nprobe=nprobe)
+        add_ivf_cells(queries, centroids, nprobe=NPROBE)
         .withColumn("_qn", norm2(F.col("embedding")))
         .select(
             F.col("vec_id").alias("query_id"),
@@ -457,11 +466,9 @@ def lsh_topk(
 # IVF+PQ is the de facto layout for web-scale ANN; both halves compose
 # here because each is a plain column (cell id, code array).
 
-def fixed_pq_codebooks(
-    m: int = 8, ks: int = 16, dim: int = 64
-) -> list[list[list[float]]]:
-    """Deterministic sha256-derived PQ codebooks: ``m`` subspaces of
-    ``dim//m`` dims, ``ks`` codewords each.
+def fixed_pq_codebooks() -> list[list[list[float]]]:
+    """Deterministic sha256-derived PQ codebooks: ``PQ_M`` subspaces of
+    ``DIM // PQ_M`` dims, ``PQ_KS`` codewords each.
 
     Same engine-portability discipline as fixed_centroids/_plane_value —
     an external SQL oracle regenerates the exact doubles, so code
@@ -469,11 +476,11 @@ def fixed_pq_codebooks(
     """
     import hashlib
 
-    sub = dim // m
+    sub = DIM // PQ_M
     books = []
-    for j in range(m):
+    for j in range(PQ_M):
         book = []
-        for c in range(ks):
+        for c in range(PQ_KS):
             row = []
             for i in range(sub):
                 h = hashlib.sha256(f"pq:{j}:{c}:{i}".encode()).digest()
@@ -483,15 +490,11 @@ def fixed_pq_codebooks(
     return books
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    ks: int = 16,
-    dim: int = 64,
-) -> list[list[list[float]]]:
-    """Train PQ codebooks: one distributed k-means per subspace slice.
+def train_pq_codebooks(corpus: DataFrame) -> list[list[list[float]]]:
+    """Train PQ codebooks: one distributed k-means per subspace slice
+    (``PQ_M`` subspaces, ``PQ_KS`` codewords each).
 
-    The model is m*ks*(dim/m) floats (= dim*ks, a few KB) shipped as plan
+    The model is DIM*PQ_KS floats (a few KB) shipped as plan
     literals; like train_ivf_centroids, training runs on a deterministic
     hash sample and never collects vectors to the driver.
     """
@@ -501,9 +504,9 @@ def train_pq_codebooks(
     from pyspark.ml.functions import array_to_vector
 
     df = corpus
-    sub = dim // m
+    sub = DIM // PQ_M
 
-    # Persist the sampled training frame ONCE across the m subspace
+    # Persist the sampled training frame ONCE across the PQ_M subspace
     # fits (VERDICT r14 Next #4, guide §5 reuse): each fit projects a
     # different slice of the SAME rows, so without this every fit
     # re-scans the corpus and re-applies the hash sample filter —
@@ -521,7 +524,7 @@ def train_pq_codebooks(
                 "features"
             )
         )
-        model = KMeans(k=ks, seed=KMEANS_SEED + j, maxIter=KMEANS_MAX_ITER).fit(feat)
+        model = KMeans(k=PQ_KS, seed=KMEANS_SEED + j, maxIter=KMEANS_MAX_ITER).fit(feat)
         return [[float(x) for x in c] for c in model.clusterCenters()]
 
     # The m per-subspace fits are independent jobs with per-j seeds —
@@ -534,8 +537,8 @@ def train_pq_codebooks(
     # core-bound, at any local SF).
     try:
         df.count()  # materialize the cache before the fits fan out
-        with ThreadPoolExecutor(max_workers=max(4, m)) as pool:
-            return list(pool.map(_fit, range(m)))
+        with ThreadPoolExecutor(max_workers=PQ_M) as pool:
+            return list(pool.map(_fit, range(PQ_M)))
     finally:
         df.unpersist()
 
@@ -698,11 +701,10 @@ def ivf_pq_topk(
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
     k: int = 10,
-    nprobe: int = 4,
 ) -> DataFrame:
     """IVF+PQ composed ANN (the FAISS IVFPQ layout, the de facto shape
     for web-scale vector stores): the coarse quantizer prunes WHICH
-    inverted lists a query touches (~nprobe/nlist of the corpus), and
+    inverted lists a query touches (~NPROBE/nlist of the corpus), and
     the product quantizer shrinks WHAT is read per candidate (m code
     bytes, not the vector).
 
@@ -719,7 +721,7 @@ def ivf_pq_topk(
         F.element_at("cells", 1).alias("cell"),
         "code",
     )
-    qb = add_ivf_cells(queries, centroids, nprobe=nprobe).select(
+    qb = add_ivf_cells(queries, centroids, nprobe=NPROBE).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_qv"),
         F.explode("cells").alias("cell"),

@@ -6,8 +6,8 @@ FIRST line of defense and is on in this engine's session defaults — it
 fixes skew AQE can see (oversized shuffle partitions at join time).
 ``salted_agg`` covers what AQE cannot: a single group-by key so hot that
 one reducer's *aggregation state* (not just its input bytes) blows up.
-Phase 1 groups by (keys, salt) — the hot key's rows spread over
-``num_buckets`` reducers — phase 2 re-aggregates the per-salt partials on
+Phase 1 groups by (keys, salt) — the hot key's rows spread over 8
+reducers — phase 2 re-aggregates the per-salt partials on
 the true keys (k x buckets rows, trivial).  Only decomposable aggregates
 are offered (count/sum/min/max); a mean is sum/count downstream.  The
 result is BY CONSTRUCTION identical to the plain GROUP BY, which is what
@@ -21,30 +21,24 @@ row, so retries/speculative tasks and re-runs produce identical output
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def add_salt(df: DataFrame, salt_src: str | Column, num_buckets: int) -> DataFrame:
-    """Deterministic per-row salt in [0, num_buckets)."""
-    src = F.col(salt_src) if isinstance(salt_src, str) else salt_src
-    return df.withColumn("_salt", F.pmod(F.xxhash64(src), F.lit(num_buckets)))
 
 
 def salted_agg(
     df: DataFrame,
     keys: list[str],
     salt_src: str,
-    num_buckets: int = 8,
     sum_cols: tuple[str, ...] = (),
     max_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Two-phase salted aggregation; output == plain groupBy(keys).
+    """Two-phase salted aggregation over 8 salts; output == plain
+    groupBy(keys).
 
     Output columns: ``n_rows`` plus ``sum_<c>``/``max_<c>``
     for each requested column.
     """
-    salted = add_salt(df, salt_src, num_buckets)
+    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(8)))
     partials = [F.count(F.lit(1)).alias("_pc")]
     finals = [F.sum("_pc").alias("n_rows")]
     for c in sum_cols:

@@ -5,7 +5,7 @@ the way they must be at 100 TB:
 
 ``asof_join``
     Point-in-time lookup: each fact row picks the latest dim version with
-    ``dim.ts <= fact.ts`` per key.  Spark has no ASOF operator; the naive
+    ``dim.ts <= fact.ts`` per key (both sides carry a ``ts`` column).  Spark has no ASOF operator; the naive
     encodings are an inequality join (BroadcastNestedLoop / O(n*m) per
     key) or a per-fact subquery.  The scale-correct form is
     union-both-sides + ``last(value, ignorenulls) OVER (partition by key
@@ -15,10 +15,11 @@ the way they must be at 100 TB:
     against an independent implementation.)
 
 ``range_bucket_join``
-    Interval containment (point BETWEEN start AND end) with no equi key.
+    Interval containment (``ts`` BETWEEN ``start_ts`` AND ``end_ts``)
+    with no equi key.
     Spark plans raw range predicates as BroadcastNestedLoopJoin — a
     scale-killer.  With a bound on interval length, bucketing time into
-    fixed slots turns it into an equi-join: every interval is replicated
+    fixed 30-minute slots turns it into an equi-join: every interval is replicated
     to the ~2 slots it overlaps, every point hashes to one slot, join on
     slot id, then re-check exact containment.  Replication factor is
     ``len/width + 1`` ≈ 2 when width ≈ max interval length.
@@ -34,10 +35,10 @@ def asof_join(
     fact: DataFrame,
     dim: DataFrame,
     keys: list[str],
-    ts_col: str = "ts",
     value_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Backward as-of join: fact rows + latest dim ``value_cols`` at ts.
+    """Backward as-of join: fact rows + latest dim ``value_cols`` at
+    ``ts``.
 
     ``dim`` must be unique per (keys, ts) — pre-reduce it (e.g.
     ``max_by``) if versions can collide on a timestamp.  Facts with no
@@ -45,14 +46,14 @@ def asof_join(
     version whose value is genuinely NULL is indistinguishable from "no
     version" (``last(ignorenulls)`` skips it).
     """
-    value_cols = value_cols or [c for c in dim.columns if c not in {*keys, ts_col}]
-    d = dim.select(*keys, ts_col, *value_cols).withColumn("_is_dim", F.lit(1))
+    value_cols = value_cols or [c for c in dim.columns if c not in {*keys, "ts"}]
+    d = dim.select(*keys, "ts", *value_cols).withColumn("_is_dim", F.lit(1))
     f = fact.withColumn("_is_dim", F.lit(0))
     u = f.unionByName(d, allowMissingColumns=True)
     # dim sorts before fact at equal ts => inclusive (<=) semantics
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(ts_col).asc(), F.col("_is_dim").desc())
+        .orderBy(F.col("ts").asc(), F.col("_is_dim").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = [
@@ -69,38 +70,28 @@ def asof_join(
     )
 
 
-def range_bucket_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_ts: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
-    bucket_seconds: int = 1800,
-) -> DataFrame:
-    """Inner join of points to the intervals containing them (inclusive).
+def range_bucket_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
+    """Inner join of points (``ts``) to the intervals (``start_ts``,
+    ``end_ts``) containing them (inclusive).
 
-    ``bucket_seconds`` should be >= the maximum interval length so each
-    interval lands in at most 2 buckets; correctness does not depend on
-    the choice, only the replication factor does.
+    Buckets are 1800 s wide: an interval no longer than 30 minutes lands
+    in at most 2 of them.  Longer intervals are replicated to more
+    buckets; correctness does not depend on the width, only the
+    replication factor does.
     """
-    w_us = F.lit(int(bucket_seconds) * 1_000_000)
+    w_us = F.lit(1800 * 1_000_000)
     iv = intervals.withColumn(
         "_b",
         F.explode(
             F.sequence(
-                (F.unix_micros(F.col(start_col)) / w_us).cast("long"),
-                (F.unix_micros(F.col(end_col)) / w_us).cast("long"),
+                (F.unix_micros(F.col("start_ts")) / w_us).cast("long"),
+                (F.unix_micros(F.col("end_ts")) / w_us).cast("long"),
             )
         ),
     )
-    pt = points.withColumn(
-        "_b", (F.unix_micros(F.col(point_ts)) / w_us).cast("long")
-    )
+    pt = points.withColumn("_b", (F.unix_micros(F.col("ts")) / w_us).cast("long"))
     return (
         pt.join(iv, "_b")
-        .where(
-            (F.col(point_ts) >= F.col(start_col))
-            & (F.col(point_ts) <= F.col(end_col))
-        )
+        .where((F.col("ts") >= F.col("start_ts")) & (F.col("ts") <= F.col("end_ts")))
         .drop("_b")
     )

@@ -276,7 +276,6 @@ def rpm_version_base(v):
 def reduce_fix_streams(
     df: DataFrame,
     keys: list[str],
-    version_col: str = "version",
 ) -> DataFrame:
     """The (package, platform, module)-bucket reduction of
     _parse_affected_release (parser.py:565-676): rpm-equal duplicate
@@ -307,14 +306,14 @@ def reduce_fix_streams(
     """
     from vunnel_spark.functions.versions import rpm_evr_sort_key
 
-    keyed = df.withColumn("_vkey", rpm_evr_sort_key(F.col(version_col)))
+    keyed = df.withColumn("_vkey", rpm_evr_sort_key(F.col("version")))
     # rpm-EQUAL dedup: identical sort keys compare 0 (the key is the
     # F1 property-tested total order); keep the deterministic
     # representative, the min version text
     uniq = (
         keyed.groupBy(*keys, "_vkey")
-        .agg(F.min(F.col(version_col)).alias(version_col))
-        .withColumn("_base", rpm_version_base(F.col(version_col)))
+        .agg(F.min(F.col("version")).alias("version"))
+        .withColumn("_base", rpm_version_base(F.col("version")))
     )
     # per-base keep-highest = max _vkey per (keys, base); fixes sharing
     # a base are contiguous in rpm order (the version segment dominates
@@ -322,7 +321,7 @@ def reduce_fix_streams(
     # the reference's insertion-ordered fix_by_base walk
     per_base = (
         uniq.groupBy(*keys, "_base")
-        .agg(F.max_by(F.col(version_col), F.col("_vkey")).alias("_v"),
+        .agg(F.max_by(F.col("version"), F.col("_vkey")).alias("_v"),
              F.max("_vkey").alias("_vkey"))
     )
     sorted_fixes = F.array_sort(

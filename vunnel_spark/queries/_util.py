@@ -8,6 +8,12 @@ helper import that drags a whole query module in would shift the window.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,6 +23,25 @@ from vunnel_spark.session import load_table
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table (normalized for driver-data quirks)."""
     return load_table(spark, sf_dir, name)
+
+
+def _remove_if_owner(root: str, owner: int) -> None:
+    if os.getpid() == owner:  # a forked child inherits the hook, not the root
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="vunnel_spark_")
+    atexit.register(_remove_if_owner, root, os.getpid())
+    return root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for the store one query build writes, under a
+    per-process root in the temp dir that goes at interpreter exit (the
+    plan reads the store until then)."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 #: offset for synthesized duplicate doc ids (dedup/graph query families)

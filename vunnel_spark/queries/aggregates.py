@@ -172,7 +172,7 @@ def a6(spark, sf_dir):
             F.lit(".el9"),
         ).alias("version"),
     )
-    return reduce_fix_streams(rows, ["bucket"], "version")
+    return reduce_fix_streams(rows, ["bucket"])
 
 
 @register(

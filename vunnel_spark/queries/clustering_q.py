@@ -24,23 +24,21 @@ from vunnel_spark.operators.clustering import (
     cluster_profile,
     lloyd_update,
 )
-from vunnel_spark.operators.similarity import fixed_centroids
+from vunnel_spark.operators.similarity import DIM, NLIST, fixed_centroids
 from vunnel_spark.queries._util import t
 from vunnel_spark.queries.similarity import _dvec, _fold_l2sq
 from vunnel_spark.registry import register
 
-_NLIST = 8
-_DIM = 64
 _CAP = 40  # expected per-cell rows after balancing
 
 
 def _assign_ctes() -> str:
     """CTE chain replicating operators/clustering.assign_clusters with the
     fixed quantizer: (vec_id, v, cell, d2)."""
-    cent_rows = ",\n        ".join(_dvec(c) for c in fixed_centroids(_NLIST, _DIM))
+    cent_rows = ",\n        ".join(_dvec(c) for c in fixed_centroids())
     dlist = ", ".join(
         f"{{'d2': {_fold_l2sq('v', f'cents[{j + 1}]')}, 'cell': {j}}}"
-        for j in range(_NLIST)
+        for j in range(NLIST)
     )
     return f"""
     cent AS (SELECT [
@@ -70,7 +68,7 @@ def _assign_ctes() -> str:
 )
 def c1(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
-    return cluster_profile(emb, fixed_centroids(_NLIST, _DIM))
+    return cluster_profile(emb, fixed_centroids())
 
 
 @register(
@@ -79,7 +77,7 @@ def c1(spark, sf_dir):
     WITH {_assign_ctes()}
     SELECT cell, CAST(i AS INTEGER) AS pos, round(avg(v[i + 1]), 6) AS mean_val,
            count(*) AS n
-    FROM a, range({_DIM}) AS t(i)
+    FROM a, range({DIM}) AS t(i)
     GROUP BY cell, i
     """,
     doc="One Lloyd iteration's centroid update: per-cluster per-dimension "
@@ -92,7 +90,7 @@ def c1(spark, sf_dir):
 )
 def c2(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
-    return lloyd_update(emb, fixed_centroids(_NLIST, _DIM))
+    return lloyd_update(emb, fixed_centroids())
 
 
 @register(
@@ -116,4 +114,4 @@ def c2(spark, sf_dir):
 )
 def c3(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
-    return cluster_balanced_sample(emb, fixed_centroids(_NLIST, _DIM), _CAP)
+    return cluster_balanced_sample(emb, fixed_centroids(), _CAP)

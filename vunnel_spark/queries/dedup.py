@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from vunnel_spark.queries._util import t
+from vunnel_spark.queries._util import scratch_dir, t
 from vunnel_spark.registry import register
 
 # doc_id offset for synthesized duplicate rows (beyond any real doc_id)
@@ -178,9 +178,9 @@ def d3(spark, sf_dir):
     # Signature hashing is the scale-invariant win (48 vs 64 permutations:
     # 1.28s vs 2.29s for the signature stage alone); r=3x16 keeps the
     # marginal-pair miss probability below 1e-5, so the exact-equality
-    # oracle stays safe.  Library defaults stay 64/16 (persisted-index
-    # compatibility: write_lsh_index and its probes must share params).
-    return minhash_lsh_pairs(docs, num_hashes=48, bands=16, verify_threshold=0.8)
+    # oracle stays safe.  The library default num_hashes stays 64
+    # (INDEX_HASHES); the band count is LSH_BANDS = 16 for every caller.
+    return minhash_lsh_pairs(docs, num_hashes=48, verify_threshold=0.8)
 
 
 # DuckDB replica of the md5-prefix simhash: hamming distance is hash-defined,
@@ -394,7 +394,7 @@ def d9(spark, sf_dir):
     cents = train_ivf_centroids(corpus, nlist=8)
     # nprobe=2: a planted pair straddling a k-means Voronoi boundary still
     # shares a cell, so the oracle never depends on quantizer boundaries
-    return semantic_dedup(corpus, cents, threshold=0.95, nprobe=2)
+    return semantic_dedup(corpus, cents, nprobe=2)
 
 
 _CHIM_BASE = 2_000_000
@@ -465,7 +465,7 @@ def d10(spark, sf_dir):
     )
     corpus = docs.unionByName(chim)
     return shared_span_pairs(
-        corpus, k=3, min_span_tokens=15, max_shingle_freq=8
+        corpus, min_span_tokens=15, max_shingle_freq=8
     )
 
 
@@ -528,7 +528,7 @@ def d11(spark, sf_dir):
     from vunnel_spark.operators.graph import connected_components
 
     docs = _with_near_dups(t(spark, sf_dir, "documents").select("doc_id", "text"))
-    pairs = minhash_lsh_pairs(docs, num_hashes=48, bands=16, verify_threshold=0.8)
+    pairs = minhash_lsh_pairs(docs, num_hashes=48, verify_threshold=0.8)
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
@@ -662,7 +662,6 @@ def d12(spark, sf_dir):
 )
 def d13(spark, sf_dir):
     import os
-    import tempfile
 
     from vunnel_spark.operators.dedup import (
         _word_shingles,
@@ -684,7 +683,7 @@ def d13(spark, sf_dir):
             ).alias("text"),
         )
     )
-    index_path = os.path.join(tempfile.mkdtemp(prefix="d13_"), "lsh_index")
+    index_path = os.path.join(scratch_dir("d13_"), "lsh_index")
     write_lsh_index(docs, index_path)
     cand = minhash_lsh_pairs_incremental(batch, index_path).persist()
     cand.count()  # eager: cand feeds the two id semi-joins below

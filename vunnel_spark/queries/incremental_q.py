@@ -142,7 +142,7 @@ def i9(spark, sf_dir):
     merged = merge_histogram_state(
         [state, histogram_state(delta, keys, "value", lo, hi, nb)], keys
     )
-    return estimate_quantiles(merged, keys, lo, hi, (50, 95, 99))
+    return estimate_quantiles(merged, keys, lo, hi)
 
 
 @register(

@@ -33,11 +33,10 @@ tests/test_registry_lint.py::test_no_decimal_cast_of_raw_double.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.queries._util import t
+from vunnel_spark.queries._util import scratch_dir, t
 from vunnel_spark.registry import register
 
 _N_BUCKETS = 8
@@ -47,7 +46,7 @@ def _bucketed_pair(spark, sf_dir, prefix: str):
     """orders + lineitem written bucketed on the order key."""
     from vunnel_spark.sinks.bucketed import write_bucketed
 
-    root = tempfile.mkdtemp(prefix=f"{prefix}_")
+    root = scratch_dir(f"{prefix}_")
     ot = write_bucketed(
         t(spark, sf_dir, "orders"),
         f"{prefix}_orders",
@@ -139,7 +138,7 @@ def b2(spark, sf_dir):
     # on.  Safe to leave set: it only suppresses an optional disable
     # heuristic and non-bucketed reads never consult it.
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    root = tempfile.mkdtemp(prefix="b2_")
+    root = scratch_dir("b2_")
     ot = write_bucketed(
         t(spark, sf_dir, "orders"),
         "b2_orders",
@@ -176,7 +175,7 @@ def b2(spark, sf_dir):
 def s14(spark, sf_dir):
     from vunnel_spark.sinks import EnvelopeWriter
 
-    out = os.path.join(tempfile.mkdtemp(prefix="s14_"), "results")
+    out = os.path.join(scratch_dir("s14_"), "results")
     orders = t(spark, sf_dir, "orders")
     writer = EnvelopeWriter(
         out, key="ident", dedup="last_wins", order_col="ident", hash_buckets=8
@@ -216,9 +215,9 @@ def b3(spark, sf_dir):
     from vunnel_spark.functions.zorder import read_clustered, write_clustered, z_value
 
     ev = t(spark, sf_dir, "events")
-    path = os.path.join(tempfile.mkdtemp(prefix="b3_"), "events_z")
+    path = os.path.join(scratch_dir("b3_"), "events_z")
     write_clustered(
-        ev, path, z_value("user_id", F.dayofmonth("ts"), bits_a=11, bits_b=5)
+        ev, path, z_value("user_id", F.dayofmonth("ts"))
     )
     zev = read_clustered(spark, path)
     return (

@@ -6,11 +6,10 @@ the driver's correctness gate, not just in pytest golden tests.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.queries._util import t
+from vunnel_spark.queries._util import scratch_dir, t
 from vunnel_spark.registry import register
 
 
@@ -53,7 +52,7 @@ from vunnel_spark.registry import register
 def nvd1(spark, sf_dir):
     from vunnel_spark.pipelines.nvd import nvd_pipeline, upsert_input
 
-    wd = tempfile.mkdtemp(prefix="nvd1_")
+    wd = scratch_dir("nvd1_")
     o = t(spark, sf_dir, "orders")
     initial = o.select(
         F.concat(F.lit("CVE-"), F.col("o_orderkey").cast("string")).alias("cve_id"),
@@ -477,8 +476,6 @@ def rhel2(spark, sf_dir):
     tags=("pipeline", "join", "sink"),
 )
 def ubuntu1(spark, sf_dir):
-    import tempfile as _tf
-
     from vunnel_spark.pipelines.ubuntu import ubuntu_pipeline
 
     li = t(spark, sf_dir, "lineitem")
@@ -498,7 +495,7 @@ def ubuntu1(spark, sf_dir):
             "fixed_version"
         ),
     )
-    wd = _tf.mkdtemp(prefix="ubuntu1_")
+    wd = scratch_dir("ubuntu1_")
     return ubuntu_pipeline(spark, today, wd)
 
 
@@ -849,8 +846,6 @@ def debian1(spark, sf_dir, id_scale=1):
     linearly with the corpus and the per-(ns, vid) record assembly goes
     quadratic in memory — a gate-construction artifact, not a pipeline
     property (production id spaces grow with the corpus)."""
-    import tempfile as _tf
-
     from vunnel_spark.pipelines.debian import debian_pipeline
 
     o = t(spark, sf_dir, "orders")
@@ -893,7 +888,7 @@ def debian1(spark, sf_dir, id_scale=1):
         F.array(F.struct(F.lit("legacypkg").alias("Name"), F.lit("1.0").alias("Version"))).alias("FixedIn"),
         F.lit("").alias("advisories"),
     ).distinct()
-    wd = _tf.mkdtemp(prefix="debian1_")
+    wd = scratch_dir("debian1_")
     out = debian_pipeline(spark, dsas, cve_rows, wd, legacy=legacy)
     return out.select(
         F.col("item.ns").alias("ns"),

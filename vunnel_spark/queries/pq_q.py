@@ -17,16 +17,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.operators.similarity import fixed_pq_codebooks
+from vunnel_spark.operators.similarity import DIM, NPROBE, PQ_M, fixed_centroids, fixed_pq_codebooks
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
 
 _N_QUERIES = 8
 _K = 5
-_DIM = 64
-_M = 8
-_KS = 16
-_SUB = _DIM // _M
+_SUB = DIM // PQ_M
 
 
 def _dval(v: float) -> str:
@@ -56,7 +53,7 @@ def _fold_sub_l2sq(vec: str, base: str, w: str = "w", n: int = _SUB) -> str:
 
 
 def _n7_oracle() -> str:
-    books = fixed_pq_codebooks(_M, _KS, _DIM)
+    books = fixed_pq_codebooks()
     return f"""
     WITH cb(j, c, w) AS (VALUES {_cb_values(books)}),
     v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -114,7 +111,7 @@ def n7(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    books = fixed_pq_codebooks(_M, _KS, _DIM)
+    books = fixed_pq_codebooks()
     return pq_adc_topk(emb, queries, books, k=_K).select(
         "query_id", "neighbor_id", "adc_dist", "rank"
     )
@@ -152,7 +149,7 @@ def n8(spark, sf_dir):
         F.transform("embedding", lambda x: x * 1.02 + 0.005).alias("embedding"),
     )
     corpus = emb.unionByName(planted)
-    books = train_pq_codebooks(corpus, m=_M, ks=_KS, dim=_DIM)
+    books = train_pq_codebooks(corpus)
     return (
         pq_adc_topk(corpus, planted, books, k=1, rerank=64)
         .filter(F.col("cos_sim") >= 0.9)
@@ -160,15 +157,9 @@ def n8(spark, sf_dir):
     )
 
 
-_NLIST = 8
-_NPROBE = 4
-
-
 def _n9_oracle() -> str:
-    from vunnel_spark.operators.similarity import fixed_centroids
-
-    books = fixed_pq_codebooks(_M, _KS, _DIM)
-    cents = fixed_centroids(_NLIST, _DIM)
+    books = fixed_pq_codebooks()
+    cents = fixed_centroids()
     cent_rows = ",".join(
         f"({i},[" + ",".join(_dval(v) for v in c) + "])"
         for i, c in enumerate(cents)
@@ -178,7 +169,7 @@ def _n9_oracle() -> str:
     cb(j, c, w) AS (VALUES {_cb_values(books)}),
     v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     cd AS (
-      SELECT vec_id, cell, {_fold_sub_l2sq('v', '0', 'cv', _DIM)} AS d2
+      SELECT vec_id, cell, {_fold_sub_l2sq('v', '0', 'cv', DIM)} AS d2
       FROM v CROSS JOIN cents
     ),
     vcell AS (
@@ -209,10 +200,10 @@ def _n9_oracle() -> str:
                row_number() OVER (PARTITION BY query_id ORDER BY d2, cell) AS rn
         FROM (
           SELECT q.query_id, cents.cell,
-                 {_fold_sub_l2sq('qv', '0', 'cv', _DIM)} AS d2
+                 {_fold_sub_l2sq('qv', '0', 'cv', DIM)} AS d2
           FROM q CROSS JOIN cents
         )
-      ) WHERE rn <= {_NPROBE}
+      ) WHERE rn <= {NPROBE}
     ),
     cand AS (
       SELECT q.query_id, vc.vec_id AS neighbor_id, q.qv
@@ -254,12 +245,12 @@ def _n9_oracle() -> str:
     tags=("similarity", "pq"),
 )
 def n9(spark, sf_dir):
-    from vunnel_spark.operators.similarity import fixed_centroids, ivf_pq_topk
+    from vunnel_spark.operators.similarity import ivf_pq_topk
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    cents = fixed_centroids(_NLIST, _DIM)
-    books = fixed_pq_codebooks(_M, _KS, _DIM)
-    return ivf_pq_topk(emb, queries, cents, books, k=_K, nprobe=_NPROBE).select(
+    cents = fixed_centroids()
+    books = fixed_pq_codebooks()
+    return ivf_pq_topk(emb, queries, cents, books, k=_K).select(
         "query_id", "neighbor_id", "adc_dist", "rank"
     )

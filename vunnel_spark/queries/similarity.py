@@ -18,17 +18,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.operators.similarity import _plane_value, fixed_centroids
+from vunnel_spark.operators.similarity import DIM, NLIST, NPROBE, _plane_value, fixed_centroids
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
 
 _N_QUERIES = 8  # small query set; corpus side stays the full table
 _K = 5
-_DIM = 64
 _N_TABLES = 16
 _N_BITS = 3
-_NLIST = 8
-_NPROBE = 4
 
 
 # ---------------------------------------------------------- oracle builders
@@ -48,7 +45,7 @@ def _fold_dot(vec: str, plane: str) -> str:
     """Strict left-fold dot product — matches functions/vectors.dot
     bit-for-bit (list_dot_product uses a different accumulation order)."""
     return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({_DIM}), "
+        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({DIM}), "
         f"i -> {vec}[i+1] * {plane}[i+1])), (a, b) -> a + b)"
     )
 
@@ -56,7 +53,7 @@ def _fold_dot(vec: str, plane: str) -> str:
 def _fold_l2sq(vec: str, cent: str) -> str:
     """Strict left-fold squared L2 — matches operators/similarity.add_ivf_cells."""
     return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({_DIM}), "
+        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range({DIM}), "
         f"i -> ({vec}[i+1] - {cent}[i+1]) * ({vec}[i+1] - {cent}[i+1]))), "
         f"(a, b) -> a + b)"
     )
@@ -65,7 +62,7 @@ def _fold_l2sq(vec: str, cent: str) -> str:
 def _lsh_ctes() -> str:
     """CTE chain replicating add_lsh_buckets + lsh_topk candidate gen."""
     plane_rows = ",\n        ".join(
-        _dvec([_plane_value(tb, b, i) for i in range(_DIM)])
+        _dvec([_plane_value(tb, b, i) for i in range(DIM)])
         for tb in range(_N_TABLES)
         for b in range(_N_BITS)
     )
@@ -137,10 +134,10 @@ _N3_ORACLE = f"""
 def _ivf_ctes() -> str:
     """CTE chain replicating add_ivf_cells + ivf_topk with the
     deterministic fixed_centroids quantizer."""
-    cent_rows = ",\n        ".join(_dvec(c) for c in fixed_centroids(_NLIST, _DIM))
+    cent_rows = ",\n        ".join(_dvec(c) for c in fixed_centroids())
     dlist = ", ".join(
         f"{{'d2': {_fold_l2sq('v', f'cents[{j + 1}]')}, 'cell': {j}}}"
-        for j in range(_NLIST)
+        for j in range(NLIST)
     )
     return f"""
     cent AS (SELECT [
@@ -152,7 +149,7 @@ def _ivf_ctes() -> str:
                FROM cells),
     qcells AS (
       SELECT vec_id AS query_id, v AS qv, s.cell AS cell
-      FROM cells, unnest(list_slice(ranked, 1, {_NPROBE})) AS u(s)
+      FROM cells, unnest(list_slice(ranked, 1, {NPROBE})) AS u(s)
       WHERE vec_id < {_N_QUERIES}
     ),
     ivf AS (
@@ -246,8 +243,8 @@ def n4(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    cents = fixed_centroids(_NLIST, _DIM)
-    return ivf_topk(emb, queries, cents, k=_K, nprobe=_NPROBE).select(
+    cents = fixed_centroids()
+    return ivf_topk(emb, queries, cents, k=_K).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
@@ -285,7 +282,7 @@ def n5(spark, sf_dir):
     corpus = emb.unionByName(planted)
     cents = train_ivf_centroids(corpus, nlist=8)
     return (
-        ivf_topk(corpus, planted, cents, k=1, nprobe=4)
+        ivf_topk(corpus, planted, cents, k=1)
         .filter(F.col("cos_sim") >= 0.9)
         .select("query_id", "neighbor_id", "cos_sim")
     )

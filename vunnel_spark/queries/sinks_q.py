@@ -6,11 +6,10 @@ write path under the driver's correctness gate, not just in pytest.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.queries._util import t
+from vunnel_spark.queries._util import scratch_dir, t
 from vunnel_spark.registry import register
 
 
@@ -30,7 +29,7 @@ from vunnel_spark.registry import register
 def s12(spark, sf_dir):
     from vunnel_spark.sinks import EnvelopeWriter
 
-    out = os.path.join(tempfile.mkdtemp(prefix="s12_"), "results")
+    out = os.path.join(scratch_dir("s12_"), "results")
     orders = t(spark, sf_dir, "orders")
     writer = EnvelopeWriter(out, key="ident", dedup="last_wins", order_col="ident")
     writer.write(
@@ -60,7 +59,7 @@ def s12(spark, sf_dir):
 def i4(spark, sf_dir):
     from vunnel_spark.sinks import first_observed_merge
 
-    state = os.path.join(tempfile.mkdtemp(prefix="i4_"), "state")
+    state = os.path.join(scratch_dir("i4_"), "state")
     keys = (
         t(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
@@ -89,7 +88,7 @@ def i4(spark, sf_dir):
 def s17(spark, sf_dir):
     from vunnel_spark.sinks.writers import import_snapshot, publish_snapshot
 
-    root = tempfile.mkdtemp(prefix="s17_")
+    root = scratch_dir("s17_")
     snap_new = os.path.join(root, "snap_new")
     snap_old = os.path.join(root, "snap_old")
     dest = os.path.join(root, "installed")
@@ -125,7 +124,7 @@ def s17(spark, sf_dir):
 def i6(spark, sf_dir):
     from vunnel_spark.sinks.writers import overwrite_partitions
 
-    path = os.path.join(tempfile.mkdtemp(prefix="i6_"), "fragments")
+    path = os.path.join(scratch_dir("i6_"), "fragments")
     base = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ident"),
         F.col("o_orderstatus").alias("status"),
@@ -157,7 +156,7 @@ def i6(spark, sf_dir):
 def s15(spark, sf_dir):
     from vunnel_spark.sources.kv_cache import KVCache
 
-    cache = KVCache(os.path.join(tempfile.mkdtemp(prefix="s15_"), "kv"))
+    cache = KVCache(os.path.join(scratch_dir("s15_"), "kv"))
     docs = t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("key"),
         F.encode("text", "utf-8").alias("payload"),

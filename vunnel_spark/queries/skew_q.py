@@ -37,7 +37,7 @@ _BUCKETS = 8
 def h1(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     return salted_agg(
-        docs, ["lang"], salt_src="doc_id", num_buckets=_BUCKETS,
+        docs, ["lang"], salt_src="doc_id",
         sum_cols=("n_chars",), max_cols=("n_chars",),
     )
 

@@ -48,6 +48,6 @@ def v4(spark, sf_dir):
     clicks = ev.where(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id"
     )
-    return interval_join(purchases, clicks, within="30 minutes").select(
+    return interval_join(purchases, clicks).select(
         "user_id", "l_event_id", "r_event_id", "l_ts", "r_ts"
     )

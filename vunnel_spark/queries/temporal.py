@@ -52,7 +52,7 @@ def t1_asof(spark, sf_dir):
     fact = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    return asof_join(fact, dim, ["user_id"], "ts", ["profile_value"])
+    return asof_join(fact, dim, ["user_id"], ["profile_value"])
 
 
 @register(
@@ -92,7 +92,7 @@ def t2_range(spark, sf_dir):
     )
     pts = ev.where(F.col("event_type") == "purchase").select("ts", "value")
     return (
-        range_bucket_join(pts, incidents, "ts", "start_ts", "end_ts", 1800)
+        range_bucket_join(pts, incidents)
         .groupBy("incident_id")
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),

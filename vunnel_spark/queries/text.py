@@ -1058,7 +1058,7 @@ def x19(spark, sf_dir):
     from vunnel_spark.operators.bpe import pair_counts, to_symbols, word_counts
 
     docs = t(spark, sf_dir, "documents")
-    counts = pair_counts(to_symbols(word_counts(docs), eow=True))
+    counts = pair_counts(to_symbols(word_counts(docs)))
     # Top-20 FIRST via orderBy+limit — planned as TakeOrderedAndProject
     # (per-partition heaps + driver merge of 20-row candidates), so the
     # full distinct-pair frame (10^7-10^8 rows at web scale) never

@@ -20,14 +20,13 @@ from pyspark.sql import functions as F
 def interval_join(
     left: DataFrame,
     right: DataFrame,
-    within: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Inner join of two event streams on ``user_id`` where the right
-    event lands within ``[left.ts - within, left.ts]``; the other columns
-    come out prefixed ``l_``/``r_``.
+    event lands within ``[left.ts - 30 minutes, left.ts]``; the other
+    columns come out prefixed ``l_``/``r_``.
 
-    State bound: each side keeps at most ``watermark + within`` of
+    State bound: each side keeps at most ``watermark`` + 30 minutes of
     buffered rows per key; everything older is evicted because the join
     condition can no longer match it.  On batch inputs the identical
     expression runs stateless.
@@ -51,7 +50,7 @@ def interval_join(
         rf = rf.withWatermark(r_ts, watermark)
     cond = (
         (F.col("user_id") == F.col("_user_id"))
-        & (F.col(r_ts) >= F.col(l_ts) - F.expr(f"INTERVAL {within}"))
+        & (F.col(r_ts) >= F.col(l_ts) - F.expr("INTERVAL 30 minutes"))
         & (F.col(r_ts) <= F.col(l_ts))
     )
     return lf.join(rf, cond).drop("_user_id")
