@@ -204,7 +204,7 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
     # identified as a duplicate of a family member
     cents = train_ivf_centroids(corpus, nlist=nlist)
     dt, rows = _timed(
-        lambda: semantic_dedup(corpus, cents, nprobe=2)
+        lambda: semantic_dedup(corpus, cents)
         .filter(
             (F.col("dropped_id") >= base)
             & family_match("dropped_id", "kept_id")
@@ -236,7 +236,7 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
 
     # --- n6 LSH retrieval, scaled bits
     dt, rows = _timed(
-        lambda: lsh_topk(corpus, planted, k=1, n_bits=bits, n_tables=16)
+        lambda: lsh_topk(corpus, planted, k=1, n_bits=bits)
         .filter(
             (F.col("cos_sim") >= 0.9)
             & family_match("query_id", "neighbor_id")
@@ -326,9 +326,7 @@ def run_scaled_ann(sf_dir: str, out_json: str) -> None:
     from vunnel_spark.operators.dedup import embedding_dup_pairs
 
     dt, rows = _timed(
-        lambda: embedding_dup_pairs(
-            corpus, threshold=0.9, n_bits=bits
-        )
+        lambda: embedding_dup_pairs(corpus, n_bits=bits)
         .filter(family_match("id_a", "id_b"))
         .select(F.explode(F.array("id_a", "id_b")).alias("v"))
         .filter(F.col("v") >= base)
@@ -380,9 +378,7 @@ def run_d7_scaled(sf_dir: str, out_json: str) -> None:
     n_planted = planted.count()
     bits = scaled_bits(n_corpus)
     dt, found = _timed(
-        lambda: embedding_dup_pairs(
-            corpus, threshold=0.9, n_bits=bits
-        )
+        lambda: embedding_dup_pairs(corpus, n_bits=bits)
         .filter((F.col("id_a") % family) == (F.col("id_b") % family))
         .select(F.explode(F.array("id_a", "id_b")).alias("v"))
         .filter(F.col("v") >= base)

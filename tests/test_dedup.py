@@ -55,7 +55,7 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
         for r in ngram_jaccard_pairs(docs, threshold=0.8).collect()
     }
     assert exact, "no exact near-dup pairs — planted dups missing?"
-    lsh = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, verify_threshold=0.8).collect()}
+    lsh = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs).collect()}
     recall = len(lsh & exact) / len(exact)
     assert recall >= 0.9, f"LSH recall {recall:.2f} < 0.9 ({len(exact)} exact pairs)"
     # verification must keep precision exact: every verified pair is real
@@ -81,7 +81,7 @@ def test_embedding_dup_pairs_find_planted(spark, sf_dir):
         F.transform("embedding", lambda x: x * 1.02 + 0.005).alias("embedding"),
     )
     n_planted = planted.count()
-    pairs = embedding_dup_pairs(emb.unionByName(planted), threshold=0.9)
+    pairs = embedding_dup_pairs(emb.unionByName(planted))
     rows = pairs.collect()
     assert rows, "no embedding near-dups found"
     found = {(r.id_a, r.id_b) for r in rows}
@@ -98,11 +98,11 @@ def test_lsh_topk_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = {
-        (r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries, k=5).collect()
+        (r.query_id, r.neighbor_id) for r in brute_force_topk(emb, queries).collect()
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in lsh_topk(emb, queries, k=5, n_bits=3, n_tables=16).collect()
+        for r in lsh_topk(emb, queries, k=5, n_bits=3).collect()
     }
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.8, f"ANN recall {recall:.2f} < 0.8"
@@ -166,12 +166,12 @@ def test_shared_span_pairs_freq_cap_splits_runs(spark):
     from vunnel_spark.operators.dedup import shared_span_pairs
 
     span = "s0 s1 s2 s3 s4 s5 s6 s7"
-    rows = [(i, f"p{i} {span} q{i}") for i in range(6)]
+    rows = [(i, f"p{i} {span} q{i}") for i in range(9)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    # every span shingle occurs 6x; cap=5 drops them all -> no pairs
-    assert shared_span_pairs(docs, min_span_tokens=5, max_shingle_freq=5).collect() == []
-    out = shared_span_pairs(docs, min_span_tokens=5, max_shingle_freq=6).collect()
-    assert len(out) == 15  # all C(6,2) pairs share the full 8-token span
+    # nine docs: every span shingle occurs 9x, over the cap of 8 -> no pairs
+    assert shared_span_pairs(docs, min_span_tokens=5).collect() == []
+    out = shared_span_pairs(docs.filter("doc_id < 8"), min_span_tokens=5).collect()
+    assert len(out) == 28  # all C(8,2) pairs share the full 8-token span
     assert all(r.span_tokens == 8 for r in out)
 
 
@@ -188,12 +188,11 @@ def test_containment_pairs_freq_cap_kills_stopword_flood(spark):
     rows = flood + [(100, base), (101, base + " zeta")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    uncapped = containment_pairs(docs, threshold=0.95).collect()
-    assert len(uncapped) == 28 + 1  # C(8,2) flood pairs + the real one
+    # five flood docs sit at the cap of 5, so their shingle still pairs
+    under_cap = containment_pairs(docs.filter("doc_id >= 3")).collect()
+    assert len(under_cap) == 10 + 1  # C(5,2) flood pairs + the real one
 
-    capped = containment_pairs(
-        docs, threshold=0.95, max_shingle_freq=5
-    ).collect()
+    capped = containment_pairs(docs).collect()
     assert [(r.id_a, r.id_b) for r in capped] == [(100, 101)]
     assert capped[0].containment_a == 1.0  # doc 100's shingles all in 101
 

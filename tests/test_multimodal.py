@@ -102,7 +102,7 @@ def test_resize_composes(ppm_media):
 
 def test_video_sampling_explodes_and_decodes(docs):
     videos = synthesize_video_table(docs)
-    frames = sample_video_frames(videos, every_n=2)
+    frames = sample_video_frames(videos)
     got = frames.collect()
     by_id: dict[int, list] = {}
     for r in got:
@@ -432,35 +432,35 @@ def test_decode_image_dispatches_png_and_gray_replication():
 def test_jpeg_exact_roundtrip_even_block_constant():
     import numpy as np
 
-    from vunnel_spark.operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
+    from vunnel_spark.operators.multimodal import decode_jpeg, encode_jpeg_gray
 
     rng = np.random.default_rng(7)
     blocks = (rng.integers(0, 128, size=(3, 4)) * 2).astype(np.uint8)
     img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-    assert np.array_equal(decode_jpeg_gray(encode_jpeg_gray(img)), img)
+    assert np.array_equal(decode_jpeg(encode_jpeg_gray(img)), img)
 
 
 def test_jpeg_lossy_on_general_content_but_bounded_on_smooth():
     import numpy as np
 
-    from vunnel_spark.operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
+    from vunnel_spark.operators.multimodal import decode_jpeg, encode_jpeg_gray
 
     # smooth horizontal gradient: quantization error stays tiny
     g = np.tile(np.arange(0, 256, 8, dtype=np.uint8), (8, 1))[:8, :32]
-    dec = decode_jpeg_gray(encode_jpeg_gray(g))
+    dec = decode_jpeg(encode_jpeg_gray(g))
     assert np.abs(dec.astype(int) - g.astype(int)).max() <= 2
 
     # DC prediction across many blocks round-trips (chained diffs)
     wide = np.kron(np.arange(0, 240, 16, dtype=np.uint8)[None, :] * 0 + 100,
                    np.ones((8, 8), dtype=np.uint8))
-    assert decode_jpeg_gray(encode_jpeg_gray(wide)).shape == wide.shape
+    assert decode_jpeg(encode_jpeg_gray(wide)).shape == wide.shape
 
 
 def test_jpeg_rejects_unsupported_variants():
     import numpy as np
     import pytest
 
-    from vunnel_spark.operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
+    from vunnel_spark.operators.multimodal import decode_jpeg, encode_jpeg_gray
 
     img = np.full((8, 8), 100, dtype=np.uint8)
     enc = bytearray(encode_jpeg_gray(img))
@@ -469,7 +469,7 @@ def test_jpeg_rejects_unsupported_variants():
     idx = bytes(enc).find(b"\xff\xc0")
     enc[idx + 1] = 0xC1
     with pytest.raises(NotImplementedError, match="baseline"):
-        decode_jpeg_gray(bytes(enc))
+        decode_jpeg(bytes(enc))
     with pytest.raises(ValueError, match="multiple-of-8"):
         encode_jpeg_gray(np.zeros((7, 8), dtype=np.uint8))
 
@@ -490,7 +490,7 @@ def test_avi_mjpeg_roundtrip_and_structure():
     import numpy as np
 
     from vunnel_spark.operators.multimodal import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_avi_mjpeg,
         encode_jpeg_gray,
         iter_avi_frames,
@@ -508,7 +508,8 @@ def test_avi_mjpeg_roundtrip_and_structure():
     assert list(iter_frames(avi)) == frames
     # and each demuxed frame decodes to its constant
     for f, v in zip(iter_avi_frames(avi), (20, 120, 220)):
-        assert np.all(decode_jpeg_gray(f) == v)
+        gray = decode_jpeg(f)
+        assert gray.ndim == 2 and np.all(gray == v)
 
 
 def test_avi_odd_sized_frames_word_alignment():
@@ -567,7 +568,7 @@ def test_jpeg_property_block_constant_even_exact_and_general_bounded():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from vunnel_spark.operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
+    from vunnel_spark.operators.multimodal import decode_jpeg, encode_jpeg_gray
 
     @settings(max_examples=25, deadline=None)
     @given(hb=st.integers(1, 4), wb=st.integers(1, 4), seed=st.integers(0, 2**31))
@@ -575,9 +576,9 @@ def test_jpeg_property_block_constant_even_exact_and_general_bounded():
         rng = np.random.default_rng(seed)
         blocks = (rng.integers(0, 128, size=(hb, wb)) * 2).astype(np.uint8)
         img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-        assert np.array_equal(decode_jpeg_gray(encode_jpeg_gray(img)), img)
+        assert np.array_equal(decode_jpeg(encode_jpeg_gray(img)), img)
         noisy = rng.integers(0, 256, size=img.shape, dtype=np.uint8)
-        dec = decode_jpeg_gray(encode_jpeg_gray(noisy))
+        dec = decode_jpeg(encode_jpeg_gray(noisy))
         assert dec.shape == noisy.shape and dec.dtype == np.uint8
 
     check()
@@ -589,7 +590,7 @@ def test_mp4_mjpeg_roundtrip_and_structure():
     import numpy as np
 
     from vunnel_spark.operators.multimodal import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
         encode_mp4_mjpeg,
         iter_frames,
@@ -603,7 +604,8 @@ def test_mp4_mjpeg_roundtrip_and_structure():
     assert list(iter_mp4_frames(mp4)) == frames
     assert list(iter_frames(mp4)) == frames
     for f, v in zip(iter_mp4_frames(mp4), (10, 110, 210)):
-        assert np.all(decode_jpeg_gray(f) == v)
+        gray = decode_jpeg(f)
+        assert gray.ndim == 2 and np.all(gray == v)
     # odd sample sizes: mp4 has no word alignment, byte ranges must be exact
     odd = [b"\xff\xd8" + b"a" * 7, b"\xff\xd8" + b"b" * 10]
     assert list(iter_mp4_frames(encode_mp4_mjpeg(odd, 8, 8))) == odd
@@ -657,17 +659,6 @@ def test_color_jpeg_smooth_gradient_bounded_error():
     smooth[:, :, 2] = 200
     dec = decode_jpeg(encode_jpeg_rgb(smooth))
     assert np.abs(dec.astype(int) - smooth.astype(int)).max() <= 5
-
-
-def test_decode_jpeg_gray_rejects_color():
-    import numpy as np
-    import pytest
-
-    from vunnel_spark.operators.multimodal import decode_jpeg_gray, encode_jpeg_rgb
-
-    rgb = np.zeros((8, 8, 3), np.uint8)
-    with pytest.raises(ValueError, match="color"):
-        decode_jpeg_gray(encode_jpeg_rgb(rgb))
 
 
 # -------------------------------------------------- review regressions
@@ -757,7 +748,7 @@ def test_fragmented_mp4_roundtrip():
     import numpy as np
 
     from vunnel_spark.operators.multimodal import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
         encode_mp4f_mjpeg,
         iter_frames,
@@ -771,7 +762,8 @@ def test_fragmented_mp4_roundtrip():
     assert list(iter_mp4_frames(f)) == frames
     assert list(iter_frames(f)) == frames
     for x, v in zip(iter_mp4_frames(f), (6, 100, 180, 240)):
-        assert np.all(decode_jpeg_gray(x) == v)
+        gray = decode_jpeg(x)
+        assert gray.ndim == 2 and np.all(gray == v)
     # odd sample sizes: byte ranges exact, no alignment assumptions
     odd = [b"\xff\xd8" + b"q" * 7, b"\xff\xd8" + b"r" * 10]
     assert list(iter_mp4_frames(encode_mp4f_mjpeg(odd, 8, 8))) == odd
@@ -783,7 +775,7 @@ def test_progressive_jpeg_exact_roundtrip_even_block_constant():
     import numpy as np
 
     from vunnel_spark.operators.multimodal import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray_progressive,
     )
 
@@ -796,7 +788,7 @@ def test_progressive_jpeg_exact_roundtrip_even_block_constant():
         payload = encode_jpeg_gray_progressive(img)
         assert payload.find(b"\xff\xc2") > 0  # genuinely SOF2
         assert payload.count(b"\xff\xda") == 6  # six scans
-        assert np.array_equal(decode_jpeg_gray(payload), img)
+        assert np.array_equal(decode_jpeg(payload), img)
 
 
 def test_progressive_equals_baseline_decode_property():
@@ -923,22 +915,22 @@ def test_restart_interval_roundtrip_matches_plain():
     import numpy as np
     import pytest
 
-    from vunnel_spark.operators.multimodal import decode_jpeg_gray, encode_jpeg_gray
+    from vunnel_spark.operators.multimodal import decode_jpeg, encode_jpeg_gray
 
     rng = np.random.default_rng(9)
     img = rng.integers(0, 256, size=(32, 40), dtype=np.uint8)
-    plain = decode_jpeg_gray(encode_jpeg_gray(img))
+    plain = decode_jpeg(encode_jpeg_gray(img))
     for ri in (1, 2, 7, 100):
         enc = encode_jpeg_gray(img, restart_interval=ri)
         assert b"\xff\xdd" in enc
-        assert np.array_equal(decode_jpeg_gray(enc), plain), ri
+        assert np.array_equal(decode_jpeg(enc), plain), ri
     # out-of-sequence marker is detected, not silently absorbed
     enc = bytearray(encode_jpeg_gray(img, restart_interval=2))
     idx = bytes(enc).find(b"\xff\xd0")
     assert idx > 0
     enc[idx + 1] = 0xD5  # wrong RSTn ordinal
     with pytest.raises(ValueError, match="restart"):
-        decode_jpeg_gray(bytes(enc))
+        decode_jpeg(bytes(enc))
 
 
 def test_restart_interval_validated_at_api_boundary():

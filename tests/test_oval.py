@@ -106,7 +106,7 @@ def test_oval_pipeline_semantics(spark):
 
 def test_sles_pipeline_not_affected(spark):
     """sles_pipeline: not-affected tests emit Version '0' entries, gated
-    on the state's evr being '0', with severity_map normalization.  The
+    on the state's evr being '0', with SLES_SEVERITY_MAP normalization.  The
     reference's dedup-against-affected NEVER fires ((Name, None) vs
     (Name, ''), sles/parser.py:381-409), so a package both fixed and
     not-affected emits BOTH entries."""
@@ -140,10 +140,7 @@ def test_sles_pipeline_not_affected(spark):
         [("s-fix", "0:3.0.1-1", None), ("s-zero", "0", None)],
         "state_ref string, evr string, release string",
     )
-    out = {r.def_id: r for r in sles_pipeline(
-        defs, pairs, tests, objects, states,
-        severity_map={"important": "High"},
-    ).collect()}
+    out = {r.def_id: r for r in sles_pipeline(defs, pairs, tests, objects, states).collect()}
     assert out["d1"].fixed_in == "openssl:0|openssl:0:3.0.1-1|zlib:0"
     assert out["d1"].severity == "High"
     assert out["d2"].fixed_in == ""          # defensive skip of non-zero evr

@@ -82,11 +82,11 @@ def test_simhash_has_no_per_bit_explode(spark, sf_dir):
 
 
 def test_lsh_candidates_single_pass_no_cartesian(spark, sf_dir):
-    from vunnel_spark.operators.dedup import minhash_lsh_pairs
+    from vunnel_spark.operators.dedup import _lsh_candidates
     from vunnel_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    p = plan_of(minhash_lsh_pairs(docs, verify_threshold=None))
+    p = plan_of(_lsh_candidates(docs))
     assert "CartesianProduct" not in p
     # candidate pairs come from in-bucket combinations after a groupBy on
     # (band, bucket) — the corpus (and the minhash stage) is scanned ONCE;
@@ -118,7 +118,7 @@ def test_salted_join_spreads_hot_key(spark):
     small = spark.createDataFrame(
         [("HOT", "hot-dim")] + [(str(i), f"d{i}") for i in range(100)], "k string, d string"
     )
-    out = salted_join(big, small, "k", n_salts=8)
+    out = salted_join(big, small, "k", salt_src="v", n_salts=8)
     # correctness: same result as the plain join
     plain = big.join(small, "k").count()
     assert out.count() == plain
@@ -370,6 +370,37 @@ def test_local_evidence_spliced_current():
             "query modules changed since the evidence ran; re-run with "
             f"CHECK_SPLICE_INTO={ev.name} and '--stale'"
         )
+
+
+def test_plan_dumps_are_stable_between_builds(spark, sf_dir):
+    """scripts/explain_plans.py writes a query's optimized plan so that
+    two builds give the same text.  d7 and d13 persist frames and run
+    eager jobs while they build, so their plans hold cached physical
+    plans with exchange ids, and both use Python lambdas; d13 writes a
+    store under the scratch root; x18's formatted plan held an RDD id.
+    Their raw plans differ between two builds in one process (expression
+    ids at least); the normalised ones do not, also when another query
+    was built first."""
+    import sys as _sys
+
+    _sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
+    try:
+        from explain_plans import normalise
+    finally:
+        _sys.path.pop(0)
+    names = ("d7_embedding_dup_pairs", "d13_incremental_lsh_probe", "x18_bm25_retrieval")
+
+    def build():
+        return {
+            n: q(n, spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+            for n in names
+        }
+
+    q("tpch_q1_pricing_summary", spark, sf_dir)
+    first, second = build(), build()
+    assert all(first[n] != second[n] for n in names)
+    for n in names:
+        assert normalise(first[n]) == normalise(second[n]), n
 
 
 def test_x7_sampler_is_zero_shuffle_pushed_filter(spark, sf_dir):

@@ -13,8 +13,9 @@ at an external gate three weeks later.
 The reachability and options lints at the end are source-level rather
 than oracle-level: product code that only tests reach fails the first
 unless ``ALLOWED`` records why it stays, and a defaulted parameter or
-environment knob that no execution root sets (to anything but its
-default) fails the second unless ``ALLOWED_OPTIONS`` does.
+environment knob that the execution roots leave with one value in use
+(its default, or one other value every call passes) fails the second
+unless ``ALLOWED_OPTIONS`` does.
 
 Known-but-unlinted hazard (round 8, llm1): ``round(avg(<double>), n)``
 over GROUPS is accumulation-order-sensitive — Spark's partial-sum merge
@@ -142,7 +143,6 @@ _CVSS = (
     "scalar CVSS form that test_layered_cvss_eval_equals_column_form "
     "checks the layered one-evaluation columns against"
 )
-_CODEC = "codec pair kept for the multimodal fold (ROADMAP direction 6)"
 
 #: product code that no execution path reaches, kept on purpose.  A key
 #: is a top-level def's name or, dotted, a whole module.  Each entry is a
@@ -167,8 +167,10 @@ ALLOWED = {
     "bpe_train": "produces the frozen merges x23 applies",
     "secdb_pipeline": "the secdb provider's entry point (no registered query reaches it)",
     "rocky_normalize_ecosystem": "the rocky provider's ecosystem rule (OSV entry point)",
-    "decode_jpeg_gray": _CODEC,
-    "encode_jpeg_rgb_progressive": _CODEC,
+    "encode_jpeg_rgb_progressive": (
+        "the only source of the progressive 4:4:4 colour streams that "
+        "test_multimodal.py and test_multimodal_bytes.py read"
+    ),
 }
 
 
@@ -339,6 +341,8 @@ def _env_reads(tree: ast.AST):
 #: a value the lint cannot evaluate: a forwarded name, an expression,
 #: ``*args``/``**kwargs``, or a default it cannot read
 _UNKNOWN = object()
+#: what a call passes for a parameter it leaves at its default
+_DEFAULT = object()
 
 
 def _value(node: ast.expr, constants: dict):
@@ -478,19 +482,35 @@ class _Calls:
                     any(kw.arg is None for kw in sub.keywords),
                 ))
 
-    def sets(self, callee: str, param: str, index: int | None,
-             default=_UNKNOWN) -> bool:
-        """Whether some call of ``callee`` passes ``param`` (at ``index``
-        if positional) a value other than ``default``."""
+    def passed(self, callee: str, param: str, index: int | None):
+        """Per call of ``callee``, what it passes ``param`` (at ``index``
+        if positional): a value, ``_UNKNOWN``, or ``_DEFAULT`` when it
+        leaves the parameter at its default."""
         for name in {callee} | self.aliases.get(callee, set()):
             for positional, star, keywords, starstar in self.calls.get(name, ()):
-                values = [keywords[param]] if param in keywords else []
-                if index is not None and index < len(positional):
-                    values.append(positional[index])
-                if (starstar or (index is not None and star)
-                        or any(_differs(v, default) for v in values)):
-                    return True
+                if starstar or (index is not None and star):
+                    yield _UNKNOWN
+                elif param in keywords:
+                    yield keywords[param]
+                elif index is not None and index < len(positional):
+                    yield positional[index]
+                else:
+                    yield _DEFAULT
+
+    def sets(self, callee: str, param: str, index: int | None,
+             default=_UNKNOWN) -> bool:
+        """Whether the calls of ``callee`` set ``param`` (``_sets``)."""
+        return _sets(list(self.passed(callee, param, index)), default)
+
+
+def _sets(values: list, default) -> bool:
+    """Whether calls passing ``values`` set an option whose default is
+    ``default``: some call passes another value (rule one), and the calls
+    do not all pass one and the same value (rule three: that is a knob
+    with one value in use)."""
+    if not any(v is not _DEFAULT and _differs(v, default) for v in values):
         return False
+    return any(_differs(v, values[0]) for v in values)
 
 
 def _options():
@@ -563,8 +583,8 @@ def _unset_options() -> list[str]:
             is_set = param in files.strings
         else:
             calls = (root, test) if owner in only_allowed else (root,)
-            is_set = any(c.sets(name, param, index, default)
-                         for c in calls for name in callees)
+            is_set = _sets([v for c in calls for name in callees
+                            for v in c.passed(name, param, index)], default)
         if not is_set:
             unset.append(key)
     return unset
@@ -592,6 +612,10 @@ ALLOWED_OPTIONS = {
     "operators.multimodal.encode_jpeg_gray.restart_interval": _REFERENCE,
     "operators.multimodal.encode_jpeg_gray_progressive.restart_interval": _REFERENCE,
     "operators.multimodal.encode_flac.lpc_order": _REFERENCE,
+    "operators.multimodal.encode_flac.method": (
+        f"{_REFERENCE}; every root encodes 'lpc', the tests decode the "
+        "fixed-predictor streams of the default"
+    ),
     "operators.multimodal.encode_tiff.rows_per_strip": _REFERENCE,
     "functions.zorder.write_clustered.n_files": f"{_DEPLOY}: output file count",
     "operators.dedup.write_lsh_index.mode": (
@@ -631,26 +655,31 @@ def test_options_are_set_or_allowed():
     """Every option of vunnel_spark/ is set by an execution root (for
     code only ``ALLOWED`` keeps: by a test), or is kept by an
     ``ALLOWED_OPTIONS`` entry that says why.  An option nothing sets, or
-    that every caller sets to its default, is a branch nothing runs:
-    inline its default, or record the reason it stays.
+    that every caller sets to its default or to one same other value, is
+    a branch nothing runs: inline the value in use, or record the reason
+    it stays.
 
-    Two rules decide what a call sets.  First, a call sets an option
+    Three rules decide what the calls set.  First, a call sets an option
     only when it passes a value other than the default: a literal, or a
     module constant of the calling file that no function, class or
     comprehension around the call rebinds, equal to the default sets
     nothing.  Second, a call ``x.f(...)`` whose ``x`` is imported from
     outside vunnel_spark (``gc.collect(n)``) calls no vunnel_spark def
-    named ``f``.  Other calls match by name, and a forwarded name, an
-    expression or ``*args``/``**kwargs`` counts as setting a value, so
-    the lint can miss an unused option but never flags one a root
-    passes.  Pure AST walk, no Spark."""
+    named ``f``.  Third, when every call passes the option one and the
+    same such value, the option has one value in use and counts as
+    unset: its default's branch runs in no root.  Other calls match by
+    name, and a forwarded name, an expression or ``*args``/``**kwargs``
+    counts as setting a value, so the lint can miss an unused option but
+    never flags one a root passes.  Pure AST walk, no Spark."""
     unset = _unset_options()
     missing = sorted(k for k in unset if k not in ALLOWED_OPTIONS)
     assert not missing, (
         "options that no registered query, CLI command, script or "
-        "benchmark workload sets — inline the default (a value used more "
-        "than once becomes a module constant), or add the option to "
-        f"ALLOWED_OPTIONS with the reason it stays: {missing}"
+        "benchmark workload sets, or that all of them set to one value — "
+        "inline the value in use (one used more than once becomes a "
+        "module constant; a column name the caller owns loses its "
+        "default), or add the option to ALLOWED_OPTIONS with the reason "
+        f"it stays: {missing}"
     )
     live = _options()
     gone = sorted(k for k in ALLOWED_OPTIONS if k not in live)
@@ -668,8 +697,9 @@ def _synthetic_calls(source: str) -> _Calls:
 
 def test_options_lint_counts_default_values_as_unset():
     """Rule one on synthetic input: for ``f(x, n=16)``, a call passing 16
-    as a literal or as a module constant of its file sets nothing; 8 sets
-    ``n``, and so does a name bound twice (not a constant)."""
+    as a literal or as a module constant of its file sets nothing; 8
+    next to it sets ``n``, and so does a name bound twice (not a
+    constant)."""
     literal = _synthetic_calls("""
         f(x, n=16)
         f(x, 16)
@@ -681,7 +711,7 @@ def test_options_lint_counts_default_values_as_unset():
         f(x, _N)
     """)
     assert not constant.sets("f", "n", 1, 16)
-    assert _synthetic_calls("f(x, n=8)").sets("f", "n", 1, 16)
+    assert _synthetic_calls("f(x, n=8)\nf(x, 16)").sets("f", "n", 1, 16)
     assert _synthetic_calls("""
         _N = 16
         _N = 8
@@ -730,3 +760,29 @@ def test_options_lint_counts_unknown_values_as_set():
     assert _synthetic_calls("f(x, **kw)").sets("f", "n", 1, 16)
     assert _synthetic_calls("f(*args)").sets("f", "n", 1, 16)
     assert not _synthetic_calls("f(*args)").sets("f", "n", None, 16)
+
+
+def test_options_lint_counts_one_fixed_value_as_unset():
+    """Rule three on synthetic input: for ``f(x, n=4)``, calls that all
+    pass 16, as a literal or as a module constant of their file, leave
+    ``n`` with one value in use, so they set nothing."""
+    assert not _synthetic_calls("""
+        f(x, n=16)
+        f(x, n=16)
+    """).sets("f", "n", 1, 4)
+    assert not _synthetic_calls("""
+        _N = 16
+        f(x, _N)
+        f(x, n=16)
+    """).sets("f", "n", 1, 4)
+
+
+def test_options_lint_counts_varied_values_as_set():
+    """Rule three flags only a value every call passes: ``f(x, n=16)``
+    twice sets nothing of ``n`` (default 4), but with a third call that
+    passes another value, relies on the default or forwards a name, the
+    calls set it."""
+    fixed = "f(x, n=16)\nf(x, n=16)\n"
+    assert not _synthetic_calls(fixed).sets("f", "n", 1, 4)
+    for third in ("f(x, n=8)", "f(x)", "def g(n):\n    f(x, n=n)"):
+        assert _synthetic_calls(fixed + third).sets("f", "n", 1, 4), third

@@ -118,7 +118,7 @@ def test_pq_rerank_recall_vs_bruteforce(spark, emb, pq_books):
     queries = emb.filter(F.col("vec_id") < 20)
     exact = {
         r.query_id: r.neighbor_id
-        for r in brute_force_topk(emb, queries, k=1).collect()
+        for r in brute_force_topk(emb, queries).filter(F.col("rank") == 1).collect()
     }
     approx = {
         r.query_id: r.neighbor_id

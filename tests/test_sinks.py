@@ -5,6 +5,7 @@ modes; first-observed merge idempotence; checksum listing tamper detection.
 from __future__ import annotations
 
 import os
+import signal
 import subprocess
 import sys
 from pathlib import Path
@@ -523,3 +524,38 @@ def test_scratch_dirs_go_when_their_process_exits(tmp_path):
     assert Path(root).parent == tmp_path
     assert store_after_child == "True"
     assert not Path(root).exists()
+
+
+_KILLED_SCRIPT = """
+import os, signal
+from vunnel_spark.queries._util import scratch_dir
+
+print(os.path.dirname(scratch_dir("s12_")), flush=True)
+os.kill(os.getpid(), signal.SIGKILL)
+"""
+
+
+def test_scratch_roots_of_killed_processes_are_swept(tmp_path):
+    """A process killed by SIGKILL runs no atexit hook and leaves its
+    root behind; the next process's first scratch_dir removes it, and
+    leaves the root of a process that still runs (this one).
+    Subprocesses only, no Spark session."""
+    repo = Path(__file__).resolve().parents[1]
+
+    def run(script):
+        return subprocess.run(
+            [sys.executable, "-c", script], capture_output=True, text=True,
+            env={**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": str(repo)},
+            cwd=repo, timeout=120,
+        )
+
+    killed = run(_KILLED_SCRIPT)
+    assert killed.returncode == -signal.SIGKILL, killed.stderr
+    root = Path(killed.stdout.strip())
+    assert root.parent == tmp_path and root.is_dir()
+    live = tmp_path / f"vunnel_spark_{os.getpid()}_live"
+    live.mkdir()
+    nxt = run("from vunnel_spark.queries._util import scratch_dir; scratch_dir('s12_')")
+    assert nxt.returncode == 0, nxt.stderr
+    assert not root.exists()
+    assert live.is_dir()

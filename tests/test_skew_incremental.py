@@ -35,7 +35,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     dim = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("lang_total"))
     plain = docs.join(dim, "lang").select("doc_id", "lang", "lang_total")
     salted = salted_join(
-        docs, dim, on=["lang"], n_salts=4, salt_src="doc_id", merge_hint=True
+        docs, dim, on=["lang"], salt_src="doc_id", n_salts=4
     ).select("doc_id", "lang", "lang_total")
     assert _rows(salted) == _rows(plain)
 

@@ -18,7 +18,7 @@ columns; the embedding ones read ``vec_id`` and ``embedding``.
 Scale notes: every operator shuffles on a *derived small key* (hash,
 band bucket, shingle) and never materializes the cross product.  Skewed
 shingles (stopword-only shingles at 100 TB) are handled by a frequency cap:
-shingles appearing in more than ``max_shingle_freq`` docs are dropped from
+shingles appearing in more than a fixed number of docs are dropped from
 candidate generation (they only generate noise pairs), mirroring the
 standard suffix-filtering trick from the MinHash/LSH literature.
 """
@@ -33,6 +33,8 @@ SHINGLE_K = 3
 #: LSH band count, and the MinHash length of the incremental LSH index;
 #: the index writer and the batch probe must agree on both
 LSH_BANDS, INDEX_HASHES = 16, 64
+#: MinHash length of minhash_lsh_pairs: 3 rows per band
+PAIR_HASHES = 48
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -81,12 +83,9 @@ def fingerprint_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def embedding_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    n_bits: int = 8,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within LSH buckets.
+def embedding_dup_pairs(df: DataFrame, n_bits: int = 8) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (cosine >= 0.9) within LSH
+    buckets.
 
     Candidate pairs come from random-hyperplane bucket collisions in 4
     tables (operators/similarity.py) — a self-equi-join on (table, bucket),
@@ -168,7 +167,7 @@ def embedding_dup_pairs(
                 6,
             ),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= 0.9)
         .select("id_a", "id_b", "cos_sim")
     )
 
@@ -193,22 +192,17 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(target, F.col("doc_id"))
 
 
-def semantic_dedup(
-    df: DataFrame,
-    centroids: list[list[float]],
-    nprobe: int = 1,
-) -> DataFrame:
+def semantic_dedup(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     method): cluster embeddings with a k-means coarse quantizer, then
     prune within-cluster pairs whose cosine reaches 0.95 — the
     higher id of each such pair is marked dropped (keep-lowest, matching
     exact_dedup's survivor rule).
 
-    ``nprobe`` > 1 assigns each vector to its n nearest cells, so a
-    near-dup pair straddling a Voronoi boundary still shares at least
-    one cell — recall stops depending on quantizer boundaries at the
-    cost of ~nprobe× membership (duplicate pairs collapse in the
-    keep-best window).
+    Each vector joins its 2 nearest cells, so a near-dup pair
+    straddling a Voronoi boundary still shares at least one cell —
+    recall stops depending on quantizer boundaries at the cost of ~2x
+    membership (duplicate pairs collapse in the distinct below).
 
     Scale shape: cell assignment is a pure-Catalyst constant-expression
     scan (centroids as plan literals, same as IVF search); the quadratic
@@ -236,7 +230,7 @@ def semantic_dedup(
     # exact OOM class the d7 rework removed.  Pairing thin id arrays and
     # joining vectors back puts the cosine in a flat codegen projection
     # and streams the quadratic enumeration instead of materializing it.)
-    cells = add_ivf_cells(df, centroids, nprobe=nprobe).select(
+    cells = add_ivf_cells(df, centroids, nprobe=2).select(
         F.col("vec_id").alias("id"),
         F.explode("cells").alias("cell"),
     )
@@ -252,7 +246,7 @@ def semantic_dedup(
         "transform(slice(ids, i + 2, size(ids)), "
         "y -> struct(x AS kept_id, y AS dropped_id))))"
     )
-    # nprobe>1 emits the same pair from every shared cell; distinct here
+    # two cells per vector emit a pair from every shared cell; distinct here
     # instead of letting the keep-best window collapse the duplicates
     # (identical rows either way — the window orders by (cos, kept_id))
     cand = (
@@ -382,11 +376,7 @@ def _capped(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     return sh.join(freq.filter(F.col("_f") <= max_shingle_freq), "shingle").drop("_f")
 
 
-def shared_span_pairs(
-    df: DataFrame,
-    min_span_tokens: int = 15,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
+def shared_span_pairs(df: DataFrame, min_span_tokens: int = 15) -> DataFrame:
     """Longest EXACT shared token span per document pair — substring-level
     dedup (the public method of Lee et al. 2022, "Deduplicating Training
     Data Makes Language Models Better", re-expressed relationally; the
@@ -402,13 +392,14 @@ def shared_span_pairs(
 
     Scale shape: candidate generation is the shingle equi-join — ONE
     shuffle keyed on the shingle, linear-ish under the standard
-    ``max_shingle_freq`` cap against stopword-shingle floods (same knob
-    as ngram_jaccard_pairs); the island windows partition by
+    frequency cap against stopword-shingle floods (a shingle occurring
+    more than 8 times is dropped; same knob as ngram_jaccard_pairs'
+    ``max_shingle_freq``); the island windows partition by
     (id_a, id_b, diff), bounded by document length, never corpus-wide.
     Returns (id_a, id_b, span_tokens) for pairs sharing a span of at
     least ``min_span_tokens`` tokens.
     """
-    sh = _capped(_positioned_shingles(df), max_shingle_freq)
+    sh = _capped(_positioned_shingles(df), 8)
     a, b = sh.alias("a"), sh.alias("b")
     matches = a.join(
         b,
@@ -473,11 +464,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """Broder CONTAINMENT over word-k-gram shingle sets: c(A in B) =
     |A ∩ B| / |A| — the asymmetric companion to Jaccard that catches
     subset relationships Jaccard misses (a tweet quoted inside an
@@ -487,19 +474,19 @@ def containment_pairs(
 
     Same linear-ish plan as ngram_jaccard_pairs: distinct per-doc
     shingles, equi-join on shingle (docs sharing zero shingles never
-    meet), ``max_shingle_freq`` caps stopword shingles before the
-    self-join.  Emits one row per unordered pair (id_a < id_b) with
-    BOTH directions; the filter keeps pairs where either direction
-    reaches ``threshold``, decided on the ROUNDED value so any SQL
-    oracle agrees.
+    meet), and a shingle in more than 5 documents is dropped before the
+    self-join (the stopword cap).  Emits one row per unordered pair
+    (id_a < id_b) with BOTH directions; the filter keeps pairs where
+    either direction reaches 0.95, decided on the ROUNDED value so any
+    SQL oracle agrees.
     """
     return (
-        _shingle_overlap(df, max_shingle_freq)
+        _shingle_overlap(df, 5)
         .withColumn("containment_a", F.round(F.col("n_common") / F.col("n_a"), 6))
         .withColumn("containment_b", F.round(F.col("n_common") / F.col("n_b"), 6))
         .filter(
             F.greatest(F.col("containment_a"), F.col("containment_b"))
-            >= threshold
+            >= 0.95
         )
         .select("id_a", "id_b", "n_common", "containment_a", "containment_b")
     )
@@ -636,23 +623,18 @@ def minhash_lsh_pairs_incremental(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    num_hashes: int = 64,
-    verify_threshold: float | None = 0.5,
-) -> DataFrame:
-    """MinHash + banded LSH candidate pairs (``LSH_BANDS`` bands),
-    optionally Jaccard-verified.
+def _lsh_candidates(df: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing at least one of the
+    ``LSH_BANDS`` band buckets of a ``PAIR_HASHES``-long MinHash.
 
-    Band bucket key = hash(band_index, signature slice); candidates are
-    pairs sharing >=1 bucket.  Pair generation groups ids per (band,
-    bucket) and emits in-bucket combinations with JVM array expressions —
-    ONE pass over the signature pipeline (a self-join would recompute the
-    whole minhash stage once per join side) and one shuffle of the thin
-    (id, band, bucket) frame.  With 64 hashes / 16 bands (rows=4) the
-    S-curve crosses ~0.5 Jaccard.
+    Band bucket key = hash(band_index, signature slice).  Pair
+    generation groups ids per (band, bucket) and emits in-bucket
+    combinations with JVM array expressions — ONE pass over the
+    signature pipeline (a self-join would recompute the whole minhash
+    stage once per join side) and one shuffle of the thin (id, band,
+    bucket) frame.
     """
-    buckets = _band_buckets(df, num_hashes)
+    buckets = _band_buckets(df, PAIR_HASHES)
     grouped = (
         buckets.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_set("id")).alias("ids"))
@@ -667,13 +649,19 @@ def minhash_lsh_pairs(
         "transform(slice(ids, i + 2, size(ids)), "
         "y -> struct(x AS id_a, y AS id_b))))"
     )
-    cand = (
+    return (
         grouped.select(F.explode(pair_structs).alias("p"))
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )
-    if verify_threshold is None:
-        return cand
+
+
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
+    """MinHash + banded LSH near-duplicate pairs (``_lsh_candidates``),
+    Jaccard-verified at 0.8.  With 48 hashes / 16 bands (rows=3) the
+    S-curve crosses about (1/16)^(1/3) ≈ 0.40 Jaccard, well below the
+    verify threshold.
+    """
     # Verify CANDIDATES ONLY: join the candidate pairs to per-doc shingle
     # sets and score Jaccard with array_intersect — cost is O(|candidates|),
     # never the full-corpus shingle self-join LSH exists to avoid.  The
@@ -695,7 +683,7 @@ def minhash_lsh_pairs(
     # hot.  (r9: folded the separate cand.count() job into this one —
     # same work, one fewer job + one fewer pass, per the r8 verdict's
     # overhead-trim ask.)
-    cand = cand.persist()
+    cand = _lsh_candidates(df).persist()
     cand_ids = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))
@@ -725,7 +713,7 @@ def minhash_lsh_pairs(
         )
         # filter on the UNROUNDED ratio (matches the oracle's order of
         # operations); rounding happens only in the final projection
-        .filter(F.col("_jacc") >= verify_threshold)
+        .filter(F.col("_jacc") >= 0.8)
         .select("id_a", "id_b", F.round("_jacc", 6).alias("jaccard"))
     )
 

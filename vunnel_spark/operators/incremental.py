@@ -124,12 +124,9 @@ def merge_distinct_state(
     return merged.groupBy(*keys).agg(F.hll_union_agg(col).alias(col))
 
 
-def estimate_distinct(state: DataFrame, value_col: str, out_col: str | None = None) -> DataFrame:
-    """Read the estimate off the sketch state."""
-    col = f"hll_{value_col}"
-    return state.withColumn(
-        out_col or f"approx_distinct_{value_col}", F.hll_sketch_estimate(F.col(col))
-    )
+def estimate_distinct(state: DataFrame, value_col: str, out_col: str) -> DataFrame:
+    """Read the estimate off the sketch state into ``out_col``."""
+    return state.withColumn(out_col, F.hll_sketch_estimate(F.col(f"hll_{value_col}")))
 
 
 def histogram_state(

@@ -23,34 +23,29 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: str | Sequence[str],
+    salt_src: str,
     n_salts: int = 8,
-    salt_src: str | None = None,
-    merge_hint: bool = False,
 ) -> DataFrame:
     """Equi-join with the big side salted and the small side exploded.
 
     big gains a random-ish (hash-derived, deterministic) salt in
-    [0, n_salts); small is replicated n_salts times.  The join key becomes
+    [0, n_salts) from its ``salt_src`` column (ideally unique); small is
+    replicated n_salts times.  The join key becomes
     (on, salt) so a skewed hot key spreads across n_salts partitions.
     Replication cost: |small| * n_salts rows shuffled — use only when
     ``small`` is modest but above the broadcast threshold.
 
-    ``salt_src`` names a single (ideally unique) column to derive the
-    salt from; default is a hash of the whole row.  ``merge_hint`` pins
-    the sort-merge strategy — the dim-too-big-to-broadcast regime the
-    operator exists for (an auto-broadcast would silently drop the salt
-    spread being demonstrated/tested).
+    The join is pinned to sort-merge — the dim-too-big-to-broadcast
+    regime the operator exists for (an auto-broadcast would silently
+    drop the salt spread being demonstrated/tested).
 
     Inner only: an outer mode preserving the small side would emit each
     unmatched small-side row once per salt replica.
     """
     on_cols = [on] if isinstance(on, str) else list(on)
-    src = [F.col(salt_src)] if salt_src else [F.col(c) for c in big.columns]
-    salted_big = big.withColumn("_salt", F.pmod(F.xxhash64(*src), F.lit(n_salts)))
+    salted_big = big.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(n_salts)))
     salted_small = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    if merge_hint:
-        salted_small = salted_small.hint("merge")
+    ).hint("merge")
     out = salted_big.join(salted_small, [*on_cols, "_salt"])
     return out.drop("_salt")

@@ -1654,15 +1654,6 @@ def _decode_jpeg_progressive(payload: bytes):
     return ycbcr_to_rgb(planes[0], planes[1], planes[2])
 
 
-def decode_jpeg_gray(payload: bytes):
-    """Baseline JFIF bytes -> HxW uint8 grayscale array (1-component
-    streams only; ``decode_jpeg`` handles color)."""
-    out = decode_jpeg(payload)
-    if out.ndim != 2:
-        raise ValueError("color JPEG passed to decode_jpeg_gray")
-    return out
-
-
 def _as_rgb(img):
     """A decoded gray, gray+alpha, RGB or RGBA image -> (h, w, 3): gray is
     replicated, alpha dropped (the image stages' statistics are RGB)."""
@@ -2166,9 +2157,9 @@ def iter_frames(payload: bytes) -> Iterator[bytes]:
         pos += ln
 
 
-def sample_video_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
+def sample_video_frames(df: DataFrame) -> DataFrame:
     """Explode-shaped frame sampling: one video row -> one row per kept
-    frame (indices 0, every_n, 2*every_n, ...).
+    frame (every second frame: indices 0, 2, 4, ...).
 
     The demux happens executor-side; frame payloads are real images
     (PPM in VSPK packs, JPEG in AVI/MJPEG), so downstream
@@ -2181,7 +2172,7 @@ def sample_video_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
 
     def sample(mid, payload):
         for idx, frame in enumerate(iter_frames(payload)):
-            if idx % every_n:
+            if idx % 2:
                 continue
             img = decode_image(frame)
             if frame[:2] == b"\xff\xd8":

@@ -37,16 +37,17 @@ NLIST = 8
 NPROBE = 4
 #: PQ subspaces, and codewords per subspace
 PQ_M, PQ_KS = 8, 16
+#: neighbours the exact top-k and the hard-negative miner keep per query
+EXACT_K = 5
+#: hash tables lsh_topk buckets into
+N_TABLES = 16
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k: broadcast queries x corpus, window-ranked.
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-``EXACT_K``: broadcast queries x corpus,
+    window-ranked.
 
-    Output: (query_id, neighbor_id, cos_sim, rank), rank 1..k, ties broken
+    Output: (query_id, neighbor_id, cos_sim, rank), rank 1..5, ties broken
     by neighbor id for determinism.  Squared norms are projected onto
     each SIDE before the candidate join (r14): they are per-row facts,
     so each pair evaluates one dot fold instead of three — bit-identical
@@ -76,17 +77,13 @@ def brute_force_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= EXACT_K)
     )
 
 
-def hard_negatives(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
+def hard_negatives(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: per
-    query, the top-k most-similar corpus items with a DIFFERENT label —
+    query, the ``EXACT_K`` most-similar corpus items with a DIFFERENT label —
     the negatives that sit closest to the decision boundary, the ones a
     contrastive loss learns most from (the in-batch-negatives upgrade
     every large-scale dual-encoder pipeline ships).
@@ -99,7 +96,7 @@ def hard_negatives(
     ivf_topk candidate sets; this exact form is the recall oracle.
 
     Output: (query_id, query_label, neighbor_id, neighbor_label,
-    cos_sim, rank), rank 1..k by similarity desc, neighbor id tie-break.
+    cos_sim, rank), rank 1..5 by similarity desc, neighbor id tie-break.
     """
     q = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -133,7 +130,7 @@ def hard_negatives(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= EXACT_K)
     )
 
 
@@ -383,10 +380,10 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_tables: int = 4,
     n_bits: int = 8,
 ) -> DataFrame:
-    """ANN top-k searching only LSH-bucket collisions.
+    """ANN top-k searching only the bucket collisions of ``N_TABLES`` (16)
+    LSH tables.
 
     Recall < 1.0 by construction; rank/tie rules match brute_force_topk so
     the two are directly comparable in tests (recall measurement).
@@ -415,11 +412,11 @@ def lsh_topk(
     # per DISTINCT candidate pair instead; the cosine inputs are the
     # identical per-side norm2/vector columns, so scores and ranks are
     # unchanged.
-    cb = add_lsh_buckets(corpus, n_tables, n_bits).select(
+    cb = add_lsh_buckets(corpus, N_TABLES, n_bits).select(
         F.col("vec_id").alias("neighbor_id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
-    qb = add_lsh_buckets(queries, n_tables, n_bits).select(
+    qb = add_lsh_buckets(queries, N_TABLES, n_bits).select(
         F.col("vec_id").alias("query_id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )

@@ -29,8 +29,8 @@ def salted_agg(
     df: DataFrame,
     keys: list[str],
     salt_src: str,
-    sum_cols: tuple[str, ...] = (),
-    max_cols: tuple[str, ...] = (),
+    sum_cols: tuple[str, ...],
+    max_cols: tuple[str, ...],
 ) -> DataFrame:
     """Two-phase salted aggregation over 8 salts; output == plain
     groupBy(keys).

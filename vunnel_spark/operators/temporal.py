@@ -35,7 +35,7 @@ def asof_join(
     fact: DataFrame,
     dim: DataFrame,
     keys: list[str],
-    value_cols: list[str] | None = None,
+    value_cols: list[str],
 ) -> DataFrame:
     """Backward as-of join: fact rows + latest dim ``value_cols`` at
     ``ts``.
@@ -46,7 +46,6 @@ def asof_join(
     version whose value is genuinely NULL is indistinguishable from "no
     version" (``last(ignorenulls)`` skips it).
     """
-    value_cols = value_cols or [c for c in dim.columns if c not in {*keys, "ts"}]
     d = dim.select(*keys, "ts", *value_cols).withColumn("_is_dim", F.lit(1))
     f = fact.withColumn("_is_dim", F.lit(0))
     u = f.unionByName(d, allowMissingColumns=True)

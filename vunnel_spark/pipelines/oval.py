@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: the SLES provider's PARSER_CONFIG.severity_map: feed severity -> ours
+SLES_SEVERITY_MAP = {"important": "High", "moderate": "Medium", "critical": "Critical"}
+
 
 def canonical_definitions(defs: DataFrame) -> DataFrame:
     """A13: duplicate definitions sharing ``name`` keep the highest
@@ -108,7 +111,6 @@ def sles_pipeline(
     tests: DataFrame,
     objects: DataFrame,
     states: DataFrame,
-    severity_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """SLES variant (providers/sles/parser.py:40-58, 377-420): ``pairs``
     carries a ``polarity`` column; 'not_affected' tests resolve through the
@@ -122,8 +124,8 @@ def sles_pipeline(
     (Name, "") — so a package that is both fixed and not-affected in
     one impact item emits BOTH entries, and this pipeline reproduces
     that (r12 fidelity pass replaced an anti-join that implemented the
-    comment instead of the code).  ``severity_map`` normalizes the
-    feed's lowercase severities (PARSER_CONFIG.severity_map).
+    comment instead of the code).  ``SLES_SEVERITY_MAP`` normalizes the
+    feed's lowercase severities; an unmapped one becomes "Unknown".
     """
     canon = canonical_definitions(defs)
     live = pairs.join(canon.select("def_id"), "def_id", "left_semi")
@@ -147,12 +149,10 @@ def sles_pipeline(
             F.lit(None).cast("string").alias("release"),
         )
     )
-    out = assemble(canon, aff.unionByName(na))
-    if severity_map:
-        mapped = None
-        for raw, cooked in severity_map.items():
-            mapped = (F.when(F.col("severity") == raw, cooked) if mapped is None
-                      else mapped.when(F.col("severity") == raw, cooked))
-        sev = mapped.otherwise(F.lit("Unknown"))
-        out = out.withColumn("severity", sev)
-    return out
+    mapped = None
+    for raw, cooked in SLES_SEVERITY_MAP.items():
+        mapped = (F.when(F.col("severity") == raw, cooked) if mapped is None
+                  else mapped.when(F.col("severity") == raw, cooked))
+    return assemble(canon, aff.unionByName(na)).withColumn(
+        "severity", mapped.otherwise(F.lit("Unknown"))
+    )

@@ -201,7 +201,7 @@ def assemble_records(artifacts: DataFrame, meta: DataFrame) -> DataFrame:
     )
 
 
-def with_rhel_cvss3(df, vector, base_score, status, out="cvss3_obj"):
+def with_rhel_cvss3(df, vector, base_score, status, out):
     """_parse_cvss3 + RHELCVSS3.normalize (rhel/parser.py:799-819,
     1155-1176) appended as struct column ``out``: the rhel CVSS
     envelope, which differs from the GHSA one (pipelines/github.py) in

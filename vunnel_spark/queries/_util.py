@@ -11,6 +11,7 @@ from __future__ import annotations
 import atexit
 import functools
 import os
+import re
 import shutil
 import tempfile
 
@@ -30,9 +31,28 @@ def _remove_if_owner(root: str, owner: int) -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's process
+        pass
+    return True
+
+
 @functools.cache
 def _scratch_root() -> str:
-    root = tempfile.mkdtemp(prefix="vunnel_spark_")
+    """This process's root ``vunnel_spark_<pid>_*`` in the temp dir.
+    Creating it removes the roots of processes that no longer run (a
+    process killed by a signal runs no atexit hook); a reused pid only
+    delays a removal."""
+    tmp = tempfile.gettempdir()
+    for name in os.listdir(tmp):
+        owner = re.match(r"vunnel_spark_(\d+)_", name)
+        if owner and not _running(int(owner.group(1))):
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+    root = tempfile.mkdtemp(prefix=f"vunnel_spark_{os.getpid()}_")
     atexit.register(_remove_if_owner, root, os.getpid())
     return root
 
@@ -40,7 +60,8 @@ def _scratch_root() -> str:
 def scratch_dir(prefix: str) -> str:
     """A new directory for the store one query build writes, under a
     per-process root in the temp dir that goes at interpreter exit (the
-    plan reads the store until then)."""
+    plan reads the store until then), or, if the process is killed, when
+    the next process makes its root."""
     return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 

@@ -178,9 +178,10 @@ def d3(spark, sf_dir):
     # Signature hashing is the scale-invariant win (48 vs 64 permutations:
     # 1.28s vs 2.29s for the signature stage alone); r=3x16 keeps the
     # marginal-pair miss probability below 1e-5, so the exact-equality
-    # oracle stays safe.  The library default num_hashes stays 64
-    # (INDEX_HASHES); the band count is LSH_BANDS = 16 for every caller.
-    return minhash_lsh_pairs(docs, num_hashes=48, verify_threshold=0.8)
+    # oracle stays safe.  minhash_lsh_pairs fixes PAIR_HASHES = 48; the
+    # incremental index keeps 64 (INDEX_HASHES); the band count is
+    # LSH_BANDS = 16 for every caller.
+    return minhash_lsh_pairs(docs)
 
 
 # DuckDB replica of the md5-prefix simhash: hamming distance is hash-defined,
@@ -309,7 +310,7 @@ def d7(spark, sf_dir):
     )
     corpus = emb.unionByName(planted)
     bits = scaled_lsh_bits(corpus.count())
-    return embedding_dup_pairs(corpus, threshold=0.9, n_bits=bits)
+    return embedding_dup_pairs(corpus, n_bits=bits)
 
 
 @register(
@@ -392,9 +393,10 @@ def d9(spark, sf_dir):
     )
     corpus = emb.unionByName(planted)
     cents = train_ivf_centroids(corpus, nlist=8)
-    # nprobe=2: a planted pair straddling a k-means Voronoi boundary still
-    # shares a cell, so the oracle never depends on quantizer boundaries
-    return semantic_dedup(corpus, cents, nprobe=2)
+    # two cells per vector: a planted pair straddling a k-means Voronoi
+    # boundary still shares a cell, so the oracle never depends on
+    # quantizer boundaries
+    return semantic_dedup(corpus, cents)
 
 
 _CHIM_BASE = 2_000_000
@@ -464,9 +466,7 @@ def d10(spark, sf_dir):
         ).alias("text"),
     )
     corpus = docs.unionByName(chim)
-    return shared_span_pairs(
-        corpus, min_span_tokens=15, max_shingle_freq=8
-    )
+    return shared_span_pairs(corpus, min_span_tokens=15)
 
 
 @register(
@@ -528,7 +528,7 @@ def d11(spark, sf_dir):
     from vunnel_spark.operators.graph import connected_components
 
     docs = _with_near_dups(t(spark, sf_dir, "documents").select("doc_id", "text"))
-    pairs = minhash_lsh_pairs(docs, num_hashes=48, verify_threshold=0.8)
+    pairs = minhash_lsh_pairs(docs)
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
@@ -597,7 +597,7 @@ def d12(spark, sf_dir):
     from vunnel_spark.operators.dedup import containment_pairs
 
     docs = _with_near_dups(t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return containment_pairs(docs, threshold=0.95, max_shingle_freq=5)
+    return containment_pairs(docs)
 
 
 @register(

@@ -139,7 +139,7 @@ def m3(spark, sf_dir):
     )
 
     videos = synthesize_video_table(t(spark, sf_dir, "documents"))
-    frames = sample_video_frames(videos, every_n=2)
+    frames = sample_video_frames(videos)
     feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
@@ -381,7 +381,8 @@ def m8(spark, sf_dir):
     FROM b GROUP BY media_id
     """,
     doc="REAL baseline-JPEG pipeline (operators/multimodal.py "
-        "encode_jpeg_gray/decode_jpeg_gray: numpy DCT, Annex-K Huffman "
+        "encode_jpeg_gray, decoded by image_features through "
+        "decode_image -> decode_jpeg: numpy DCT, Annex-K Huffman "
         "tables, DC prediction, byte stuffing): even block-constant "
         "images survive the lossy codec bit-exactly (zero AC, DC quant "
         "step divides), so the SQL oracle verifies Huffman decode + "
@@ -426,7 +427,7 @@ def m10(spark, sf_dir):
     )
 
     videos = synthesize_avi_mjpeg_table(t(spark, sf_dir, "documents"))
-    frames = sample_video_frames(videos, every_n=2)
+    frames = sample_video_frames(videos)
     feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
@@ -462,7 +463,7 @@ def m11(spark, sf_dir):
     )
 
     videos = synthesize_mp4_mjpeg_table(t(spark, sf_dir, "documents"))
-    frames = sample_video_frames(videos, every_n=2)
+    frames = sample_video_frames(videos)
     feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",
@@ -576,7 +577,7 @@ def m14(spark, sf_dir):
     )
 
     videos = synthesize_fmp4_mjpeg_table(t(spark, sf_dir, "documents"))
-    frames = sample_video_frames(videos, every_n=2)
+    frames = sample_video_frames(videos)
     feats = image_features(frames, passthrough=("frame_idx",))
     return feats.select(
         "media_id", "frame_idx", "width", "height",

@@ -1259,10 +1259,7 @@ def sles1(spark, sf_dir):
         .alias("evr"),
         F.lit(None).cast("string").alias("release"),
     ).distinct()
-    return sles_pipeline(
-        defs, pairs, tests, objects, states,
-        severity_map={"important": "High", "moderate": "Medium", "critical": "Critical"},
-    )
+    return sles_pipeline(defs, pairs, tests, objects, states)
 
 
 @register(

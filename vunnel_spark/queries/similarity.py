@@ -18,13 +18,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.operators.similarity import DIM, NLIST, NPROBE, _plane_value, fixed_centroids
+from vunnel_spark.operators.similarity import (
+    DIM, EXACT_K, N_TABLES, NLIST, NPROBE, _plane_value, fixed_centroids,
+)
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
 
 _N_QUERIES = 8  # small query set; corpus side stays the full table
-_K = 5
-_N_TABLES = 16
+_K = EXACT_K  # the ANN queries rank as deep as brute_force_topk (n3's recall)
 _N_BITS = 3
 
 
@@ -63,7 +64,7 @@ def _lsh_ctes() -> str:
     """CTE chain replicating add_lsh_buckets + lsh_topk candidate gen."""
     plane_rows = ",\n        ".join(
         _dvec([_plane_value(tb, b, i) for i in range(DIM)])
-        for tb in range(_N_TABLES)
+        for tb in range(N_TABLES)
         for b in range(_N_BITS)
     )
     bucket_exprs = ",\n          ".join(
@@ -74,7 +75,7 @@ def _lsh_ctes() -> str:
             for b in range(_N_BITS)
         )
         + ")"
-        for tb in range(_N_TABLES)
+        for tb in range(N_TABLES)
     )
     return f"""
     planes AS (SELECT [
@@ -88,7 +89,7 @@ def _lsh_ctes() -> str:
     cand AS (
       SELECT q.vec_id AS query_id, cb.vec_id AS neighbor_id, q.v AS qv, cb.v AS cv
       FROM q JOIN b cb ON q.vec_id <> cb.vec_id
-       AND len(list_filter(range({_N_TABLES}),
+       AND len(list_filter(range({N_TABLES}),
                            i -> q.buckets[i+1] = cb.buckets[i+1])) > 0
     ),
     lsh AS (
@@ -195,7 +196,7 @@ def n1(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    return brute_force_topk(emb, queries, k=_K).select(
+    return brute_force_topk(emb, queries).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
@@ -221,7 +222,7 @@ def n2(spark, sf_dir):
     # vectors (max pair cosine ~0.43), so buckets must stay coarse for
     # recall ~0.95; clustered real-world embeddings support 8+ bits with
     # far fewer tables.  Recall is measured by n3 and gated in tests.
-    return lsh_topk(emb, queries, k=_K, n_bits=_N_BITS, n_tables=_N_TABLES).select(
+    return lsh_topk(emb, queries, k=_K, n_bits=_N_BITS).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
@@ -316,7 +317,7 @@ def n6(spark, sf_dir):
     )
     corpus = emb.unionByName(planted)
     return (
-        lsh_topk(corpus, planted, k=1, n_bits=_N_BITS, n_tables=_N_TABLES)
+        lsh_topk(corpus, planted, k=1, n_bits=_N_BITS)
         .filter(F.col("cos_sim") >= 0.9)
         .select("query_id", "neighbor_id", "cos_sim")
     )
@@ -337,8 +338,8 @@ def n3(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    exact = brute_force_topk(emb, queries, k=_K).select("query_id", "neighbor_id")
-    approx = lsh_topk(emb, queries, k=_K, n_bits=_N_BITS, n_tables=_N_TABLES).select(
+    exact = brute_force_topk(emb, queries).select("query_id", "neighbor_id")
+    approx = lsh_topk(emb, queries, k=_K, n_bits=_N_BITS).select(
         "query_id", "neighbor_id"
     )
     hits = exact.join(approx, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
@@ -394,7 +395,7 @@ def n10(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    return hard_negatives(emb, queries, k=_K).select(
+    return hard_negatives(emb, queries).select(
         "query_id", "query_label", "neighbor_id", "neighbor_label",
         "cos_sim", "rank",
     )

@@ -69,5 +69,5 @@ def h2(spark, sf_dir):
     )
     return salted_join(
         docs.select("doc_id", "lang"), dim, on=["lang"],
-        n_salts=_BUCKETS, salt_src="doc_id", merge_hint=True,
+        salt_src="doc_id", n_salts=_BUCKETS,
     ).select("doc_id", "lang", "lang_total", "lang_avg_chars")
