@@ -6,6 +6,7 @@ pass them.  These digests pin the bytes themselves: every public
 ``synthesize_*`` builder over ids 0-49 (schema + every row, payload and
 meta included) and the six public JPEG encoders over fixed random and
 smooth arrays, with restart intervals where the encoder takes one.
+``DECODER_DIGESTS`` pin what ``decode_jpeg`` makes of those same streams.
 """
 
 from __future__ import annotations
@@ -82,6 +83,24 @@ ENCODER_DIGESTS = {
         "00a5f74d8674da6d22ec36abd856b719e668b1b0057cc29bd9ed241276422d2e",
 }
 
+#: sha256 of each decoded array's shape and bytes over the streams
+#: ``encoder_digest`` hashes; a baseline stream and its progressive twin
+#: carry the same quantized coefficients, so they decode alike
+DECODER_DIGESTS = {
+    "encode_jpeg_gray":
+        "d10fc79f3746176f202c6b2d57e51f20d8849272943bdeef3186c85b829c53b0",
+    "encode_jpeg_gray_progressive":
+        "d10fc79f3746176f202c6b2d57e51f20d8849272943bdeef3186c85b829c53b0",
+    "encode_jpeg_rgb":
+        "b8ada873744561e7e8a56336bcb9a8a9cdb8315a38453d1a4a0366ce5c1ecea5",
+    "encode_jpeg_rgb420":
+        "5568af5bad31377a0d2cbaf064bf7c6cc35480d073b3d3c1290e256f32149dff",
+    "encode_jpeg_rgb420_progressive":
+        "5568af5bad31377a0d2cbaf064bf7c6cc35480d073b3d3c1290e256f32149dff",
+    "encode_jpeg_rgb_progressive":
+        "b8ada873744561e7e8a56336bcb9a8a9cdb8315a38453d1a4a0366ce5c1ecea5",
+}
+
 
 def table_digest(spark, name: str) -> str:
     docs = spark.range(50).select(
@@ -109,17 +128,31 @@ def _images():
     return gray, rgb
 
 
-def encoder_digest(name: str) -> str:
+def _streams(name: str):
     gray, rgb = _images()
     enc = getattr(mm, name)
-    h = hashlib.sha256()
     if name.startswith("encode_jpeg_gray"):
         for img in gray:
             for ri in (None, 1, 3):
-                h.update(enc(img, restart_interval=ri))
+                yield enc(img, restart_interval=ri)
     else:
         for img in rgb:
-            h.update(enc(img))
+            yield enc(img)
+
+
+def encoder_digest(name: str) -> str:
+    h = hashlib.sha256()
+    for stream in _streams(name):
+        h.update(stream)
+    return h.hexdigest()
+
+
+def decoder_digest(name: str) -> str:
+    h = hashlib.sha256()
+    for stream in _streams(name):
+        img = mm.decode_jpeg(stream)
+        h.update(repr(img.shape).encode())
+        h.update(img.tobytes())
     return h.hexdigest()
 
 
@@ -131,6 +164,11 @@ def test_builder_bytes_pinned(spark, name):
 @pytest.mark.parametrize("name", sorted(ENCODER_DIGESTS))
 def test_jpeg_encoder_bytes_pinned(name):
     assert encoder_digest(name) == ENCODER_DIGESTS[name]
+
+
+@pytest.mark.parametrize("name", sorted(DECODER_DIGESTS))
+def test_jpeg_decoder_pixels_pinned(name):
+    assert decoder_digest(name) == DECODER_DIGESTS[name]
 
 
 def test_encoder_inputs_clear_rounding_ties():
@@ -153,4 +191,42 @@ def test_encoder_inputs_clear_rounding_ties():
         h, w = plane.shape
         blocks = plane.reshape(h // 8, 8, w // 8, 8).swapaxes(1, 2) - 128.0
         x = (m @ blocks @ m.T) / q
+        assert np.abs(np.abs(x - np.floor(x)) - 0.5).min() > 1e-9
+
+
+def _idct_planes(plane):
+    """``plane`` through quantize, dequantize and IDCT, as the codec
+    pair computes it, before any rounding."""
+    m = mm._dct_matrix()
+    q = np.array(mm._JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
+    h, w = plane.shape
+    blocks = plane.reshape(h // 8, 8, w // 8, 8).swapaxes(1, 2) - 128.0
+    px = m.T @ (np.round((m @ blocks @ m.T) / q) * q) @ m + 128.0
+    return px.swapaxes(1, 2).reshape(h, w)
+
+
+def test_decoded_samples_clear_rounding_ties():
+    """The decoder digests hold under any BLAS build only because no
+    decoded sample (gray, or R/G/B after the colour transform) sits at a
+    rounding tie."""
+    gray, rgb = _images()
+    samples = [_idct_planes(g.astype(np.float64)) for g in gray]
+    for img in rgb:
+        ycc = [np.clip(np.round(p), 0, 255) for p in mm.rgb_to_ycbcr(img)]
+        h, w = ycc[0].shape
+        for sub in (1, 2):
+            chroma = [
+                np.round(p.reshape(h // sub, sub, w // sub, sub).mean(axis=(1, 3)))
+                for p in ycc[1:]
+            ]
+            y, cb, cr = [_idct_planes(ycc[0])] + [
+                np.repeat(np.repeat(_idct_planes(c), sub, axis=0), sub, axis=1)
+                for c in chroma
+            ]
+            samples += [
+                y + 1.402 * (cr - 128.0),
+                y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
+                y + 1.772 * (cb - 128.0),
+            ]
+    for x in samples:
         assert np.abs(np.abs(x - np.floor(x)) - 0.5).min() > 1e-9
