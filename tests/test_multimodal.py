@@ -464,12 +464,14 @@ def test_jpeg_rejects_unsupported_variants():
 
     img = np.full((8, 8), 100, dtype=np.uint8)
     enc = bytearray(encode_jpeg_gray(img))
-    # flip SOF0 (FFC0) to SOF1 (FFC1, extended sequential — unsupported;
-    # SOF2 progressive decodes for real since round 6)
+    # flip SOF0 (FFC0) to SOF1 (FFC1, extended sequential) and to SOF9
+    # (FFC9, arithmetic-coded) — both unsupported; SOF2 progressive
+    # decodes for real since round 6
     idx = bytes(enc).find(b"\xff\xc0")
-    enc[idx + 1] = 0xC1
-    with pytest.raises(NotImplementedError, match="baseline"):
-        decode_jpeg(bytes(enc))
+    for sof in (0xC1, 0xC9):
+        enc[idx + 1] = sof
+        with pytest.raises(NotImplementedError, match="baseline"):
+            decode_jpeg(bytes(enc))
     with pytest.raises(ValueError, match="multiple-of-8"):
         encode_jpeg_gray(np.zeros((7, 8), dtype=np.uint8))
 
@@ -851,6 +853,29 @@ def test_progressive_decoder_rejects_bad_scans_and_dims():
         encode_jpeg_gray_progressive(np.zeros((7, 8), dtype=np.uint8))
     with pytest.raises(ValueError, match="multiple-of-16"):
         encode_jpeg_rgb420_progressive(np.zeros((8, 8, 3), dtype=np.uint8))
+
+
+@pytest.mark.parametrize("encoder", ["encode_jpeg_gray", "encode_jpeg_rgb",
+                                     "encode_jpeg_gray_progressive",
+                                     "encode_jpeg_rgb_progressive"])
+def test_jpeg_decodes_dims_not_multiple_of_8(encoder):
+    """A stream whose SOF declares 10x13 over a coded 16x16 block grid
+    decodes to the 16x16 decode cropped to 10x13: the edge blocks are
+    decoded in full and cropped, in baseline and progressive alike."""
+    import struct
+
+    import numpy as np
+
+    from vunnel_spark.operators import multimodal as mm
+
+    rng = np.random.default_rng(10)
+    img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    enc = getattr(mm, encoder)
+    payload = bytearray(enc(img[:, :, 0] if "gray" in encoder else img))
+    full = mm.decode_jpeg(bytes(payload))
+    sof = max(payload.find(b"\xff\xc0"), payload.find(b"\xff\xc2"))
+    payload[sof + 5 : sof + 9] = struct.pack(">HH", 10, 13)
+    assert np.array_equal(mm.decode_jpeg(bytes(payload)), full[:10, :13])
 
 
 def test_progressive_color_equals_baseline_decode():

@@ -1152,14 +1152,15 @@ def _read_jpeg_symbol(br, tab):
 
 
 def _parse_dqt_body(body: bytes, qtables: dict) -> None:
-    """DQT segment body -> zigzag-order 8-bit tables (shared by the
-    baseline and progressive marker walks)."""
+    """DQT segment body -> zigzag-order 8-bit tables."""
     b = body
     while b:
         pq, tq = b[0] >> 4, b[0] & 0xF
         if pq != 0:
             raise NotImplementedError("16-bit quant tables unsupported")
-        qtables[tq] = list(b[1:65])
+        if len(b) < 65:
+            raise ValueError("truncated DQT table")
+        qtables[tq] = bytes(b[1:65])
         b = b[65:]
 
 
@@ -1178,16 +1179,20 @@ def _parse_dht_body(body: bytes, huff: dict) -> None:
     while b:
         tc, th = b[0] >> 4, b[0] & 0xF
         nvals = sum(b[1:17])
+        if len(b) < 17 + nvals:
+            raise ValueError("DHT counts more codes than it has values")
         huff[(tc, th)] = _jpeg_decode_table(bytes(b[1 : 17 + nvals]))
         b = b[17 + nvals :]
 
 
-def _jpeg_dequant(qtable: list):
-    """Zigzag-order quant table -> 8x8 natural-order float multipliers."""
+@functools.lru_cache(maxsize=64)
+def _jpeg_dequant(qtable: bytes):
+    """Zigzag-order quant table -> 8x8 natural-order float multipliers,
+    built once per distinct table (callers only read it)."""
     import numpy as np
 
     deq = np.empty(64)
-    deq[_JPEG_ZIGZAG] = np.array(qtable, dtype=np.float64)
+    deq[_JPEG_ZIGZAG] = np.frombuffer(qtable, dtype=np.uint8)
     return deq.reshape(8, 8)
 
 
@@ -1198,190 +1203,42 @@ def _check_jpeg_sampling(samp: list) -> None:
             f"unsupported sampling layout {samp} (4:4:4 and 4:2:0 decode here)")
 
 
-def decode_jpeg(payload: bytes):
-    """Baseline JFIF bytes -> HxW uint8 grayscale (1 component) or
-    HxWx3 uint8 RGB (3 components, 4:4:4 only).
-
-    Full marker walk (DQT/SOF0/DHT/DRI/SOS), interleaved-MCU Huffman
-    decode with per-component DC prediction and table selectors, restart
-    markers (byte resync + predictor reset every DRI MCUs), dequantize,
-    float IDCT, level shift, and JFIF YCbCr->RGB for color.  SOF2
-    streams route to the progressive decoder; other SOF variants are
-    rejected explicitly.
-    """
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    h = w = None
-    comp_q: list[int] = []  # per-component quant table id (SOF order)
-    comp_tabs: list[tuple[int, int]] = []  # per-component (dc, ac) ids (SOS)
-    restart_interval = 0
-    scan_data = None
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"bad marker alignment at {pos}")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack(">H", payload[pos : pos + 2])
-        body = payload[pos + 2 : pos + ln]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            _parse_dqt_body(body, qtables)
-        elif marker == 0xC0:  # SOF0 baseline
-            _prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"unsupported component count {ncomp}")
-            sampling_factors = []
-            for c in range(ncomp):
-                _cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
-                sampling_factors.append(sampling)
-                comp_q.append(tq)
-            _check_jpeg_sampling(sampling_factors)
-        elif marker == 0xC2:  # SOF2 — hand the whole stream to the
-            return _decode_jpeg_progressive(payload)  # multi-scan decoder
-        elif marker in (0xC1, 0xC3):
-            raise NotImplementedError("only baseline/progressive JPEG supported")
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            _parse_dht_body(body, huff)
-        elif marker == 0xDD:  # DRI — restart every N MCUs
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows until EOI
-            ns = body[0]
-            for c in range(ns):
-                _cid, sel = body[1 + 2 * c : 3 + 2 * c]
-                comp_tabs.append((sel >> 4, sel & 0xF))
-            scan_data = payload[pos + ln : -2]
-            pos += ln
-            break
-        pos += ln
-    if h is None or scan_data is None:
-        raise ValueError("missing SOF0/SOS")
-    ncomp = len(comp_q)
-    m = _dct_matrix()
-    deqs = [_jpeg_dequant(qtables[tq]) for tq in comp_q]
-
-    read_symbol = _read_jpeg_symbol
-    br = _BitReader(scan_data)
-    prev_dc = [0] * ncomp
-    mcu_done = [0]  # MCUs fully decoded; restart checks run between MCUs
-
-    def maybe_restart(total_mcus: int) -> None:
-        mcu_done[0] += 1
-        if (
-            restart_interval
-            and mcu_done[0] % restart_interval == 0
-            and mcu_done[0] < total_mcus
-        ):
-            n = br.sync_restart()
-            if n != (mcu_done[0] // restart_interval - 1) & 7:
-                raise ValueError("restart marker out of sequence")
-            for i in range(ncomp):
-                prev_dc[i] = 0
-
-    def decode_block(ci: int):
-        dc_tab = huff[(0, comp_tabs[ci][0])]
-        ac_tab = huff[(1, comp_tabs[ci][1])]
-        zz = np.zeros(64, dtype=np.float64)
-        cat = read_symbol(br, dc_tab)
-        prev_dc[ci] += _jpeg_extend(br.read_bits(cat), cat)
-        zz[0] = prev_dc[ci]
-        i = 1
-        while i < 64:
-            sym = read_symbol(br, ac_tab)
-            if sym == 0x00:  # EOB
-                break
-            if sym == 0xF0:  # ZRL
-                i += 16
-                continue
-            run, cat = sym >> 4, sym & 0xF
-            i += run
-            if i > 63:
-                raise ValueError("AC run past block end")
-            zz[i] = _jpeg_extend(br.read_bits(cat), cat)
-            i += 1
-        coeff = np.zeros(64)
-        coeff[_JPEG_ZIGZAG] = zz
-        return m.T @ (coeff.reshape(8, 8) * deqs[ci]) @ m + 128.0
-
-    if ncomp == 3 and sampling_factors == [0x22, 0x11, 0x11]:
-        # 4:2:0 — MCU = four Y blocks + Cb + Cr over a 16x16 tile;
-        # decode into MCU-padded planes, nearest-upsample chroma, crop
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        yplane = np.zeros((ph, pw), dtype=np.float64)
-        cbp = np.zeros((ph // 2, pw // 2), dtype=np.float64)
-        crp = np.zeros((ph // 2, pw // 2), dtype=np.float64)
-        for my in range(0, ph, 16):
-            for mx in range(0, pw, 16):
-                for dy in (0, 8):
-                    for dx in (0, 8):
-                        yplane[my + dy : my + dy + 8, mx + dx : mx + dx + 8] = (
-                            decode_block(0)
-                        )
-                cy, cx = my // 2, mx // 2
-                cbp[cy : cy + 8, cx : cx + 8] = decode_block(1)
-                crp[cy : cy + 8, cx : cx + 8] = decode_block(2)
-                maybe_restart((ph // 16) * (pw // 16))
-        cb_full = np.repeat(np.repeat(cbp, 2, axis=0), 2, axis=1)
-        cr_full = np.repeat(np.repeat(crp, 2, axis=0), 2, axis=1)
-        return ycbcr_to_rgb(yplane[:h, :w], cb_full[:h, :w], cr_full[:h, :w])
-
-    planes = [np.zeros((h, w), dtype=np.float64) for _ in range(ncomp)]
-    n_mcus = ((h + 7) // 8) * ((w + 7) // 8)
-    for by in range(0, h, 8):
-        for bx in range(0, w, 8):
-            for ci in range(ncomp):
-                planes[ci][by : by + 8, bx : bx + 8] = decode_block(ci)
-            maybe_restart(n_mcus)
-    if ncomp == 1:
-        return np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-    return ycbcr_to_rgb(planes[0], planes[1], planes[2])
-
-
 def _entropy_segment_end(payload: bytes, start: int,
                          skip_rst: bool = False) -> int:
     """First index >= start where a real marker begins (FF followed by
     anything but 00; FF FF fill bytes stay inside the segment).  With
     ``skip_rst`` (DRI active) RST0-RST7 stay inside the segment too —
     the scan decoder consumes them at restart boundaries."""
-    i = start
-    n = len(payload)
-    while i < n - 1:
-        if payload[i] == 0xFF:
-            nxt = payload[i + 1]
-            if nxt == 0x00:
-                i += 2
-                continue
-            if nxt == 0xFF:
-                i += 1  # fill byte
-                continue
-            if skip_rst and 0xD0 <= nxt <= 0xD7:
-                i += 2
-                continue
+    i = payload.find(b"\xff", start)
+    while 0 <= i < len(payload) - 1:
+        nxt = payload[i + 1]
+        if nxt == 0xFF:
+            i += 1  # fill byte
+        elif nxt == 0x00 or (skip_rst and 0xD0 <= nxt <= 0xD7):
+            i = payload.find(b"\xff", i + 2)
+        else:
             return i
-        i += 1
     raise ValueError("unterminated entropy segment")
 
 
-def _decode_jpeg_progressive(payload: bytes):
-    """Progressive (SOF2) JFIF bytes -> HxW uint8 grayscale or HxWx3 RGB.
+def decode_jpeg(payload: bytes):
+    """Baseline (SOF0) or progressive (SOF2) JFIF bytes -> HxW uint8
+    grayscale (1 component) or HxWx3 uint8 RGB (3 components, 4:4:4 or
+    4:2:0).
 
-    Multi-scan Huffman path of T.81 Annex G: coefficients accumulate
-    across scans — DC scans (interleaved across components in MCU order,
-    or single-component) with the successive-approximation point
-    transform, AC scans (always single-component, the spec forbids
-    interleaved AC in progressive mode) per spectral band with
-    END-OF-BAND run decoding (EOBn), AC refinement scans with
-    interleaved correction bits — then one dequantize + IDCT per
-    component once every scan has landed.  Components may carry 4:4:4
-    (1x1) or 4:2:0 ([2x2, 1x1, 1x1]) sampling; tables (DQT/DHT) may be
-    (re)defined between scans, per the spec.
+    One marker walk (DQT/SOF/DHT/DRI/SOS; tables may be redefined between
+    scans) and one quantized-coefficient block grid per component, which
+    every scan decodes into (T.81 Annex G, Huffman path).  A baseline scan
+    is the Al=0 full-band case: per block a DC difference, then the AC
+    band 1-63, whose EOB is EOB0.  Progressive scans are DC scans
+    (interleaved in MCU order, or single-component) with the point
+    transform Al, single-component AC bands with END-OF-BAND runs (EOBn),
+    and refinement scans of either kind with correction bits.  Restart
+    markers resynchronise every DRI MCUs and reset predictors.  Once every
+    scan has landed, each component is dequantized and inverse-DCT'd over
+    its MCU-padded grid, upsampled and cropped; colour goes through JFIF
+    YCbCr->RGB.  Other SOF variants raise NotImplementedError, malformed
+    streams ValueError.
     """
     import struct
 
@@ -1390,155 +1247,162 @@ def _decode_jpeg_progressive(payload: bytes):
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     pos = 2
-    qtables: dict[int, list[int]] = {}
+    qtables: dict[int, bytes] = {}
     huff: dict[tuple[int, int], dict] = {}
-    h = w = None
     comps: list[dict] = []  # {cid, hs, vs, tq, bw, bh, cx, cy, coefs}
-    mcu_cols = mcu_rows = 0
-    saw_sos = False
+    progressive = saw_sos = False
     ri = 0  # DRI restart interval, in MCUs (blocks for 1-comp scans)
     read_symbol = _read_jpeg_symbol
 
-    def expect_rst(br, seq):
-        got = br.sync_restart()
-        if got != seq & 7:
-            raise ValueError("restart marker out of sequence")
+    def units(scan_comps):
+        # one yielded list of (comp_index, block) per MCU — the restart
+        # unit; a single-component scan's MCU is one block of the
+        # component's own extent, an interleaved one walks T.81 A.2.3
+        if len(scan_comps) == 1:
+            i = scan_comps[0]
+            c = comps[i]
+            for row in range(c["cy"]):
+                for col in range(c["cx"]):
+                    yield [(i, c["coefs"][row * c["bw"] + col])]
+            return
+        for my in range(mcu_rows):
+            for mx in range(mcu_cols):
+                unit = []
+                for i in scan_comps:
+                    c = comps[i]
+                    for dy in range(c["vs"]):
+                        for dx in range(c["hs"]):
+                            unit.append((i, c["coefs"][
+                                (my * c["vs"] + dy) * c["bw"] + mx * c["hs"] + dx
+                            ]))
+                yield unit
 
-    def scan_dc_first(br, units, tabs, al):
-        # units yields per-MCU lists of (comp_index, block); one DC
-        # predictor per component, reset at every restart boundary
-        pred = [0] * len(comps)
-        seq = 0
-        for u, unit in enumerate(units):
-            if ri and u and u % ri == 0:
-                expect_rst(br, seq)
-                seq += 1
-                pred = [0] * len(comps)
-            for ci, blk in unit:
-                cat = read_symbol(br, tabs[ci])
-                pred[ci] += _jpeg_extend(br.read_bits(cat), cat)
-                blk[0] = pred[ci] << al
+    def restarts(br, scan_units):
+        # (restarted, unit) pairs: before every ri-th unit the RSTn marker
+        # is consumed and its sequence number checked (E.2.4)
+        for u, unit in enumerate(scan_units):
+            restarted = ri and u and u % ri == 0
+            if restarted and br.sync_restart() != (u // ri - 1) & 7:
+                raise ValueError("restart marker out of sequence")
+            yield restarted, unit
 
-    def scan_dc_refine(br, units, al):
-        seq = 0
-        for u, unit in enumerate(units):
-            if ri and u and u % ri == 0:
-                expect_rst(br, seq)
-                seq += 1
-            for _ci, blk in unit:
-                if br.read_bit():
-                    blk[0] |= 1 << al  # two's-complement OR appends the
-                    # bit correctly for negative DC values too
+    def ac_first(br, blk, ac_tab, ss, se, al, eobrun):
+        # one block of a first AC band; returns the EOB run left after it
+        if eobrun:
+            return eobrun - 1
+        k = ss
+        while k <= se:
+            sym = read_symbol(br, ac_tab)
+            r, s = sym >> 4, sym & 0xF
+            if s == 0:
+                if r == 15:  # ZRL
+                    k += 16
+                    continue
+                return (1 << r) - 1 + br.read_bits(r)  # EOBn
+            k += r
+            if k > se:
+                raise ValueError("AC run past band end")
+            blk[k] = _jpeg_extend(br.read_bits(s), s) << al
+            k += 1
+        return 0
 
-    def scan_ac_first(br, blocks, ac_tab, ss, se, al):
-        eobrun = 0
-        seq = 0
-        for bi, blk in enumerate(blocks):
-            if ri and bi and bi % ri == 0:
-                # an EOB run may not cross a boundary (E.2.4)
-                if eobrun:
-                    raise ValueError("EOB run crosses restart boundary")
-                expect_rst(br, seq)
-                seq += 1
-            if eobrun:
-                eobrun -= 1
-                continue
-            k = ss
+    def correct(br, blk, k, p1):
+        # one raw correction bit for an already-nonzero coefficient:
+        # 1 -> add 1<<Al toward larger magnitude
+        if br.read_bit() and not blk[k] & p1:
+            blk[k] += p1 if blk[k] > 0 else -p1
+
+    def ac_refine(br, blk, ac_tab, ss, se, al, eobrun):
+        # T.81 G.1.2.3: newly-significant coefficients arrive as +-1<<Al,
+        # and every already-nonzero one crossed on the way takes a
+        # correction bit; returns the EOB run left after this block
+        p1 = 1 << al
+        k = ss
+        if eobrun == 0:
             while k <= se:
                 sym = read_symbol(br, ac_tab)
                 r, s = sym >> 4, sym & 0xF
+                val = 0
                 if s == 0:
-                    if r == 15:  # ZRL
-                        k += 16
-                        continue
-                    eobrun = (1 << r) - 1
-                    if r:
-                        eobrun += br.read_bits(r)
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("AC run past band end")
-                blk[k] = _jpeg_extend(br.read_bits(s), s) << al
+                    if r < 15:
+                        # the run INCLUDES this block: its band tail is
+                        # finished by the eobrun walk below
+                        eobrun = (1 << r) + br.read_bits(r)
+                        break
+                    # r == 15: pass 16 zero-HISTORY positions
+                else:
+                    if s != 1:
+                        raise ValueError("refinement size must be 1")
+                    val = p1 if br.read_bit() else -p1
+                while k <= se:
+                    if blk[k] != 0:
+                        correct(br, blk, k, p1)
+                    else:
+                        if r == 0:
+                            break
+                        r -= 1
+                    k += 1
+                if val:
+                    if k > se:
+                        raise ValueError("AC run past band end")
+                    blk[k] = val
                 k += 1
+        if eobrun > 0:
+            while k <= se:  # EOB run: correction bits only
+                if blk[k] != 0:
+                    correct(br, blk, k, p1)
+                k += 1
+            eobrun -= 1
+        return eobrun
 
-    def scan_ac_refine(br, blocks, ac_tab, ss, se, al):
-        # T.81 G.1.2.3: newly-significant coefficients arrive as +-1<<Al;
-        # every already-nonzero coefficient crossed on the way emits one
-        # raw correction bit (1 -> add 1<<Al toward larger magnitude)
-        p1, m1 = 1 << al, -1 << al
+    def scan(br, scan_units, tabs, ss, se, ah, al):
+        # one DC predictor per component and one EOB run, both reset at
+        # every restart boundary, which a run may not cross (E.2.4)
+        pred = [0] * len(comps)
         eobrun = 0
-        seq = 0
-
-        def correct(blk, k):
-            if br.read_bit():
-                if blk[k] > 0 and not (blk[k] & p1):
-                    blk[k] += p1
-                elif blk[k] < 0 and not (blk[k] & p1):
-                    blk[k] += m1
-
-        for bi, blk in enumerate(blocks):
-            if ri and bi and bi % ri == 0:
+        band = ac_refine if ah else ac_first
+        for restarted, unit in restarts(br, scan_units):
+            if restarted:
                 if eobrun:
                     raise ValueError("EOB run crosses restart boundary")
-                expect_rst(br, seq)
-                seq += 1
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    sym = read_symbol(br, ac_tab)
-                    r, s = sym >> 4, sym & 0xF
-                    val = 0
-                    if s == 0:
-                        if r < 15:
-                            # run length INCLUDES the current block: its
-                            # band tail is finished by the eobrun>0 walk
-                            # below, which also decrements (G.1.2.3)
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += br.read_bits(r)
-                            break
-                        # r == 15: pass 16 zero-HISTORY positions
-                    else:
-                        if s != 1:
-                            raise ValueError("refinement size must be 1")
-                        val = p1 if br.read_bit() else m1
-                    while k <= se:
-                        if blk[k] != 0:
-                            correct(blk, k)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val:
-                        if k > se:  # run overran the band (malformed or
-                            raise ValueError("AC run past band end")  # foreign stream)
-                        blk[k] = val
-                    k += 1
-            if eobrun > 0:
-                while k <= se:  # EOB run: correction bits only
-                    if blk[k] != 0:
-                        correct(blk, k)
-                    k += 1
-                eobrun -= 1
+                pred = [0] * len(comps)
+            for ci, blk in unit:
+                if ss == 0 and not ah:
+                    cat = read_symbol(br, tabs[ci][0])
+                    pred[ci] += _jpeg_extend(br.read_bits(cat), cat)
+                    blk[0] = pred[ci] << al
+                elif ss == 0 and br.read_bit():  # DC refinement bit
+                    blk[0] |= 1 << al  # two's-complement OR appends the
+                    # bit correctly for negative DC values too
+                if se:
+                    eobrun = band(br, blk, tabs[ci][1], ss or 1, se, al, eobrun)
+                    if eobrun and not progressive:
+                        raise ValueError("EOB run in a baseline scan")
 
     while pos < len(payload):
-        if payload[pos] != 0xFF:
+        if payload[pos] != 0xFF or pos + 1 == len(payload):
             raise ValueError(f"bad marker alignment at {pos}")
         marker = payload[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
             break
-        (ln,) = struct.unpack(">H", payload[pos : pos + 2])
+        ln = int.from_bytes(payload[pos : pos + 2], "big")
+        if ln < 2 or pos + ln > len(payload):
+            raise ValueError(f"truncated segment FF{marker:02X}")
         body = payload[pos + 2 : pos + ln]
-        if marker == 0xDB:
+        if marker == 0xDB:  # DQT (possibly several tables)
             _parse_dqt_body(body, qtables)
-        elif marker == 0xC2:
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline, SOF2 progressive
+            if comps:
+                raise ValueError("second SOF")
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("short SOF")
+            progressive = marker == 0xC2
             _prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
             if ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "progressive decode covers 1- or 3-component streams"
-                )
+                raise NotImplementedError(f"unsupported component count {ncomp}")
+            if not h or not w:
+                raise ValueError("zero image dimension")
             samp = []
             for c in range(ncomp):
                 cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
@@ -1551,99 +1415,68 @@ def _decode_jpeg_progressive(payload: bytes):
             mcu_cols = -(-w // (8 * hmax))
             mcu_rows = -(-h // (8 * vmax))
             for c in comps:
-                # padded-to-MCU grid (interleaved DC addressing) and the
-                # component's own block extent (non-interleaved AC walks)
+                # padded-to-MCU grid (interleaved addressing) and the
+                # component's own block extent (single-component scans)
                 c["bw"], c["bh"] = mcu_cols * c["hs"], mcu_rows * c["vs"]
                 c["cx"] = -(-(w * c["hs"]) // (8 * hmax))
                 c["cy"] = -(-(h * c["vs"]) // (8 * vmax))
                 c["coefs"] = [[0] * 64 for _ in range(c["bw"] * c["bh"])]
-        elif marker == 0xC4:
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            # the other SOFn: extended, lossless, hierarchical, arithmetic
+            raise NotImplementedError(f"only baseline/progressive JPEG supported "
+                                      f"(SOF FF{marker:02X})")
+        elif marker == 0xC4:  # DHT (possibly several tables)
             _parse_dht_body(body, huff)
-        elif marker == 0xDD:
-            (ri,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
+        elif marker == 0xDD:  # DRI — restart every N MCUs
+            if len(body) < 2:
+                raise ValueError("short DRI")
+            ri = int.from_bytes(body[:2], "big")
+        elif marker == 0xDA:  # SOS — entropy data follows
             if not comps:
-                raise ValueError("SOS before SOF2")
-            saw_sos = True
-            ns = body[0]
-            scan_comps, sels = [], []
-            for c in range(ns):
-                cid, sel = body[1 + 2 * c : 3 + 2 * c]
-                idx = next(i for i, cc in enumerate(comps) if cc["cid"] == cid)
-                scan_comps.append(idx)
-                sels.append((sel >> 4, sel & 0xF))
+                raise ValueError("SOS before SOF")
+            ns = body[0] if body else 0
+            if not ns or len(body) < 4 + 2 * ns:
+                raise ValueError("short SOS")
             ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
             ah, al = ahal >> 4, ahal & 0xF
-            data_start = pos + ln
-            data_end = _entropy_segment_end(payload, data_start,
-                                            skip_rst=bool(ri))
-            br = _BitReader(payload[data_start:data_end])
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("DC scan must have Se=0")
-
-                def dc_units():
-                    # one yielded list per MCU — the restart-boundary unit
-                    if ns == 1:
-                        c = comps[scan_comps[0]]
-                        for row in range(c["cy"]):
-                            for col in range(c["cx"]):
-                                yield [(scan_comps[0],
-                                        c["coefs"][row * c["bw"] + col])]
-                    else:  # interleaved MCU order
-                        for my in range(mcu_rows):
-                            for mx in range(mcu_cols):
-                                unit = []
-                                for i in scan_comps:
-                                    c = comps[i]
-                                    for dy in range(c["vs"]):
-                                        for dx in range(c["hs"]):
-                                            unit.append((i, c["coefs"][
-                                                (my * c["vs"] + dy) * c["bw"]
-                                                + mx * c["hs"] + dx
-                                            ]))
-                                yield unit
-
-                if ah == 0:
-                    tabs = {}
-                    for slot, i in enumerate(scan_comps):
-                        tabs[i] = huff[(0, sels[slot][0])]
-                    scan_dc_first(br, dc_units(), tabs, al)
-                else:
-                    scan_dc_refine(br, dc_units(), al)
-            else:
-                if ns != 1:
-                    raise ValueError("progressive AC scans are single-component")
-                c = comps[scan_comps[0]]
-                blocks = [
-                    c["coefs"][row * c["bw"] + col]
-                    for row in range(c["cy"])
-                    for col in range(c["cx"])
-                ]
-                ac_tab = huff[(1, sels[0][1])]
-                if ah == 0:
-                    scan_ac_first(br, blocks, ac_tab, ss, se, al)
-                else:
-                    scan_ac_refine(br, blocks, ac_tab, ss, se, al)
+            if not progressive and (ss, se, ah, al) != (0, 63, 0, 0):
+                raise ValueError("baseline scan must cover 0-63 at Ah=Al=0")
+            if ss == 0 and se != 0 and progressive:
+                raise ValueError("DC scan must have Se=0")
+            if ss > se or se > 63:
+                raise ValueError(f"bad spectral band {ss}-{se}")
+            if ss and ns != 1 and progressive:
+                raise ValueError("progressive AC scans are single-component")
+            scan_comps, tabs = [], {}
+            for c in range(ns):
+                cid, sel = body[1 + 2 * c : 3 + 2 * c]
+                idx = next((i for i, cc in enumerate(comps) if cc["cid"] == cid), None)
+                if idx is None:
+                    raise ValueError(f"SOS names undeclared component {cid}")
+                dc, ac = huff.get((0, sel >> 4)), huff.get((1, sel & 0xF))
+                if (ss == 0 and not ah and dc is None) or (se and ac is None):
+                    raise ValueError("scan uses an undefined Huffman table")
+                scan_comps.append(idx)
+                tabs[idx] = dc, ac
+            saw_sos = True
+            data_end = _entropy_segment_end(payload, pos + ln, skip_rst=bool(ri))
+            br = _BitReader(payload[pos + ln : data_end])
+            scan(br, units(scan_comps), tabs, ss, se, ah, al)
             pos = data_end
             continue
         pos += ln
-    if not comps or not saw_sos:
-        raise ValueError("missing SOF2/SOS")
+    if not saw_sos:
+        raise ValueError("missing SOF/SOS")
     m = _dct_matrix()
-    hmax = max(c["hs"] for c in comps)
-    vmax = max(c["vs"] for c in comps)
     planes = []
     for c in comps:
-        deq = _jpeg_dequant(qtables[c["tq"]])
-        plane = np.zeros((c["bh"] * 8, c["bw"] * 8), dtype=np.float64)
-        for bi, zz in enumerate(c["coefs"]):
-            coeff = np.zeros(64)
-            coeff[_JPEG_ZIGZAG] = zz
-            by, bx = (bi // c["bw"]) * 8, (bi % c["bw"]) * 8
-            plane[by : by + 8, bx : bx + 8] = (
-                m.T @ (coeff.reshape(8, 8) * deq) @ m + 128.0
-            )
+        if c["tq"] not in qtables:
+            raise ValueError(f"undefined quantization table {c['tq']}")
+        coef = np.zeros((len(c["coefs"]), 64))
+        coef[:, _JPEG_ZIGZAG] = c["coefs"]
+        blocks = m.T @ (coef.reshape(-1, 8, 8) * _jpeg_dequant(qtables[c["tq"]])) @ m
+        plane = (blocks + 128.0).reshape(c["bh"], c["bw"], 8, 8).swapaxes(1, 2)
+        plane = plane.reshape(c["bh"] * 8, c["bw"] * 8)
         # upsample subsampled chroma to full resolution, crop to image
         ry, rx = vmax // c["vs"], hmax // c["hs"]
         if ry > 1 or rx > 1:
@@ -1667,13 +1500,12 @@ def _as_rgb(img):
 def decode_image(payload: bytes):
     """Decode one image payload.
 
-    PPM (P6), PNG (8/16-bit gray/truecolor, palette, Adam7), baseline
-    JPEG (grayscale, 4:4:4 color, 4:2:0 subsampled), progressive
-    JPEG (gray, 4:4:4 and 4:2:0 color), GIF (LZW, interlace, local
-    tables — first frame here; gif_frame_features for all frames), and
-    BMP (8-bit palette + 24-bit, both row orders) decode for real;
-    remaining variants (arithmetic-coded JPEG, HEIC, ...) need codec
-    libraries this container doesn't ship and raise NotImplementedError.
+    PPM (P6), PNG (8/16-bit gray/truecolor, palette, Adam7), JPEG
+    (baseline and progressive through the one ``decode_jpeg``: gray,
+    4:4:4 and 4:2:0 color), GIF (LZW, interlace, local tables — first
+    frame here; gif_frame_features for all frames), and BMP (8-bit
+    palette + 24-bit, both row orders) decode for real; other variants
+    (arithmetic-coded JPEG, HEIC, ...) raise NotImplementedError.
     """
     payload = bytes(payload)
     if payload[:2] == b"P6":
@@ -1692,9 +1524,8 @@ def decode_image(payload: bytes):
         return decode_ico(payload)[0]  # still-image use: first entry
     raise NotImplementedError(
         "no codec for this payload format in this environment; PPM (P6), "
-        "PNG (8/16-bit gray/truecolor, palette, Adam7), baseline JPEG "
-        "(gray, 4:4:4 color, 4:2:0 subsampled) and progressive JPEG "
-        "(gray + color) decode natively"
+        "PNG (8/16-bit gray/truecolor, palette, Adam7) and baseline and "
+        "progressive JPEG (gray, 4:4:4 and 4:2:0 color) decode natively"
     )
 
 

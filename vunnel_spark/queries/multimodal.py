@@ -607,7 +607,7 @@ def m14(spark, sf_dir):
     FROM b GROUP BY media_id
     """,
     doc="REAL progressive-JPEG pipeline (operators/multimodal.py "
-        "encode_jpeg_gray_progressive/_decode_jpeg_progressive: SOF2 "
+        "encode_jpeg_gray_progressive/decode_jpeg: SOF2 "
         "six-scan script — DC+AC spectral selection, END-OF-BAND run "
         "coding, full successive-approximation refinement with "
         "interleaved correction bits).  The multi-scan entropy layer is "
