@@ -878,6 +878,25 @@ def test_jpeg_decodes_dims_not_multiple_of_8(encoder):
     assert np.array_equal(mm.decode_jpeg(bytes(payload)), full[:10, :13])
 
 
+@pytest.mark.parametrize("encoder", ["encode_jpeg_gray", "encode_jpeg_rgb420_progressive"])
+def test_jpeg_rejects_sof_larger_than_its_data(encoder):
+    """Each block's DC difference takes at least one bit, so a SOF that
+    declares more blocks than the payload has bits is rejected before
+    the block grid is allocated."""
+    import struct
+
+    import numpy as np
+
+    from vunnel_spark.operators import multimodal as mm
+
+    img = np.full((16, 16, 3), 100, dtype=np.uint8)
+    payload = bytearray(getattr(mm, encoder)(img[:, :, 0] if "gray" in encoder else img))
+    sof = max(payload.find(b"\xff\xc0"), payload.find(b"\xff\xc2"))
+    payload[sof + 5 : sof + 9] = struct.pack(">HH", 4096, 4096)
+    with pytest.raises(ValueError, match="more blocks"):
+        mm.decode_jpeg(bytes(payload))
+
+
 def test_progressive_color_equals_baseline_decode():
     """Color progressive (4:4:4 AND 4:2:0): interleaved-MCU DC scans
     with per-component predictors + per-component AC scans must decode

@@ -1420,6 +1420,11 @@ def decode_jpeg(payload: bytes):
                 c["bw"], c["bh"] = mcu_cols * c["hs"], mcu_rows * c["vs"]
                 c["cx"] = -(-(w * c["hs"]) // (8 * hmax))
                 c["cy"] = -(-(h * c["vs"]) // (8 * vmax))
+            # every block's DC difference takes at least one bit, so a
+            # larger grid cannot be coded and is not allocated
+            if sum(c["cx"] * c["cy"] for c in comps) > 8 * len(payload):
+                raise ValueError("SOF declares more blocks than the stream can code")
+            for c in comps:
                 c["coefs"] = [[0] * 64 for _ in range(c["bw"] * c["bh"])]
         elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
             # the other SOFn: extended, lossless, hierarchical, arithmetic
