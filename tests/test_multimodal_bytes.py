@@ -194,7 +194,7 @@ def test_encoder_inputs_clear_rounding_ties():
         assert np.abs(np.abs(x - np.floor(x)) - 0.5).min() > 1e-9
 
 
-def _idct_planes(plane):
+def _idct_plane(plane):
     """``plane`` through quantize, dequantize and IDCT, as the codec
     pair computes it, before any rounding."""
     m = mm._dct_matrix()
@@ -210,7 +210,7 @@ def test_decoded_samples_clear_rounding_ties():
     decoded sample (gray, or R/G/B after the colour transform) sits at a
     rounding tie."""
     gray, rgb = _images()
-    samples = [_idct_planes(g.astype(np.float64)) for g in gray]
+    samples = [_idct_plane(g.astype(np.float64)) for g in gray]
     for img in rgb:
         ycc = [np.clip(np.round(p), 0, 255) for p in mm.rgb_to_ycbcr(img)]
         h, w = ycc[0].shape
@@ -219,8 +219,8 @@ def test_decoded_samples_clear_rounding_ties():
                 np.round(p.reshape(h // sub, sub, w // sub, sub).mean(axis=(1, 3)))
                 for p in ycc[1:]
             ]
-            y, cb, cr = [_idct_planes(ycc[0])] + [
-                np.repeat(np.repeat(_idct_planes(c), sub, axis=0), sub, axis=1)
+            y, cb, cr = [_idct_plane(ycc[0])] + [
+                np.repeat(np.repeat(_idct_plane(c), sub, axis=0), sub, axis=1)
                 for c in chroma
             ]
             samples += [
