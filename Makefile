@@ -21,9 +21,11 @@ lint:
 	  tests/test_plans.py::test_local_evidence_spliced_current -q
 
 # the worker daemon's two patches, in subprocesses (no Spark): fails when a
-# PySpark or CPython upgrade renames what they replace
+# PySpark or CPython upgrade renames what they replace; and the driver's
+# class-data sharing, in driver subprocesses: fails when a JDK or Spark
+# upgrade changes the launcher's class path or what the JVM prints
 daemon:
-	$(PY) -m pytest tests/test_worker_daemon.py -q
+	$(PY) -m pytest tests/test_worker_daemon.py tests/test_session_cds.py -q
 
 gate:
 	$(PY) -c "from vunnel_spark.queries import GATE_WINDOW; import subprocess, sys; \

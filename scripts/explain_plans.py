@@ -54,6 +54,10 @@ def main() -> None:
     from vunnel_spark.session import get_spark
 
     spark = get_spark("vunnel_spark_explain")
+    # Spark cuts metadata strings such as a FileScan's Location to 100
+    # characters, which would cut a path under the checkout at a point
+    # that depends on how long the checkout's own path is.
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000000")
     qs = all_queries()
     for name in names or list(qs):
         if name not in qs:

@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vunnel_spark.session import load_table
+from vunnel_spark.session import load_table, process_running
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -31,16 +31,6 @@ def _remove_if_owner(root: str, owner: int) -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _running(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:  # another user's process
-        pass
-    return True
-
-
 @functools.cache
 def _scratch_root() -> str:
     """This process's root ``vunnel_spark_<pid>_*`` in the temp dir.
@@ -50,7 +40,7 @@ def _scratch_root() -> str:
     tmp = tempfile.gettempdir()
     for name in os.listdir(tmp):
         owner = re.match(r"vunnel_spark_(\d+)_", name)
-        if owner and not _running(int(owner.group(1))):
+        if owner and not process_running(int(owner.group(1))):
             shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
     root = tempfile.mkdtemp(prefix=f"vunnel_spark_{os.getpid()}_")
     atexit.register(_remove_if_owner, root, os.getpid())

@@ -12,9 +12,17 @@ partition-count agnostic because AQE coalesces post-shuffle.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import re
+import shutil
 import stat
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -133,9 +141,158 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # unix_micros()/withWatermark() and wrap every ts in casts
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
-    spark = builder.getOrCreate()
+    with _shared_class_data(builder):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Driver start-up with class-data sharing.  Loading and verifying the
+# classes of the Spark jars is most of a driver's 10 s start.  A dynamic
+# CDS archive (JEP 350) maps them ready-parsed instead and about halves
+# it.  JDK 17 dumps one only when every directory on the class
+# path is empty, and Spark puts its conf dir there; when that dir holds
+# only templates, the launch points SPARK_CONF_DIR at an empty dir of
+# our own, which Spark reads the same.  The first launch for a JDK and
+# jar set dumps the archive as its JVM exits; later ones map it.
+
+#: the longest an exiting process waits for its JVM to dump (~10 s)
+_DUMP_WAIT_S = 120
+#: JVM options of every launch that shares class data.  The JVM prints
+#: its CDS warnings (a stale archive, a class it skips) on the stdout it
+#: shares with Python, where a caller reads its own protocol.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+
+
+def process_running(pid: int) -> bool:
+    """Whether a process with this pid exists."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's process
+        pass
+    return True
+
+
+def _archive_key(java: str, spark_home: str) -> str:
+    """Hash of what an archive was built from: the JDK (its binary, class
+    modules and VM library) and the name, size and mtime of every jar."""
+    java = os.path.realpath(java)
+    jdk = os.path.dirname(os.path.dirname(java))
+    parts = [java]
+    for path in (os.path.join(jdk, "lib", "modules"),
+                 os.path.join(jdk, "lib", "server", "libjvm.so")):
+        with contextlib.suppress(OSError):
+            st = os.stat(path)
+            parts.append(f"{path} {st.st_size} {st.st_mtime_ns}")
+    jars = os.path.join(spark_home, "jars")
+    for entry in sorted(os.scandir(jars), key=lambda e: e.name):
+        st = entry.stat()
+        parts.append(f"{entry.name} {st.st_size} {st.st_mtime_ns}")
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def _cds_launch() -> tuple[str, str, str | None] | None:
+    """(empty conf dir, JVM options, temp file the JVM dumps to or None)
+    for a driver launch that can share class data, or None to launch as
+    Spark does by itself: when a JVM already runs, when the real conf
+    dir holds more than templates, or when the environment adds class
+    path entries (which an archive would have to match)."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR",
+                                       "SPARK_DIST_CLASSPATH")):
+        return None
+    spark_home = _find_spark_home()
+    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+            if os.environ.get("JAVA_HOME") else shutil.which("java"))
+    cds = os.path.join(os.path.expanduser("~"), ".cache", "vunnel_spark", "cds")
+    conf = os.path.join(cds, "conf")
+    try:
+        conf_names = os.listdir(os.environ.get("SPARK_CONF_DIR")
+                               or os.path.join(spark_home, "conf"))
+        if (not java or re.search(r"[\s\"'\\]", cds)
+                or not all(n.endswith(".template") for n in conf_names)):
+            return None
+        os.makedirs(conf, exist_ok=True)
+        if os.listdir(conf):
+            return None
+        key = _archive_key(java, spark_home)
+        names = os.listdir(cds)
+    except OSError:
+        return None
+    for name in names:
+        tmp = re.fullmatch(r"[0-9a-f]+\.(\d+)\.tmp", name)
+        if tmp and not process_running(int(tmp.group(1))):
+            with contextlib.suppress(OSError):
+                os.unlink(os.path.join(cds, name))
+    # An archive's name carries its size, so a file cut short is never
+    # mapped: JDK 17 crashes on a truncated archive instead of ignoring it.
+    for name in names:
+        size = re.fullmatch(re.escape(key) + r"-(\d+)\.jsa", name)
+        path = os.path.join(cds, name)
+        with contextlib.suppress(OSError):
+            if size and os.stat(path).st_size == int(size.group(1)):
+                return conf, f"-XX:SharedArchiveFile={path} {_CDS_QUIET}", None
+    tmp = os.path.join(cds, f"{key}.{os.getpid()}.tmp")
+    return conf, f"-XX:ArchiveClassesAtExit={tmp} {_CDS_QUIET}", tmp
+
+
+def _install_archive(tmp: str, owner: int) -> None:
+    """At interpreter exit: end the driver JVM by closing its stdin, wait
+    while it dumps its archive to ``tmp``, and give the archive its final
+    name by an atomic rename once the JVM has exited cleanly.  Without the
+    wait a parent that kills the process group once Python exits would
+    cut the dump short."""
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if os.getpid() != owner or proc is None:  # a forked child, or no JVM
+        return
+    proc.stdin.close()
+    try:
+        code = proc.wait(timeout=_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        return  # a later launch removes the temp file once we are gone
+    if code != 0 or not os.path.exists(tmp):
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
+        return
+    cds, name = os.path.split(tmp)
+    key = name.split(".")[0]
+    final = f"{key}-{os.path.getsize(tmp)}.jsa"
+    os.replace(tmp, os.path.join(cds, final))
+    for old in os.listdir(cds):  # archives of this key cut short
+        if old != final and re.fullmatch(re.escape(key) + r"-\d+\.jsa", old):
+            with contextlib.suppress(OSError):
+                os.unlink(os.path.join(cds, old))
+
+
+@contextlib.contextmanager
+def _shared_class_data(builder: SparkSession.Builder):
+    """Launch the driver JVM that ``builder.getOrCreate()`` starts inside
+    this block with class-data sharing, when ``_cds_launch`` allows it.
+    The options go into ``spark.driver.defaultJavaOptions``, which a
+    caller's ``--driver-java-options`` (spark.driver.extraJavaOptions)
+    adds to rather than replaces."""
+    launch = _cds_launch()
+    if launch is None:
+        yield
+        return
+    conf, options, tmp = launch
+    builder.config("spark.driver.defaultJavaOptions", options)
+    if tmp:
+        # registered before the launch, so it runs after PySpark's own
+        # exit hooks, which may still talk to the JVM
+        atexit.register(_install_archive, tmp, os.getpid())
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf
+    try:
+        yield
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
 
 
 #: real path -> (file version, inferred schema); one entry per path
