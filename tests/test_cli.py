@@ -109,21 +109,18 @@ def test_config_file_then_env_precedence(tmp_path, monkeypatch):
     p = tmp_path / "cfg.yaml"
     p.write_text(
         "sf_dir: /data/sfX\nshow: 25\nspark:\n  shuffle_partitions: 64\n"
-        "log:\n  level: DEBUG\n"
     )
     cfg = load(str(p))
-    assert (cfg.sf_dir, cfg.show, cfg.spark.shuffle_partitions,
-            cfg.log.level) == ("/data/sfX", 25, 64, "DEBUG")
+    assert (cfg.sf_dir, cfg.show, cfg.spark.shuffle_partitions) == (
+        "/data/sfX", 25, 64)
 
     # env overrides the file, including nested fields and bool coercion
     monkeypatch.setenv("VUNNEL_SPARK_SF_DIR", "/data/env")
     monkeypatch.setenv("VUNNEL_SPARK_EXPLAIN", "yes")
     monkeypatch.setenv("VUNNEL_SPARK_SPARK_SHUFFLE_PARTITIONS", "128")
-    monkeypatch.setenv("VUNNEL_SPARK_LOG_SHOW_TIMINGS", "on")
     cfg = load(str(p))
     assert cfg.sf_dir == "/data/env" and cfg.explain is True
     assert cfg.spark.shuffle_partitions == 128
-    assert cfg.log.show_timings is True
 
 
 def test_config_rejects_unknown_keys_and_bad_env(tmp_path, monkeypatch):

@@ -102,7 +102,7 @@ def test_lsh_topk_recall(spark, sf_dir):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in lsh_topk(emb, queries, k=5, n_bits=3).collect()
+        for r in lsh_topk(emb, queries, k=5).collect()
     }
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.8, f"ANN recall {recall:.2f} < 0.8"

@@ -109,52 +109,54 @@ def test_cc_plan_has_no_cartesian(spark):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_cc_stats_hook(spark):
-    """The scale-audit instrumentation (scalecurve.py --cc-profile)
-    records input edges, rounds run, and fixpoint edges — without
-    changing the result."""
+def test_cc_self_loop_node_is_own_component(spark):
+    """Duplicate and reversed edges collapse into one component, and a
+    node whose only edge is a self-loop is its own component: the (9, 9)
+    row drops before the star loop, but the node stays."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (2, 1), (3, 2), (9, 9)], "src long, dst long"
     )
-    stats: dict = {}
     rows = {
         r["node"]: r["component"]
-        for r in connected_components(edges, "src", "dst", stats=stats).collect()
+        for r in connected_components(edges, "src", "dst").collect()
     }
     assert rows == {1: 1, 2: 1, 3: 1, 9: 9}
-    # distinct DIRECTED rows enter ((1,2),(2,1),(2,3),(3,2)); the (9,9)
-    # self-loop drops before counting
-    assert stats["edges_in"] == 4
-    assert stats["rounds"] >= 1
-    assert stats["edges_fixpoint"] == 2  # member->min mapping for 2,3
 
 
 def test_cc_join_loop_matches_tight_loop(spark, monkeypatch):
     """The two physically different loop bodies (window-star tight loop
     vs groupBy+join star loop) are the same algorithm: forcing the join
-    loop onto a small graph must give identical components, and the
-    stats hook must say which body ran."""
+    loop onto a small graph must give identical components, and each
+    run must go through the body it was meant to."""
+    import collections
+
     import vunnel_spark.operators.graph as G
+
+    calls: collections.Counter = collections.Counter()
+    for name in ("_large_star", "_large_star_w"):
+        def counted(e, _f=getattr(G, name), _name=name):
+            calls[_name] += 1
+            return _f(e)
+        monkeypatch.setattr(G, name, counted)
 
     rng = random.Random(21)
     edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(100)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
 
-    s_tight: dict = {}
     tight = {
         r["node"]: r["component"]
-        for r in connected_components(df, "src", "dst", stats=s_tight).collect()
+        for r in connected_components(df, "src", "dst").collect()
     }
-    assert s_tight["loop"] == "tight"
+    assert calls["_large_star_w"] >= 1 and calls["_large_star"] == 0, calls
 
+    calls.clear()
     monkeypatch.setattr(G, "_TIGHT_MAX_EDGES", 0)
-    s_join: dict = {}
     join = {
         r["node"]: r["component"]
-        for r in connected_components(df, "src", "dst", stats=s_join).collect()
+        for r in connected_components(df, "src", "dst").collect()
     }
-    assert s_join["loop"] == "join"
+    assert calls["_large_star"] >= 1 and calls["_large_star_w"] == 0, calls
     assert tight == join == _union_find(edges)
     # the tight loop restored the session confs it swapped
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

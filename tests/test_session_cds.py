@@ -111,16 +111,78 @@ def test_second_process_maps_the_archive(archive):
     assert sorted(os.listdir(cds_dir(home))) == sorted([archive.name, "conf"])
 
 
-def test_stale_archive_falls_back_silently(archive, tmp_path):
+def test_stale_archive_falls_back_silently(archive, tmp_path, monkeypatch):
     """An archive dumped with another class path (here: another HOME's
-    conf dir) is refused by the JVM, which says nothing on stdout."""
-    cds_dir(tmp_path).mkdir(parents=True)
-    stale = cds_dir(tmp_path) / archive.name
+    conf dir), put at the name this launch looks up, is passed and
+    refused by the JVM, which says nothing on stdout."""
+    from vunnel_spark import session
+
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    conf = cds_dir(tmp_path) / "conf"
+    conf.mkdir(parents=True)
+    key = session._archive_key(session._java(), session._find_spark_home(), str(conf))
+    stale = cds_dir(tmp_path) / f"{key}-{archive.stat().st_size}.jsa"
     stale.symlink_to(archive)
     d = Driver(tmp_path)
     assert f"-XX:SharedArchiveFile={stale}" in d.cmdline
-    assert str(stale) not in d.maps
+    assert str(archive) not in d.maps  # the kernel names a mapped file by its real path
     assert d.exit() == ""
+
+
+def test_key_follows_what_the_submit_args_add_to_the_class_path(monkeypatch):
+    """Submit args that add class-path entries change the key; others,
+    such as the per-run ``-Djava.io.tmpdir`` a benchmark harness passes,
+    do not, or every such run would dump an archive of its own."""
+    from vunnel_spark import session
+
+    def key(args: str, conf: str = "/cds/conf") -> str:
+        monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", f"{args} pyspark-shell")
+        return session._archive_key(session._java(), session._find_spark_home(), conf)
+
+    base = key("")
+    assert key("--driver-java-options -Djava.io.tmpdir=/runs/1") == base
+    assert key("--driver-java-options -Djava.io.tmpdir=/runs/2 --driver-memory 2g") == base
+    assert key("", conf="/other/cds/conf") != base
+    added = [key("--driver-class-path /x"), key("--driver-class-path=/x"),
+             key("--conf spark.driver.extraClassPath=/x"), key("--properties-file /p")]
+    assert base not in added
+    assert added[0] == added[1] and len(set(added)) == 3
+
+
+def own_archive(home: Path, cache: Path, **env: str) -> None:
+    """The first driver of ``home`` dumps an archive into ``cache``, which
+    already holds another class path's archive, and its next driver maps
+    the new one."""
+    before = set(os.listdir(cache))
+    try:
+        d = Driver(home, **env)
+        assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in d.cmdline)
+        assert d.exit() == ""
+        new = sorted(set(os.listdir(cache)) - before)
+        assert len(new) == 1 and new[0].endswith(".jsa"), new
+        d = Driver(home, **env)
+        assert f"-XX:SharedArchiveFile={cds_dir(home) / new[0]}" in d.cmdline
+        assert str(cache / new[0]) in d.maps
+        assert d.exit() == ""
+    finally:
+        for name in set(os.listdir(cache)) - before:
+            os.unlink(cache / name)
+
+
+def test_symlinked_cache_gets_its_own_archive(archive, tmp_path):
+    """A HOME that reaches an existing cache through a symlink spells
+    another class path, so it keys an archive of its own."""
+    (tmp_path / ".cache").symlink_to(archive.parents[2])
+    own_archive(tmp_path, archive.parent)
+
+
+def test_driver_class_path_gets_its_own_archive(archive, tmp_path):
+    """A ``--driver-class-path`` in PYSPARK_SUBMIT_ARGS adds a class-path
+    entry, which the JVM would refuse the HOME's archive for."""
+    extra = tmp_path / "classes"
+    extra.mkdir()  # empty: a non-empty directory would block the dump
+    own_archive(archive.parents[3], archive.parent,
+                PYSPARK_SUBMIT_ARGS=f"--driver-class-path {extra} pyspark-shell")
 
 
 def test_truncated_archive_is_not_passed(archive, tmp_path):

@@ -27,7 +27,7 @@ def emb(spark):
 def centroids(spark, emb):
     from vunnel_spark.operators.similarity import train_ivf_centroids
 
-    return train_ivf_centroids(emb, nlist=8)
+    return train_ivf_centroids(emb)
 
 
 def test_ivf_cells_are_valid_and_nearest_first(spark, emb, centroids):
@@ -58,7 +58,7 @@ def test_ivf_retrieves_planted_dups_rank1(spark, emb, centroids):
         F.transform("embedding", lambda x: x * 1.02 + 0.005).alias("embedding"),
     )
     corpus = emb.unionByName(planted)
-    cents = train_ivf_centroids(corpus, nlist=8)
+    cents = train_ivf_centroids(corpus)
     n_planted = planted.count()
     hits = (
         ivf_topk(corpus, planted, cents, k=1)
@@ -146,7 +146,7 @@ def test_ivfpq_candidates_are_cell_equi_join(spark, emb, pq_books):
 
     queries = emb.filter(F.col("vec_id") < 8)
     cents = fixed_centroids()
-    p = plan_of(ivf_pq_topk(emb, queries, cents, pq_books, k=5))
+    p = plan_of(ivf_pq_topk(emb, queries, cents, pq_books))
     assert "BroadcastHashJoin" in p, p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, p
 
@@ -164,7 +164,7 @@ def test_ivfpq_subset_of_pq_ranking(spark, emb, pq_books):
         (r.query_id, r.neighbor_id): r.adc_dist
         for r in pq_adc_topk(emb, queries, pq_books, k=500).collect()
     }
-    pruned = ivf_pq_topk(emb, queries, cents, pq_books, k=5).collect()
+    pruned = ivf_pq_topk(emb, queries, cents, pq_books).collect()
     assert len(pruned) > 0
     for r in pruned:
         assert full[(r.query_id, r.neighbor_id)] == r.adc_dist

@@ -8,7 +8,7 @@ derive from the nested dataclass path:
 
     AppConfig.sf_dir                  -> VUNNEL_SPARK_SF_DIR
     AppConfig.show                    -> VUNNEL_SPARK_SHOW
-    AppConfig.log.level               -> VUNNEL_SPARK_LOG_LEVEL
+    AppConfig.explain                 -> VUNNEL_SPARK_EXPLAIN
     AppConfig.spark.shuffle_partitions-> VUNNEL_SPARK_SPARK_SHUFFLE_PARTITIONS
 
 Type coercion follows the field's annotation: bool accepts
@@ -26,12 +26,6 @@ _FALSY = {"false", "no", "0", "off"}
 
 
 @dataclass
-class LogConfig:
-    level: str = "INFO"
-    show_timings: bool = False
-
-
-@dataclass
 class SparkConfig:
     app_name: str = "vunnel_spark_cli"
     shuffle_partitions: int = 0  # 0 = leave the session factory's default
@@ -42,7 +36,6 @@ class AppConfig:
     sf_dir: str = "/root/testdata/sf0.001"
     show: int = 10
     explain: bool = False
-    log: LogConfig = field(default_factory=LogConfig)
     spark: SparkConfig = field(default_factory=SparkConfig)
 
 

@@ -44,14 +44,10 @@ def norm2(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.sqrt(norm2(a) * norm2(b))
-
-
 def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine with PRE-COMPUTED squared norms (``na``/``nb`` =
     ``norm2`` of each side, projected onto the side frames BEFORE the
-    candidate join).  Bit-identical to :func:`cosine` — the same
+    candidate join).  Bit-identical to the unhoisted form — the same
     norm2 doubles flow into the same sqrt(na*nb) product — but each
     candidate pair evaluates one dot fold instead of three folds:
     norms are per-ROW facts, recomputing them per PAIR was pure waste

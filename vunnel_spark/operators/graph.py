@@ -163,19 +163,12 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Resolve the undirected graph of ``edges`` into components.
 
     Returns ``(node, component)`` — one row per distinct node appearing in
     the edge list, where ``component`` is the minimum node id reachable
     from it (a canonical, deterministic cluster representative).
-
-    ``stats``, when given, is filled with ``edges_in`` (distinct input
-    edges), ``rounds`` (star iterations run), ``edges_fixpoint``, and
-    ``loop`` (which body ran: ``tight``/``join``) — the scale-audit
-    instrumentation (scalecurve.py --cc-profile); it adds no extra jobs,
-    only records the signatures the loop already computes.
 
     NOTE (r15, discharging the r14 ADVICE): the tight loop's conf
     overrides (AQE off, edge-count-derived shuffle partitions) run on a
@@ -204,8 +197,6 @@ def connected_components(
         F.expr("bit_xor(xxhash64(u, v))").alias("h"),
     ]
     sig = e.agg(*_sig_cols).first()
-    if stats is not None:
-        stats["edges_in"] = sig["n"]
     tight = sig["n"] <= _TIGHT_MAX_EDGES
     spark = edges.sparkSession
     caller_spark = spark
@@ -281,10 +272,6 @@ def connected_components(
             F.coalesce("component", F.col("node")).alias("component"),
         )
     )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["edges_fixpoint"] = sig["n"]
-        stats["loop"] = "tight" if tight else "join"
     # at fixpoint every edge is (member -> component min); a node can still
     # carry >1 edge if _MAX_ROUNDS cut iteration short — min() keeps the
     # result well-defined either way.

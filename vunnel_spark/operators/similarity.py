@@ -31,16 +31,16 @@ KMEANS_SEED, KMEANS_MAX_ITER = 7, 20
 _FIXED_SCALE = 0.15
 #: embedding width every operator reads
 DIM = 64
-#: cells of the fixed IVF quantizer (fixed_centroids)
+#: cells of the IVF quantizers (fixed_centroids, train_ivf_centroids)
 NLIST = 8
 #: cells each IVF query probes (ivf_topk, ivf_pq_topk)
 NPROBE = 4
 #: PQ subspaces, and codewords per subspace
 PQ_M, PQ_KS = 8, 16
-#: neighbours the exact top-k and the hard-negative miner keep per query
+#: neighbours per query of the exact top-k, the hard-negative miner and ivf_pq_topk
 EXACT_K = 5
-#: hash tables lsh_topk buckets into
-N_TABLES = 16
+#: hash tables lsh_topk buckets into, and sign bits per table
+N_TABLES, N_BITS = 16, 3
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
@@ -150,10 +150,10 @@ def _plane_value(table: int, bit: int, i: int) -> float:
     return int.from_bytes(h[:8], "big") / float(2**63) - 1.0
 
 
-def scaled_lsh_bits(n_vectors: int, target_bucket: int = 190) -> int:
-    """Corpus-derived LSH granularity: bits ~ log2(n / target_bucket).
+def scaled_lsh_bits(n_vectors: int) -> int:
+    """Corpus-derived LSH granularity: bits ~ log2(n / 190).
 
-    Bucket population stays bounded (~target_bucket) as the corpus
+    Bucket population stays bounded (~190) as the corpus
     grows, which keeps per-bucket pair generation O(target^2) instead of
     quadratic in corpus size — the rule the r9-r11 scale pushes
     validated (24k corpus -> 7 bits, planted-pair recall 1.0 through
@@ -164,16 +164,7 @@ def scaled_lsh_bits(n_vectors: int, target_bucket: int = 190) -> int:
     """
     import math
 
-    return max(3, round(math.log2(max(2, n_vectors / target_bucket))))
-
-
-def scaled_ivf_nlist(n_vectors: int, target_cell: int = 375) -> int:
-    """Corpus-derived IVF granularity: nlist ~ n / target_cell, rounded
-    to a power of two, floor 8 (the semantic_dedup docstring rule;
-    target_cell=375 reproduces the committed r9 demonstrations)."""
-    import math
-
-    return max(8, 2 ** round(math.log2(max(1, n_vectors / target_cell))))
+    return max(3, round(math.log2(max(2, n_vectors / 190))))
 
 
 def add_lsh_buckets(
@@ -252,14 +243,11 @@ def fixed_centroids() -> list[list[float]]:
     return out
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    nlist: int = 16,
-) -> list[list[float]]:
+def train_ivf_centroids(corpus: DataFrame) -> list[list[float]]:
     """Train an IVF coarse quantizer: k-means centroids over the corpus.
 
-    Returns ``nlist`` centroid vectors as plain Python lists — the "model"
-    is nlist x dim floats (a few KB), which downstream ships as plan
+    Returns ``NLIST`` centroid vectors as plain Python lists — the "model"
+    is NLIST x dim floats (a few KB), which downstream ships as plan
     literals exactly like the LSH hyperplanes: executors evaluate constant
     expressions, nothing is regenerated or broadcast per row.
 
@@ -274,7 +262,7 @@ def train_ivf_centroids(
     feat = df.select(
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=nlist, seed=KMEANS_SEED, maxIter=KMEANS_MAX_ITER).fit(feat)
+    model = KMeans(k=NLIST, seed=KMEANS_SEED, maxIter=KMEANS_MAX_ITER).fit(feat)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
@@ -380,10 +368,9 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_bits: int = 8,
 ) -> DataFrame:
     """ANN top-k searching only the bucket collisions of ``N_TABLES`` (16)
-    LSH tables.
+    LSH tables of ``N_BITS`` (3) sign bits.
 
     Recall < 1.0 by construction; rank/tie rules match brute_force_topk so
     the two are directly comparable in tests (recall measurement).
@@ -396,10 +383,11 @@ def lsh_topk(
     scored row).  Every in-repo corpus derives vec_id from a unique
     key; external callers must dedupe by id first.
 
-    SIZE n_bits WITH THE CORPUS (n_bits ~ log2(n_vectors /
-    target_bucket_size)): bucket count is 2^n_bits per table, so fixed
-    bits grow bucket membership — and per-query candidates — linearly
-    with the corpus.  Measured in the r9 scale-curve (SCALECURVE.md:
+    Bucket count is 2^N_BITS per table, so fixed bits grow bucket
+    membership — and per-query candidates — linearly with the corpus;
+    a corpus the gates do not pin needs bits sized by scaled_lsh_bits,
+    as d7 sizes embedding_dup_pairs'.
+    Measured in the r9 scale-curve (SCALECURVE.md:
     n6 at fixed 3 bits ran 55x on 10x data; 7 bits cut the sf1 time
     6.9x with recall preserved).
     """
@@ -412,11 +400,11 @@ def lsh_topk(
     # per DISTINCT candidate pair instead; the cosine inputs are the
     # identical per-side norm2/vector columns, so scores and ranks are
     # unchanged.
-    cb = add_lsh_buckets(corpus, N_TABLES, n_bits).select(
+    cb = add_lsh_buckets(corpus, N_TABLES, N_BITS).select(
         F.col("vec_id").alias("neighbor_id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
-    qb = add_lsh_buckets(queries, N_TABLES, n_bits).select(
+    qb = add_lsh_buckets(queries, N_TABLES, N_BITS).select(
         F.col("vec_id").alias("query_id"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
@@ -697,7 +685,6 @@ def ivf_pq_topk(
     queries: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
-    k: int = 10,
 ) -> DataFrame:
     """IVF+PQ composed ANN (the FAISS IVFPQ layout, the de facto shape
     for web-scale vector stores): the coarse quantizer prunes WHICH
@@ -730,4 +717,4 @@ def ivf_pq_topk(
         codebooks,
     ).select("query_id", "neighbor_id", "adc_dist")
     w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= EXACT_K)

@@ -392,7 +392,7 @@ def d9(spark, sf_dir):
         F.transform("embedding", lambda x: x * 1.02 + 0.005).alias("embedding"),
     )
     corpus = emb.unionByName(planted)
-    cents = train_ivf_centroids(corpus, nlist=8)
+    cents = train_ivf_centroids(corpus)
     # two cells per vector: a planted pair straddling a k-means Voronoi
     # boundary still shares a cell, so the oracle never depends on
     # quantizer boundaries

@@ -636,12 +636,12 @@ def osv1_materialized_inputs(spark, sf_dir):
 def osv1_inputs(spark, sf_dir):
     """(advisories, fixdates): osv1's synthesized nested-corpus INPUT.
 
-    Split out so the scale harness (scripts/scalecurve.py) can
-    pre-materialize it to parquet and time the PATCH PIPELINE alone —
-    in production the nested advisory corpus is the pipeline's input,
-    not built per query, so a scale measurement that includes the
-    orders×lineitem synthesis join overstates the pipeline's growth
-    (the r9 curve's 68.4x-at-100x 'watch' item was exactly this).
+    Split out so osv1_materialized_inputs can cache it as parquet and
+    the registered osv1 times the PATCH PIPELINE alone — in production
+    the nested advisory corpus is the pipeline's input, not built per
+    query, so a measurement that includes the orders×lineitem synthesis
+    join overstates the pipeline's growth (the r9 curve's 68.4x-at-100x
+    'watch' item was exactly this).
     """
     li = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders")

@@ -17,12 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vunnel_spark.operators.similarity import DIM, NPROBE, PQ_M, fixed_centroids, fixed_pq_codebooks
+from vunnel_spark.operators.similarity import DIM, EXACT_K, NPROBE, PQ_M, fixed_centroids, fixed_pq_codebooks
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
 
 _N_QUERIES = 8
-_K = 5
+_K = EXACT_K  # n9 ranks as deep as ivf_pq_topk; n7 follows it
 _SUB = DIM // PQ_M
 
 
@@ -251,6 +251,6 @@ def n9(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     cents = fixed_centroids()
     books = fixed_pq_codebooks()
-    return ivf_pq_topk(emb, queries, cents, books, k=_K).select(
+    return ivf_pq_topk(emb, queries, cents, books).select(
         "query_id", "neighbor_id", "adc_dist", "rank"
     )

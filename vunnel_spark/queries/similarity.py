@@ -19,14 +19,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vunnel_spark.operators.similarity import (
-    DIM, EXACT_K, N_TABLES, NLIST, NPROBE, _plane_value, fixed_centroids,
+    DIM, EXACT_K, N_BITS, N_TABLES, NLIST, NPROBE, _plane_value, fixed_centroids,
 )
 from vunnel_spark.queries._util import t
 from vunnel_spark.registry import register
 
 _N_QUERIES = 8  # small query set; corpus side stays the full table
 _K = EXACT_K  # the ANN queries rank as deep as brute_force_topk (n3's recall)
-_N_BITS = 3
 
 
 # ---------------------------------------------------------- oracle builders
@@ -65,14 +64,14 @@ def _lsh_ctes() -> str:
     plane_rows = ",\n        ".join(
         _dvec([_plane_value(tb, b, i) for i in range(DIM)])
         for tb in range(N_TABLES)
-        for b in range(_N_BITS)
+        for b in range(N_BITS)
     )
     bucket_exprs = ",\n          ".join(
         "("
         + " + ".join(
-            f"(CASE WHEN {_fold_dot('v', f'pl[{tb * _N_BITS + b + 1}]')} >= 0 "
+            f"(CASE WHEN {_fold_dot('v', f'pl[{tb * N_BITS + b + 1}]')} >= 0 "
             f"THEN {1 << b} ELSE 0 END)"
-            for b in range(_N_BITS)
+            for b in range(N_BITS)
         )
         + ")"
         for tb in range(N_TABLES)
@@ -222,7 +221,7 @@ def n2(spark, sf_dir):
     # vectors (max pair cosine ~0.43), so buckets must stay coarse for
     # recall ~0.95; clustered real-world embeddings support 8+ bits with
     # far fewer tables.  Recall is measured by n3 and gated in tests.
-    return lsh_topk(emb, queries, k=_K, n_bits=_N_BITS).select(
+    return lsh_topk(emb, queries, k=_K).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
@@ -281,7 +280,7 @@ def n5(spark, sf_dir):
         F.transform("embedding", lambda x: x * 1.02 + 0.005).alias("embedding"),
     )
     corpus = emb.unionByName(planted)
-    cents = train_ivf_centroids(corpus, nlist=8)
+    cents = train_ivf_centroids(corpus)
     return (
         ivf_topk(corpus, planted, cents, k=1)
         .filter(F.col("cos_sim") >= 0.9)
@@ -317,7 +316,7 @@ def n6(spark, sf_dir):
     )
     corpus = emb.unionByName(planted)
     return (
-        lsh_topk(corpus, planted, k=1, n_bits=_N_BITS)
+        lsh_topk(corpus, planted, k=1)
         .filter(F.col("cos_sim") >= 0.9)
         .select("query_id", "neighbor_id", "cos_sim")
     )
@@ -339,7 +338,7 @@ def n3(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     exact = brute_force_topk(emb, queries).select("query_id", "neighbor_id")
-    approx = lsh_topk(emb, queries, k=_K, n_bits=_N_BITS).select(
+    approx = lsh_topk(emb, queries, k=_K).select(
         "query_id", "neighbor_id"
     )
     hits = exact.join(approx, ["query_id", "neighbor_id"]).groupBy("query_id").agg(

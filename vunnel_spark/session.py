@@ -17,6 +17,7 @@ import contextlib
 import hashlib
 import os
 import re
+import shlex
 import shutil
 import stat
 import subprocess
@@ -92,7 +93,7 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         # fallback with the JIT limit makes exactly those stages fall
         # back to per-operator codegen (each operator's UnsafeProjection
         # is its own small, JIT-able method).  r15 audit
-        # (scripts/audit_codegen_size.py): 6 registered queries sat in
+        # (codegen_audit_r15.json): 6 registered queries sat in
         # the dead zone — ghsa1 42.3 KB, e17 32.7 KB, rhel1 21.2 KB,
         # rhel2 12.3 KB, d5 9.4 KB, photon1 9.3 KB — and the e17 sf10
         # A/B measured the interpreted fused stage at ~32 s vs ~17 s
@@ -175,18 +176,43 @@ def process_running(pid: int) -> bool:
     return True
 
 
-def _archive_key(java: str, spark_home: str) -> str:
+def _java() -> str | None:
+    """The java binary Spark's launcher runs."""
+    if os.environ.get("JAVA_HOME"):
+        return os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    return shutil.which("java")
+
+
+def _submit_class_path() -> list[str]:
+    """The ``PYSPARK_SUBMIT_ARGS`` that can add to the driver's class path
+    (``--driver-class-path``, ``spark.driver.extraClassPath``, a properties
+    file), not others such as a per-run ``-Djava.io.tmpdir``."""
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS") or "")
+    out = []
+    for opt, value in zip(args, args[1:] + [""]):
+        if opt.startswith("--") and "=" in opt:  # --opt=value
+            opt, value = opt.split("=", 1)
+        if (opt in ("--driver-class-path", "--properties-file")
+                or (opt in ("--conf", "-c")
+                    and value.startswith("spark.driver.extraClassPath="))):
+            out.append(f"{opt} {value}")
+    return out
+
+
+def _archive_key(java: str, spark_home: str, conf: str) -> str:
     """Hash of what an archive was built from: the JDK (its binary, class
-    modules and VM library) and the name, size and mtime of every jar."""
+    modules and VM library), the name, size and mtime of every jar, and
+    the class path the JVM checks it against, as the launcher spells it,
+    so a launch with another class path dumps an archive of its own."""
     java = os.path.realpath(java)
     jdk = os.path.dirname(os.path.dirname(java))
-    parts = [java]
+    jars = os.path.join(spark_home, "jars")
+    parts = [java, conf, jars, *_submit_class_path()]
     for path in (os.path.join(jdk, "lib", "modules"),
                  os.path.join(jdk, "lib", "server", "libjvm.so")):
         with contextlib.suppress(OSError):
             st = os.stat(path)
             parts.append(f"{path} {st.st_size} {st.st_mtime_ns}")
-    jars = os.path.join(spark_home, "jars")
     for entry in sorted(os.scandir(jars), key=lambda e: e.name):
         st = entry.stat()
         parts.append(f"{entry.name} {st.st_size} {st.st_mtime_ns}")
@@ -205,8 +231,7 @@ def _cds_launch() -> tuple[str, str, str | None] | None:
                                        "SPARK_DIST_CLASSPATH")):
         return None
     spark_home = _find_spark_home()
-    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java")
-            if os.environ.get("JAVA_HOME") else shutil.which("java"))
+    java = _java()
     cds = os.path.join(os.path.expanduser("~"), ".cache", "vunnel_spark", "cds")
     conf = os.path.join(cds, "conf")
     try:
@@ -218,7 +243,7 @@ def _cds_launch() -> tuple[str, str, str | None] | None:
         os.makedirs(conf, exist_ok=True)
         if os.listdir(conf):
             return None
-        key = _archive_key(java, spark_home)
+        key = _archive_key(java, spark_home, conf)
         names = os.listdir(cds)
     except OSError:
         return None
